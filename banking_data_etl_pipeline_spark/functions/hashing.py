@@ -16,10 +16,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def md5_hex(col: Column) -> Column:
-    return F.md5(col.cast("string"))
-
-
 def salted_md5(col: Column, salt: str) -> Column:
     return F.md5(F.concat(F.lit(salt), col.cast("string")))
 
@@ -102,13 +98,3 @@ def simhash_bits(md5s: Column, n_bits: int = 32) -> Column:
         vote = F.aggregate(md5s, F.lit(0), _voter(j))
         bits.append(F.when(vote > 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
-
-
-def hamming_distance_bits(a: Column, b: Column) -> Column:
-    """Hamming distance between two equal-length '0'/'1' strings."""
-    pairs = F.zip_with(
-        F.split(a, ""),
-        F.split(b, ""),
-        lambda x, y: F.when(x != y, 1).otherwise(0),
-    )
-    return F.aggregate(pairs, F.lit(0), lambda acc, x: acc + x)

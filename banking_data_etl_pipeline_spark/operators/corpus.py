@@ -1021,50 +1021,6 @@ def dataset_card(
     )
 
 
-def tokenizer_fertility(
-    docs: DataFrame, lang_col: str = "lang", text_col: str = "text"
-) -> DataFrame:
-    """Per-language tokenizer fertility audit — the multilingual
-    tokenizer-quality report (how many subword tokens per whitespace
-    word, how many characters each token carries). High fertility on a
-    language means the tokenizer fragments it and the model pays more
-    sequence length for the same text — the standard pre-training
-    check before committing a vocab.
-
-    ONE map-only pass computes all three counters per row (whitespace
-    tokens, BPE-ish pre-tokens, chars), then a groupBy on the
-    catalog-sized language key with map-side combine — the
-    temperature_weights shape. Ratios divide the already-aggregated
-    BIGINTs, so they are engine-exact; 6-dp rounded per the parity
-    rules. Zero-word languages (all-empty texts) report 0.0 rather
-    than NULL, mirrored by the twin.
-
-    Returns (lang, n_docs, n_words, n_bpe_tokens, n_chars, fertility,
-    chars_per_token)."""
-    t = F.col(text_col)
-    per = docs.groupBy(lang_col).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(texttools.token_count(t)).cast("long").alias("n_words"),
-        F.sum(texttools.bpe_token_count(t)).cast("long").alias("n_bpe_tokens"),
-        F.sum(F.length(t)).cast("long").alias("n_chars"),
-    )
-    fert = F.when(F.col("n_words") == 0, F.lit(0.0)).otherwise(
-        F.round(F.col("n_bpe_tokens") / F.col("n_words"), 6)
-    )
-    cpt = F.when(F.col("n_bpe_tokens") == 0, F.lit(0.0)).otherwise(
-        F.round(F.col("n_chars") / F.col("n_bpe_tokens"), 6)
-    )
-    return per.select(
-        lang_col,
-        "n_docs",
-        "n_words",
-        "n_bpe_tokens",
-        "n_chars",
-        fert.alias("fertility"),
-        cpt.alias("chars_per_token"),
-    )
-
-
 def zipf_fit(docs: DataFrame, n: int = 100, text_col: str = "text") -> DataFrame:
     """Zipf's-law fit of the corpus frequency curve: OLS of
     ln(count) on ln(rank) over the top-``n`` vocabulary — the one-row

@@ -291,51 +291,6 @@ def simhash_fingerprints(
     )
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bits: int = 32,
-    max_hamming: int = 3,
-    blocks: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: block the bit-string into ``blocks``
-    segments (pigeonhole: any pair within ``max_hamming`` <= blocks-1
-    shares a block), join per block, filter exact Hamming distance."""
-    fp = simhash_fingerprints(docs, text_col, id_col, n_bits)
-    seg = n_bits // blocks
-    blocked = fp.select(
-        id_col,
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[F.substring("simhash", i * seg + 1, seg) for i in range(blocks)]
-            )
-        ).alias("block_idx", "block_key"),
-    )
-    a = blocked.alias("a")
-    b = blocked.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = hashing.hamming_distance_bits(F.col("sh_a"), F.col("sh_b"))
-    return pairs.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1022,65 +977,6 @@ def containment_pairs(
         )
         .filter(F.greatest(F.col("c_ab"), F.col("c_ba")) >= threshold)
         .withColumn("jaccard_misses", F.col("jaccard") < threshold)
-    )
-
-
-def ngram_novelty(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """Per-document n-gram NOVELTY in corpus order: the fraction of a
-    document's distinct shingles whose FIRST corpus occurrence (lowest
-    doc_id) is that document — the curriculum/diversity signal ("how
-    much of this doc has the training run not seen yet"). Boilerplate
-    and re-posts score near 0; genuinely new material near 1.
-
-    Two aggregation passes over the shingle postings (both with
-    map-side combine): min(doc_id) per shingle defines first-seen, a
-    join back on the 8-byte xxhash64 shingle key flags each posting,
-    and a groupBy(doc) folds the flags — no pair join anywhere, so
-    cost is linear in total postings at any corpus size. Documents
-    shorter than n tokens surface with (0, 0, 0.0) via the left join,
-    the dup_span_stats convention.
-
-    Returns (doc_id, n_shingles, n_novel, novelty_frac)."""
-    toks = texttools.tokens(F.col(text_col))
-    inv = (
-        docs.select(
-            F.col(id_col),
-            F.array_distinct(texttools.word_shingles(toks, n)).alias("shingles"),
-        )
-        .filter(F.size("shingles") > 0)
-        .select(id_col, F.explode("shingles").alias("_sh"))
-        .select(id_col, F.xxhash64("_sh").alias("shingle"))
-        .persist()
-    )
-    first = inv.groupBy("shingle").agg(F.min(id_col).alias("_first"))
-    per = (
-        inv.join(first, "shingle")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(
-                F.when(F.col("_first") == F.col(id_col), 1).otherwise(0)
-            ).alias("n_novel"),
-        )
-    )
-    return (
-        docs.select(id_col)
-        .join(per, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_shingles"), F.lit(0)).cast("long").alias("n_shingles"),
-            F.coalesce(F.col("n_novel"), F.lit(0)).cast("long").alias("n_novel"),
-            F.when(
-                F.coalesce(F.col("n_shingles"), F.lit(0)) == 0, F.lit(0.0)
-            )
-            .otherwise(F.round(F.col("n_novel") / F.col("n_shingles"), 6))
-            .alias("novelty_frac"),
-        )
     )
 
 

@@ -719,7 +719,7 @@ SELECT min(doc_id) AS doc_id, count(*) AS n_copies,
 FROM f GROUP BY md5(text)"""
 
 
-# Twin of streaming.docs.run_quality_gate_stream: the gate is
+# Twin of streaming.docs.quality_gate drained as a stream: the gate is
 # stateless (pure per-row expressions), so the streaming availableNow
 # result over the bounded drop equals this batch scan row-for-row —
 # the same batch-equivalence bar stream_window_agg meets.

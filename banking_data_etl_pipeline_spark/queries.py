@@ -472,7 +472,7 @@ def stream_cms_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "documents")
     corpus = tables.load(spark, sf_dir, "documents")
-    return SD.cms_ngrams_stream(spark, d, corpus, "stream_cms_sink")
+    return SD.cms_ngrams_stream(spark, d, corpus)
 
 
 def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -741,22 +741,22 @@ def window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STREAMING twin of window_agg (watermark + availableNow +
-    memory sink); checked against the same batch oracle SQL.
+    """The STREAMING twin of window_agg (watermark, drained by
+    ``EV.drain``); checked against the same batch oracle SQL.
 
     The streaming file source requires a DIRECTORY; the driver ships a
     single events.parquet file, so stage a symlink dir under /tmp.
     """
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.run_stream_to_memory(spark, d, "stream_window_agg_sink")
+    return EV.drain(EV.windowed_agg_stream(spark, d), "complete")
 
 
 def stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming op (applyInPandasWithState)."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.stateful_user_totals(spark, d, "stateful_totals_sink")
+    return EV.stateful_user_totals(spark, d)
 
 
 def stream_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,7 +769,7 @@ def stream_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     state."""
     tune_for_oracle(spark)
     return EV.stateful_totals_recovery(
-        spark, tables.load(spark, sf_dir, "events"), "stream_recovery"
+        spark, tables.load(spark, sf_dir, "events")
     )
 
 
@@ -808,7 +808,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.symlink(src, os.path.join(d, ln))
             except FileExistsError:
                 pass
-    return EV.stream_dedup_totals(spark, d, "stream_dedup_sink")
+    return EV.stream_dedup_totals(spark, d)
 
 
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -816,7 +816,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner range-join oracle."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.stream_interval_join_counts(spark, d, "stream_interval_join_sink")
+    return EV.stream_interval_join_counts(spark, d)
 
 
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,7 +829,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionize oracle."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.stream_sessionize(spark, d, "stream_sessionize_sink")
+    return EV.stream_sessionize(spark, d)
 
 
 def stream_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -841,7 +841,7 @@ def stream_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_events_streaming.py instead."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.stream_sessionize_append(spark, d, "stream_sessionize_append_sink")
+    return EV.stream_sessionize_append(spark, d)
 
 
 def salted_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,7 +1007,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     dim = tables.load(spark, sf_dir, "customer")
-    return EV.stream_static_join(spark, d, dim, "stream_static_join_sink")
+    return EV.stream_static_join(spark, d, dim)
 
 
 def resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1209,9 +1209,7 @@ def stream_left_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     encodes the same cutoff)."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.stream_left_interval_join_counts(
-        spark, d, "stream_left_interval_join_sink"
-    )
+    return EV.stream_left_interval_join_counts(spark, d)
 
 
 # ---------------------------- round 3g: skew join + decay features
@@ -1559,13 +1557,13 @@ def unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING text-quality gate over a documents drop dir
-    (file source + availableNow + append memory sink); stateless, so
-    it is checked against the batch scan's oracle SQL."""
+    (file source, drained in append mode by ``EV.drain``); stateless,
+    so it is checked against the batch scan's oracle SQL."""
     from .streaming import docs as SD
 
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "documents")
-    return SD.run_quality_gate_stream(spark, d, "stream_quality_gate_sink")
+    return EV.drain(SD.quality_gate(SD.docs_stream(spark, d)), "append")
 
 
 def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1580,9 +1578,7 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = tables.load(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 != 0
     )
-    return SD.minhash_screen_stream(
-        spark, d, corpus, "stream_minhash_screen_sink"
-    )
+    return SD.minhash_screen_stream(spark, d, corpus)
 
 
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1899,8 +1895,7 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id") % 2 == 0
     )
     return EV.psi_drift_stream(
-        spark, d, ref, "stream_psi_drift_sink",
-        cur_filter=F.col("event_id") % 2 == 1,
+        spark, d, ref, cur_filter=F.col("event_id") % 2 == 1
     )
 
 
@@ -2026,7 +2021,7 @@ def stream_bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = tables.load(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 != 0
     )
-    return SD.bloom_screen_stream(spark, d, corpus, "stream_bloom_screen_sink")
+    return SD.bloom_screen_stream(spark, d, corpus)
 
 
 def _staged_index(
@@ -2442,7 +2437,7 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the batch funnel's oracle (FUNNEL_Q batch-equivalence)."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.funnel_stream(spark, d, "stream_funnel_sink")
+    return EV.funnel_stream(spark, d)
 
 
 def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2548,7 +2543,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-equivalence, the stream_window_agg bar)."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.attribution_stream(spark, d, "stream_attribution_sink")
+    return EV.attribution_stream(spark, d)
 
 
 def quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2771,7 +2766,7 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-equivalence, the stream_window_agg bar)."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.ewma_stream(spark, d, "stream_ewma_sink")
+    return EV.ewma_stream(spark, d)
 
 
 def grouped_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2933,7 +2928,7 @@ def stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     bar)."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.srm_stream(spark, d, "stream_srm_sink")
+    return EV.srm_stream(spark, d)
 
 
 def stream_msprt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2942,7 +2937,7 @@ def stream_msprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     λ walk — checked against the batch MSPRT_Q (batch-equivalence)."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.msprt_stream(spark, d, "stream_msprt_sink")
+    return EV.msprt_stream(spark, d)
 
 
 def judge_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3268,7 +3263,7 @@ def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch groupBy-count top-k oracle."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.topk_users_stream(spark, d, "stream_topk_users_sink")
+    return EV.topk_users_stream(spark, d)
 
 
 def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3488,7 +3483,7 @@ def stream_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram p95 at drain — bit-equal to the batch bucketing."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.histogram_p95_stream(spark, d, "stream_p95_sink")
+    return EV.histogram_p95_stream(spark, d)
 
 
 def readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3504,9 +3499,7 @@ def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     — shares HLL_DISTINCT_Q verbatim (the cms_incremental precedent)."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.hll_stream(
-        spark, d, tables.load(spark, sf_dir, "events"), "stream_hll_sink"
-    )
+    return EV.hll_stream(spark, d, tables.load(spark, sf_dir, "events"))
 
 
 def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3515,7 +3508,7 @@ def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone row count — shares MOMENTS_Q verbatim."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
-    return EV.moments_stream(spark, d, "stream_moments_sink")
+    return EV.moments_stream(spark, d)
 
 
 def leadlag_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3750,7 +3743,7 @@ def stream_langid_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     language-ID mix exactly."""
     tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "documents")
-    return EV.langid_mix_stream(spark, d, "stream_langid_mix_sink")
+    return EV.langid_mix_stream(spark, d)
 
 
 def ppr(spark: SparkSession, sf_dir: str) -> DataFrame:

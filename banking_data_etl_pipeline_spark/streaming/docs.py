@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import texttools
+from .events import drain
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -62,7 +63,6 @@ def minhash_screen_stream(
     spark: SparkSession,
     docs_dir: str,
     corpus: DataFrame,
-    name: str,
     batch_mod: int = 5,
     num_hashes: int = 12,
     bands: int = 4,
@@ -110,41 +110,13 @@ def minhash_screen_stream(
             F.round(_sig_agreement(num_hashes), 6).alias("est_jaccard"),
         )
     )
-    q = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def run_quality_gate_stream(
-    spark: SparkSession, docs_dir: str, name: str, min_quality: float = 0.5
-) -> DataFrame:
-    """Drive the streaming gate to completion over the (bounded) drop
-    dir via availableNow + append to a memory sink — the test harness
-    for the unbounded plan. Stateless, so the collected result is
-    row-identical to the batch ``quality_gate`` over the same files."""
-    q = (
-        quality_gate(docs_stream(spark, docs_dir), min_quality)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return drain(pairs, "append")
 
 
 def bloom_screen_stream(
     spark: SparkSession,
     docs_dir: str,
     corpus: DataFrame,
-    name: str,
     batch_mod: int = 5,
     m_bits: int = 4096,
     k: int = 3,
@@ -175,22 +147,13 @@ def bloom_screen_stream(
             probe, lambda p: F.array_contains(bit_set, p)
         ).alias("bloom_hit"),
     )
-    q = (
-        gated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return drain(gated, "append")
 
 
 def cms_ngrams_stream(
     spark: SparkSession,
     docs_dir: str,
     corpus: DataFrame,
-    name: str,
     n: int = 3,
     d: int = 4,
     w: int = 1024,
@@ -210,22 +173,12 @@ def cms_ngrams_stream(
     be bit-equal to the batch build, so this is the strongest
     batch-equivalence form (the ``stream_window_agg`` convention)."""
     from ..operators import sketches
-    from .events import _state_partitions
 
     s_grams, s_counters, _b = sketches._cms_ngram_parts(
         docs_stream(spark, docs_dir), n, d, w, "text"
     )
-    with _state_partitions(spark, 16):
-        q = (
-            s_counters.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     counters = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(s_counters, "update", 16)
         .groupBy("j", "bucket")
         .agg(F.max("cnt").alias("cnt"))
     )

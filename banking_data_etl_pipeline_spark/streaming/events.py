@@ -8,13 +8,17 @@ sessionization.
 
 Batch/stream parity: ``windowed_agg_batch`` is the exact batch twin of
 ``windowed_agg_stream`` (same expressions), which is what the DuckDB
-oracle checks; the streaming variant is exercised by tests with a
-file source + ``availableNow`` trigger + memory sink.
+oracle checks.
+
+Every bounded run goes through ``_run_available_now`` (availableNow
+trigger under a pinned state-partition count); ``drain`` adds the
+memory sink under a generated, immediately-dropped view name, so no
+streaming function takes or registers a query name.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,23 +113,46 @@ def windowed_agg_batch(events: DataFrame) -> DataFrame:
     return _window_agg(events)
 
 
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int = 8):
-    """Pin the state-store partition count for a streaming query start.
+def _run_available_now(spark: SparkSession, writer, partitions: int = 8) -> None:
+    """Start ``writer`` (a configured ``DataStreamWriter``) with the
+    availableNow trigger and block until the bounded input is drained.
 
-    The count is frozen from ``spark.sql.shuffle.partitions`` at the
-    FIRST trigger and every partition costs a state store + commit
-    files per micro-batch — so size it to the KEYSPACE, not the CPU
-    count (per-batch store overhead dominates wall-clock far below
-    ~millions of keys; on a real cluster pick ~2-4x executors, and for
-    a stream-stream join remember each partition carries FOUR stores:
-    left/right keyToNumValues + keyWithIndexToValue)."""
+    ``spark.sql.shuffle.partitions`` is pinned to ``partitions`` while
+    the query runs and restored afterwards: the state-store partition
+    count is frozen from it at the FIRST trigger and every partition
+    costs a state store + commit files per micro-batch — so size it to
+    the KEYSPACE, not the CPU count (per-batch store overhead dominates
+    wall-clock far below ~millions of keys; on a real cluster pick
+    ~2-4x executors, and for a stream-stream join remember each
+    partition carries FOUR stores: left/right keyToNumValues +
+    keyWithIndexToValue)."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     try:
-        yield
+        writer.trigger(availableNow=True).start().awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def drain(df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
+    """Run the streaming ``df`` to completion over its bounded input in
+    output ``mode`` and return the emitted rows as a batch frame.
+
+    The rows land in a memory sink under a generated query name; the
+    temp view the sink registers is dropped before returning, so the
+    rows live exactly as long as the returned frame (whose plan holds
+    the sink), not until the session ends."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    try:
+        _run_available_now(
+            spark,
+            df.writeStream.outputMode(mode).format("memory").queryName(name),
+            partitions,
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def windowed_agg_stream(spark: SparkSession, events_dir: str) -> DataFrame:
@@ -136,24 +163,7 @@ def windowed_agg_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     return _window_agg(stream.withWatermark("ts", "10 minutes"))
 
 
-def run_stream_to_memory(spark: SparkSession, events_dir: str, name: str) -> DataFrame:
-    """Drive the streaming agg to completion on the (bounded) events
-    dir via availableNow, collect from a memory sink. Test harness for
-    the unbounded plan."""
-    with _state_partitions(spark):
-        q = (
-            windowed_agg_stream(spark, events_dir)
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def stateful_user_totals(spark: SparkSession, events_dir: str, name: str) -> DataFrame:
+def stateful_user_totals(spark: SparkSession, events_dir: str) -> DataFrame:
     """Custom STATEFUL streaming operator: per-user running totals via
     ``applyInPandasWithState`` (Arrow-batched, update mode).
 
@@ -169,18 +179,8 @@ def stateful_user_totals(spark: SparkSession, events_dir: str, name: str) -> Dat
     select keeps each user's last (max-count) emission, which is the
     final state regardless of how availableNow chunked the input.
     """
-    stream = events_stream(spark, events_dir)
-    updates = _user_totals_updates(stream)
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _terminal_user_totals(spark.sql(f"SELECT * FROM {name}"))
+    updates = _user_totals_updates(events_stream(spark, events_dir))
+    return _terminal_user_totals(drain(updates, "update"))
 
 
 def _user_totals_updates(stream: DataFrame, mode: str = "update") -> DataFrame:
@@ -253,7 +253,7 @@ def _land_feed_file(
 
 
 def stateful_totals_recovery(
-    spark: SparkSession, events_full: DataFrame, name: str
+    spark: SparkSession, events_full: DataFrame
 ) -> DataFrame:
     """CHECKPOINT-RECOVERY proof for the stateful streaming operators:
     the same per-user running totals as ``stateful_user_totals``, but
@@ -314,16 +314,13 @@ def stateful_totals_recovery(
             updates = _user_totals_updates(
                 events_stream(spark, src), mode="append"
             )
-            with _state_partitions(spark):
-                q = (
-                    updates.writeStream.outputMode("append")
-                    .format("parquet")
-                    .option("path", sink)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+            _run_available_now(
+                spark,
+                updates.writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt),
+            )
         return _terminal_user_totals(
             spark.read.parquet(sink)
         ).localCheckpoint()
@@ -332,7 +329,7 @@ def stateful_totals_recovery(
 
 
 def stream_dedup_totals(
-    spark: SparkSession, events_dir: str, name: str, watermark: str = "40 days"
+    spark: SparkSession, events_dir: str, watermark: str = "40 days"
 ) -> DataFrame:
     """Streaming exact dedup: ``dropDuplicatesWithinWatermark`` on the
     event key, then per-type totals of the surviving rows.
@@ -354,17 +351,8 @@ def stream_dedup_totals(
     )
     # keyspace here is EVERY event_id inside the watermark (large), so
     # more state partitions pay off — unlike the per-user operators
-    with _state_partitions(spark, 16):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(stream, "append", 16)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -376,7 +364,7 @@ def stream_dedup_totals(
 
 
 def _drain_interval_join(
-    spark: SparkSession, joined: DataFrame, name: str, finalize
+    spark: SparkSession, joined: DataFrame, finalize
 ) -> DataFrame:
     """Drain a stream-stream join through an EXECUTOR-SIDE parquet
     sink and reduce the landed rows with ``finalize`` (a batch
@@ -395,7 +383,10 @@ def _drain_interval_join(
     localCheckpoint-materialized so the scratch dir can be deleted
     before returning; its blocks live in executor storage, freed by
     the ContextCleaner once the frame is dropped (bench.py's per-query
-    GC nudge covers the battery)."""
+    GC nudge covers the battery). The landed files are read with the
+    join's declared schema: a feed with no input runs no micro-batch
+    and lands no data file, and schema inference over an empty sink
+    would fail."""
     import os
     import shutil
     import tempfile
@@ -404,24 +395,23 @@ def _drain_interval_join(
     try:
         sink = os.path.join(work, "sink")
         ckpt = os.path.join(work, "ckpt")
-        with _state_partitions(spark, 16):
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return finalize(spark.read.parquet(sink)).localCheckpoint()
+        _run_available_now(
+            spark,
+            joined.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt),
+            16,
+        )
+        return finalize(
+            spark.read.schema(joined.schema).parquet(sink)
+        ).localCheckpoint()
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
 def stream_interval_join_counts(
-    spark: SparkSession, events_dir: str, name: str, hours: int = 24
+    spark: SparkSession, events_dir: str, hours: int = 24
 ) -> DataFrame:
     """Stream-stream interval self-join: per event, how many other
     events the same user produced within the next ``hours``.
@@ -458,7 +448,6 @@ def stream_interval_join_counts(
     return _drain_interval_join(
         spark,
         joined.select("l_id", "l_user"),
-        name,
         lambda rows: rows.groupBy(
             F.col("l_id").alias("event_id"), F.col("l_user").alias("user_id")
         ).agg(F.count(F.lit(1)).alias("n_followers")),
@@ -466,7 +455,7 @@ def stream_interval_join_counts(
 
 
 def stream_sessionize(
-    spark: SparkSession, events_dir: str, name: str, gap_minutes: int = 30
+    spark: SparkSession, events_dir: str, gap_minutes: int = 30
 ) -> DataFrame:
     """Streaming sessionization via ``session_window`` — Spark's native
     merging-session-state operator (vs the batch lag+cumsum twin in
@@ -495,32 +484,19 @@ def stream_sessionize(
         F.expr("unix_micros(min(ts)) DIV 1000000").alias("session_start_epoch"),
         F.expr("unix_micros(max(ts)) DIV 1000000").alias("session_end_epoch"),
     )
-    with _state_partitions(spark):
-        q = (
-            sessions.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy("session_start_epoch")
-    return (
-        spark.sql(f"SELECT * FROM {name}")
-        .select(
-            "user_id",
-            (F.row_number().over(w) - 1).cast("long").alias("session_seq"),
-            "n_events",
-            "session_start_epoch",
-            "session_end_epoch",
-        )
+    return drain(sessions, "complete").select(
+        "user_id",
+        (F.row_number().over(w) - 1).cast("long").alias("session_seq"),
+        "n_events",
+        "session_start_epoch",
+        "session_end_epoch",
     )
 
 
 def stream_sessionize_append(
     spark: SparkSession,
     events_dir: str,
-    name: str,
     gap_minutes: int = 30,
     watermark_minutes: int = 1,
 ) -> DataFrame:
@@ -552,17 +528,8 @@ def stream_sessionize_append(
         F.expr("unix_micros(min(ts)) DIV 1000000").alias("session_start_epoch"),
         F.expr("unix_micros(max(ts)) DIV 1000000").alias("session_end_epoch"),
     )
-    with _state_partitions(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy("session_start_epoch")
-    return spark.sql(f"SELECT * FROM {name}").select(
+    return drain(sessions, "append").select(
         "user_id",
         (F.row_number().over(w) - 1).cast("long").alias("session_seq"),
         "n_events",
@@ -608,7 +575,7 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
 
 
 def stream_static_join(
-    spark: SparkSession, events_dir: str, dim: DataFrame, name: str
+    spark: SparkSession, events_dir: str, dim: DataFrame
 ) -> DataFrame:
     """Streaming enrichment: join the unbounded events feed to a STATIC
     dimension (customers), then aggregate revenue per market segment —
@@ -633,20 +600,11 @@ def stream_static_join(
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
         ).alias("sum_value"),
     )
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return drain(agg, "complete")
 
 
 def stream_left_interval_join_counts(
-    spark: SparkSession, events_dir: str, name: str, hours: int = 24
+    spark: SparkSession, events_dir: str, hours: int = 24
 ) -> DataFrame:
     """LEFT-OUTER stream-stream interval join: per event, the count of
     same-user events in the next ``hours`` — INCLUDING zero-follower
@@ -686,7 +644,6 @@ def stream_left_interval_join_counts(
     return _drain_interval_join(
         spark,
         joined.select("l_id", "l_user", "r_id"),
-        name,
         lambda rows: rows.groupBy(
             F.col("l_id").alias("event_id"), F.col("l_user").alias("user_id")
         ).agg(F.count(F.col("r_id")).alias("n_followers")),
@@ -696,7 +653,6 @@ def stream_left_interval_join_counts(
 def funnel_stream(
     spark: SparkSession,
     events_dir: str,
-    name: str,
     stages: tuple[str, ...] = ("view", "click", "purchase"),
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -799,22 +755,13 @@ def funnel_stream(
     updates = stream.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # last emission per user == final funnel (n_seen strictly monotone,
     # so the struct max never tie-breaks on the nullable stage fields)
     last = F.max(
         F.struct("n_seen", "t_stage1", "t_stage2", "t_stage3", "funnel_depth")
     ).alias("s")
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(updates, "update")
         .groupBy("user_id")
         .agg(last)
         .select(
@@ -831,7 +778,6 @@ def psi_drift_stream(
     spark: SparkSession,
     events_dir: str,
     ref: DataFrame,
-    name: str,
     value_col: str = "value",
     n_bins: int = 10,
     cur_filter=None,
@@ -882,15 +828,7 @@ def psi_drift_stream(
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("n_cur"))
     )
-    q = (
-        stream_bins.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cur_bins = spark.sql(f"SELECT bin, n_cur FROM {name}")
+    cur_bins = drain(stream_bins, "complete")
     ref_bins = (
         ref.select(bucket(F.col(value_col)).alias("bin"))
         .groupBy("bin")
@@ -910,7 +848,6 @@ def psi_drift_stream(
 def attribution_stream(
     spark: SparkSession,
     events_dir: str,
-    name: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """STATEFUL streaming last-touch attribution via
@@ -1009,15 +946,6 @@ def attribution_stream(
     updates = stream.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # last emission per purchase: n_seen is monotone per user, and the
     # attribution fields ride the struct so they come from that same
     # final emission
@@ -1025,7 +953,7 @@ def attribution_stream(
         F.struct("n_seen", "attr_type", "attr_event_id", "gap_us")
     ).alias("s")
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(updates, "update")
         .groupBy("event_id", "user_id")
         .agg(last)
         .select(
@@ -1041,7 +969,6 @@ def attribution_stream(
 def ewma_stream(
     spark: SparkSession,
     events_dir: str,
-    name: str,
     window: int = 16,
     min_hist: int = 4,
     top: int = 100,
@@ -1133,18 +1060,9 @@ def ewma_stream(
     updates = stream.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     last = F.max(F.struct("n_seen", "value", "pred")).alias("s")
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(updates, "update")
         .groupBy("event_id", "user_id")
         .agg(last)
         .select(
@@ -1162,7 +1080,7 @@ def ewma_stream(
 
 
 def srm_stream(
-    spark: SparkSession, events_dir: str, name: str, watermark: str = "40 days"
+    spark: SparkSession, events_dir: str, watermark: str = "40 days"
 ) -> DataFrame:
     """Streaming sample-ratio-mismatch monitor: the experiment-health
     gate (``operators.experiments.srm_check``) maintained ON the feed —
@@ -1182,20 +1100,11 @@ def srm_stream(
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["user_id"])
     )
-    with _state_partitions(spark, 16):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return experiments.srm_check(spark.sql(f"SELECT * FROM {name}"))
+    return experiments.srm_check(drain(stream, "append", 16))
 
 
 def topk_users_stream(
-    spark: SparkSession, events_dir: str, name: str, k: int = 10
+    spark: SparkSession, events_dir: str, k: int = 10
 ) -> DataFrame:
     """Streaming LEADERBOARD: unwindowed stateful per-user counts
     (built-in streaming aggregate, update mode — per-key state only,
@@ -1218,17 +1127,8 @@ def topk_users_stream(
     counts = stream.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    with _state_partitions(spark):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(counts, "update")
         .groupBy("user_id")
         .agg(F.max("n_events").cast("bigint").alias("n_events"))
     )
@@ -1253,7 +1153,7 @@ def topk_users_stream(
 
 
 def msprt_stream(
-    spark: SparkSession, events_dir: str, name: str, alpha: float = 0.05
+    spark: SparkSession, events_dir: str, alpha: float = 0.05
 ) -> DataFrame:
     """Streaming mSPRT experiment monitor: the always-valid sequential
     A/B readout (``operators.experiments.msprt_monitor``) maintained ON
@@ -1284,16 +1184,7 @@ def msprt_stream(
     kept unwatermarked here so the drained availableNow run is
     bit-equivalent to batch."""
     agg = _msprt_partials(events_stream(spark, events_dir))
-    with _state_partitions(spark, 16):
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _msprt_readout(spark.sql(f"SELECT * FROM {name}"), alpha)
+    return _msprt_readout(drain(agg, "update", 16), alpha)
 
 
 def _msprt_partials(stream: DataFrame) -> DataFrame:
@@ -1416,15 +1307,13 @@ def msprt_recovery(
                 f"phase{i}.parquet",
             )
             agg = _msprt_partials(events_stream(spark, src))
-            with _state_partitions(spark, 16):
-                q = (
-                    agg.writeStream.outputMode("update")
-                    .foreachBatch(_append)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+            _run_available_now(
+                spark,
+                agg.writeStream.outputMode("update")
+                .foreachBatch(_append)
+                .option("checkpointLocation", ckpt),
+                16,
+            )
         return _msprt_readout(
             spark.read.parquet(sink), alpha
         ).localCheckpoint()
@@ -1435,7 +1324,6 @@ def msprt_recovery(
 def histogram_p95_stream(
     spark: SparkSession,
     events_dir: str,
-    name: str,
     width: float = 25.0,
     n_buckets: int = 20,
 ) -> DataFrame:
@@ -1472,17 +1360,8 @@ def histogram_p95_stream(
     ).groupBy("event_type", "bucket").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    with _state_partitions(spark):
-        q = (
-            cells.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(cells, "update")
         .groupBy("event_type", "bucket")
         .agg(F.max("cnt").cast("bigint").alias("cnt"))
     )
@@ -1518,7 +1397,6 @@ def hll_stream(
     spark: SparkSession,
     events_dir: str,
     events_batch: DataFrame,
-    name: str,
     col: str = "user_id",
     p: int = 8,
 ) -> DataFrame:
@@ -1561,17 +1439,8 @@ def hll_stream(
         .groupBy("idx")
         .agg(F.max("rho").alias("reg"))
     )
-    with _state_partitions(spark):
-        q = (
-            s_regs.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     regs = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(s_regs, "update")
         .groupBy("idx")
         .agg(F.max("reg").alias("reg"))
     )
@@ -1612,7 +1481,7 @@ def hll_stream(
     )
 
 
-def langid_mix_stream(spark: SparkSession, docs_dir: str, name: str) -> DataFrame:
+def langid_mix_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
     """STREAMING language-mix monitor over a documents feed: running
     counts per predicted language (the n-gram stopword-density
     heuristic — ``functions.texttools.lang_id``, the same expression
@@ -1640,17 +1509,8 @@ def langid_mix_stream(spark: SparkSession, docs_dir: str, name: str) -> DataFram
     counts = stream.groupBy(
         texttools.lang_id(F.col("text")).alias("pred")
     ).agg(F.count(F.lit(1)).alias("n"))
-    with _state_partitions(spark):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(counts, "update")
         .groupBy("pred")
         .agg(F.max("n").cast("bigint").alias("n"))
     )
@@ -1665,7 +1525,6 @@ def langid_mix_stream(spark: SparkSession, docs_dir: str, name: str) -> DataFram
 def moments_stream(
     spark: SparkSession,
     events_dir: str,
-    name: str,
     unit: int = 1000,
 ) -> DataFrame:
     """STREAMING higher-moment monitor: per event type, the exact
@@ -1691,17 +1550,8 @@ def moments_stream(
         "event_type", "value"
     )
     s_agg = profiling.moments_power_sums(stream, "value", unit)
-    with _state_partitions(spark):
-        q = (
-            s_agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     latest = (
-        spark.sql(f"SELECT * FROM {name}")
+        drain(s_agg, "update")
         .groupBy("event_type")
         .agg(
             F.max("n").cast("bigint").alias("n"),

@@ -125,7 +125,7 @@ def test_stream_static_join_equals_batch(spark):
     )
     got = {
         r.c_mktsegment: (r.n_events, r.sum_value)
-        for r in EV.stream_static_join(spark, d, cust, "test_ss_join").collect()
+        for r in EV.stream_static_join(spark, d, cust).collect()
     }
     assert got == batch
 

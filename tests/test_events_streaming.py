@@ -25,7 +25,7 @@ def test_stream_equals_batch_window_agg(spark):
     os.symlink(os.path.join(SF_DIR, "events.parquet"), os.path.join(d, "events.parquet"))
     stream = {
         (r.window_start_epoch, r.event_type): (r.n_events, r.sum_value)
-        for r in EV.run_stream_to_memory(spark, d, "test_stream_sink").collect()
+        for r in EV.drain(EV.windowed_agg_stream(spark, d), "complete").collect()
     }
     assert batch == stream
     assert len(batch) > 0
@@ -63,7 +63,7 @@ def test_append_sessionize_emits_exactly_closed_sessions(spark):
     os.symlink(os.path.join(SF_DIR, "events.parquet"), os.path.join(d, "events.parquet"))
     got = {
         (r.user_id, r.session_seq): (r.n_events, r.session_start_epoch, r.session_end_epoch)
-        for r in EV.stream_sessionize_append(spark, d, "test_sess_append").collect()
+        for r in EV.stream_sessionize_append(spark, d).collect()
     }
     assert len(got) > 0
     # emitted ⊆ batch, value-exact
@@ -116,7 +116,7 @@ def test_stream_dedup_removes_exact_duplicates(spark):
     os.symlink(src, os.path.join(d, "b.parquet"))
     deduped = {
         r.event_type: (r.n_events, r.sum_value)
-        for r in EV.stream_dedup_totals(spark, d, "test_stream_dedup_sink").collect()
+        for r in EV.stream_dedup_totals(spark, d).collect()
     }
     assert deduped == batch
 
@@ -136,7 +136,7 @@ def test_stream_left_interval_join_emits_watermark_cleared_nulls(spark):
     os.symlink(
         os.path.join(SF_DIR, "events.parquet"), os.path.join(d, "events.parquet")
     )
-    out = EV.stream_left_interval_join_counts(spark, d, "t_loj_sink").collect()
+    out = EV.stream_left_interval_join_counts(spark, d).collect()
     by_id = {r.event_id: r.n_followers for r in out}
     zeros = {k for k, v in by_id.items() if v == 0}
     assert zeros, "expected some watermark-cleared zero-follower events"
@@ -236,7 +236,7 @@ def test_stream_quality_gate_equals_batch(spark):
     )
     got = {
         r.doc_id: r
-        for r in SD.run_quality_gate_stream(spark, d, "sqg_eq_sink").collect()
+        for r in EV.drain(SD.quality_gate(SD.docs_stream(spark, d)), "append").collect()
     }
     want = {
         r.doc_id: r
@@ -266,7 +266,7 @@ def test_stream_minhash_screen_equals_batch_incremental(spark):
     got = {
         (r.batch_id, r.corpus_id): r.est_jaccard
         for r in SD.minhash_screen_stream(
-            spark, d, corpus, "sms_eq_sink"
+            spark, d, corpus
         ).collect()
     }
     want = {
@@ -314,7 +314,7 @@ def test_stream_funnel_retroactive_earlier_view(spark, tmp_path):
     time.sleep(1.1)  # file-source ordering is mtime-based
     write_one("b.parquet", [(4, 7, "view", 100)])
     out = EV.funnel_stream(
-        spark, d, "test_funnel_retro", max_files_per_trigger=1
+        spark, d, max_files_per_trigger=1
     ).collect()
     [r] = out
     assert (r.user_id, r.t_stage1, r.t_stage2, r.t_stage3, r.funnel_depth) == (
@@ -345,7 +345,7 @@ def test_stream_psi_drift_equals_batch_psi(spark):
     streamed = {
         r.bin: (r.n_ref, r.n_cur, r.p_ref, r.p_cur, r.psi_term)
         for r in EV.psi_drift_stream(
-            spark, d, ref, "test_psi_sink",
+            spark, d, ref,
             cur_filter=F.col("event_id") % 2 == 1,
         ).collect()
     }
@@ -368,7 +368,7 @@ def test_stream_topk_users_equals_batch_leaderboard(spark):
         os.path.join(SF_DIR, "events.parquet"),
         os.path.join(d, "events.parquet"),
     )
-    out = EV.topk_users_stream(spark, d, "test_topk_sink").collect()
+    out = EV.topk_users_stream(spark, d).collect()
     assert [(r.rank, r.user_id, r.n_events) for r in out] == [
         (i + 1, b.user_id, b.n_events) for i, b in enumerate(batch)
     ]
@@ -393,8 +393,8 @@ def test_stream_topk_users_split_delivery_invariant(spark, tmp_path):
         os.path.join(SF_DIR, "events.parquet"),
         os.path.join(whole, "events.parquet"),
     )
-    a = EV.topk_users_stream(spark, d, "test_topk_split_sink").collect()
-    b = EV.topk_users_stream(spark, whole, "test_topk_whole_sink").collect()
+    a = EV.topk_users_stream(spark, d).collect()
+    b = EV.topk_users_stream(spark, whole).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
@@ -406,7 +406,7 @@ def test_stateful_totals_recovery_carries_state_across_restart(spark):
     got = {
         r.user_id: (r.n_events, round(r.sum_value, 6))
         for r in EV.stateful_totals_recovery(
-            spark, ev, "test_recovery_sink"
+            spark, ev
         ).collect()
     }
     want = {
@@ -437,3 +437,53 @@ def test_stateful_totals_recovery_carries_state_across_restart(spark):
     assert any(
         0 < phase2_only.get(u, 0) < n for u, (n, _s) in got.items()
     ), "parity split left no user spanning the restart boundary"
+
+
+@pytest.mark.parametrize("feed", ["no_events", "one_event_per_user"])
+def test_interval_join_with_no_matches_is_empty(spark, tmp_path, feed):
+    """With no user holding two events the join emits no rows; with no
+    events at all no micro-batch runs and the parquet sink lands no
+    data file. Either way the drain must return an empty frame with
+    the result columns, not a schema-inference error."""
+    import pandas as pd
+
+    if feed == "one_event_per_user":
+        pd.DataFrame(
+            {
+                "event_id": [1, 2, 3],
+                "ts": pd.to_datetime(["2024-01-01 00:00", "2024-01-01 00:10",
+                                      "2024-01-01 00:20"]),
+                "user_id": [10, 20, 30],
+                "event_type": ["view", "click", "view"],
+                "value": [1.0, 2.0, 3.0],
+                "props": ["{}", "{}", "{}"],
+            }
+        ).to_parquet(tmp_path / "a.parquet", coerce_timestamps="us")
+    out = EV.stream_interval_join_counts(spark, str(tmp_path))
+    assert out.columns == ["event_id", "user_id", "n_followers"]
+    assert out.count() == 0
+
+
+def test_drain_leaves_no_view_query_or_conf_behind(spark, tmp_path):
+    d = tmp_path / "feed"
+    d.mkdir()
+    os.symlink(os.path.join(SF_DIR, "events.parquet"), d / "events.parquet")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    a = EV.drain(EV.windowed_agg_stream(spark, str(d)), "complete")
+    b = EV.drain(
+        EV.windowed_agg_stream(spark, str(d)), "complete", partitions=16
+    )
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("drain_")
+    ]
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == old
+    # the returned frames outlive their dropped views
+    assert a.count() == b.count() > 0
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    stream = EV.windowed_agg_stream(spark, str(empty))
+    out = EV.drain(stream, "complete")
+    assert out.schema == stream.schema
+    assert out.count() == 0

@@ -46,7 +46,7 @@ def test_stream_p95_split_delivery_equals_brute_force(spark, tmp_path):
     got = {
         r.event_type: r
         for r in EV.histogram_p95_stream(
-            spark, d, "test_p95_split_sink"
+            spark, d
         ).collect()
     }
     vals = {}

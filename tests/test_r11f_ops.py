@@ -32,7 +32,7 @@ def test_stream_hll_split_delivery_equals_batch(spark, tmp_path):
     ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
         d, mode="append"
     )
-    got = EV.hll_stream(spark, d, ev, "test_hll_split_sink").collect()
+    got = EV.hll_stream(spark, d, ev).collect()
     want = sketches.hll_distinct(ev).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 

@@ -136,7 +136,7 @@ def test_stream_moments_split_delivery_equals_batch(spark, tmp_path):
         d, mode="append"
     )
     got = sorted(
-        map(tuple, EV.moments_stream(spark, d, "test_moments_sink").collect())
+        map(tuple, EV.moments_stream(spark, d).collect())
     )
     want = sorted(map(tuple, profiling.moments_profile(ev).collect()))
     assert got == want

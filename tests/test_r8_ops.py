@@ -222,7 +222,7 @@ def test_stream_attribution_reattributes_across_batches(spark, tmp_path):
     got = {
         r.event_id: (r.attr_type, r.attr_event_id, r.gap_us)
         for r in EV.attribution_stream(
-            spark, str(d), "attr_retro_sink", max_files_per_trigger=1
+            spark, str(d), max_files_per_trigger=1
         ).collect()
     }
     # the view (event 15) slots between click and purchase and wins

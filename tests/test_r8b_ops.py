@@ -387,7 +387,7 @@ def test_stream_ewma_equals_batch(spark):
     d = _stream_src_dir(SF_DIR, "events")
     got = sorted(
         tuple(r)
-        for r in EV.ewma_stream(spark, d, "ewma_eq_sink").collect()
+        for r in EV.ewma_stream(spark, d).collect()
     )
     want = sorted(
         tuple(r)
@@ -422,7 +422,7 @@ def test_stream_ewma_rescored_by_late_event(spark, tmp_path):
     got1 = {
         r.event_id: r.pred
         for r in EV.ewma_stream(
-            spark, str(d), "ewma_retro_a", min_hist=4
+            spark, str(d), min_hist=4
         ).collect()
     }
     # batch 2: event 5 slots in BETWEEN (value 50) — event 6's
@@ -440,7 +440,7 @@ def test_stream_ewma_rescored_by_late_event(spark, tmp_path):
     got2 = {
         r.event_id: r.pred
         for r in EV.ewma_stream(
-            spark, str(d), "ewma_retro_b", min_hist=4, max_files_per_trigger=1
+            spark, str(d), min_hist=4, max_files_per_trigger=1
         ).collect()
     }
     pred_before = (4 / 2 + 3 / 4 + 2 / 8 + 1 / 16) / (15 / 16)

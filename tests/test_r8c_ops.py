@@ -354,7 +354,7 @@ def test_stream_srm_equals_batch(spark):
     from banking_data_etl_pipeline_spark.streaming import events as EV
 
     d = _stream_src_dir(SF_DIR, "events")
-    s = EV.srm_stream(spark, d, "t_stream_srm").first()
+    s = EV.srm_stream(spark, d).first()
     b = experiments.srm_check(
         tables.load(spark, SF_DIR, "events")
     ).first()
