@@ -6,7 +6,7 @@ carry the old+new values of the tracked columns.
 Spark-first shape: one full-outer shuffle join on the key — the
 minimal data movement the semantics allow (both sides co-partition on
 the key, so with bucketed/pre-partitioned snapshots the exchange
-disappears entirely; see operators/bucketing.py). No window, no
+disappears entirely; see sources/sinks.write_bucketed). No window, no
 driver-side state. A downstream SCD2 writer appends the 'update' and
 'delete' rows with validity timestamps; the classification here is the
 scale-critical part.

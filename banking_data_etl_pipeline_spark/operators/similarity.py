@@ -1726,7 +1726,7 @@ def nsw_topk(
     # persisted: it feeds every hop's expansion join; within the
     # single action all hops then read the cached build instead of
     # re-running the cell-blocked pair join. Registered via
-    # session.pin_for_query so the NEXT query's tune_for_oracle
+    # session.pin_for_query so the NEXT registered query's scope
     # releases it — cached partitions never accumulate across a
     # battery (r14 ADVICE).
     from ..session import pin_for_query

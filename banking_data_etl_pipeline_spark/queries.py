@@ -9,6 +9,9 @@ rules).
 These are the registered entry points for the driver contract
 (``__spark_entry__.queries()``); each one routes through the operator
 library so the correctness gate exercises the real implementations.
+None of them sets session policy: ``queries()`` wraps each one in the
+per-query scope (UTC, nanosAsLong, release of the previous query's
+pinned frames); a direct call skips that scope.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from .multimodal import binaryops
 from .operators import corpus, dedup, relational, similarity, skew
 from .oracle import NORM_COLS, PASS_COLS
 from .plans import pipeline as P
-from .session import fan_out, tune_for_oracle
+from .session import fan_out
 from .sources import synthetic, tables
 from .streaming import events as EV
 
@@ -137,7 +140,6 @@ BANK_OUT_COLS = [
 def pipeline_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the full reference pipeline (ops 4, 6, 8-16) on the
     synthetic bank table — normalize, validate, enrich, segment."""
-    tune_for_oracle(spark)
     seg = _rfm(_bank_valid(spark, sf_dir))
     return seg.select(
         *BANK_OUT_COLS,
@@ -159,13 +161,11 @@ def pipeline_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def age_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     return v.select("bank_id", "age", scoring.age_group(F.col("age")).alias("age_group"))
 
 
 def wealth_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     return v.select(
         "bank_id", "balance", scoring.wealth_segment(F.col("balance")).alias("wealth_segment")
@@ -173,7 +173,6 @@ def wealth_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def contact_day_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     return v.select(
         "bank_id", "day", scoring.contact_day_type(F.col("day")).alias("contact_day_type")
@@ -181,7 +180,6 @@ def contact_day_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def has_loans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     return v.select(
         "bank_id", "housing", "loan",
@@ -190,7 +188,6 @@ def has_loans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def engagement_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     return v.select(
         "bank_id",
@@ -204,7 +201,6 @@ def engagement_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     seg = _rfm(_bank_valid(spark, sf_dir))
     return seg.select(
         "bank_id",
@@ -216,7 +212,6 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     seg = _rfm(_bank_valid(spark, sf_dir))
     return seg.select(
         "bank_id",
@@ -228,7 +223,6 @@ def customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String normalization (op 4) incl. the `default` keyword column."""
-    tune_for_oracle(spark)
     bank = synthetic.bank_table(spark, sf_dir)
     return bank.select(
         "bank_id",
@@ -238,14 +232,12 @@ def normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     bank = synthetic.bank_table(spark, sf_dir)
     return bank.filter(F.col("age").between(18, 100)).select("bank_id", "age")
 
 
 def required_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Required-field filter (op 6) on events with synthetic nulls."""
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     withnulls = ev.select(
         "event_id",
@@ -261,7 +253,6 @@ def lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineage stamps (op 18), deterministic mode: md5 batch ids +
     fixed timestamp (the reference's uuid4-per-row + wall clock can't
     hash-match any oracle)."""
-    tune_for_oracle(spark)
     bank = synthetic.bank_table(spark, sf_dir)
     return bank.select(
         "bank_id",
@@ -280,7 +271,6 @@ def _cfg() -> P.PipelineConfig:
 
 def parse_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV split + typed casts + error classification (ops 2-3)."""
-    tune_for_oracle(spark)
     lines = synthetic.raw_lines(spark, sf_dir)
     parts = F.split(F.col("line"), ";")
     age = F.trim(F.element_at(parts, 1)).try_cast("bigint")
@@ -303,7 +293,6 @@ def parse_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def error_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Error-channel split counts (ops 17/19) through the REAL pipeline
     (parse -> validate -> ... -> _errors column)."""
-    tune_for_oracle(spark)
     lines = synthetic.raw_lines(spark, sf_dir)
     df = P.run_stages(P.parse_stage(lines, _cfg()), _cfg())
     etype = F.coalesce(
@@ -314,7 +303,6 @@ def error_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def error_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-field error sink records (op 17) from the real pipeline."""
-    tune_for_oracle(spark)
     lines = synthetic.raw_lines(spark, sf_dir)
     _good, bad = P.run_on_lines(lines, _cfg())
     return bad
@@ -324,23 +312,19 @@ def error_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return dedup.exact_dedup(tables.load(spark, sf_dir, "documents"))
 
 
 def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return dedup.ngram_jaccard_pairs(tables.load(spark, sf_dir, "documents"))
 
 
 def dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc duplicated-substring statistics (Lee et al. 2022 cut)."""
-    tune_for_oracle(spark)
     return dedup.dup_span_stats(tables.load(spark, sf_dir, "documents"))
 
 
 def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return dedup.minhash_lsh_pairs(tables.load(spark, sf_dir, "documents"))
 
 
@@ -348,19 +332,16 @@ def dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus dedup: MinHash-LSH candidate pairs (est
     Jaccard >= 0.5) -> connected components -> keep lowest id per
     component. One row per document with its canonical id."""
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
     return dedup.resolve_duplicates(docs, pairs)
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return dedup.simhash_fingerprints(tables.load(spark, sf_dir, "documents"))
 
 
 def emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return dedup.embedding_near_dup_pairs(tables.load(spark, sf_dir, "embeddings"))
 
 
@@ -368,21 +349,18 @@ def emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     return similarity.brute_force_topk(emb, q, k=10)
 
 
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     return similarity.lsh_topk(emb, q, k=10, n_bits=4)
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     return similarity.ivf_topk(emb, q, k=10, n_centroids=16, nprobe=2)
@@ -398,7 +376,6 @@ def rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     a = similarity.brute_force_topk(emb, q, k=10)
@@ -412,7 +389,6 @@ def rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the prefix-16-dim brute ranking vs the full-64-dim
     truth — would a Matryoshka-truncated index tier hold up?"""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     full = similarity.brute_force_topk(emb, q, k=10)
@@ -429,7 +405,6 @@ def mase_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the feed predictable from the same hour yesterday?"""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.mase_eval(tables.load(spark, sf_dir, "events"))
 
 
@@ -445,7 +420,6 @@ def cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     suite pins cell-wise."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 5 != 0)
     new = docs.filter(F.col("doc_id") % 5 == 0)
@@ -469,7 +443,6 @@ def stream_cms_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     be bit-equal to the batch build; same probe + ranking after."""
     from .streaming import docs as SD
 
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "documents")
     corpus = tables.load(spark, sf_dir, "documents")
     return SD.cms_ngrams_stream(spark, d, corpus)
@@ -481,7 +454,6 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the cross-source calibration step before dataset mixing."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     scored = docs.select(
         "source",
@@ -500,7 +472,6 @@ def benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed vs log10(1+1/d) expectation + chi2 localization."""
     from .operators import expectations
 
-    tune_for_oracle(spark)
     return expectations.benford_first_digit(
         tables.load(spark, sf_dir, "orders"), "o_totalprice"
     )
@@ -511,7 +482,6 @@ def spearman_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     token count — does the quality scorer carry signal beyond length?"""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     base = docs.select(
         "source",
@@ -525,7 +495,6 @@ def spearman_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     text = F.col("text")
     return docs.select(
@@ -538,13 +507,11 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return docs.select("doc_id", texttools.lang_id(F.col("text")).alias("lang_id"))
 
 
 def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     docs = fan_out(tables.load(spark, sf_dir, "documents"))
     return docs.filter(F.length("text") >= 8).select(
         "doc_id", texttools.fingerprint(F.col("text"), 8).alias("fingerprint")
@@ -552,7 +519,6 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     text = F.col("text")
     return docs.select(
@@ -563,7 +529,6 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return corpus.quality_filtered_corpus(tables.load(spark, sf_dir, "documents"))
 
 
@@ -571,7 +536,6 @@ def corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.revenue_by_nation(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "orders"),
@@ -581,12 +545,10 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.pricing_summary(tables.load(spark, sf_dir, "lineitem"))
 
 
 def brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.brand_revenue_by_nation(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "part"),
@@ -596,110 +558,90 @@ def brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.rollup_orders(tables.load(spark, sf_dir, "orders"))
 
 
 def moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.moving_avg_user_value(tables.load(spark, sf_dir, "events"))
 
 
 def trailing_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.trailing_hour_totals(tables.load(spark, sf_dir, "events"))
 
 
 def repeat_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.repeat_customers(tables.load(spark, sf_dir, "orders"))
 
 
 def distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.distinct_users_by_type(tables.load(spark, sf_dir, "events"))
 
 
 def above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.above_customer_avg(tables.load(spark, sf_dir, "orders"))
 
 
 def lapsed_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.lapsed_customers(tables.load(spark, sf_dir, "orders"))
 
 
 def listagg_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.users_per_type_listagg(tables.load(spark, sf_dir, "events"))
 
 
 def chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import corpus
 
-    tune_for_oracle(spark)
     return corpus.chunk_documents(tables.load(spark, sf_dir, "documents"))
 
 
 def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.cube_orders(tables.load(spark, sf_dir, "orders"))
 
 
 def semi_join_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.big_spenders(
         tables.load(spark, sf_dir, "customer"), tables.load(spark, sf_dir, "orders")
     )
 
 
 def anti_join_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.customers_without_orders(
         tables.load(spark, sf_dir, "customer"), tables.load(spark, sf_dir, "orders")
     )
 
 
 def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.price_percentiles(tables.load(spark, sf_dir, "lineitem"))
 
 
 def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.asof_last_order(
         tables.load(spark, sf_dir, "events"), tables.load(spark, sf_dir, "orders")
     )
 
 
 def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.range_join_followers(tables.load(spark, sf_dir, "events"))
 
 
 def props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.props_stats(tables.load(spark, sf_dir, "events"))
 
 
 def multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.multires_rollup(tables.load(spark, sf_dir, "events"))
 
 
 def pivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.pivot_daily_values(tables.load(spark, sf_dir, "events"))
 
 
 def ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.acctbal_deciles(tables.load(spark, sf_dir, "customer"))
 
 
 def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.price_histogram(tables.load(spark, sf_dir, "orders"))
 
 
@@ -711,7 +653,6 @@ def kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     every cell is a scalar the harness canonicalizes."""
     from .operators import clustering
 
-    tune_for_oracle(spark)
     out = clustering.kmeans(tables.load(spark, sf_dir, "embeddings"), k=8)
     return out.select(
         "cluster",
@@ -721,14 +662,12 @@ def kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def regr_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return relational.user_value_trend(tables.load(spark, sf_dir, "events"))
 
 
 def zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import grouped
 
-    tune_for_oracle(spark)
     return grouped.zscore_by_user(tables.load(spark, sf_dir, "events"))
 
 
@@ -736,7 +675,6 @@ def zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return EV.windowed_agg_batch(tables.load(spark, sf_dir, "events"))
 
 
@@ -747,14 +685,12 @@ def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     The streaming file source requires a DIRECTORY; the driver ships a
     single events.parquet file, so stage a symlink dir under /tmp.
     """
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.drain(EV.windowed_agg_stream(spark, d), "complete")
 
 
 def stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming op (applyInPandasWithState)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.stateful_user_totals(spark, d)
 
@@ -767,7 +703,6 @@ def stream_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     emissions must equal the batch oracle over the FULL table, which
     only holds if the restarted query recovered the first run's
     state."""
-    tune_for_oracle(spark)
     return EV.stateful_totals_recovery(
         spark, tables.load(spark, sf_dir, "events")
     )
@@ -781,7 +716,6 @@ def stream_recovery_msprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout must equal the batch MSPRT_Q over the full table, which
     only holds if the restarted query recovered phase 1's (day, arm)
     sums from the state store."""
-    tune_for_oracle(spark)
     return EV.msprt_recovery(spark, tables.load(spark, sf_dir, "events"))
 
 
@@ -793,7 +727,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    tune_for_oracle(spark)
     # two-symlink variant of _stream_src_dir (same fingerprint reuse)
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
     st = os.stat(src)
@@ -814,20 +747,17 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval self-join, checked against the batch
     inner range-join oracle."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.stream_interval_join_counts(spark, d)
 
 
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     return EV.sessionize_batch(tables.load(spark, sf_dir, "events"))
 
 
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session_window twin, checked against the batch
     sessionize oracle."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.stream_sessionize(spark, d)
 
@@ -839,7 +769,6 @@ def stream_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ms-truncated watermark arithmetic, not SQL-expressible exactly;
     the emitted-set/batch-twin relationship is pinned by
     tests/test_events_streaming.py instead."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.stream_sessionize_append(spark, d)
 
@@ -847,7 +776,6 @@ def stream_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def salted_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation (skew mitigation); must equal the
     plain GROUP BY, which is exactly what the oracle checks."""
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     return skew.salted_counts_sums(
         ev, key="event_type", value_col="value", unique_col="event_id", buckets=16
@@ -856,7 +784,6 @@ def salted_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders by price per customer (window top-k operator)."""
-    tune_for_oracle(spark)
     orders = tables.load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
@@ -873,20 +800,17 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     media = binaryops.synthesize_media(tables.load(spark, sf_dir, "documents"))
     return binaryops.media_metadata(media)
 
 
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched mapInPandas feature extraction (fake decode)."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_media(tables.load(spark, sf_dir, "documents"))
     return binaryops.extract_features(media)
 
 
 def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_for_oracle(spark)
     media = binaryops.synthesize_media(tables.load(spark, sf_dir, "documents"))
     return binaryops.frame_sample(media)
 
@@ -896,13 +820,11 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def vocab_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary: top-100 tokens by frequency."""
-    tune_for_oracle(spark)
     return corpus.vocab_topn(tables.load(spark, sf_dir, "documents"), n=100)
 
 
 def tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 TF-IDF terms (keyword extraction)."""
-    tune_for_oracle(spark)
     return corpus.tfidf_top_terms(tables.load(spark, sf_dir, "documents"), top=3)
 
 
@@ -911,7 +833,6 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     phone numbers — the testdata corpus has none, so the query plants
     one of each per doc and the oracle twin plants the identical ones;
     the redaction must strip them all back out."""
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     dirty = F.concat(
         F.lit("user"),
@@ -935,7 +856,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a training-data mix."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     rates = {"en": 192, "de": 128, "fr": 128, "es": 128}
     return sampling.stratified_sample(
@@ -949,7 +869,6 @@ def dataset_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearly whole (224/256)."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     return sampling.weighted_mix(
         [
@@ -965,7 +884,6 @@ def pct_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both are integer-ratio doubles ((rank-1)/(n-1), n_le/n) over a
     fully-tiebroken ordering, so the values are bit-identical across
     engines. Windows partition by nation — parallel at any scale."""
-    tune_for_oracle(spark)
     customer = tables.load(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
     return customer.select(
@@ -981,7 +899,6 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — (status), (priority), and grand total in
     ONE pass (an Expand of 3 projections per input row, one shuffle;
     never three scans + union). Complements the existing ROLLUP/CUBE."""
-    tune_for_oracle(spark)
     orders = tables.load(spark, sf_dir, "orders")
     return (
         orders.groupingSets(
@@ -1004,7 +921,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast per micro-batch, zero streaming state), aggregated to
     revenue per market segment; equals the batch join+groupBy, which is
     what the oracle checks."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     dim = tables.load(spark, sf_dir, "customer")
     return EV.stream_static_join(spark, d, dim)
@@ -1014,7 +930,6 @@ def resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly gap-filled per-user resample with forward fill."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.resample_ffill(tables.load(spark, sf_dir, "events"))
 
 
@@ -1022,7 +937,6 @@ def funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view -> click -> purchase ordered funnel per user."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.funnel(tables.load(spark, sf_dir, "events"))
 
 
@@ -1030,7 +944,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention counts (all-integer calendar math)."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.cohort_retention(tables.load(spark, sf_dir, "events"))
 
 
@@ -1044,7 +957,6 @@ def seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     at corpus scale — see operators/packing.py)."""
     from .operators import packing
 
-    tune_for_oracle(spark)
     return packing.pack_documents(
         tables.load(spark, sf_dir, "documents"), budget=256
     )
@@ -1056,7 +968,6 @@ def contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     the benchmark shingle set against the corpus postings."""
     from .operators import contamination as C
 
-    tune_for_oracle(spark)
     return C.benchmark_overlap(
         tables.load(spark, sf_dir, "documents"), n=3, bench_mod=97
     )
@@ -1072,7 +983,6 @@ def scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     balance+100, %10==2 re-keyed as inserts)."""
     from .operators import cdc
 
-    tune_for_oracle(spark)
     cust = tables.load(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     key = F.col("c_custkey")
     nxt = cust.filter(key % 10 != 1).withColumn(
@@ -1091,7 +1001,6 @@ def fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     levenshtein 1..3 — record linkage without an all-pairs compare."""
     from .operators import fuzzy
 
-    tune_for_oracle(spark)
     return fuzzy.fuzzy_name_pairs(
         tables.load(spark, sf_dir, "part"), "p_partkey", "p_name"
     )
@@ -1102,13 +1011,11 @@ def fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def unpivot_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT/melt of the per-flag pricing aggregate to long form."""
-    tune_for_oracle(spark)
     return relational.unpivot_pricing(tables.load(spark, sf_dir, "lineitem"))
 
 
 def intersect_custs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: customers ordering in both 1996 and 1999."""
-    tune_for_oracle(spark)
     return relational.intersect_active_customers(
         tables.load(spark, sf_dir, "orders")
     )
@@ -1116,13 +1023,11 @@ def intersect_custs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p01/p99-winsorized price statistics per return flag."""
-    tune_for_oracle(spark)
     return relational.winsorized_prices(tables.load(spark, sf_dir, "lineitem"))
 
 
 def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median-absolute-deviation outlier counts per event type."""
-    tune_for_oracle(spark)
     return relational.mad_outliers(tables.load(spark, sf_dir, "events"))
 
 
@@ -1135,7 +1040,6 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector) stays distributed end-to-end."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.pagerank(tables.load(spark, sf_dir, "lineitem"), iters=3)
 
 
@@ -1168,7 +1072,6 @@ def hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-step joins."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     path = _hits_edges_staged(spark, sf_dir)
     meta = spark.read.parquet(f"{path}/meta").first()
     return graph.hits(
@@ -1190,7 +1093,6 @@ def hits_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     `hits`."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     path = _hits_edges_staged(spark, sf_dir)
     meta = spark.read.parquet(f"{path}/meta").first()
     return graph.hits(
@@ -1207,7 +1109,6 @@ def stream_left_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     including zero-follower events, whose unmatched rows emit only
     after the watermark clears their join window (the batch twin
     encodes the same cutoff)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.stream_left_interval_join_counts(spark, d)
 
@@ -1223,7 +1124,6 @@ def salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = tables.load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    tune_for_oracle(spark)
     joined = skew.salted_broadcast_replicate_join(
         ev, cust, key="user_id", unique_col="event_id", buckets=8
     )
@@ -1240,7 +1140,6 @@ def decay_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     engagement feature, engine-portable decay)."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.half_life_decayed_totals(
         tables.load(spark, sf_dir, "events")
     )
@@ -1253,7 +1152,6 @@ def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension embedding statistics (feature-scaling profile)."""
     from .functions import vectors
 
-    tune_for_oracle(spark)
     return vectors.dim_stats(tables.load(spark, sf_dir, "embeddings"))
 
 
@@ -1261,7 +1159,6 @@ def standardize_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension z-score standardization of the embedding corpus."""
     from .functions import vectors
 
-    tune_for_oracle(spark)
     return vectors.standardize_dims(tables.load(spark, sf_dir, "embeddings"))
 
 
@@ -1270,7 +1167,6 @@ def emb_energy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     captured by each candidate prefix length."""
     from .functions import vectors
 
-    tune_for_oracle(spark)
     return vectors.energy_profile(tables.load(spark, sf_dir, "embeddings"))
 
 
@@ -1281,7 +1177,6 @@ def split_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the tiny count aggregation."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     pfx = sampling.hash_prefix(F.col("doc_id"))
     split = (
@@ -1305,7 +1200,6 @@ def table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/reconcile.py)."""
     from .operators import reconcile
 
-    tune_for_oracle(spark)
     return reconcile.table_checksum(
         tables.load(spark, sf_dir, "customer"), CHECKSUM_COLS
     )
@@ -1315,7 +1209,6 @@ def grouped_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed checksums (key % 16) for divergence localization."""
     from .operators import reconcile
 
-    tune_for_oracle(spark)
     return reconcile.grouped_checksum(
         tables.load(spark, sf_dir, "customer"),
         F.col("c_custkey") % 16,
@@ -1334,7 +1227,6 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     referential check is one anti-join."""
     from .operators import expectations as X
 
-    tune_for_oracle(spark)
     orders = tables.load(spark, sf_dir, "orders")
     cust = tables.load(spark, sf_dir, "customer")
     key = F.col("o_orderkey")
@@ -1372,7 +1264,6 @@ def fuzzy_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_resolve, different candidate generator."""
     from .operators import fuzzy
 
-    tune_for_oracle(spark)
     part = tables.load(spark, sf_dir, "part")
     pairs = fuzzy.fuzzy_name_pairs(part, "p_partkey", "p_name")
     return dedup.resolve_duplicates(part, pairs, id_col="p_partkey")
@@ -1383,7 +1274,6 @@ def event_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     and id of the next — the change-over-time window shape. Partitions
     by user (parallel at any scale); integer-microsecond math keeps the
     gap exact cross-engine."""
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.expr("unix_micros(ts)")
@@ -1398,7 +1288,6 @@ def event_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched media resize plumbing (deterministic fake codec):
     new dims, byte budget, and content hash per payload."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_media(tables.load(spark, sf_dir, "documents"))
     return binaryops.resize_media(media)
 
@@ -1407,7 +1296,6 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov transition counts: per (event_type -> next event_type)
     pair within each user's timeline — the behavioral-model input. One
     user-partitioned window + one low-cardinality groupBy."""
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
@@ -1434,7 +1322,6 @@ def jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources import jsonl
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     lines = docs.select(
         F.when(
@@ -1476,7 +1363,6 @@ def evolved_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources import evolution
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     d = tempfile.mkdtemp(prefix="evolved_union_")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").coalesce(
@@ -1494,7 +1380,6 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the keep/cull verdict. Entirely map-side (higher-order functions
     over each doc's own token array) — zero shuffles, the ideal
     100 TB quality-pass shape."""
-    tune_for_oracle(spark)
     docs = fan_out(tables.load(spark, sf_dir, "documents"))
     return docs.select("doc_id", *texttools.repetition_signals(F.col("text")))
 
@@ -1507,7 +1392,6 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     table scale path."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     orders = tables.load(spark, sf_dir, "orders")
     return profiling.profile_table(
         orders,
@@ -1528,7 +1412,6 @@ def chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     across boundaries). Same map-only posexplode plan."""
     from .operators import corpus
 
-    tune_for_oracle(spark)
     return corpus.chunk_documents(
         tables.load(spark, sf_dir, "documents"), size=32, stride=16
     )
@@ -1539,7 +1422,6 @@ def minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id % 5 == 0) probed against the existing corpus (the rest)
     via banded MinHash — which new docs are near-dups of what we
     already hold."""
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
@@ -1551,7 +1433,6 @@ def minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style unigram-LM cross-entropy quality signal per doc."""
-    tune_for_oracle(spark)
     return corpus.unigram_xent(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1561,7 +1442,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it is checked against the batch scan's oracle SQL."""
     from .streaming import docs as SD
 
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "documents")
     return EV.drain(SD.quality_gate(SD.docs_stream(spark, d)), "append")
 
@@ -1573,7 +1453,6 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch minhash_incremental."""
     from .streaming import docs as SD
 
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "documents")
     corpus = tables.load(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 != 0
@@ -1584,19 +1463,16 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM-data flagship composition: quality gate -> exact dedup ->
     deterministic split, one auditable verdict row per document."""
-    tune_for_oracle(spark)
     return corpus.curation_pipeline(tables.load(spark, sf_dir, "documents"))
 
 
 def source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise unigram-KL distribution shift between corpus sources."""
-    tune_for_oracle(spark)
     return corpus.source_divergence(tables.load(spark, sf_dir, "documents"))
 
 
 def xent_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail perplexity terciles per language."""
-    tune_for_oracle(spark)
     return corpus.xent_buckets(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1604,25 +1480,21 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the co-purchase graph."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.triangle_counts(tables.load(spark, sf_dir, "lineitem"))
 
 
 def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance log-ratio vs the 'en' target slice."""
-    tune_for_oracle(spark)
     return corpus.dsir_logratio(tables.load(spark, sf_dir, "documents"))
 
 
 def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: centroid cells + within-cell cosine near-dup removal."""
-    tune_for_oracle(spark)
     return dedup.semdedup(tables.load(spark, sf_dir, "embeddings"))
 
 
 def quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FineWeb-style multi-signal quality gate with per-doc verdicts."""
-    tune_for_oracle(spark)
     return corpus.quality_ensemble(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1633,7 +1505,6 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact > N/64 token heavy hitters via Misra–Gries + verify."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.heavy_hitters(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1641,7 +1512,6 @@ def shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-export shuffle: shard + in-shard order."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.shuffle_shard(
         tables.load(spark, sf_dir, "documents"), key="doc_id"
     )
@@ -1649,7 +1519,6 @@ def shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: PMI of adjacent token pairs (count >= 5)."""
-    tune_for_oracle(spark)
     return corpus.bigram_pmi(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1657,7 +1526,6 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training: the first 6 learned merges."""
     from .operators import bpe
 
-    tune_for_oracle(spark)
     return bpe.learn_bpe_merges(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1667,7 +1535,6 @@ def bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; see operators.bpe.learn_bpe_merges_batched."""
     from .operators import bpe
 
-    tune_for_oracle(spark)
     return bpe.learn_bpe_merges_batched(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1675,7 +1542,6 @@ def quantize_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 symmetric per-dimension embedding quantization."""
     from .functions import vectors
 
-    tune_for_oracle(spark)
     return vectors.quantize_int8(tables.load(spark, sf_dir, "embeddings"))
 
 
@@ -1683,13 +1549,11 @@ def jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL Rademacher projection of embeddings to 16 dims."""
     from .functions import vectors
 
-    tune_for_oracle(spark)
     return vectors.jl_project(tables.load(spark, sf_dir, "embeddings"))
 
 
 def key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic over events.user_id."""
-    tune_for_oracle(spark)
     return skew.key_skew_profile(tables.load(spark, sf_dir, "events"), "user_id")
 
 
@@ -1698,7 +1562,6 @@ def pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order date (versioned dim, +500 from 1998 for custkey%3==0)."""
     from .operators import cdc
 
-    tune_for_oracle(spark)
     cust = tables.load(spark, sf_dir, "customer")
     key = F.col("c_custkey")
     v1 = cust.select(
@@ -1737,7 +1600,6 @@ def pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ols2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-return-flag OLS: extendedprice ~ quantity + discount."""
-    tune_for_oracle(spark)
     return relational.ols2(
         tables.load(spark, sf_dir, "lineitem"),
         group="l_returnflag",
@@ -1749,7 +1611,6 @@ def ols2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass Pearson correlation matrix over lineitem numerics."""
-    tune_for_oracle(spark)
     return relational.corr_matrix(
         tables.load(spark, sf_dir, "lineitem"),
         ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
@@ -1760,7 +1621,6 @@ def bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply a fixed 6-merge BPE vocab to every document (map-only)."""
     from .operators import bpe
 
-    tune_for_oracle(spark)
     merges = [("e", "r"), ("i", "n"), ("o", "n"), ("a", "n"), ("t", "i"), ("s", "t")]
     out = bpe.apply_bpe(tables.load(spark, sf_dir, "documents"), merges)
     return out.select(
@@ -1779,7 +1639,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     targeted corpus audits."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.bm25_topk(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1787,7 +1646,6 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-10 (Jégou et al. 2011): per-vector
     m-byte codes + per-query lookup tables — the compressed-domain ANN
     scan that pairs with the IVF cells at index scale."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     return similarity.pq_topk(emb, q, k=10)
@@ -1802,7 +1660,6 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-identical to in-plan training (the oracle twin retrains
     every time and still hash-matches); `ann_ivf`/`ann_pq` stay fully
     telescoped as the per-round in-plan-training oracle proof."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     cents, books, _res = _ann_models(emb, sf_dir)
@@ -1815,7 +1672,6 @@ def ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two quantizers, per-probed-cell query LUTs. Centroids and
     residual codebooks are staged per corpus snapshot (`_ann_models`,
     bit-identical to in-plan training — see `ivf_pq_topk`)."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     cents, _books, res_books = _ann_models(emb, sf_dir)
@@ -1830,7 +1686,6 @@ def ann_ivfpq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning AND m-int rows compound at probe time); same
     parameters, result, and oracle as the telescoped
     ivf_pq_residual."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     cents, _books, res_books = _ann_models(emb, sf_dir)
     path = _staged_index(
@@ -1846,28 +1701,24 @@ def ann_ivfpq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM cross-entropy per document — the fluency signal a
     unigram model misses (CCNet/KenLM-style perplexity filtering)."""
-    tune_for_oracle(spark)
     return corpus.bigram_xent(tables.load(spark, sf_dir, "documents"))
 
 
 def dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall of the MinHash-LSH dedup screen vs exact
     n-gram Jaccard truth — the banding-parameter decision harness."""
-    tune_for_oracle(spark)
     return dedup.dedup_recall_report(tables.load(spark, sf_dir, "documents"))
 
 
 def feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick text featurizer: sparse L2-normalized 32-dim
     signed-count vectors, as scalar (doc_id, dim, val) rows."""
-    tune_for_oracle(spark)
     return corpus.feature_hash_embed(tables.load(spark, sf_dir, "documents"))
 
 
 def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN label propagation: majority language among each query's 10
     exact nearest neighbors — the weak-supervision vote."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     docs = tables.load(spark, sf_dir, "documents")
     q = similarity.corpus_queries(emb, n=5)
@@ -1880,7 +1731,6 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster-size distribution from the resolve path — the
     dedup run's shipped report."""
-    tune_for_oracle(spark)
     return dedup.dedup_cluster_stats(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1889,7 +1739,6 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile (even event_ids, static), current bin counts accumulated
     from the streamed odd half — checked against the batch PSI oracle
     (batch-equivalence)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     ref = tables.load(spark, sf_dir, "events").filter(
         F.col("event_id") % 2 == 0
@@ -1904,7 +1753,6 @@ def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     train/val/test assignment — the pre-export check."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.split_leakage(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1914,7 +1762,6 @@ def l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-anonymity misses."""
     from .operators import expectations
 
-    tune_for_oracle(spark)
     return expectations.l_diversity(
         _bank_valid(spark, sf_dir), ["age", "job", "marital"], "y", l=2
     )
@@ -1927,7 +1774,6 @@ def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic HyperLogLog distinct users (value-parity sketch)."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.hll_distinct(tables.load(spark, sf_dir, "events"))
 
 
@@ -1939,7 +1785,6 @@ def bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside so the output shows hits vs truth per batch doc."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     corpus_side = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text").unionAll(
@@ -1960,7 +1805,6 @@ def bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup removal: cut cross-doc 8-gram spans."""
-    tune_for_oracle(spark)
     return dedup.shared_span_removal(tables.load(spark, sf_dir, "documents"))
 
 
@@ -1972,7 +1816,6 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine forms; see operators/reconcile.py)."""
     from .operators import reconcile
 
-    tune_for_oracle(spark)
     key = F.col("o_orderkey")
     v1 = tables.load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -2005,7 +1848,6 @@ def temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget per documents source."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.temperature_weights(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2016,7 +1858,6 @@ def stream_bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the batch-SQL oracle."""
     from .streaming import docs as SD
 
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "documents")
     corpus = tables.load(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 != 0
@@ -2159,7 +2000,6 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot) like a prepared statement."""
     import os
 
-    tune_for_oracle(spark)
     st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
     cache_key = (
         spark.sparkContext.applicationId,
@@ -2233,7 +2073,6 @@ def ann_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     the TELESCOPED beam plan here — whole-adjacency persisted joins,
     no per-hop driver pull — stays distinct from
     `ann_graph_prebuilt`'s bucket-pruned probe."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     cents, _books, _res = _ann_models(emb, sf_dir)
@@ -2258,7 +2097,6 @@ def ann_graph_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists bucket-partitioned, each beam hop reads only the
     frontier's buckets (static pruning) — same parameters, result,
     and oracle as the telescoped ann_graph."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     path = _staged_index(
         sf_dir, "gidx", "centroids",
@@ -2272,7 +2110,6 @@ def ann_graph_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc OOV rate vs the corpus top-100 token vocabulary."""
-    tune_for_oracle(spark)
     return corpus.oov_rate(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2281,7 +2118,6 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     of orders (reference = even keys)."""
     from .operators import expectations
 
-    tune_for_oracle(spark)
     orders = tables.load(spark, sf_dir, "orders")
     ref = orders.filter(F.col("o_orderkey") % 2 == 0)
     cur = orders.filter(F.col("o_orderkey") % 2 == 1)
@@ -2293,7 +2129,6 @@ def k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     combination over the valid bank rows (k=5)."""
     from .operators import expectations
 
-    tune_for_oracle(spark)
     return expectations.k_anonymity(
         _bank_valid(spark, sf_dir), ["age", "job", "marital"], k=5
     )
@@ -2306,7 +2141,6 @@ def t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     EMD via the cumulative-difference closed form."""
     from .operators import expectations
 
-    tune_for_oracle(spark)
     return expectations.t_closeness(
         _bank_valid(spark, sf_dir), ["job", "marital"], "age", t=0.2
     )
@@ -2315,7 +2149,6 @@ def t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-mean content hash of each media payload's stream body,
     sliced from the real container — the media-dedup signature."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_media(tables.load(spark, sf_dir, "documents"))
     return binaryops.block_mean_hash(media)
 
@@ -2323,19 +2156,16 @@ def media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pretrain_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end pretraining export: gate -> dedup -> span removal ->
     chunking, one declarative plan."""
-    tune_for_oracle(spark)
     return corpus.pretrain_export(tables.load(spark, sf_dir, "documents"))
 
 
 def source_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source shared-span (8-gram) copying map."""
-    tune_for_oracle(spark)
     return corpus.source_span_overlap(tables.load(spark, sf_dir, "documents"))
 
 
 def source_semantic_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise cosine between per-source embedding centroids."""
-    tune_for_oracle(spark)
     return corpus.source_semantic_map(
         tables.load(spark, sf_dir, "documents"),
         tables.load(spark, sf_dir, "embeddings"),
@@ -2345,7 +2175,6 @@ def source_semantic_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical normalization pass over documents with before/after
     length accounting."""
-    tune_for_oracle(spark)
     d = tables.load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -2359,7 +2188,6 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: top-10 unshipped BUILDING orders by revenue."""
-    tune_for_oracle(spark)
     return relational.shipping_priority(
         tables.load(spark, sf_dir, "customer"),
         tables.load(spark, sf_dir, "orders"),
@@ -2369,7 +2197,6 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by returned-item revenue."""
-    tune_for_oracle(spark)
     return relational.returned_revenue(
         tables.load(spark, sf_dir, "customer"),
         tables.load(spark, sf_dir, "orders"),
@@ -2380,13 +2207,11 @@ def returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def quality_autocut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality gate at the corpus's own 25th percentile."""
-    tune_for_oracle(spark)
     return corpus.quality_autocut(tables.load(spark, sf_dir, "documents"))
 
 
 def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row dataset card for the documents corpus."""
-    tune_for_oracle(spark)
     return corpus.dataset_card(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2397,7 +2222,6 @@ def ann_ivf_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     the telescoped ann_ivf. Built once per corpus SNAPSHOT, probed
     many times (`_staged_index` for the fingerprint-keyed, atomically
     published cache)."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     path = _staged_index(
         sf_dir, "ivf", "centroids",
@@ -2411,7 +2235,6 @@ def link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 predicted co-purchase links by neighborhood Jaccard."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.link_prediction(tables.load(spark, sf_dir, "lineitem"))
 
 
@@ -2420,14 +2243,12 @@ def hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketching the union directly."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.hll_merge_proof(tables.load(spark, sf_dir, "events"))
 
 
 def media_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Container-integrity screen over deterministically corrupted
     media: %13 smashed magic, %17 zeroed integrity field."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_media(tables.load(spark, sf_dir, "documents"))
     return binaryops.validate_media(binaryops.corrupt_for_validation(media))
 
@@ -2435,7 +2256,6 @@ def media_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STATEFUL streaming funnel (applyInPandasWithState) — checked
     against the batch funnel's oracle (FUNNEL_Q batch-equivalence)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.funnel_stream(spark, d)
 
@@ -2443,7 +2263,6 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: NATION_2's share of ASIA-customer revenue by
     order year."""
-    tune_for_oracle(spark)
     return relational.market_share(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "orders"),
@@ -2459,7 +2278,6 @@ def rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     reciprocal-rank fusion — the RAG/decontamination two-arm ranker."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.hybrid_rank_fusion(
         tables.load(spark, sf_dir, "documents"),
         tables.load(spark, sf_dir, "embeddings"),
@@ -2472,7 +2290,6 @@ def rank_fusion_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion stage's pluggability claim with its own oracle."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.hybrid_rank_fusion(
         tables.load(spark, sf_dir, "documents"),
         tables.load(spark, sf_dir, "embeddings"),
@@ -2485,7 +2302,6 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation step that oversamples good documents with no hard cut."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.weighted_sample(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2494,7 +2310,6 @@ def quality_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
     80% of quality mass — budgeted selection, not a global threshold."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.quality_topp(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2503,7 +2318,6 @@ def source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard alongside — the mixing-weight / mirrored-crawl signal."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.source_bottomk_jaccard(
         tables.load(spark, sf_dir, "documents")
     )
@@ -2513,7 +2327,6 @@ def bottleneck_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21-shaped EXISTS/NOT-EXISTS pair as two fact
     aggregations: sole latest-shipping supplier on multi-supplier
     orders."""
-    tune_for_oracle(spark)
     return relational.bottleneck_suppliers(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "supplier"),
@@ -2523,7 +2336,6 @@ def bottleneck_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch conversion attribution: each purchase credited to
     the user's most recent preceding touch (ignore-nulls window)."""
-    tune_for_oracle(spark)
     return relational.last_touch_attribution(
         tables.load(spark, sf_dir, "events")
     )
@@ -2532,7 +2344,6 @@ def attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf slope of the corpus frequency curve — the one-row corpus
     health check over the top-100 vocabulary."""
-    tune_for_oracle(spark)
     return corpus.zipf_fit(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2541,7 +2352,6 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applyInPandasWithState, out-of-order-safe re-attribution) —
     checked against the batch attribution's oracle (ATTRIBUTION_Q
     batch-equivalence, the stream_window_agg bar)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.attribution_stream(spark, d)
 
@@ -2551,7 +2361,6 @@ def quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact value recovered through sketch-guided bin pruning."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.histogram_quantiles(
         tables.load(spark, sf_dir, "lineitem")
     )
@@ -2560,7 +2369,6 @@ def quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered vector search: label-equality pre-filter as a
     broadcast hash-join key — search-within-a-slice at corpus scale."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     return similarity.filtered_topk(
         emb, similarity.corpus_filtered_queries(emb, n=5), k=10
@@ -2572,7 +2380,6 @@ def cms_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frequency-ranked "what is my corpus full of" audit view."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.cms_ngram_hitters(
         tables.load(spark, sf_dir, "documents")
     )
@@ -2583,7 +2390,6 @@ def cms_ngrams_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate + overcount alongside (overcount >= 0 always)."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.cms_ngram_hitters_exact(
         tables.load(spark, sf_dir, "documents")
     )
@@ -2594,7 +2400,6 @@ def countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-memory mergeable point-query sketch."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.countmin_freq(tables.load(spark, sf_dir, "events"))
 
 
@@ -2603,14 +2408,12 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim-quote contamination and boilerplate hunting."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.phrase_search(tables.load(spark, sf_dir, "documents"))
 
 
 def containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle containment — the near-superset duplicates a
     symmetric Jaccard pass misses."""
-    tune_for_oracle(spark)
     return dedup.containment_pairs(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2619,7 +2422,6 @@ def zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id, event_id) — the data-skipping tightness report."""
     from .sources import sinks
 
-    tune_for_oracle(spark)
     return sinks.zorder_layout_stats(
         tables.load(spark, sf_dir, "events"), "user_id", "event_id"
     )
@@ -2631,7 +2433,6 @@ def zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: per-priority count of a quarter's orders with a
     90-day-late-shipping line (EXISTS as one LEFT SEMI hash join)."""
-    tune_for_oracle(spark)
     return relational.late_priority_orders(
         tables.load(spark, sf_dir, "orders"),
         tables.load(spark, sf_dir, "lineitem"),
@@ -2641,7 +2442,6 @@ def order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cust_order_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: customer order-count distribution including
     the zero-order bucket (left outer join + double groupBy)."""
-    tune_for_oracle(spark)
     return relational.cust_order_dist(
         tables.load(spark, sf_dir, "customer"),
         tables.load(spark, sf_dir, "orders"),
@@ -2651,7 +2451,6 @@ def cust_order_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: one ship-month's promo-part revenue share
     (broadcast dim join, shared decimal accumulator pass)."""
-    tune_for_oracle(spark)
     return relational.promo_revenue(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "part"),
@@ -2662,7 +2461,6 @@ def small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: average yearly revenue of below-half-mean
     quantity lines for one brand/type slice (correlated scalar
     subquery rewritten as aggregate + broadcast rejoin)."""
-    tune_for_oracle(spark)
     return relational.small_qty_revenue(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "part"),
@@ -2673,7 +2471,6 @@ def large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: orders above the 99.9th-percentile total
     quantity with their customers (HAVING-IN rewritten as pre-join
     aggregate filter)."""
-    tune_for_oracle(spark)
     return relational.large_orders(
         tables.load(spark, sf_dir, "customer"),
         tables.load(spark, sf_dir, "orders"),
@@ -2684,7 +2481,6 @@ def large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: above-average-balance customers idle since
     2000, per nation (scalar AVG broadcast + LEFT ANTI join)."""
-    tune_for_oracle(spark)
     return relational.idle_customers(
         tables.load(spark, sf_dir, "customer"),
         tables.load(spark, sf_dir, "orders"),
@@ -2695,7 +2491,6 @@ def discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: revenue from three disjunctive
     brand/size/quantity baskets (OR-of-ANDs residual in one codegen
     stage)."""
-    tune_for_oracle(spark)
     return relational.discounted_revenue(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "part"),
@@ -2706,7 +2501,6 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D Pareto frontier of the parts catalog (min price, max size)
     via the distributed-prefix-max spine — the oracle keeps the
     O(n^2) NOT-EXISTS formulation as an independent cross-check."""
-    tune_for_oracle(spark)
     return relational.skyline_parts(tables.load(spark, sf_dir, "part"))
 
 
@@ -2714,7 +2508,6 @@ def ann_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via 8-bit scalar quantization (sixth index family):
     dequantized-code approximate cosine shortlist, exact re-rank —
     quantization error observable per hit via the approx column."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     return similarity.sq_topk(emb, similarity.corpus_queries(emb, n=5), k=10)
 
@@ -2725,7 +2518,6 @@ def ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviations."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.ewma_anomaly(tables.load(spark, sf_dir, "events"))
 
 
@@ -2733,7 +2525,6 @@ def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction: stopword-delimited phrase islands,
     degree/frequency word scores frozen to integer micro-units, top-3
     phrases per document."""
-    tune_for_oracle(spark)
     return corpus.rake_keywords(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2741,7 +2532,6 @@ def join_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-join skew forecast: per-key deg_A x deg_B output
     contributions of events x orders on the user key, priced without
     materializing the join."""
-    tune_for_oracle(spark)
     return skew.join_hotspots(
         tables.load(spark, sf_dir, "events"),
         tables.load(spark, sf_dir, "orders"),
@@ -2754,7 +2544,6 @@ def media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate media pairs: banded block-mean-hash buckets,
     exact Hamming re-rank — the media-layer companion of
     MinHash-LSH."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_media(tables.load(spark, sf_dir, "documents"))
     return binaryops.phash_near_dup(binaryops.block_mean_hash(media))
 
@@ -2764,7 +2553,6 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applyInPandasWithState, out-of-order-safe re-scoring) — checked
     against the batch ewma_anomaly's oracle (EWMA_ANOMALY_Q
     batch-equivalence, the stream_window_agg bar)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.ewma_stream(spark, d)
 
@@ -2774,7 +2562,6 @@ def grouped_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUPED aggregate — per-dimension cardinality from one pass."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.grouped_hll_distinct(tables.load(spark, sf_dir, "events"))
 
 
@@ -2782,7 +2569,6 @@ def market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-order co-purchase association rules: support /
     confidence / lift over part pairs, order-key co-partitioned
     self-join with a basket-size blast-radius guard."""
-    tune_for_oracle(spark)
     return relational.market_basket(tables.load(spark, sf_dir, "lineitem"))
 
 
@@ -2792,7 +2578,6 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     stack-unpivot pass, contingency cells at model-parameter scale."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.chi2_independence(
         _bank_valid(spark, sf_dir),
         ["education", "housing", "job", "marital"],
@@ -2806,7 +2591,6 @@ def cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjusted effect and the variance reduction bought."""
     from .operators import experiments
 
-    tune_for_oracle(spark)
     return experiments.cuped_report(tables.load(spark, sf_dir, "events"))
 
 
@@ -2816,7 +2600,6 @@ def theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the set-intersection companion to grouped_hll."""
     from .operators import sketches
 
-    tune_for_oracle(spark)
     return sketches.theta_intersections(tables.load(spark, sf_dir, "events"))
 
 
@@ -2826,7 +2609,6 @@ def dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-processing, true-count audit columns."""
     from .operators import expectations
 
-    tune_for_oracle(spark)
     return expectations.dp_counts(tables.load(spark, sf_dir, "events"))
 
 
@@ -2834,7 +2616,6 @@ def maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-interaction MaxSim top-10 (ColBERT kernel): subspace
     slice bags, per-slice max, fixed-order slice sum — the
     multi-vector retrieval scorer."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     return similarity.maxsim_topk(emb, similarity.corpus_queries(emb, n=5))
 
@@ -2853,7 +2634,6 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources import sinks
 
-    tune_for_oracle(spark)
     orders = tables.load(spark, sf_dir, "orders")
     customer = tables.load(spark, sf_dir, "customer")
     src = os.path.join(os.path.abspath(sf_dir), "orders.parquet")
@@ -2892,7 +2672,6 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank corpus keywords: damped PageRank over the
     candidate-word co-occurrence graph (lead-window pairing, shared
     power-iteration machinery with the co-purchase pagerank)."""
-    tune_for_oracle(spark)
     return corpus.textrank_keywords(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2902,7 +2681,6 @@ def ann_pq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish — `_staged_index`), the probe ADC-scores the stored code
     columns; same parameters, result and oracle as the telescoped
     pq_topk."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     path = _staged_index(
         sf_dir, "pq", "books",
@@ -2917,7 +2695,6 @@ def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row chi-square of observed arm sizes vs the designed 50/50."""
     from .operators import experiments
 
-    tune_for_oracle(spark)
     return experiments.srm_check(tables.load(spark, sf_dir, "events"))
 
 
@@ -2926,7 +2703,6 @@ def stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-seen state feeding the same one-row chi-square — checked
     against the batch SRM_Q (batch-equivalence, the stream_window_agg
     bar)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.srm_stream(spark, d)
 
@@ -2935,7 +2711,6 @@ def stream_msprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING mSPRT monitor: update-mode per-(day, arm) partial
     sums drained with availableNow, terminal rows through the shared
     λ walk — checked against the batch MSPRT_Q (batch-equivalence)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.msprt_stream(spark, d)
 
@@ -2944,7 +2719,6 @@ def judge_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between the quality-ensemble gate and the CCNet
     perplexity terciles — inter-judge agreement for curation
     pipelines."""
-    tune_for_oracle(spark)
     return corpus.judge_agreement(tables.load(spark, sf_dir, "documents"))
 
 
@@ -2954,7 +2728,6 @@ def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval."""
     from .operators import experiments
 
-    tune_for_oracle(spark)
     return experiments.bootstrap_ci(tables.load(spark, sf_dir, "orders"))
 
 
@@ -2964,7 +2737,6 @@ def did_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     family."""
     from .operators import experiments
 
-    tune_for_oracle(spark)
     return experiments.did_report(tables.load(spark, sf_dir, "events"))
 
 
@@ -2981,7 +2753,6 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
     st = os.stat(src)
@@ -3014,7 +2785,6 @@ def winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing/MOSS fingerprint overlap pairs: every >= w+k-1-token
     shared run is guaranteed a shared fingerprint — the local
     (non-probabilistic) member of the near-dup family."""
-    tune_for_oracle(spark)
     return dedup.winnow_pairs(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3024,7 +2794,6 @@ def bt_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint, 8 iterations."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.bt_strengths(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3033,7 +2802,6 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5 shuffle inside each stage."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.curriculum_order(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3041,7 +2809,6 @@ def cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (rolling-hash cut rule): boundaries
     move with the content, so shared regions chunk identically — the
     storage-dedup primitive complementing fixed-width chunk_docs."""
-    tune_for_oracle(spark)
     return corpus.cdc_chunks(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3051,7 +2818,6 @@ def rm3_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass — the classic recall-boosting lexical re-run."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.rm3_topk(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3061,7 +2827,6 @@ def mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary-relevance ranking readout."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.mrr_at_k(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3069,7 +2834,6 @@ def emb_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal component of the embedding cloud (power
     iteration on the in-cluster covariance) — the anisotropy /
     common-direction health check."""
-    tune_for_oracle(spark)
     return similarity.top_principal_component(
         tables.load(spark, sf_dir, "embeddings")
     )
@@ -3081,7 +2845,6 @@ def woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     credit-scorecard predictor ranking."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir).withColumn(
         "_label", (F.col("y") == "yes").cast("int")
     )
@@ -3099,7 +2862,6 @@ def msprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuped_report/srm_check."""
     from .operators import experiments
 
-    tune_for_oracle(spark)
     return experiments.msprt_monitor(tables.load(spark, sf_dir, "events"))
 
 
@@ -3109,7 +2871,6 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.kcenter_coreset(
         tables.load(spark, sf_dir, "embeddings"), k=8
     )
@@ -3119,7 +2880,6 @@ def dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc duplicated-token fraction from the substr_dedup
     extents — the corpus-duplication headline stat (Lee et al. 2022
     Table 2 shape)."""
-    tune_for_oracle(spark)
     return dedup.dup_profile(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3128,7 +2888,6 @@ def substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc extents of >= 8-token spans that occur verbatim elsewhere
     in the corpus — sliding-window fingerprints + gaps-and-islands
     coalesce, the exact-extent complement of winnow_dedup."""
-    tune_for_oracle(spark)
     return dedup.substr_dedup(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3137,7 +2896,6 @@ def substr_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new batch (doc_id % 5 == 0) already present verbatim in the
     existing corpus — substr_dedup in the per-shard production
     shape."""
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return dedup.substr_dedup_incremental(
         docs.filter(F.col("doc_id") % 5 == 0),
@@ -3149,7 +2907,6 @@ def kn_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser–Ney bigram cross-entropy per document —
     the KenLM-grade perplexity signal (absolute discounting +
     continuation-count back-off)."""
-    tune_for_oracle(spark)
     return corpus.kneser_ney_xent(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3159,7 +2916,6 @@ def lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates and lifts."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     scored = v.select(
         "bank_id",
@@ -3184,7 +2940,6 @@ def column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy, normalized entropy, top-value concentration."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.column_entropy(
         tables.load(spark, sf_dir, "customer"),
         ["c_mktsegment", "c_nationkey", "c_acctbal"],
@@ -3197,7 +2952,6 @@ def score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold-free companion to lift_deciles' banded view."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     scored = v.select(
         F.round(
@@ -3220,7 +2974,6 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibration are different failures; this is the second readout."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     scored = v.select(
         F.round(
@@ -3243,7 +2996,6 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     extractor run before community detection or embedding training."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.kcore(tables.load(spark, sf_dir, "lineitem"))
 
 
@@ -3253,7 +3005,6 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     data loop (DPR/ANCE style)."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.hard_negatives(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3261,7 +3012,6 @@ def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming leaderboard: stateful per-user counts (update mode),
     top-10 with shares at the availableNow drain — checked against
     the batch groupBy-count top-k oracle."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.topk_users_stream(spark, d)
 
@@ -3271,7 +3021,6 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine redundancy) — the RAG context-window re-ranker."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.mmr_rerank(
         tables.load(spark, sf_dir, "documents"),
         tables.load(spark, sf_dir, "embeddings"),
@@ -3284,7 +3033,6 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing the evaluation family (AUC, calibration, nDCG)."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.ndcg_at_k(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3293,7 +3041,6 @@ def mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — nonparametric "is this feed drifting" monitor."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.mann_kendall(tables.load(spark, sf_dir, "events"))
 
 
@@ -3302,7 +3049,6 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integer-rescaled cumulative deviation, exact argmax)."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.cusum_changepoint(
         tables.load(spark, sf_dir, "events")
     )
@@ -3313,7 +3059,6 @@ def survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     administrative right-censoring (ordered-fold product limit)."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.survival_km(tables.load(spark, sf_dir, "events"))
 
 
@@ -3322,7 +3067,6 @@ def gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     market segment — the revenue-concentration profile."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.gini_concentration(
         tables.load(spark, sf_dir, "orders"),
         tables.load(spark, sf_dir, "customer"),
@@ -3334,7 +3078,6 @@ def itemitem_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer-part incidence with the hot-user basket prune."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.itemitem_cf(
         tables.load(spark, sf_dir, "orders"),
         tables.load(spark, sf_dir, "lineitem"),
@@ -3344,14 +3087,12 @@ def itemitem_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Good-Turing count-of-counts table r=1..10 with the unseen-mass
     estimate (r=1 mass_share = P0) over the corpus vocabulary."""
-    tune_for_oracle(spark)
     return corpus.good_turing(tables.load(spark, sf_dir, "documents"))
 
 
 def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source TTR / root-TTR / Simpson repeat rate / Yule's K —
     the templated-spam lexical screens."""
-    tune_for_oracle(spark)
     return corpus.lexical_diversity(
         tables.load(spark, sf_dir, "documents")
     )
@@ -3360,7 +3101,6 @@ def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary-growth fit at 16 doc checkpoints —
     V(N) ~ K*N^beta, the zipf_fit companion."""
-    tune_for_oracle(spark)
     return corpus.heaps_law(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3369,7 +3109,6 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     and 24 per event type — DECIMAL-exact Pearson moments."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.acf_lags(tables.load(spark, sf_dir, "events"))
 
 
@@ -3378,7 +3117,6 @@ def seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient statistics) per event type."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.seasonality_strength(
         tables.load(spark, sf_dir, "events")
     )
@@ -3389,7 +3127,6 @@ def hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     order statistics — how heavy is the wallet tail."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.hill_tail(
         tables.load(spark, sf_dir, "orders"),
         tables.load(spark, sf_dir, "customer"),
@@ -3399,7 +3136,6 @@ def hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 def df_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Church-Gale term burstiness (cf/df) top-50 — topical/templated
     vs evenly-spread vocabulary."""
-    tune_for_oracle(spark)
     return corpus.df_burstiness(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3407,7 +3143,6 @@ def tfidf_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs TF-IDF cosine (Bayardo APSS) over bigram features
     with discriminative-term blocking — top-50 weighted near-dup
     pairs."""
-    tune_for_oracle(spark)
     return dedup.tfidf_allpairs(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3415,7 +3150,6 @@ def tfidf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of tfidf_allpairs' df<=20 blocking vs the exact
     all-shared-term top-50 on the lowest-300-doc_id audit slice —
     the exact twin every approximate family carries."""
-    tune_for_oracle(spark)
     return dedup.tfidf_recall(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3424,7 +3158,6 @@ def theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope — the magnitude companion to mann_kendall)."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.theil_sen(tables.load(spark, sf_dir, "events"))
 
 
@@ -3434,7 +3167,6 @@ def brier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     miscalibrated (fixable) or undiscriminating (not)."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     v = _bank_valid(spark, sf_dir)
     scored = v.select(
         F.round(
@@ -3455,7 +3187,6 @@ def judge_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Krippendorff's alpha across THREE automated quality judges
     (ensemble gate, perplexity tercile, repetition filter) — the
     multi-rater generalization of judge_agreement's Cohen kappa."""
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     a = corpus.quality_ensemble(docs).select(
         F.col("doc_id").alias("unit"),
@@ -3481,7 +3212,6 @@ def stream_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING histogram-percentile monitor: per-type fixed-width
     value-bucket counts as constant-size update-mode state, exact
     histogram p95 at drain — bit-equal to the batch bucketing."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.histogram_p95_stream(spark, d)
 
@@ -3489,7 +3219,6 @@ def stream_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
 def readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease per source (vowel-run syllables, clamped
     sentence runs) — the readability quality screen."""
-    tune_for_oracle(spark)
     return corpus.readability(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3497,7 +3226,6 @@ def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING HyperLogLog: the 2^p register table as constant-size
     update-mode state, drained registers bit-equal to the batch build
     — shares HLL_DISTINCT_Q verbatim (the cms_incremental precedent)."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.hll_stream(spark, d, tables.load(spark, sf_dir, "events"))
 
@@ -3506,7 +3234,6 @@ def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING higher-moment monitor: exact DECIMAL power sums as
     constant update-mode state, latest-state drain via max_by on the
     monotone row count — shares MOMENTS_Q verbatim."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "events")
     return EV.moments_stream(spark, d)
 
@@ -3516,7 +3243,6 @@ def leadlag_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     0/1/2 hours — which feeds lead which (acf_lags' off-diagonal)."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.leadlag_ccf(tables.load(spark, sf_dir, "events"))
 
 
@@ -3526,7 +3252,6 @@ def negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-quantized smoothed-unigram CDF."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.negative_samples(
         tables.load(spark, sf_dir, "documents")
     )
@@ -3536,7 +3261,6 @@ def position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U-shaped (40/20/40) multi-touch attribution per touch type for
     each user's first purchase — the middle ground between last-touch
     and linear credit."""
-    tune_for_oracle(spark)
     return relational.position_attribution(
         tables.load(spark, sf_dir, "events")
     )
@@ -3547,7 +3271,6 @@ def pareto_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaching 80% of segment revenue (exact decimal threshold)."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.pareto_cut(
         tables.load(spark, sf_dir, "orders"),
         tables.load(spark, sf_dir, "customer"),
@@ -3559,7 +3282,6 @@ def media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact pixel sums from a genuine P6 header+raster parse (the
     DuckDB twin recomputes the stats from the synthesis arithmetic,
     proving the decoder read every byte correctly)."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_ppm(tables.load(spark, sf_dir, "documents"))
     return binaryops.decode_ppm(media)
 
@@ -3568,7 +3290,6 @@ def media_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode over the WAV lane: RIFF chunk walk to the
     data chunk, int16-LE sample reinterpretation, exact integer signal
     stats (count / amplitude sum / peak / zero crossings)."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_media(
         tables.load(spark, sf_dir, "documents")
     ).filter(F.col("kind") == "audio")
@@ -3581,7 +3302,6 @@ def media_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction, exact per-channel pixel sums (the DuckDB twin
     recomputes the stats from the synthesis arithmetic byte-free,
     proving inflate + un-filter reproduced every raster byte)."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_png(tables.load(spark, sf_dir, "documents"))
     return binaryops.decode_png(media)
 
@@ -3592,7 +3312,6 @@ def ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned-prefix-sum EDF spine."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.ks_two_sample(tables.load(spark, sf_dir, "events"))
 
 
@@ -3601,7 +3320,6 @@ def mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the rank-biserial effect size."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.mann_whitney(tables.load(spark, sf_dir, "events"))
 
 
@@ -3610,7 +3328,6 @@ def kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     series — exact pair counts, one terminal sqrt."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.kendall_tau(tables.load(spark, sf_dir, "events"))
 
 
@@ -3619,14 +3336,12 @@ def bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph, level-synchronous frontier expansion."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.bfs_depths(tables.load(spark, sf_dir, "lineitem"))
 
 
 def bigram_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dunning log-likelihood collocations over the corpus bigrams —
     the evidence-weighing companion to bigram_pmi."""
-    tune_for_oracle(spark)
     return corpus.bigram_llr(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3636,7 +3351,6 @@ def holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the oracle's linear recursive CTE."""
     from .operators import timeseries
 
-    tune_for_oracle(spark)
     return timeseries.holt_linear(tables.load(spark, sf_dir, "events"))
 
 
@@ -3645,7 +3359,6 @@ def assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact sufficient statistics, one terminal correlation."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.assortativity(tables.load(spark, sf_dir, "lineitem"))
 
 
@@ -3654,21 +3367,18 @@ def strat_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     across age × wealth strata on the validated bank rows."""
     from .operators import experiments
 
-    tune_for_oracle(spark)
     return experiments.strat_ate(_bank_valid(spark, sf_dir))
 
 
 def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix against the labeled lang column —
     exact cells plus per-label recall shares."""
-    tune_for_oracle(spark)
     return corpus.langid_confusion(tables.load(spark, sf_dir, "documents"))
 
 
 def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k vocabulary coverage curve (k = 10/100/1000) — the
     Zipf-head summary for tokenizer vocabulary sizing."""
-    tune_for_oracle(spark)
     return corpus.vocab_coverage(tables.load(spark, sf_dir, "documents"))
 
 
@@ -3677,7 +3387,6 @@ def clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph — oriented triangle enumeration plus one degree pass."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.clustering_coeff(tables.load(spark, sf_dir, "lineitem"))
 
 
@@ -3720,7 +3429,6 @@ def partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(build_dir, "byday"))
         )
 
-    tune_for_oracle(spark)
     path = _staged_index(
         sf_dir, "events_byday", "byday", build, srcs=("events.parquet",)
     )
@@ -3741,7 +3449,6 @@ def stream_langid_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming language-mix monitor over the documents feed —
     constant-size per-label state, drained counts equal the batch
     language-ID mix exactly."""
-    tune_for_oracle(spark)
     d = _stream_src_dir(sf_dir, "documents")
     return EV.langid_mix_stream(spark, d)
 
@@ -3751,7 +3458,6 @@ def ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen from a seed set, the related-items ranker."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.ppr(tables.load(spark, sf_dir, "lineitem"))
 
 
@@ -3761,14 +3467,12 @@ def map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing the nDCG/MRR ranking-eval family."""
     from .operators import retrieval
 
-    tune_for_oracle(spark)
     return retrieval.map_at_k(tables.load(spark, sf_dir, "documents"))
 
 
 def cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimum-cost supplier per part (the TPC-H Q2 correlated-MIN
     pattern as one per-part window)."""
-    tune_for_oracle(spark)
     return relational.cheapest_supplier(
         tables.load(spark, sf_dir, "lineitem")
     )
@@ -3779,7 +3483,6 @@ def event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     each user's timeline (two leads over ONE user-partitioned window,
     one 5³-cardinality groupBy) — the sequence-mining step past
     event_transitions' pairs."""
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
@@ -3805,7 +3508,6 @@ def transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(26,12) (order-independent), the repo-wide float-sum rule.
 
     Returns (from_type, n_out, entropy) — entropy 6-dp."""
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     trans = (
@@ -3843,7 +3545,6 @@ def lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind the Gini scalar."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.lorenz_deciles(tables.load(spark, sf_dir, "orders"))
 
 
@@ -3852,7 +3553,6 @@ def cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     completes the drift family: PSI binned, KS sup-norm, CvM integral."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.cvm_two_sample(tables.load(spark, sf_dir, "events"))
 
 
@@ -3899,7 +3599,6 @@ def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC iterations, 4 rounds) over the repeated-co-purchase graph."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.label_prop(tables.load(spark, sf_dir, "lineitem"))
 
 
@@ -3909,7 +3608,6 @@ def perm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds, 32 deterministic replicates."""
     from .operators import experiments
 
-    tune_for_oracle(spark)
     return experiments.perm_test(tables.load(spark, sf_dir, "events"))
 
 
@@ -3919,7 +3617,6 @@ def emb_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions before an ANN-rebuild/retraining decision."""
     from .operators import expectations
 
-    tune_for_oracle(spark)
     return expectations.emb_dim_psi(tables.load(spark, sf_dir, "embeddings"))
 
 
@@ -3928,7 +3625,6 @@ def ate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     of has_loans → subscription over age × wealth strata."""
     from .operators import experiments
 
-    tune_for_oracle(spark)
     return experiments.ate_report(_bank_valid(spark, sf_dir))
 
 
@@ -3937,7 +3633,6 @@ def media_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side chunk walk reads each image's tEXt (Source=...) pair
     without a decode; the twin recomputes the pairs from the
     synthesis inputs byte-free."""
-    tune_for_oracle(spark)
     media = binaryops.synthesize_png(tables.load(spark, sf_dir, "documents"))
     return binaryops.png_text_chunks(media)
 
@@ -3947,14 +3642,12 @@ def graph_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph (exact on trees, tight in practice)."""
     from .operators import graph
 
-    tune_for_oracle(spark)
     return graph.graph_diameter(tables.load(spark, sf_dir, "lineitem"))
 
 
 def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: the quarter's argmax-revenue supplier(s),
     max via scalar subquery over the persisted per-supplier rollup."""
-    tune_for_oracle(spark)
     return relational.top_supplier(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "supplier"),
@@ -3964,7 +3657,6 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: cross-border revenue between every ordered
     nation pair per ship year."""
-    tune_for_oracle(spark)
     return relational.nation_volume(
         tables.load(spark, sf_dir, "lineitem"),
         tables.load(spark, sf_dir, "orders"),
@@ -3979,7 +3671,6 @@ def moments_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL power sums of milli-quantized values."""
     from .operators import profiling
 
-    tune_for_oracle(spark)
     return profiling.moments_profile(tables.load(spark, sf_dir, "events"))
 
 
@@ -4022,7 +3713,6 @@ def unigram_lm_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune per round."""
     from .operators import unigram
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return unigram.unigram_merges(
         docs, vocab=_unigram_model(docs, sf_dir)
@@ -4035,7 +3725,6 @@ def unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs once per DISTINCT word, one equi-join fans it back out."""
     from .operators import unigram
 
-    tune_for_oracle(spark)
     docs = tables.load(spark, sf_dir, "documents")
     return unigram.unigram_tokenize(
         docs, vocab=_unigram_model(docs, sf_dir)
@@ -4050,7 +3739,6 @@ def kmeans_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass + the contingency matrix, not a Lloyd re-train."""
     from .operators import clustering
 
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     return clustering.cluster_purity(
         emb, k=8, centroids=_kmeans_model(emb, sf_dir, k=8)
@@ -4063,7 +3751,6 @@ def lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the worst regression — the batch readout that sizes a
     streaming watermark before deploying the windowed aggregations.
     ONE user-partitioned window, exact integers."""
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -4093,7 +3780,6 @@ def overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     burst monitor is needed). Exact integer sufficient statistics,
     one terminal double assembly."""
     day_us = 86_400 * 1_000_000
-    tune_for_oracle(spark)
     ev = tables.load(spark, sf_dir, "events")
     daily = (
         ev.select(
@@ -4150,7 +3836,6 @@ def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained state from scratch in SQL (base-trained Lloyd walk,
     full-corpus assignment), so a hash match proves add-batch ==
     rebuild-with-frozen-quantizer exactly."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     path = _ivfinc_path(spark, sf_dir)
     q = similarity.corpus_queries(emb, n=5)
@@ -4163,7 +3848,6 @@ def ivf_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_added, added_share per cell). The staleness monitor that decides
     when the add-batch path has drifted far enough to warrant a
     retrain."""
-    tune_for_oracle(spark)
     path = _ivfinc_path(spark, sf_dir)
     return similarity.ivf_cell_stats(spark, path)
 
@@ -4174,7 +3858,6 @@ def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc (banded MinHash, est_jaccard >= 0.5) — the partial-reuse
     curation signal between doc-level minhash and char-level
     ExactSubstr."""
-    tune_for_oracle(spark)
     return dedup.chunk_dup_rollup(tables.load(spark, sf_dir, "documents"))
 
 
@@ -4186,7 +3869,6 @@ def ann_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     per corpus snapshot (r14 verdict item 1): layer 0, the sampled
     layer-1 lists AND the cells² entry grid load from the persisted
     index — the probe plan builds nothing but the two descents."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     cents, _books, _res = _ann_models(emb, sf_dir)
@@ -4222,7 +3904,6 @@ def ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     state from scratch (base-trained walks, full-corpus encoding), so
     a hash match proves add-batch == frozen-model rebuild for the
     full ADC + rerank probe."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
 
     def build(d: str) -> None:
@@ -4243,7 +3924,6 @@ def shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets — never a single-partition window), per-shard rollup."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.shard_plan(tables.load(spark, sf_dir, "documents"))
 
 
@@ -4255,7 +3935,6 @@ def media_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless, so the twin proves the full bitstream round trip."""
     from .multimodal import jpeg as J
 
-    tune_for_oracle(spark)
     media = J.synthesize_jpeg(tables.load(spark, sf_dir, "documents"))
     return J.decode_jpeg(media)
 
@@ -4292,7 +3971,6 @@ def ann_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd walk, full-corpus assignment + adjacency), so a hash match
     proves insert == frozen-quantizer rebuild for the whole graph:
     adjacency, entries, and the beam descent."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     path = _gidxinc_path(spark, sf_dir)
     q = similarity.corpus_queries(emb, n=5)
@@ -4313,7 +3991,6 @@ def graph_index_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only adjacency's live fraction (stored rows vs rows still
     in an effective top-R) — the compact-when-stale monitor that is
     the graph twin of ``ivf_cell_growth``."""
-    tune_for_oracle(spark)
     path = _gidxinc_path(spark, sf_dir)
     return similarity.graph_index_stats(spark, path)
 
@@ -4326,7 +4003,6 @@ def ann_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds the whole two-layer state from scratch with the
     base-trained quantizer — a hash match proves the hierarchical
     index is maintained end-to-end, not just layer 0."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     path = _gidxinc_path(spark, sf_dir)
     q = similarity.corpus_queries(emb, n=5)
@@ -4366,7 +4042,6 @@ def graph_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth readout must show stored == live with stale_share exactly
     zero in every cell — the twin pins that invariant against the
     from-scratch ledger (compacted mode)."""
-    tune_for_oracle(spark)
     path = _gidxcmp_path(spark, sf_dir)
     return similarity.graph_index_stats(spark, path)
 
@@ -4377,7 +4052,6 @@ def ivf_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction (same survivor scan), so it SHARES
     ann_delete_mask's rebuild-without-deleted oracle — while the
     plan no longer contains the mask anti-join at all."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
 
     def build(d: str) -> None:
@@ -4443,7 +4117,6 @@ def ann_delete_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     that state from scratch, so a hash match proves delete ==
     rebuild exactly (the deletion analogue of ann_ivf_incremental's
     add == rebuild)."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     path = _ivfdel_path(spark, sf_dir)
     q = similarity.corpus_queries(emb, n=5)
@@ -4456,7 +4129,6 @@ def ivf_live_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletion-side monitor pairing ivf_cell_growth's append side.
     At 100 TB this decides WHICH cells to compact (rewrite minus
     tombstones), not whether to retrain."""
-    tune_for_oracle(spark)
     path = _ivfdel_path(spark, sf_dir)
     return similarity.ivf_live_stats(spark, path)
 
@@ -4470,7 +4142,6 @@ def ann_churn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scan; the graph arm keeps tombstoned nodes traversable and
     drops them at the final ranking (the production graph-ANN
     tombstone semantic). Both arms replay exactly in the twin."""
-    tune_for_oracle(spark)
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
     survivors = emb.filter(F.col("vec_id") % 7 != 0)
@@ -4517,7 +4188,6 @@ def pretrain_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side glue."""
     from .operators import sampling
 
-    tune_for_oracle(spark)
     return sampling.pretrain_manifest(
         tables.load(spark, sf_dir, "documents")
     )
@@ -4533,6 +4203,5 @@ def media_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec tests."""
     from .multimodal import jpeg as J
 
-    tune_for_oracle(spark)
     media = J.synthesize_color_jpeg(tables.load(spark, sf_dir, "documents"))
     return J.decode_color_jpeg_stats(media)

@@ -50,13 +50,6 @@ BANK_SCHEMA = T.StructType(
     [T.StructField(name, dtype, True) for name, dtype in BANK_COLUMNS]
 )
 
-# Raw schema: everything as string (we cast explicitly with try_cast so
-# per-field failures can be routed to the error channel instead of
-# aborting under ANSI mode).
-BANK_RAW_SCHEMA = T.StructType(
-    [T.StructField(name, T.StringType(), True) for name, _ in BANK_COLUMNS]
-)
-
 # Error record shape (reference batch_pipeline1.py:80-85,150-155).
 ERROR_SCHEMA = T.StructType(
     [

@@ -51,12 +51,14 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     """Pin session settings that affect value-level parity with the
     DuckDB oracle, on a session we did not create (the driver's).
 
-    Idempotent and cheap; every ``queries()`` callable routes through
-    this so results are timezone-stable regardless of who built the
+    Idempotent and cheap. This is the per-query scope: the registry
+    wrapper in ``__spark_entry__.queries()`` calls it once before every
+    builder, so results are timezone-stable regardless of who built the
     session — and so the PREVIOUS query's pinned frames get released
     (see :func:`pin_for_query`): cached partitions never accumulate
-    across a 317-query battery evicting other queries' working sets
-    (r13 ADVICE).
+    across a 334-query battery evicting other queries' working sets
+    (r13 ADVICE). A builder called directly (``queries.<name>``)
+    skips it.
     """
     release_pinned()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -66,7 +68,8 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
 
 # persisted frames whose lifetime is "this query": the returned plan
 # depends on them, so the operator cannot unpersist before returning —
-# the NEXT query's tune_for_oracle() releases them. Release is
+# the NEXT registered query's scope (tune_for_oracle, called by the
+# queries() wrapper) releases them. Release is
 # correctness-safe by the same argument that makes these persists
 # LRU-evictable: the partitionings are deterministic recomputes, and
 # consumers read derived values (ranks, knots, maxima), never raw
@@ -80,11 +83,12 @@ def pin_for_query(df):
 
     CONTRACT (r14 ADVICE): the pin registry is process-global and
     assumes the battery's STRICTLY SEQUENTIAL build-then-consume
-    usage — build query N, collect it, then build query N+1 (whose
-    ``tune_for_oracle`` releases N's pins). Building a second query
-    while a prior query's returned DataFrame is still being consumed,
-    or driving queries from concurrent threads, unpersists the other
-    query's pinned frames mid-flight. That is CORRECTNESS-SAFE (the
+    usage — build query N, collect it, then build query N+1 through
+    ``queries()``, whose wrapper's ``tune_for_oracle`` releases N's
+    pins. Building a second query while a prior query's returned
+    DataFrame is still being consumed, or driving queries from
+    concurrent threads, unpersists the other query's pinned frames
+    mid-flight. That is CORRECTNESS-SAFE (the
     release contract below: deterministic recomputes, derived-value
     consumers) but silently forfeits the cache benefit; a concurrent
     runner should key pins per query and release its own."""
@@ -130,8 +134,6 @@ def fan_out(df):
     fan_out) is left alone. Apply only where per-row work dominates:
     for cheap relational queries the extra exchange would cost more
     than the parallelism buys."""
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # A/B bisection switch
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:

@@ -1,1 +1,1 @@
-from . import bankcsv, synthetic, tables  # noqa: F401
+from . import synthetic, tables  # noqa: F401

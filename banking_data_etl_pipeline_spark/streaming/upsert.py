@@ -27,7 +27,7 @@ together.
 
 Scale notes: the merge is one key-equi full-outer join per batch —
 co-partitioned if the state table is bucketed on the key
-(operators/bucketing.py); totals accumulate in integer MICRO-UNITS
+(sources/sinks.write_bucketed); totals accumulate in integer MICRO-UNITS
 (exact under any batch split, same contract as
 events.stateful_user_totals). The commit is a pointer flip, not a
 rewrite; the current and immediately-preceding versions are retained

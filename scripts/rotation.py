@@ -84,7 +84,7 @@ def apply_plan(plan: list[str], tier2: list[str], green: dict[str, int]) -> None
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.path.join(repo, "__spark_entry__.py")
     src = open(path, encoding="utf-8").read()
-    m = re.search(r"(def queries\(\).*?return \{\n)(.*?)(\n    \}\n)", src, re.S)
+    m = re.search(r"(def queries\(\).*?registry = \{\n)(.*?)(\n    \}\n)", src, re.S)
     body = m.group(2)
     exprs = dict(re.findall(r'"([a-z0-9_]+)":\s*(Q\.[A-Za-z0-9_]+),', body))
     assert set(exprs) == set(plan), "registry/plan name mismatch"

@@ -11,3 +11,14 @@ def spark():
 
     s = get_spark("tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _query_scope():
+    """Each test is one query scope: builders called as ``Q.<name>``
+    skip the registry's ``tune_for_oracle``, so release the frames they
+    pinned here, as the next registered query would."""
+    yield
+    from banking_data_etl_pipeline_spark.session import release_pinned
+
+    release_pinned()

@@ -5,8 +5,8 @@ from __future__ import annotations
 
 import tempfile
 
-from banking_data_etl_pipeline_spark.operators import bucketing, skew
-from banking_data_etl_pipeline_spark.sources import tables
+from banking_data_etl_pipeline_spark.operators import skew
+from banking_data_etl_pipeline_spark.sources import sinks, tables
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -20,15 +20,15 @@ def test_bucketed_join_is_shuffle_free(spark):
     d = tempfile.mkdtemp(prefix="bucketed_")
     orders = tables.load(spark, SF_DIR, "orders")
     lineitem = tables.load(spark, SF_DIR, "lineitem")
-    bucketing.write_bucketed(
-        orders, "t_orders_b", "o_orderkey", buckets=8, path=f"{d}/orders"
+    sinks.write_bucketed(
+        spark, orders, "t_orders_b", f"{d}/orders", "o_orderkey", 8
     )
-    bucketing.write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "t_lineitem_b", "o_orderkey", buckets=8, path=f"{d}/lineitem",
+    sinks.write_bucketed(
+        spark, lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
+        "t_lineitem_b", f"{d}/lineitem", "o_orderkey", 8,
     )
-    a = bucketing.read_table(spark, "t_orders_b")
-    b = bucketing.read_table(spark, "t_lineitem_b")
+    a = spark.table("t_orders_b")
+    b = spark.table("t_lineitem_b")
     # force SMJ (tables are tiny at sf0.001, broadcast would hide the
     # bucketing effect)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -114,10 +114,10 @@ def test_snapshot_diff_on_bucketed_snapshots_is_shuffle_free(spark):
             F.col("c_acctbal")
         ),
     )
-    bucketing.write_bucketed(cust, "t_cdc_cur", "c_custkey", buckets=4, path=f"{d}/cur")
-    bucketing.write_bucketed(nxt, "t_cdc_nxt", "c_custkey", buckets=4, path=f"{d}/nxt")
-    a = bucketing.read_table(spark, "t_cdc_cur")
-    b = bucketing.read_table(spark, "t_cdc_nxt")
+    sinks.write_bucketed(spark, cust, "t_cdc_cur", f"{d}/cur", "c_custkey", 4)
+    sinks.write_bucketed(spark, nxt, "t_cdc_nxt", f"{d}/nxt", "c_custkey", 4)
+    a = spark.table("t_cdc_cur")
+    b = spark.table("t_cdc_nxt")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -102,18 +102,20 @@ def test_cache_root_is_private_and_owned():
 def test_pinned_persists_release_at_next_query(spark):
     """r13 ADVICE: per-query persisted frames (quantile_normalize's
     vals, top_supplier's rev, the _dist_rank ranged frames) must not
-    accumulate across a battery — the next query's tune_for_oracle
+    accumulate across a battery — the next registered query's scope
     releases the previous query's pins."""
+    import __spark_entry__ as entry
     from banking_data_etl_pipeline_spark import session as S
 
+    qs = entry.queries()
     S.release_pinned()
-    df1 = Q.top_supplier(spark, SF_DIR)
+    df1 = qs["top_supplier"](spark, SF_DIR)
     df1.collect()
     assert len(S._PINNED) == 1
     pinned = S._PINNED[0]
     assert pinned.storageLevel.useMemory
     # next query's builder releases the previous query's pin
-    Q.curriculum_order(spark, SF_DIR).limit(1).collect()
+    qs["curriculum_order"](spark, SF_DIR).limit(1).collect()
     assert pinned.storageLevel.useMemory is False
     assert all(p is not pinned for p in S._PINNED)
     # the released plan still re-executes correctly (eviction-safe)

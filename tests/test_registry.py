@@ -9,6 +9,8 @@ from __future__ import annotations
 import importlib.util
 import re
 
+from conftest import SF_DIR
+
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
@@ -57,3 +59,39 @@ def test_window_boundary_marker_sits_at_slot_50():
     )
     assert "falls HERE" in body
     assert entries_before_marker == 50, entries_before_marker
+
+
+def test_registered_query_resets_session_conf(spark):
+    """The registry's per-query scope re-pins the parity-relevant conf
+    on a session someone else tuned differently."""
+    tz, nanos = "spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong"
+    old = (spark.conf.get(tz), spark.conf.get(nanos))
+    try:
+        spark.conf.set(tz, "America/New_York")
+        spark.conf.set(nanos, "false")
+        _load_entry().queries()["age_group"](spark, SF_DIR)
+        assert spark.conf.get(tz) == "UTC"
+        assert spark.conf.get(nanos) == "true"
+    finally:
+        spark.conf.set(tz, old[0])
+        spark.conf.set(nanos, old[1])
+
+
+def test_every_builder_is_registered_exactly_once():
+    """No query builder without a registered query: the public
+    functions of queries.py are exactly what queries() wraps."""
+    import inspect
+
+    from banking_data_etl_pipeline_spark import queries as Q
+
+    defined = {
+        f
+        for n, f in vars(Q).items()
+        if inspect.isfunction(f) and f.__module__ == Q.__name__ and not n.startswith("_")
+    }
+    registered = [fn.__wrapped__ for fn in _load_entry().queries().values()]
+    assert len(registered) == len(set(registered))
+    assert defined == set(registered), (
+        sorted(f.__name__ for f in defined - set(registered)),
+        sorted(f.__name__ for f in set(registered) - defined),
+    )
