@@ -27,6 +27,15 @@ from pyspark.sql import functions as F
 
 from ..schema import ERRORS_COL
 
+# The fixed error enum: every ``error_type`` a pipeline stage emits. The
+# CLI's per-type counts (and so ``--stats_table``) cover exactly these.
+ERROR_TYPES = ("parsing_error", "data_validation")
+
+
+class UnlistedErrorType(RuntimeError):
+    """Error rows carry an ``error_type`` outside :data:`ERROR_TYPES`, so
+    per-type counts would not add up to the error count."""
+
 
 def empty_errors() -> Column:
     """A typed empty ``_errors`` array."""

@@ -1,7 +1,8 @@
 """End-to-end CLI test: drive ``plans.pipeline.main()`` on a fixture
 CSV and validate both JSON-lines sinks against their field contracts
 (29-field good rows mirroring the reference's PROCESSED_DATA_SCHEMA,
-4-field error rows) plus the --stats_table output."""
+4-field error rows) plus the --stats_table output and the
+--metrics_path run manifest."""
 
 from __future__ import annotations
 
@@ -10,6 +11,9 @@ import glob
 import os
 import tempfile
 
+import pytest
+
+from banking_data_etl_pipeline_spark.operators import errors as E
 from banking_data_etl_pipeline_spark.plans import pipeline as P
 
 HEADER = (
@@ -52,12 +56,14 @@ def test_cli_json_sinks(spark):
     good_dir, bad_dir, stats_dir = (
         os.path.join(d, n) for n in ("good", "bad", "stats")
     )
+    manifest_path = os.path.join(d, "manifest.json")
     P.main(
         [
             "--input_path", csv,
             "--output_table", good_dir,
             "--error_table", bad_dir,
             "--stats_table", stats_dir,
+            "--metrics_path", manifest_path,
         ]
     )
 
@@ -89,6 +95,17 @@ def test_cli_json_sinks(spark):
         for r in spark.read.parquet(stats_dir).collect()
     }
     assert stats == {"data_validation": 2, "parsing_error": 2}
+
+    # run manifest: the counts the writes observed, one run-level batch id
+    with open(manifest_path) as f:
+        manifest = json.load(f)
+    assert manifest["rows_read"] == 6
+    assert manifest["rows_good"] == 2
+    assert manifest["rows_by_error_type"] == {"data_validation": 2, "parsing_error": 2}
+    assert set(manifest["sink_s"]) == {"good", "bad", "stats"}
+    assert all(t >= 0 for t in manifest["sink_s"].values())
+    assert manifest["pipeline_version"] == P.PIPELINE_VERSION
+    assert len(manifest["batch_id"]) == 36
 
 
 def test_cli_age_range_override_shifts_validation_and_stats(spark):
@@ -152,3 +169,56 @@ def test_cli_parquet_output_format(spark):
     assert sorted(r.error_type for r in bad.collect()) == [
         "data_validation", "data_validation", "parsing_error", "parsing_error",
     ]
+
+
+@pytest.mark.parametrize("rows", [[], ROWS[:2]], ids=["header_only", "all_clean"])
+def test_cli_degenerate_inputs_give_empty_error_sinks(spark, rows):
+    """A header-only CSV and an all-clean CSV: the error sink is empty and
+    the stats table has zero rows (not rows with count 0) but keeps its
+    two columns, as ``groupBy("error_type").count()`` gave; the manifest
+    counts no errors."""
+    d = tempfile.mkdtemp(prefix="cli_e2e_degenerate_")
+    csv = os.path.join(d, "bank.csv")
+    with open(csv, "w") as f:
+        f.write(HEADER + "\n" + "".join(r + "\n" for r in rows))
+
+    good_dir, bad_dir, stats_dir = (
+        os.path.join(d, n) for n in ("good", "bad", "stats")
+    )
+    manifest_path = os.path.join(d, "manifest.json")
+    P.main(
+        [
+            "--input_path", csv,
+            "--output_table", good_dir,
+            "--error_table", bad_dir,
+            "--stats_table", stats_dir,
+            "--metrics_path", manifest_path,
+        ]
+    )
+    assert len(_read_jsonl(good_dir)) == len(rows)
+    assert _read_jsonl(bad_dir) == []
+    stats = spark.read.parquet(stats_dir)
+    assert stats.schema.simpleString() == "struct<error_type:string,count:bigint>"
+    assert stats.count() == 0
+    with open(manifest_path) as f:
+        manifest = json.load(f)
+    assert manifest["rows_read"] == manifest["rows_good"] == len(rows)
+    assert manifest["rows_by_error_type"] == {t: 0 for t in E.ERROR_TYPES}
+
+
+def test_stage_error_types_are_the_listed_enum(spark):
+    """Every ``error_type`` the stages emit is in ``ERROR_TYPES`` (the
+    fixture hits each one), so the CLI's per-type counts cover them all."""
+    lines = spark.createDataFrame([(r,) for r in ROWS], "line string")
+    _good, bad = P.run_on_lines(lines, P.PipelineConfig())
+    emitted = {r.error_type for r in bad.select("error_type").distinct().collect()}
+    assert emitted == set(E.ERROR_TYPES)
+
+
+def test_error_counts_refuse_an_unlisted_type():
+    """Per-type counts that do not add up to the error rows mean a type
+    outside the enum: a typed error, not stats that silently miss it."""
+    listed = {"rows": 4, "parsing_error": 2, "data_validation": 2}
+    assert P.error_counts(listed) == {"parsing_error": 2, "data_validation": 2}
+    with pytest.raises(E.UnlistedErrorType):
+        P.error_counts({**listed, "rows": 5})

@@ -93,22 +93,6 @@ def test_grouped_checksums_sum_to_table_checksum(spark):
     assert sum(r.n_rows for r in parts) == t.n_rows
 
 
-def test_observed_metrics_ride_the_single_pass(spark):
-    from decimal import Decimal
-
-    from banking_data_etl_pipeline_spark.operators import observability
-
-    df = spark.createDataFrame(
-        [(1, 10.5), (2, None), (3, 2.25), (4, None)], "k long, v double"
-    )
-    out, obs = observability.observed_quality(df, "v", "t_obs")
-    out.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    assert got["n_rows"] == 4
-    assert got["n_null"] == 2
-    assert got["total"] == Decimal("12.750000")
-
-
 def test_expectations_single_pass_and_counts(spark):
     from banking_data_etl_pipeline_spark.operators import expectations as X
 
