@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing, texttools, vectors
-from ..session import fan_out
+from ..session import conf_override, fan_out
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -356,80 +356,82 @@ def connected_components(
     )
     und.count()
     edges.unpersist()
-    # scope the session's shuffle width to the loop (every label join,
-    # groupBy, and changed-count below inherits it); the per-iteration
-    # count() actions mean all loop work executes inside this scope
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parallelism))
     labels = None
     converged = False
     try:
-        labels = (
-            und.select(F.col("src").alias("id"))
-            .distinct()
-            .select("id", F.col("id").alias("component"))
-            .persist()
-        )
-        for it in range(max_iter):
-            neigh = (
-                und.join(labels, und["dst"] == labels["id"])
-                .groupBy("src")
-                .agg(F.min("component").alias("_m"))
+        # scope the session's shuffle width to the loop (every label
+        # join, groupBy, and changed-count below inherits it); the
+        # per-iteration count() actions mean all loop work executes
+        # inside this scope
+        with conf_override(spark, "spark.sql.shuffle.partitions", parallelism):
+            labels = (
+                und.select(F.col("src").alias("id"))
+                .distinct()
+                .select("id", F.col("id").alias("component"))
+                .persist()
             )
-            stepped = labels.join(
-                neigh, labels["id"] == neigh["src"], "left"
-            ).select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_m"), F.col("component"))
-                ).alias("component"),
-            )
-            # pointer jumping: a label is itself a member node's id, so
-            # chase it one hop through the same (id -> component) map.
-            # localCheckpoint (eager) — NOT persist — because the
-            # self-join references `stepped` twice, doubling the
-            # LOGICAL plan tree per round; persist truncates physical
-            # recompute but Catalyst still re-analyzes the whole
-            # doubled tree (measured: exponential analysis time, ~86 s
-            # by round 4 on a 40-node path). Checkpointing cuts the
-            # lineage itself. Local (executor-storage) checkpoints are
-            # right for bounded node-sized tables; a production run on
-            # preemptible executors would use a reliable checkpoint
-            # dir instead.
-            jumped = (
-                stepped.alias("a")
-                .join(
-                    stepped.alias("b"),
-                    F.col("a.component") == F.col("b.id"),
-                    "left",
+            for it in range(max_iter):
+                neigh = (
+                    und.join(labels, und["dst"] == labels["id"])
+                    .groupBy("src")
+                    .agg(F.min("component").alias("_m"))
                 )
-                .select(
-                    F.col("a.id").alias("id"),
+                stepped = labels.join(
+                    neigh, labels["id"] == neigh["src"], "left"
+                ).select(
+                    "id",
                     F.least(
-                        F.col("a.component"),
-                        F.coalesce(F.col("b.component"), F.col("a.component")),
+                        F.col("component"),
+                        F.coalesce(F.col("_m"), F.col("component")),
                     ).alias("component"),
                 )
-            )
-            if plan_hook is not None and it == 0:
-                plan_hook("propagate+jump", jumped)
-            new_labels = jumped.localCheckpoint()
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                break
+                # pointer jumping: a label is itself a member node's id, so
+                # chase it one hop through the same (id -> component) map.
+                # localCheckpoint (eager) — NOT persist — because the
+                # self-join references `stepped` twice, doubling the
+                # LOGICAL plan tree per round; persist truncates physical
+                # recompute but Catalyst still re-analyzes the whole
+                # doubled tree (measured: exponential analysis time, ~86 s
+                # by round 4 on a 40-node path). Checkpointing cuts the
+                # lineage itself. Local (executor-storage) checkpoints are
+                # right for bounded node-sized tables; a production run on
+                # preemptible executors would use a reliable checkpoint
+                # dir instead.
+                jumped = (
+                    stepped.alias("a")
+                    .join(
+                        stepped.alias("b"),
+                        F.col("a.component") == F.col("b.id"),
+                        "left",
+                    )
+                    .select(
+                        F.col("a.id").alias("id"),
+                        F.least(
+                            F.col("a.component"),
+                            F.coalesce(
+                                F.col("b.component"), F.col("a.component")
+                            ),
+                        ).alias("component"),
+                    )
+                )
+                if plan_hook is not None and it == 0:
+                    plan_hook("propagate+jump", jumped)
+                new_labels = jumped.localCheckpoint()
+                changed = (
+                    new_labels.alias("n")
+                    .join(labels.alias("o"), "id")
+                    .filter(F.col("n.component") != F.col("o.component"))
+                    .count()
+                )
+                labels.unpersist()
+                labels = new_labels
+                if changed == 0:
+                    converged = True
+                    break
     finally:
         # cleanup lives here so a mid-loop Spark failure can't leak the
         # (edge-list-sized) und cache into the session; labels is only
         # released on the non-return paths
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         und.unpersist()
         if not converged and labels is not None:
             labels.unpersist()

@@ -14,43 +14,27 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
+from ..session import session_cache
 
 
 # Model-parameter literal columns (centroid/codebook arrays) are
 # expensive to CONSTRUCT (py4j round trips per struct) and identical
 # across the cold/warm bench passes and across the arms that share one
-# staged model — memoize the built Column per (application, content).
-# Column objects are immutable expression wrappers, safe to reuse
-# within one SparkContext; the applicationId key drops stale JVM refs
-# if a new context appears.
-_LIT_CACHE: dict = {}
-_LIT_LOCK = __import__("threading").Lock()
-
-
+# staged model — memoize the built Column per content in the live
+# SparkContext's session_cache. Column objects are immutable
+# expression wrappers, safe to reuse within that context, and the
+# memo goes with it.
 def _memo_lit(kind: str, content, builder):
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
     if sc is None:
         return builder()
-    key = (sc.applicationId, kind, content)
-    with _LIT_LOCK:
-        col = _LIT_CACHE.get(key)
+    cache = session_cache(sc)
+    key = ("lit", kind, content)
+    col = cache.get(key)
     if col is None:
-        col = builder()
-        with _LIT_LOCK:
-            if len(_LIT_CACHE) >= 256:
-                # evict dead applications' entries first (they pin
-                # py4j JVM refs + model tuples); only a same-app
-                # overflow clears the live set (r16 ADVICE)
-                stale = [
-                    k for k in _LIT_CACHE if k[0] != sc.applicationId
-                ]
-                for k in stale:
-                    _LIT_CACHE.pop(k, None)
-                if len(_LIT_CACHE) >= 256:
-                    _LIT_CACHE.clear()
-            _LIT_CACHE[key] = col
+        col = cache.setdefault(key, builder())
     return col
 
 
@@ -1726,9 +1710,8 @@ def nsw_topk(
     # persisted: it feeds every hop's expansion join; within the
     # single action all hops then read the cached build instead of
     # re-running the cell-blocked pair join. Registered via
-    # session.pin_for_query so the NEXT registered query's scope
-    # releases it — cached partitions never accumulate across a
-    # battery (r14 ADVICE).
+    # session.pin_for_query, so the thread's next query scope releases
+    # it — cached partitions never accumulate across a battery.
     from ..session import pin_for_query
 
     if adj is None:

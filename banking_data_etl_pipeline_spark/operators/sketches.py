@@ -1,25 +1,22 @@
 """Approximate aggregation sketches — the sublinear-memory path for
 100 TB interactive analytics.
 
-Exact COUNT(DISTINCT) and exact percentiles (see
+Exact COUNT(DISTINCT), exact quantiles and exact token counts (see
 ``operators.relational``) need a full shuffle/sort of the keys; the
-sketch versions are one map-side pass with fixed-size mergeable state:
+sketches here are one map-side pass with fixed-size mergeable state
+(HyperLogLog registers, Misra–Gries and Count-Min counters, Bloom
+bits, bottom-k and theta samples, histogram bins).
 
-- ``approx_count_distinct`` — HyperLogLog++, default rsd 5%;
-- ``approx_percentile`` — Greenwald-Khanna-style quantile summary with
-  a tunable accuracy/state trade-off.
+They are built from first principles on md5-derived hashes rather than
+on Spark's engine-seeded ``approx_count_distinct`` /
+``percentile_approx``, so the same state comes out of any engine: each
+registered sketch query has a DuckDB value-parity twin, and
+``tests/test_sketches.py`` also checks the published error bounds
+against the exact counts.
 
-Sketch outputs are implementation-defined (engine-specific hash seeds
-and merge orders), so there is deliberately NO DuckDB value-parity
-oracle for them — ``tests/test_sketches.py`` instead asserts the
-published error bounds against the exact operators on the same data.
-That asymmetry (exact ops: value-hash parity; sketches: bound checks)
-is itself the point of keeping both families.
-
-The exception is ``heavy_hitters``: Misra–Gries is only the FIRST pass
-(a candidate pruner); a second exact pass over the candidates makes
-the final answer deterministic and exact, so that one IS
-oracle-twinned (``HEAVY_HITTERS_Q``).
+``heavy_hitters`` goes one step further: Misra–Gries is only the FIRST
+pass (a candidate pruner); a second exact pass over the candidates
+makes the final answer exact (``HEAVY_HITTERS_Q``).
 """
 
 from __future__ import annotations
@@ -33,32 +30,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import texttools
-
-
-def approx_distinct_users(events: DataFrame, rsd: float = 0.05) -> DataFrame:
-    """HLL++ distinct users per event type; rsd is the target relative
-    standard deviation."""
-    return events.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=rsd).alias("n_users_approx"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-def approx_price_percentiles(lineitem: DataFrame, accuracy: int = 10000) -> DataFrame:
-    """Approximate p25/p50/p75 of extended price per return flag; the
-    summary holds O(accuracy) items per group regardless of input
-    size (vs the exact sort-based percentile)."""
-    pcts = F.percentile_approx(
-        F.col("l_extendedprice"),
-        F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)),
-        F.lit(accuracy),
-    )
-    return lineitem.groupBy("l_returnflag").agg(
-        pcts[0].alias("p25"),
-        pcts[1].alias("p50"),
-        pcts[2].alias("p75"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
 
 
 def heavy_hitters(

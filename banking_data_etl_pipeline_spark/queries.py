@@ -24,7 +24,7 @@ from .multimodal import binaryops
 from .operators import corpus, dedup, relational, similarity, skew
 from .oracle import NORM_COLS, PASS_COLS
 from .plans import pipeline as P
-from .session import fan_out
+from .session import fan_out, session_cache
 from .sources import synthetic, tables
 from .streaming import events as EV
 
@@ -1978,16 +1978,6 @@ def _ann_models(emb: DataFrame, sf_dir: str):
     return cents, books, res_books
 
 
-# prepared-plan cache for the recall harness: (applicationId, corpus
-# fingerprint) -> composed DataFrame. DataFrames are immutable lazy
-# plans, so reuse is semantics-free; what it saves is the ~15 s of
-# driver-side LITERAL-EXPRESSION construction (codebooks, centroids,
-# LUT folds across five probe arms) that would otherwise repeat on
-# every invocation — the prepared-statement shape. Keyed on the app id
-# so a plan never outlives its session.
-_RECALL_PLANS: dict[tuple[str, str], DataFrame] = {}
-
-
 def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of ALL the index families (LSH, IVF, PQ, IVF+PQ raw,
     IVF+PQ residual, SQ, NSW graph) vs brute-force truth. Model
@@ -2000,12 +1990,19 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot) like a prepared statement."""
     import os
 
+    # prepared-plan memo: DataFrames are immutable lazy plans, so reuse
+    # is semantics-free; what it saves is the ~15 s of driver-side
+    # LITERAL-EXPRESSION construction (codebooks, centroids, LUT folds
+    # across five probe arms) that would otherwise repeat on every
+    # invocation. It lives in the SparkContext's session_cache, so a
+    # new session never sees an old session's plan.
     st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    plans = session_cache(spark)
     cache_key = (
-        spark.sparkContext.applicationId,
+        "ann_recall",
         f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}",
     )
-    cached = _RECALL_PLANS.get(cache_key)
+    cached = plans.get(cache_key)
     if cached is not None:
         return cached
     emb = tables.load(spark, sf_dir, "embeddings")
@@ -2059,7 +2056,7 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, q, k=10, cents=cents, books=books, res_books=res_books,
         arms_override=overrides,
     )
-    _RECALL_PLANS[cache_key] = plan
+    plans[cache_key] = plan
     return plan
 
 

@@ -5,13 +5,23 @@ ones that also matter on a real cluster: AQE for runtime re-planning
 (skew joins, partition coalescing), shuffle partitions sized to the
 parallelism actually available, UTC session time zone so timestamp
 semantics match the DuckDB oracle, and Arrow for any Pandas-UDF path.
+
+It also owns every piece of state that crosses queries: the query
+scope of the calling thread (``tune_for_oracle`` opens it,
+``pin_for_query`` adds to it, ``release_pinned`` closes it), the cache
+owned by the SparkContext (``session_cache``), and scoped conf changes
+(``conf_override``).
 """
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import os
+from collections.abc import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -68,17 +78,17 @@ def get_spark(
 
 
 def tune_for_oracle(spark: SparkSession) -> SparkSession:
-    """Pin session settings that affect value-level parity with the
-    DuckDB oracle, on a session we did not create (the driver's).
+    """Open a new query scope in the calling thread and pin the session
+    settings that affect value-level parity with the DuckDB oracle
+    (UTC, ``nanosAsLong``), also on a session that ``get_spark`` did
+    not build.
 
-    Idempotent and cheap. This is the per-query scope: the registry
-    wrapper in ``__spark_entry__.queries()`` calls it once before every
-    builder, so results are timezone-stable regardless of who built the
-    session — and so the PREVIOUS query's pinned frames get released
-    (see :func:`pin_for_query`): cached partitions never accumulate
-    across a 334-query battery evicting other queries' working sets
-    (r13 ADVICE). A builder called directly (``queries.<name>``)
-    skips it.
+    Idempotent and cheap. The registry wrapper in
+    ``__spark_entry__.queries()`` calls it once before every builder.
+    It first releases the frames this thread's previous query pinned
+    (see :func:`pin_for_query`), so cached partitions never pile up
+    across a 334-query battery, and it never touches another thread's
+    pins. A builder called directly (``queries.<name>``) skips it.
     """
     release_pinned()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -86,44 +96,67 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# persisted frames whose lifetime is "this query": the returned plan
-# depends on them, so the operator cannot unpersist before returning —
-# the NEXT registered query's scope (tune_for_oracle, called by the
-# queries() wrapper) releases them. Release is
-# correctness-safe by the same argument that makes these persists
-# LRU-evictable: the partitionings are deterministic recomputes, and
-# consumers read derived values (ranks, knots, maxima), never raw
-# partition ids across jobs. Worst case after release is one recompute
-# if the old plan is re-executed.
-_PINNED: list = []
+# the frames the current query pinned. A ContextVar, so every thread
+# has its own scope: a new thread starts with an empty context, and a
+# pin made in one thread is released only by that thread.
+_QUERY_PINS: contextvars.ContextVar[tuple[DataFrame, ...]] = (
+    contextvars.ContextVar("query_pins", default=())
+)
 
 
-def pin_for_query(df):
-    """Persist ``df`` and register it for end-of-query cleanup.
+def pin_for_query(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the rest of the current query scope.
 
-    CONTRACT (r14 ADVICE): the pin registry is process-global and
-    assumes the battery's STRICTLY SEQUENTIAL build-then-consume
-    usage — build query N, collect it, then build query N+1 through
-    ``queries()``, whose wrapper's ``tune_for_oracle`` releases N's
-    pins. Building a second query while a prior query's returned
-    DataFrame is still being consumed, or driving queries from
-    concurrent threads, unpersists the other query's pinned frames
-    mid-flight. That is CORRECTNESS-SAFE (the
-    release contract below: deterministic recomputes, derived-value
-    consumers) but silently forfeits the cache benefit; a concurrent
-    runner should key pins per query and release its own."""
+    The returned plan depends on these frames, so the operator cannot
+    unpersist them before it returns. They stay cached until this
+    thread opens its next scope (``tune_for_oracle``) or calls
+    :func:`release_pinned`; queries built concurrently in other threads
+    keep theirs. Release is correctness-safe: the partitionings are
+    deterministic recomputes, and consumers read derived values (ranks,
+    knots, maxima), never raw partition ids across jobs, so the worst
+    case after release is one recompute if the old plan runs again."""
     if not df.is_cached:  # idempotent: _beam_step frames arrive cached
         df.persist()
-    _PINNED.append(df)
+    _QUERY_PINS.set(_QUERY_PINS.get() + (df,))
     return df
 
 
 def release_pinned() -> None:
-    while _PINNED:
+    """Close the current thread's query scope: unpersist its pins."""
+    pins = _QUERY_PINS.get()
+    _QUERY_PINS.set(())
+    for df in pins:
         try:
-            _PINNED.pop().unpersist()
+            df.unpersist()
         except Exception:
             pass  # session already stopped — nothing to release
+
+
+def session_cache(spark: SparkSession | SparkContext) -> dict:
+    """The cache owned by the SparkContext of ``spark``: one dict,
+    stored as an attribute of the context object. No module holds its
+    entries, so they go with the context and a new session starts
+    with an empty cache. It holds values that are costly to build and
+    identical for every query of the session (literal columns,
+    prepared plans); keys name their owner, e.g.
+    ``("lit", kind, content)``."""
+    sc = getattr(spark, "sparkContext", spark)
+    return vars(sc).setdefault("_session_cache", {})
+
+
+@contextlib.contextmanager
+def conf_override(spark: SparkSession, key: str, value) -> Iterator[None]:
+    """Set the session conf ``key`` to ``value`` for the ``with`` block
+    and restore the previous setting (or unset it) at block exit."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def fan_out(df):

@@ -30,26 +30,6 @@ def with_corrupt(schema: T.StructType) -> T.StructType:
     )
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Read JSON-lines under an explicit contract. Well-formed rows get
-    typed columns (missing fields -> null); malformed lines land intact
-    in ``_corrupt_record`` with data columns null.
-
-    Note (Spark limitation, same as the CSV path): a query projecting
-    ONLY the corrupt column raises
-    UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN — always keep
-    a data column in the projection when filtering on it.
-    """
-    return (
-        spark.read.schema(with_corrupt(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
-    )
-
-
 def split_jsonl(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> tuple[DataFrame, DataFrame]:
@@ -85,11 +65,3 @@ def split_jsonl(
     )
     return good, bad
 
-
-def write_jsonl(df: DataFrame, path: str, partitions: int | None = None) -> None:
-    """Write JSON-lines (one object per line, null fields omitted —
-    Spark's JSON writer default, matching the read contract above).
-    ``partitions`` bounds the file count for small outputs; leave None
-    to keep the upstream parallelism for big ones."""
-    out = df.coalesce(partitions) if partitions else df
-    out.write.mode("overwrite").json(path)

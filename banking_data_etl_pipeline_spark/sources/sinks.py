@@ -1,51 +1,18 @@
 """Layout-managed sinks: the write-side half of the 100 TB posture.
 
 A table that will be read selectively should be WRITTEN for those
-reads: hive-style partition directories turn query predicates into
-directory pruning (the scan never opens non-matching files), an
-explicit ``repartition`` on the partition key bounds the file count
-(without it every task writes a file per partition value — the classic
-small-files explosion), and ``sortWithinPartitions`` gives parquet
-min/max row-group statistics their selectivity for range predicates.
+reads: ``write_zordered`` clusters rows on the Z-curve of two columns,
+so each file covers a bounded rectangle and parquet min/max row-group
+statistics skip files on a predicate over EITHER column;
+``write_bucketed`` bakes a join's hash clustering into the files, so a
+join on the bucket key needs no exchange; ``compact`` rewrites a
+small-file directory into bounded-size files.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    sort_by: list[str] | None = None,
-    files_per_partition: int = 1,
-) -> None:
-    """Write ``df`` as hive-partitioned parquet with bounded file
-    counts and optional within-file ordering.
-
-    ``files_per_partition=1`` clusters each partition value into one
-    task -> one file. For partition values too large for a single task
-    (skewed event types at 100 TB), raise it: a salt column spreads
-    each value over that many tasks/files, still directory-pruned."""
-    if files_per_partition <= 1:
-        out = df.repartition(*[F.col(c) for c in partition_by])
-    else:
-        salt = (F.rand(seed=7) * files_per_partition).cast("int")
-        out = df.withColumn("_salt", salt).repartition(
-            *[F.col(c) for c in partition_by], F.col("_salt")
-        ).drop("_salt")
-    if sort_by:
-        out = out.sortWithinPartitions(*partition_by, *sort_by)
-    out.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
-def read_pruned(spark: SparkSession, path: str) -> DataFrame:
-    """Read a partitioned table; predicates on the partition column
-    become PartitionFilters (verify via .explain — no data files from
-    non-matching partitions are opened)."""
-    return spark.read.parquet(path)
 
 
 def zorder_key(a, b, bits: int = 16):
@@ -150,9 +117,10 @@ def compact(
     the next call restores it; stale ``.old``/``.compact_tmp``
     leftovers from any earlier crash are cleared so reruns cannot fail
     on ENOTEMPTY. Single-compactor discipline assumed (run it from one
-    scheduler slot). For readers that cannot tolerate the window, use
-    the versioned-directory + pointer-file protocol in
-    ``streaming.upsert`` — at the price of pointer-aware reads."""
+    scheduler slot). Readers that cannot tolerate the window need a
+    versioned-directory + pointer-file protocol (write ``v<n>``, flip
+    the pointer with ``os.replace``) — at the price of pointer-aware
+    reads."""
     import math
     import os
     import shutil

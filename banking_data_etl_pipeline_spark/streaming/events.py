@@ -11,7 +11,7 @@ Batch/stream parity: ``windowed_agg_batch`` is the exact batch twin of
 oracle checks.
 
 Every bounded run goes through ``_run_available_now`` (availableNow
-trigger under a pinned state-partition count); ``drain`` adds the
+trigger under a scoped state-partition count); ``drain`` adds the
 memory sink under a generated, immediately-dropped view name, so no
 streaming function takes or registers a query name.
 """
@@ -23,6 +23,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import conf_override
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -116,22 +118,20 @@ def windowed_agg_batch(events: DataFrame) -> DataFrame:
 def _run_available_now(spark: SparkSession, writer, partitions: int = 8) -> None:
     """Start ``writer`` (a configured ``DataStreamWriter``) with the
     availableNow trigger and block until the bounded input is drained.
+    This is the package's one ``availableNow`` trigger site.
 
-    ``spark.sql.shuffle.partitions`` is pinned to ``partitions`` while
-    the query runs and restored afterwards: the state-store partition
-    count is frozen from it at the FIRST trigger and every partition
-    costs a state store + commit files per micro-batch — so size it to
-    the KEYSPACE, not the CPU count (per-batch store overhead dominates
+    ``spark.sql.shuffle.partitions`` is ``partitions`` only while the
+    stream runs (``session.conf_override``); the rest of the builder
+    runs at the session's own width. The state-store partition count
+    is frozen from it at the FIRST trigger and every partition costs a
+    state store + commit files per micro-batch — so size it to the
+    KEYSPACE, not the CPU count (per-batch store overhead dominates
     wall-clock far below ~millions of keys; on a real cluster pick
     ~2-4x executors, and for a stream-stream join remember each
     partition carries FOUR stores: left/right keyToNumValues +
     keyWithIndexToValue)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
+    with conf_override(spark, "spark.sql.shuffle.partitions", partitions):
         writer.trigger(availableNow=True).start().awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def drain(df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
@@ -240,14 +240,11 @@ def _land_feed_file(
     import os
     import shutil
 
-    key = "spark.sql.parquet.outputTimestampType"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
     stage = os.path.join(work, "stage_" + fname)
-    try:
+    with conf_override(
+        spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+    ):
         df.coalesce(1).write.mode("overwrite").parquet(stage)
-    finally:
-        spark.conf.set(key, old)
     part = next(p for p in os.listdir(stage) if p.startswith("part-"))
     shutil.copyfile(os.path.join(stage, part), os.path.join(src, fname))
 

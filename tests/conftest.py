@@ -16,8 +16,8 @@ def spark():
 @pytest.fixture(autouse=True)
 def _query_scope():
     """Each test is one query scope: builders called as ``Q.<name>``
-    skip the registry's ``tune_for_oracle``, so release the frames they
-    pinned here, as the next registered query would."""
+    skip the registry's ``tune_for_oracle``, so close the test thread's
+    scope here, as its next registered query would."""
     yield
     from banking_data_etl_pipeline_spark.session import release_pinned
 

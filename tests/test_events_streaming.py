@@ -154,75 +154,6 @@ def test_stream_left_interval_join_emits_watermark_cleared_nulls(spark):
     assert old <= set(by_id)
 
 
-def test_foreachbatch_upsert_is_exact_and_idempotent(spark):
-    """The foreachBatch-merged state must equal the batch aggregate
-    exactly (integer micro-units), and re-running over a completed
-    checkpoint must change nothing (exactly-once per checkpoint)."""
-    import shutil
-    import tempfile
-
-    from banking_data_etl_pipeline_spark.streaming import upsert
-
-    base = tempfile.mkdtemp(prefix="test_upsert_")
-    feed = os.path.join(base, "feed")
-    os.makedirs(feed)
-    os.symlink(
-        os.path.join(SF_DIR, "events.parquet"), os.path.join(feed, "events.parquet")
-    )
-    state = os.path.join(base, "state")
-    cp = os.path.join(base, "cp")
-
-    out = upsert.run_upsert_stream(spark, feed, state, cp)
-    got = {r.user_id: (r.cnt, r.micros) for r in out.collect()}
-
-    ev = tables.load(spark, SF_DIR, "events")
-    want = {
-        r.user_id: (r.cnt, r.micros)
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.round(F.col("value") * 1_000_000).cast("long")).alias("micros"),
-        )
-        .collect()
-    }
-    assert got == want
-
-    # idempotence: same checkpoint -> no batches replay, state unchanged
-    out2 = upsert.run_upsert_stream(spark, feed, state, cp)
-    got2 = {r.user_id: (r.cnt, r.micros) for r in out2.collect()}
-    assert got2 == got
-    shutil.rmtree(base, ignore_errors=True)
-
-
-def test_upsert_replayed_batch_is_skipped(spark):
-    """Crash-point idempotence: a foreachBatch replay of an
-    already-applied batchId (crash between pointer flip and checkpoint
-    commit) must not double-count, and state must stay readable
-    throughout (pointer protocol — state is never absent)."""
-    import shutil
-    import tempfile
-
-    from banking_data_etl_pipeline_spark.streaming import upsert
-
-    base = tempfile.mkdtemp(prefix="test_upsert_replay_")
-    state = os.path.join(base, "state")
-    bdf = spark.createDataFrame(
-        [(1, 10.0), (1, 2.5), (2, 1.0)], "user_id long, value double"
-    )
-    upsert._merge_batch(spark, bdf, 0, state)
-    first = {r.user_id: (r.cnt, r.micros) for r in upsert.read_state(spark, state).collect()}
-    assert first == {1: (2, 12_500_000), 2: (1, 1_000_000)}
-    # the replay: same batchId arrives again -> no-op
-    upsert._merge_batch(spark, bdf, 0, state)
-    again = {r.user_id: (r.cnt, r.micros) for r in upsert.read_state(spark, state).collect()}
-    assert again == first
-    # a genuinely new batch still applies
-    upsert._merge_batch(spark, bdf, 1, state)
-    after = {r.user_id: (r.cnt, r.micros) for r in upsert.read_state(spark, state).collect()}
-    assert after == {1: (4, 25_000_000), 2: (2, 2_000_000)}
-    shutil.rmtree(base, ignore_errors=True)
-
-
 def test_stream_quality_gate_equals_batch(spark):
     """The streaming quality gate is stateless, so the availableNow
     run over a bounded drop dir must equal the batch gate over the

@@ -1,4 +1,4 @@
-"""JSONL source: schema-on-read round trip + corrupt-line quarantine."""
+"""JSONL source: corrupt-line quarantine; parquet schema evolution."""
 
 from __future__ import annotations
 
@@ -7,9 +7,7 @@ import tempfile
 
 from pyspark.sql import types as T
 
-from banking_data_etl_pipeline_spark.sources import jsonl, tables
-
-from conftest import SF_DIR
+from banking_data_etl_pipeline_spark.sources import jsonl
 
 DOC_SCHEMA = T.StructType(
     [
@@ -20,18 +18,6 @@ DOC_SCHEMA = T.StructType(
         T.StructField("n_chars", T.LongType()),
     ]
 )
-
-
-def test_jsonl_round_trip_preserves_documents(spark):
-    docs = tables.load(spark, SF_DIR, "documents")
-    d = tempfile.mkdtemp(prefix="test_jsonl_")
-    jsonl.write_jsonl(docs, os.path.join(d, "docs"), partitions=2)
-    back = jsonl.read_jsonl(spark, os.path.join(d, "docs"), DOC_SCHEMA)
-    rows = back.collect()
-    assert all(r[jsonl.CORRUPT_COL] is None for r in rows)
-    a = {tuple(r) for r in docs.collect()}
-    b = {tuple(r)[:-1] for r in rows}
-    assert a == b
 
 
 def test_jsonl_quarantines_malformed_lines(spark):

@@ -127,28 +127,6 @@ def test_cube_is_one_expand_pass(spark):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_partitioned_sink_prunes_partitions(spark):
-    from banking_data_etl_pipeline_spark.sources import sinks
-
-    d = tempfile.mkdtemp(prefix="part_sink_")
-    path = os.path.join(d, "events_by_type")
-    ev = tables.load(spark, SF_DIR, "events")
-    sinks.write_partitioned(ev, path, ["event_type"], sort_by=["ts"])
-
-    back = sinks.read_pruned(spark, path)
-    assert back.count() == ev.count()
-    one = back.filter(back.event_type == "click")
-    plan = _plan(one)
-    scan = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert scan and any("event_type" in ln for ln in scan), plan
-    # directory pruning: only the matching partition's files are read
-    import re
-
-    m = re.search(r"partition count: (\d+)", plan)
-    if m:
-        assert int(m.group(1)) == 1, plan
-
-
 def test_ivf_probe_prunes_nonprobed_cell_files(spark):
     """The persisted-IVF probe must actually PRUNE non-probed cells at
     the FILE level — the property that makes a probe read

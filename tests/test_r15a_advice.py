@@ -101,8 +101,8 @@ def test_graph_probe_persists_are_pinned(spark):
     q = similarity.corpus_queries(emb, n=2)
     out = similarity.hnsw_topk(emb, q, k=3, hops1=1, hops=1)
     assert out.count() > 0
-    assert len(S._PINNED) >= 3  # adj1 + adj0 + final frames at least
-    pinned = list(S._PINNED)
+    assert len(S._QUERY_PINS.get()) >= 3  # adj1 + adj0 + final frames at least
+    pinned = list(S._QUERY_PINS.get())
     S.release_pinned()
-    assert not S._PINNED
+    assert not S._QUERY_PINS.get()
     assert all(not df.is_cached for df in pinned)

@@ -111,13 +111,13 @@ def test_pinned_persists_release_at_next_query(spark):
     S.release_pinned()
     df1 = qs["top_supplier"](spark, SF_DIR)
     df1.collect()
-    assert len(S._PINNED) == 1
-    pinned = S._PINNED[0]
+    assert len(S._QUERY_PINS.get()) == 1
+    pinned = S._QUERY_PINS.get()[0]
     assert pinned.storageLevel.useMemory
     # next query's builder releases the previous query's pin
     qs["curriculum_order"](spark, SF_DIR).limit(1).collect()
     assert pinned.storageLevel.useMemory is False
-    assert all(p is not pinned for p in S._PINNED)
+    assert all(p is not pinned for p in S._QUERY_PINS.get())
     # the released plan still re-executes correctly (eviction-safe)
     assert df1.count() >= 1
     S.release_pinned()

@@ -1,50 +1,11 @@
-"""Sketch accuracy bounds vs the exact operators on the same data.
-
-Sketches have no cross-engine value-parity oracle (engine-specific
-hashes); their contract is the error bound, so that is what's pinned.
-"""
+"""Sketch accuracy bounds vs exact counts on the same data."""
 
 from __future__ import annotations
 
-from banking_data_etl_pipeline_spark.operators import relational, sketches
+from banking_data_etl_pipeline_spark.operators import sketches
 from banking_data_etl_pipeline_spark.sources import tables
 
 from conftest import SF_DIR
-
-
-def test_approx_distinct_within_rsd(spark):
-    ev = tables.load(spark, SF_DIR, "events")
-    exact = {
-        r.event_type: r.n_users
-        for r in relational.distinct_users_by_type(ev).collect()
-    }
-    approx = {
-        r.event_type: r.n_users_approx
-        for r in sketches.approx_distinct_users(ev, rsd=0.05).collect()
-    }
-    assert set(exact) == set(approx)
-    for t, n in exact.items():
-        # 5% rsd -> allow 4 sigma
-        assert abs(approx[t] - n) <= max(2, 0.2 * n), (t, n, approx[t])
-
-
-def test_approx_percentiles_bracket_exact(spark):
-    li = tables.load(spark, SF_DIR, "lineitem")
-    exact = {
-        r.l_returnflag: (r.p25, r.p50, r.p75)
-        for r in relational.price_percentiles(li).collect()
-    }
-    approx = {
-        r.l_returnflag: (r.p25, r.p50, r.p75)
-        for r in sketches.approx_price_percentiles(li).collect()
-    }
-    lo = li.agg({"l_extendedprice": "min"}).first()[0]
-    hi = li.agg({"l_extendedprice": "max"}).first()[0]
-    span = hi - lo
-    for flag, (e25, e50, e75) in exact.items():
-        a25, a50, a75 = approx[flag]
-        for e, a in ((e25, a25), (e50, a50), (e75, a75)):
-            assert abs(a - e) <= 0.02 * span, (flag, e, a)
 
 
 def test_heavy_hitters_equals_exact_cut(spark):
