@@ -8,13 +8,19 @@ side outputs, so we invert it: errors become a column.
 
 - Every stage *appends* ``struct(stage, error_type, message)`` to an
   ``_errors`` array column instead of throwing.
-- Later stages guard their work with ``size(_errors) == 0`` so a row
-  that failed validation is never enriched/segmented — matching the
+- Later stages guard their work with ``size(_errors) = 0``
+  (:func:`when_clean`) so a row that failed validation is never
+  enriched/segmented: its derived columns stay null, matching the
   reference, where a failed row leaves the main stream (``:156,215``).
 - Terminally, ``split_errors`` filters the one DataFrame into the good
   stream and the 4-field error stream; the reference's ``beam.Flatten``
   of four error PCollections (``:368-372``) becomes a no-op because all
   stages share one channel.
+
+The helpers build Spark SQL text (CASE chains), not Columns, for the
+same reason as ``functions.scoring``: each Column call costs ~10 py4j
+round trips, so the stages of ``plans.pipeline`` are ``selectExpr``
+text. Conditions and messages come in as SQL text.
 
 This keeps the whole pipeline a single narrow, shuffle-free,
 whole-stage-codegen'd pass at any scale.
@@ -22,14 +28,18 @@ whole-stage-codegen'd pass at any scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
+from ..functions.scoring import sql_name, sql_str
 from ..schema import ERRORS_COL
 
 # The fixed error enum: every ``error_type`` a pipeline stage emits. The
 # CLI's per-type counts (and so ``--stats_table``) cover exactly these.
 ERROR_TYPES = ("parsing_error", "data_validation")
+
+_ERRORS = sql_name(ERRORS_COL)
+_ERRORS_TYPE = "array<struct<stage:string,error_type:string,message:string>>"
+_ISO_MICROS = sql_str("yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx")
 
 
 class UnlistedErrorType(RuntimeError):
@@ -37,22 +47,10 @@ class UnlistedErrorType(RuntimeError):
     per-type counts would not add up to the error count."""
 
 
-def empty_errors() -> Column:
-    """A typed empty ``_errors`` array."""
-    return F.array().cast("array<struct<stage:string,error_type:string,message:string>>")
-
-
-def error_entry(stage: str, error_type: str, message: Column) -> Column:
-    return F.struct(
-        F.lit(stage).alias("stage"),
-        F.lit(error_type).alias("error_type"),
-        message.alias("message"),
-    )
-
-
-def first_error_chain(pairs: list[tuple[Column, str, str, Column]]) -> Column:
+def first_error_chain(pairs: list[tuple[str, str, str, str]]) -> str:
     """A single CASE chain producing the ``_errors`` array: the first
-    matching (cond, stage, error_type, message) wins; no match -> empty.
+    matching (cond, stage, error_type, message) wins; no match -> a
+    typed empty array.
 
     Because the reference short-circuits on the first exception, a row
     carries AT MOST ONE error — so the channel is one linear-size
@@ -60,55 +58,50 @@ def first_error_chain(pairs: list[tuple[Column, str, str, Column]]) -> Column:
     Catalyst's projection collapse would expand to a 3^n-node tree:
     guard + append + otherwise each copy the previous expression).
     """
-    expr: Column | None = None
-    for cond, stage, error_type, message in pairs:
-        entry = F.array(error_entry(stage, error_type, message))
-        expr = F.when(cond, entry) if expr is None else expr.when(cond, entry)
-    assert expr is not None, "need at least one error condition"
-    return expr.otherwise(empty_errors())
+    assert pairs, "need at least one error condition"
+    whens = " ".join(
+        f"WHEN {cond} THEN array(named_struct({sql_str('stage')}, {sql_str(stage)}, "
+        f"{sql_str('error_type')}, {sql_str(error_type)}, {sql_str('message')}, {message}))"
+        for cond, stage, error_type, message in pairs
+    )
+    return f"CASE {whens} ELSE CAST(array() AS {_ERRORS_TYPE}) END"
 
 
-def set_errors(df: DataFrame, pairs: list[tuple[Column, str, str, Column]]) -> DataFrame:
-    """Install/extend the error channel in ONE projection. Rows already
-    carrying an error keep it (short-circuit across stages)."""
-    chain = first_error_chain(pairs)
-    if ERRORS_COL in df.columns:
-        chain = F.when(F.size(F.col(ERRORS_COL)) > 0, F.col(ERRORS_COL)).otherwise(chain)
-    return df.withColumn(ERRORS_COL, chain)
+def set_errors(pairs: list[tuple[str, str, str, str]]) -> str:
+    """Extend an installed error channel: rows already carrying an
+    error keep it (short-circuit across stages), the rest get
+    :func:`first_error_chain`."""
+    return f"CASE WHEN size({_ERRORS}) > 0 THEN {_ERRORS} ELSE {first_error_chain(pairs)} END"
 
 
-def is_clean() -> Column:
-    return F.size(F.col(ERRORS_COL)) == 0
+def is_clean() -> str:
+    return f"size({_ERRORS}) = 0"
 
 
-def when_clean(expr: Column) -> Column:
+def when_clean(expr: str) -> str:
     """Guard a derived column so failed rows stay null — the Spark
     equivalent of the reference's 'record leaves the main stream'."""
-    return F.when(is_clean(), expr)
+    return f"CASE WHEN {is_clean()} THEN {expr} END"
 
 
 def split_errors(
-    df: DataFrame, raw_col: str = "_raw", timestamp: Column | None = None
+    df: DataFrame, raw_col: str = "_raw", timestamp: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Split into (good, errors); errors take the reference's 4-field
     shape ``{raw_data, error_message, error_type, timestamp}``
     (``batch_pipeline1.py:80-85``). Only the *first* error per row is
     emitted, matching the reference's exception short-circuit.
+    ``timestamp`` is SQL text; the default stamps the current time.
     """
-    ts = timestamp if timestamp is not None else F.date_format(
-        F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"
-    )
+    ts = timestamp or f"date_format(current_timestamp(), {_ISO_MICROS})"
     good = df.filter(is_clean()).drop(ERRORS_COL)
     # try_element_at: null-safe even if the optimizer evaluates the
     # projection before the size>0 filter (ANSI element_at would throw)
-    first = F.try_element_at(F.col(ERRORS_COL), F.lit(1))
-    bad = (
-        df.filter(~is_clean())
-        .select(
-            F.col(raw_col).alias("raw_data"),
-            F.concat(first["stage"], F.lit(": "), first["message"]).alias("error_message"),
-            first["error_type"].alias("error_type"),
-            ts.alias("timestamp"),
-        )
+    first = f"try_element_at({_ERRORS}, 1)"
+    bad = df.filter(f"NOT ({is_clean()})").selectExpr(
+        f"{sql_name(raw_col)} AS raw_data",
+        f"concat({first}.stage, {sql_str(': ')}, {first}.message) AS error_message",
+        f"{first}.error_type AS error_type",
+        f"{ts} AS timestamp",
     )
     return good, bad

@@ -555,6 +555,19 @@ def msprt_walk(daily: DataFrame, alpha: float = 0.05) -> DataFrame:
     )
 
 
+def _strata_exprs() -> list[str]:
+    """Stratum keys, treatment ``t`` (has_loans) and outcome ``y1``
+    (subscribed) as 0/1 bigints, for ``selectExpr`` on the valid rows."""
+    from ..functions import scoring
+
+    return [
+        f"{scoring.age_group('age')} AS age_group",
+        f"{scoring.wealth_segment('balance')} AS wealth_segment",
+        f"CAST({scoring.has_loans('housing', 'loan')} AS BIGINT) AS t",
+        f"CAST(y = {scoring.sql_str('yes')} AS BIGINT) AS y1",
+    ]
+
+
 def strat_ate(valid: DataFrame) -> DataFrame:
     """Stratified treatment-effect table on the validated bank rows:
     treatment = has_loans (housing or personal loan), outcome =
@@ -571,17 +584,8 @@ def strat_ate(valid: DataFrame) -> DataFrame:
 
     Returns (age_group, wealth_segment, n_s, n_treated, n_control,
     rate_treated, rate_control, diff) ordered by the stratum keys."""
-    from ..functions import scoring
-
-    t = scoring.has_loans(F.col("housing"), F.col("loan")).cast("bigint")
-    y1 = (F.col("y") == "yes").cast("bigint")
     cells = (
-        valid.select(
-            scoring.age_group(F.col("age")).alias("age_group"),
-            scoring.wealth_segment(F.col("balance")).alias("wealth_segment"),
-            t.alias("t"),
-            y1.alias("y1"),
-        )
+        valid.selectExpr(*_strata_exprs())
         .groupBy("age_group", "wealth_segment")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_s"),
@@ -777,16 +781,7 @@ def ate_report(valid: DataFrame) -> DataFrame:
 
     Returns one row (n, n_treated, n_control, n_strata_used,
     diff_naive, ate, att, atc)."""
-    from ..functions import scoring
-
-    t = scoring.has_loans(F.col("housing"), F.col("loan")).cast("bigint")
-    y1 = (F.col("y") == "yes").cast("bigint")
-    staged = valid.select(
-        scoring.age_group(F.col("age")).alias("age_group"),
-        scoring.wealth_segment(F.col("balance")).alias("wealth_segment"),
-        t.alias("t"),
-        y1.alias("y1"),
-    )
+    staged = valid.selectExpr(*_strata_exprs())
     # the naive (all-rows) contrast enters as a scalar subquery struct
     naive = staged.agg(
         F.struct(

@@ -14,6 +14,22 @@ is ONE narrow shuffle-free stage under whole-stage codegen: at 100 TB
 this runs embarrassingly parallel at the parquet/CSV split level, with
 no skew surface and no shuffle at all.
 
+The stages are Spark SQL text in ``selectExpr``. Built from PySpark
+Column calls, the plan takes ~530 calls at ~10 py4j round trips each
+(the ``_with_origin`` call-site capture around every ``F.*`` call):
+~6k round trips and ~0.7 s before Spark reads a byte. As text the JVM
+parses each select once, in a few round trips. Each stage is one
+select, except where a value is read more than once: ``parse_stage``'s
+typed casts and ``segment_stage``'s three RFM scores get a select of
+their own, so Catalyst keeps them computed once per row (written
+inline, each would be evaluated at every use). Two more things in the
+text are load-bearing:
+
+- the ``size(_errors) = 0`` guard (``errors.when_clean``) around every
+  derived column, so a failed row's enrichment stays null;
+- the ``explode(array(from_csv(...)))`` barrier in ``parse_stage``,
+  so the CSV is parsed once per row (see there).
+
 The CLI (``main``) adds two things around the stages and keeps them
 shuffle-free: its input scan fans out small inputs (``session.fan_out``,
 a round-robin exchange only below the split-size gate, so a small CSV
@@ -34,13 +50,15 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import scoring
+from ..functions.scoring import sql_name, sql_str
 from ..operators import errors as E
 from ..schema import (
     BANK_COLUMNS,
+    ERRORS_COL,
     FLOAT_FIELDS,
     INT_FIELDS,
     NUM_CSV_COLUMNS,
@@ -62,10 +80,13 @@ class PipelineConfig:
     id_col: str | None = None  # row-key column for deterministic batch ids
 
 
-def _ts(cfg: PipelineConfig) -> Column:
+_ISO_SECONDS = sql_str("yyyy-MM-dd'T'HH:mm:ssxxx")
+
+
+def _ts(cfg: PipelineConfig) -> str:
     if cfg.fixed_timestamp is not None:
-        return F.lit(cfg.fixed_timestamp)
-    return F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ssxxx")
+        return sql_str(cfg.fixed_timestamp)
+    return f"date_format(current_timestamp(), {_ISO_SECONDS})"
 
 
 # ---------------------------------------------------------------- parse
@@ -93,60 +114,55 @@ def parse_stage(lines: DataFrame, cfg: PipelineConfig, line_col: str = "line") -
     # explode(array(x)) yields exactly one row per input, so semantics
     # are unchanged.
     wide_ddl = ", ".join(f"c{i} string" for i in range(NUM_CSV_COLUMNS + 1))
-    parsed = lines.select(
-        F.col(line_col).alias("_raw"),
-        F.explode(
-            F.array(F.from_csv(F.col(line_col), wide_ddl, {"sep": ";", "quote": '"'}))
-        ).alias("p"),
-    )
-
-    # The column-count condition must be materialized in the same select
-    # that drops the struct `p` — referencing p.c16/p.c17 afterwards
-    # would be an unresolved column.
-    ncols_bad = F.col("p.c16").isNull() | F.col("p.c17").isNotNull()
-    df = parsed.select(
-        "_raw",
-        ncols_bad.alias("_ncols_bad"),
-        *[F.col(f"p.c{i}").alias(f"_s_{name}") for i, (name, _) in enumerate(BANK_COLUMNS)],
+    line = sql_name(line_col)
+    options = ", ".join(sql_str(s) for s in ("sep", ";", "quote", '"'))
+    parsed = lines.selectExpr(
+        f"{line} AS _raw",
+        f"explode(array(from_csv({line}, {sql_str(wide_ddl)}, map({options})))) AS p",
     )
 
     # Typed casts (try_cast so ANSI mode routes bad values to the error
     # channel instead of aborting); categoricals lower+trim (:123-138).
-    typed_cols = []
-    for name, dtype in BANK_COLUMNS:
-        raw = F.trim(F.col(f"_s_{name}"))
-        if name in INT_FIELDS or name in FLOAT_FIELDS:
-            typed_cols.append(raw.try_cast(dtype).alias(name))
-        else:
-            typed_cols.append(F.lower(raw).alias(name))
-    df = df.select("_raw", "_ncols_bad", *[F.col(f"_s_{n}") for n, _ in BANK_COLUMNS], *typed_cols)
+    # The raw strings of the numeric fields ride along for the error
+    # messages. The casts get their own select so the error channel
+    # below reads them by name: one cast per field and row.
+    field = {name: f"p.c{i}" for i, (name, _) in enumerate(BANK_COLUMNS)}
+    numeric = [name for name in field if name in INT_FIELDS or name in FLOAT_FIELDS]
+    typed = parsed.selectExpr(
+        "_raw",
+        f"p.c{NUM_CSV_COLUMNS - 1} IS NULL OR p.c{NUM_CSV_COLUMNS} IS NOT NULL AS _ncols_bad",
+        *(f"{field[name]} AS _s_{name}" for name in numeric),
+        *(
+            f"try_cast(trim({field[name]}) AS {dtype.simpleString()}) AS {sql_name(name)}"
+            if name in numeric
+            else f"lower(trim({field[name]})) AS {sql_name(name)}"
+            for name, dtype in BANK_COLUMNS
+        ),
+    )
 
     # Error channel in ONE expression, first-match-wins in the
     # reference's evaluation order: column count (:118-119), then the
     # numeric casts in column order (:121-138).
-    pairs: list = [
-        (
-            F.col("_ncols_bad"),
-            "ParseError",
-            PARSING_ERROR,
-            F.lit(f"expected {NUM_CSV_COLUMNS} columns"),
-        )
+    pairs = [
+        ("_ncols_bad", "ParseError", PARSING_ERROR, sql_str(f"expected {NUM_CSV_COLUMNS} columns"))
     ]
-    for name, _ in BANK_COLUMNS:
-        if name in INT_FIELDS or name in FLOAT_FIELDS:
-            raw = F.trim(F.col(f"_s_{name}"))
-            pairs.append(
-                (
-                    F.col(name).isNull() & raw.isNotNull() & (raw != ""),
-                    "ParseError",
-                    PARSING_ERROR,
-                    F.concat(F.lit(f"invalid value for '{name}': "), F.col(f"_s_{name}")),
-                )
+    for name in numeric:
+        raw = f"trim(_s_{name})"
+        message = sql_str(f"invalid value for '{name}': ")
+        pairs.append(
+            (
+                f"{sql_name(name)} IS NULL AND {raw} IS NOT NULL AND {raw} != {sql_str('')}",
+                "ParseError",
+                PARSING_ERROR,
+                f"concat({message}, _s_{name})",
             )
-    df = E.set_errors(df, pairs)
-
-    df = df.withColumn("_ingestion_timestamp", E.when_clean(_ts(cfg)))
-    return df.drop("_ncols_bad", *[f"_s_{name}" for name, _ in BANK_COLUMNS])
+        )
+    df = typed.selectExpr(
+        "_raw",
+        *(sql_name(name) for name, _ in BANK_COLUMNS),
+        f"{E.first_error_chain(pairs)} AS {ERRORS_COL}",
+    )
+    return df.selectExpr("*", f"{E.when_clean(_ts(cfg))} AS _ingestion_timestamp")
 
 
 # ------------------------------------------------------------- validate
@@ -155,25 +171,25 @@ def validate_stage(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Required-field + age-range validation (reference :142-145,
     :167-172). The isinstance type-check (:167-168) is subsumed by the
     typed schema."""
-    return E.set_errors(
-        df,
+    lo, hi = int(cfg.min_age), int(cfg.max_age)
+    errors = E.set_errors(
         [
             (
-                F.col("age").isNull() | F.col("job").isNull() | F.col("balance").isNull(),
+                "age IS NULL OR job IS NULL OR balance IS NULL",
                 "ValidationError",
                 DATA_VALIDATION,
-                F.lit("missing required field (age/job/balance)"),
+                sql_str("missing required field (age/job/balance)"),
             ),
             (
-                ~F.col("age").between(cfg.min_age, cfg.max_age),
+                f"NOT (age >= {lo} AND age <= {hi})",
                 "ValidationError",
                 DATA_VALIDATION,
-                F.concat(
-                    F.lit(f"age out of range [{cfg.min_age}, {cfg.max_age}]: "),
-                    F.col("age").cast("string"),
-                ),
+                f"concat({sql_str(f'age out of range [{lo}, {hi}]: ')}, CAST(age AS STRING))",
             ),
-        ],
+        ]
+    )
+    return df.selectExpr(
+        *(f"{errors} AS {ERRORS_COL}" if c == ERRORS_COL else sql_name(c) for c in df.columns)
     )
 
 
@@ -182,46 +198,35 @@ def validate_stage(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 def enrich_stage(df: DataFrame) -> DataFrame:
     """The five derived features (reference :176-203), null for rows
     already in the error channel."""
-    return (
-        df.withColumn("age_group", E.when_clean(scoring.age_group(F.col("age"))))
-        .withColumn("wealth_segment", E.when_clean(scoring.wealth_segment(F.col("balance"))))
-        .withColumn("contact_day_type", E.when_clean(scoring.contact_day_type(F.col("day"))))
-        .withColumn(
-            "has_loans", E.when_clean(scoring.has_loans(F.col("housing"), F.col("loan")))
-        )
-        .withColumn(
-            "engagement_score",
-            E.when_clean(
-                scoring.engagement_score(
-                    F.col("previous"), F.col("campaign"), F.col("duration"), F.col("y")
-                )
-            ),
-        )
+    return df.selectExpr(
+        "*",
+        f"{E.when_clean(scoring.age_group('age'))} AS age_group",
+        f"{E.when_clean(scoring.wealth_segment('balance'))} AS wealth_segment",
+        f"{E.when_clean(scoring.contact_day_type('day'))} AS contact_day_type",
+        f"{E.when_clean(scoring.has_loans('housing', 'loan'))} AS has_loans",
+        f"{E.when_clean(scoring.engagement_score('previous', 'campaign', 'duration', 'y'))}"
+        " AS engagement_score",
     )
 
 
 # -------------------------------------------------------------- segment
 
 def segment_stage(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """RFM scoring + JSON encode + tier (reference :222-253)."""
-    r = scoring.recency_score(F.col("pdays"))
-    f_ = scoring.frequency_score(F.col("previous"))
-    m = scoring.monetary_score(F.col("balance"))
-    return (
-        df.withColumn("_r", E.when_clean(r))
-        .withColumn("_f", E.when_clean(f_))
-        .withColumn("_m", E.when_clean(m))
-        .withColumn(
-            "rfm_scores",
-            E.when_clean(scoring.rfm_json(F.col("_r"), F.col("_f"), F.col("_m"))),
-        )
-        .withColumn(
-            "customer_segment",
-            E.when_clean(scoring.customer_segment(F.col("_r"), F.col("_f"), F.col("_m"))),
-        )
-        .withColumn("_processing_timestamp", E.when_clean(_ts(cfg)))
-        .drop("_r", "_f", "_m")
+    """RFM scoring + JSON encode + tier (reference :222-253). The three
+    scores get their own select: the JSON and the tier read each of
+    them by name, so it is computed once per row."""
+    scored = df.selectExpr(
+        "*",
+        f"{scoring.recency_score('pdays')} AS _r",
+        f"{scoring.frequency_score('previous')} AS _f",
+        f"{scoring.monetary_score('balance')} AS _m",
     )
+    return scored.selectExpr(
+        "*",
+        f"{E.when_clean(scoring.rfm_json('_r', '_f', '_m'))} AS rfm_scores",
+        f"{E.when_clean(scoring.customer_segment('_r', '_f', '_m'))} AS customer_segment",
+        f"{E.when_clean(_ts(cfg))} AS _processing_timestamp",
+    ).drop("_r", "_f", "_m")
 
 
 # -------------------------------------------------------------- prepare
@@ -232,13 +237,14 @@ def prepare_stage(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     per-record ids, md5-derived in deterministic mode, uuid() otherwise.
     """
     if cfg.id_col is not None:
-        batch_id = F.md5(F.col(cfg.id_col).cast("string"))
+        batch_id = f"md5(CAST({sql_name(cfg.id_col)} AS STRING))"
     else:
-        batch_id = F.expr("uuid()")
-    return (
-        df.withColumn("processing_timestamp", E.when_clean(_ts(cfg)))
-        .withColumn("_batch_id", E.when_clean(batch_id))
-        .withColumn("_pipeline_version", E.when_clean(F.lit(PIPELINE_VERSION)))
+        batch_id = "uuid()"
+    return df.selectExpr(
+        "*",
+        f"{E.when_clean(_ts(cfg))} AS processing_timestamp",
+        f"{E.when_clean(batch_id)} AS _batch_id",
+        f"{E.when_clean(sql_str(PIPELINE_VERSION))} AS _pipeline_version",
     )
 
 
@@ -252,7 +258,7 @@ def run_stages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 def run_on_lines(lines: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
     """Full pipeline from raw CSV lines; returns (good, errors)."""
     df = run_stages(parse_stage(lines, cfg), cfg)
-    ts = F.lit(cfg.fixed_timestamp) if cfg.fixed_timestamp else None
+    ts = sql_str(cfg.fixed_timestamp) if cfg.fixed_timestamp else None
     return E.split_errors(df, raw_col="_raw", timestamp=ts)
 
 
@@ -261,8 +267,9 @@ def read_bank_lines(spark: SparkSession, path: str) -> DataFrame:
     ``ReadFromText(skip_header_lines=1)`` :345 — identified by its
     leading 'age;'/'"age"' field rather than by position, which is
     equivalent for this dataset and split-parallel at scale)."""
+    header = sql_str(r'^"?age"?;')
     lines = spark.read.text(path).withColumnRenamed("value", "line")
-    return lines.filter(~F.col("line").rlike(r'^"?age"?;'))
+    return lines.filter(f"NOT (line RLIKE {header})")
 
 
 def error_counts(metrics: dict) -> dict[str, int]:
@@ -283,7 +290,7 @@ def stats_frame(spark: SparkSession, counts: dict[str, int]) -> DataFrame:
     JVM-local relation (SQL ``VALUES``: no Python round-trip, no scan).
     Zero-count types are left out, as ``groupBy(...).count()`` would,
     and no errors at all gives zero rows with the same two columns."""
-    values = ", ".join(f"('{t}', {n}L)" for t, n in counts.items())
+    values = ", ".join(f"({sql_str(t)}, {int(n)}L)" for t, n in counts.items())
     return spark.sql(
         f"SELECT * FROM VALUES {values} AS stats(error_type, count) WHERE count > 0"
     )
@@ -330,11 +337,11 @@ def main(argv: list[str] | None = None) -> None:
     # 29-field sink contract (reference PROCESSED_DATA_SCHEMA :48-78):
     # the raw line is not part of the good-row schema
     good_obs, bad_obs = Observation(), Observation()
-    good = good.drop("_raw").observe(good_obs, F.count(F.lit(1)).alias("rows"))
+    good = good.drop("_raw").observe(good_obs, F.expr("count(1) AS rows"))
     bad = bad.observe(
         bad_obs,
-        F.count(F.lit(1)).alias("rows"),
-        *[F.count_if(F.col("error_type") == t).alias(t) for t in E.ERROR_TYPES],
+        F.expr("count(1) AS rows"),
+        *[F.expr(f"count_if(error_type = {sql_str(t)}) AS {sql_name(t)}") for t in E.ERROR_TYPES],
     )
     sink_s = {}
     for name, df, path in (("good", good, args.output_table), ("bad", bad, args.error_table)):

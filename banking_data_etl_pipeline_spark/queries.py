@@ -16,7 +16,7 @@ pinned frames); a direct call skips that scope.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import scoring, texttools
@@ -123,10 +123,18 @@ def _bank_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rfm(df: DataFrame) -> DataFrame:
-    return (
-        df.withColumn("_r", scoring.recency_score(F.col("pdays")))
-        .withColumn("_f", scoring.frequency_score(F.col("previous")))
-        .withColumn("_m", scoring.monetary_score(F.col("balance")))
+    return df.selectExpr(
+        "*",
+        f"{scoring.recency_score('pdays')} AS _r",
+        f"{scoring.frequency_score('previous')} AS _f",
+        f"{scoring.monetary_score('balance')} AS _m",
+    )
+
+
+def _engagement_6dp() -> Column:
+    """The engagement score rounded to 6 dp, as its oracle twins are."""
+    return F.expr(
+        f"round({scoring.engagement_score('previous', 'campaign', 'duration', 'y')}, 6)"
     )
 
 
@@ -143,39 +151,32 @@ def pipeline_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = _rfm(_bank_valid(spark, sf_dir))
     return seg.select(
         *BANK_OUT_COLS,
-        scoring.age_group(F.col("age")).alias("age_group"),
-        scoring.wealth_segment(F.col("balance")).alias("wealth_segment"),
-        scoring.contact_day_type(F.col("day")).alias("contact_day_type"),
-        scoring.has_loans(F.col("housing"), F.col("loan")).alias("has_loans"),
-        F.round(
-            scoring.engagement_score(
-                F.col("previous"), F.col("campaign"), F.col("duration"), F.col("y")
-            ),
-            6,
-        ).alias("engagement_score"),
-        scoring.rfm_json(F.col("_r"), F.col("_f"), F.col("_m")).alias("rfm_scores"),
-        scoring.customer_segment(F.col("_r"), F.col("_f"), F.col("_m")).alias(
-            "customer_segment"
-        ),
+        F.expr(scoring.age_group("age")).alias("age_group"),
+        F.expr(scoring.wealth_segment("balance")).alias("wealth_segment"),
+        F.expr(scoring.contact_day_type("day")).alias("contact_day_type"),
+        F.expr(scoring.has_loans("housing", "loan")).alias("has_loans"),
+        _engagement_6dp().alias("engagement_score"),
+        F.expr(scoring.rfm_json("_r", "_f", "_m")).alias("rfm_scores"),
+        F.expr(scoring.customer_segment("_r", "_f", "_m")).alias("customer_segment"),
     )
 
 
 def age_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _bank_valid(spark, sf_dir)
-    return v.select("bank_id", "age", scoring.age_group(F.col("age")).alias("age_group"))
+    return v.select("bank_id", "age", F.expr(scoring.age_group("age")).alias("age_group"))
 
 
 def wealth_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _bank_valid(spark, sf_dir)
     return v.select(
-        "bank_id", "balance", scoring.wealth_segment(F.col("balance")).alias("wealth_segment")
+        "bank_id", "balance", F.expr(scoring.wealth_segment("balance")).alias("wealth_segment")
     )
 
 
 def contact_day_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _bank_valid(spark, sf_dir)
     return v.select(
-        "bank_id", "day", scoring.contact_day_type(F.col("day")).alias("contact_day_type")
+        "bank_id", "day", F.expr(scoring.contact_day_type("day")).alias("contact_day_type")
     )
 
 
@@ -183,21 +184,13 @@ def has_loans(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _bank_valid(spark, sf_dir)
     return v.select(
         "bank_id", "housing", "loan",
-        scoring.has_loans(F.col("housing"), F.col("loan")).alias("has_loans"),
+        F.expr(scoring.has_loans("housing", "loan")).alias("has_loans"),
     )
 
 
 def engagement_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _bank_valid(spark, sf_dir)
-    return v.select(
-        "bank_id",
-        F.round(
-            scoring.engagement_score(
-                F.col("previous"), F.col("campaign"), F.col("duration"), F.col("y")
-            ),
-            6,
-        ).alias("engagement_score"),
-    )
+    return v.select("bank_id", _engagement_6dp().alias("engagement_score"))
 
 
 def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,17 +200,14 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_r").alias("recency"),
         F.col("_f").alias("frequency"),
         F.col("_m").alias("monetary"),
-        scoring.rfm_json(F.col("_r"), F.col("_f"), F.col("_m")).alias("rfm_scores"),
+        F.expr(scoring.rfm_json("_r", "_f", "_m")).alias("rfm_scores"),
     )
 
 
 def customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = _rfm(_bank_valid(spark, sf_dir))
     return seg.select(
-        "bank_id",
-        scoring.customer_segment(F.col("_r"), F.col("_f"), F.col("_m")).alias(
-            "customer_segment"
-        ),
+        "bank_id", F.expr(scoring.customer_segment("_r", "_f", "_m")).alias("customer_segment")
     )
 
 
@@ -2916,15 +2906,7 @@ def lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _bank_valid(spark, sf_dir)
     scored = v.select(
         "bank_id",
-        F.round(
-            scoring.engagement_score(
-                F.col("previous"),
-                F.col("campaign"),
-                F.col("duration"),
-                F.col("y"),
-            ),
-            6,
-        ).alias("score"),
+        _engagement_6dp().alias("score"),
         (F.col("y") == "yes").alias("subscribed"),
     )
     return profiling.lift_table(
@@ -2951,15 +2933,7 @@ def score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = _bank_valid(spark, sf_dir)
     scored = v.select(
-        F.round(
-            scoring.engagement_score(
-                F.col("previous"),
-                F.col("campaign"),
-                F.col("duration"),
-                F.col("y"),
-            ),
-            6,
-        ).alias("score"),
+        _engagement_6dp().alias("score"),
         (F.col("y") == "yes").alias("subscribed"),
     )
     return profiling.score_auc(scored, "score", "subscribed")
@@ -2973,15 +2947,7 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = _bank_valid(spark, sf_dir)
     scored = v.select(
-        F.round(
-            scoring.engagement_score(
-                F.col("previous"),
-                F.col("campaign"),
-                F.col("duration"),
-                F.col("y"),
-            ),
-            6,
-        ).alias("score"),
+        _engagement_6dp().alias("score"),
         (F.col("y") == "yes").alias("subscribed"),
     )
     return profiling.calibration_bins(scored, "score", "subscribed")
@@ -3166,15 +3132,7 @@ def brier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = _bank_valid(spark, sf_dir)
     scored = v.select(
-        F.round(
-            scoring.engagement_score(
-                F.col("previous"),
-                F.col("campaign"),
-                F.col("duration"),
-                F.col("y"),
-            ),
-            6,
-        ).alias("score"),
+        _engagement_6dp().alias("score"),
         (F.col("y") == "yes").alias("subscribed"),
     )
     return profiling.brier_decomposition(scored, "score", "subscribed")

@@ -43,8 +43,8 @@ def test_engagement_bounded(spark, rows):
         [(i, *r) for i, r in enumerate(rows)],
         "id long, previous long, campaign long, duration long, y string",
         [
-            scoring.engagement_score(
-                F.col("previous"), F.col("campaign"), F.col("duration"), F.col("y")
+            F.expr(
+                scoring.engagement_score("previous", "campaign", "duration", "y")
             ).alias("e")
         ],
     )
@@ -58,7 +58,7 @@ def test_recency_monotone_except_tail(spark, pdays):
         spark,
         [(i, v) for i, v in enumerate(pdays)],
         "id long, pdays long",
-        [F.col("pdays"), scoring.recency_score(F.col("pdays")).alias("s")],
+        [F.col("pdays"), F.expr(scoring.recency_score("pdays")).alias("s")],
     )
     for r in out:
         if r.pdays <= -1:
@@ -88,16 +88,16 @@ def test_segment_follows_rfm_average(spark, rows):
         [(i, p, pr, b) for i, (p, pr, b) in enumerate(rows)],
         "id long, pdays long, previous long, balance double",
         [
-            scoring.rfm_json(
-                scoring.recency_score(F.col("pdays")),
-                scoring.frequency_score(F.col("previous")),
-                scoring.monetary_score(F.col("balance")),
-            ).alias("rfm"),
-            scoring.customer_segment(
-                scoring.recency_score(F.col("pdays")),
-                scoring.frequency_score(F.col("previous")),
-                scoring.monetary_score(F.col("balance")),
-            ).alias("seg"),
+            F.expr(scoring.rfm_json(
+                scoring.recency_score("pdays"),
+                scoring.frequency_score("previous"),
+                scoring.monetary_score("balance"),
+            )).alias("rfm"),
+            F.expr(scoring.customer_segment(
+                scoring.recency_score("pdays"),
+                scoring.frequency_score("previous"),
+                scoring.monetary_score("balance"),
+            )).alias("seg"),
         ],
     )
     tiers = {"low_value": 0, "medium_value": 2, "high_value": 3, "premium": 4}
