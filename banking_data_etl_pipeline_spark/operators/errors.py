@@ -39,7 +39,6 @@ ERROR_TYPES = ("parsing_error", "data_validation")
 
 _ERRORS = sql_name(ERRORS_COL)
 _ERRORS_TYPE = "array<struct<stage:string,error_type:string,message:string>>"
-_ISO_MICROS = sql_str("yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx")
 
 
 class UnlistedErrorType(RuntimeError):
@@ -84,24 +83,22 @@ def when_clean(expr: str) -> str:
     return f"CASE WHEN {is_clean()} THEN {expr} END"
 
 
-def split_errors(
-    df: DataFrame, raw_col: str = "_raw", timestamp: str | None = None
-) -> tuple[DataFrame, DataFrame]:
+def split_errors(df: DataFrame, timestamp: str) -> tuple[DataFrame, DataFrame]:
     """Split into (good, errors); errors take the reference's 4-field
     shape ``{raw_data, error_message, error_type, timestamp}``
-    (``batch_pipeline1.py:80-85``). Only the *first* error per row is
-    emitted, matching the reference's exception short-circuit.
-    ``timestamp`` is SQL text; the default stamps the current time.
+    (``batch_pipeline1.py:80-85``), with ``raw_data`` from the ``_raw``
+    line. Only the *first* error per row is emitted, matching the
+    reference's exception short-circuit. ``timestamp`` is SQL text,
+    the same stamp the pipeline puts on the good rows.
     """
-    ts = timestamp or f"date_format(current_timestamp(), {_ISO_MICROS})"
     good = df.filter(is_clean()).drop(ERRORS_COL)
     # try_element_at: null-safe even if the optimizer evaluates the
     # projection before the size>0 filter (ANSI element_at would throw)
     first = f"try_element_at({_ERRORS}, 1)"
     bad = df.filter(f"NOT ({is_clean()})").selectExpr(
-        f"{sql_name(raw_col)} AS raw_data",
+        "_raw AS raw_data",
         f"concat({first}.stage, {sql_str(': ')}, {first}.message) AS error_message",
         f"{first}.error_type AS error_type",
-        f"{ts} AS timestamp",
+        f"{timestamp} AS timestamp",
     )
     return good, bad

@@ -258,8 +258,7 @@ def run_stages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 def run_on_lines(lines: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
     """Full pipeline from raw CSV lines; returns (good, errors)."""
     df = run_stages(parse_stage(lines, cfg), cfg)
-    ts = sql_str(cfg.fixed_timestamp) if cfg.fixed_timestamp else None
-    return E.split_errors(df, raw_col="_raw", timestamp=ts)
+    return E.split_errors(df, _ts(cfg))
 
 
 def read_bank_lines(spark: SparkSession, path: str) -> DataFrame:

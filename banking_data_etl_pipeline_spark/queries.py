@@ -79,32 +79,49 @@ def _cache_root() -> str:
     return d
 
 
-def _stream_src_dir(sf_dir: str, table: str) -> str:
-    """Deterministic per-corpus-snapshot symlink dir for streaming
-    file sources (they require a DIRECTORY; the fixtures ship one
-    parquet file). Keyed by the ann_ivf_prebuilt content fingerprint
-    (abs path + size + mtime), so repeated bench/parity invocations
-    reuse ONE dir per snapshot instead of accumulating mkdtemp
-    orphans (r7 ADVICE), while a regenerated fixture fingerprints to
-    a fresh dir. Concurrent bench/parity processes race-safely fall
-    through to whichever created the symlink first."""
-    import hashlib
+def _staged_json(kind: str, key: str, train):
+    """Stage a trained model ONCE per ``key`` (a `tables.snapshot_key`):
+    ``train()`` returns a JSON-able value, published to
+    ``spark_graft_<kind>_<key>.json`` with an atomic ``os.replace`` (a
+    concurrent writer of the same deterministic model is harmless).
+    Fresh and cached calls both return the decoded JSON, so the two
+    give equal values; the caller restores its own int/float types."""
+    import json
     import os
     import tempfile
 
-    src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
+    path = os.path.join(_cache_root(), f"spark_graft_{kind}_{key}.json")
+    if not os.path.exists(path):
+        model = train()
+        fd, tmp = tempfile.mkstemp(dir=_cache_root(), suffix=".json")
+        with os.fdopen(fd, "w") as f:
+            json.dump(model, f)
+        os.replace(tmp, path)
+    with open(path) as f:
+        return json.load(f)
+
+
+def _stream_src_dir(sf_dir: str, table: str, copies: int = 1) -> str:
+    """Symlink dir for streaming file sources (they require a
+    DIRECTORY; the fixtures ship one parquet file): ``copies`` links
+    to ``<table>.parquet``, so a feed can play the file more than
+    once. One dir per `tables.snapshot_key`, so repeated invocations
+    reuse it instead of accumulating mkdtemp orphans; concurrent
+    processes fall through to whichever created a link first."""
+    import os
+
+    name = f"{table}.parquet"
+    src = os.path.join(os.path.abspath(sf_dir), name)
+    fp = tables.snapshot_key(sf_dir, (name,), copies)
     d = os.path.join(_cache_root(), f"spark_graft_src_{table}_{fp}")
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, f"{table}.parquet")
-    if not os.path.islink(link):
-        try:
-            os.symlink(src, link)
-        except FileExistsError:  # concurrent race loser
-            pass
+    for i in range(copies):
+        link = os.path.join(d, f"{i}_{name}")
+        if not os.path.islink(link):
+            try:
+                os.symlink(src, link)
+            except FileExistsError:  # concurrent race loser
+                pass
     return d
 
 
@@ -713,24 +730,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup (dropDuplicatesWithinWatermark): the feed plays
     the events file TWICE (two symlinks = exact duplicate rows); the
     survivors' per-type totals must equal the plain batch table."""
-    import hashlib
-    import os
-    import tempfile
-
-    # two-symlink variant of _stream_src_dir (same fingerprint reuse)
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
-    d = os.path.join(_cache_root(), f"spark_graft_src_events2_{fp}")
-    os.makedirs(d, exist_ok=True)
-    for ln in ("a.parquet", "b.parquet"):
-        if not os.path.islink(os.path.join(d, ln)):
-            try:
-                os.symlink(src, os.path.join(d, ln))
-            except FileExistsError:
-                pass
+    d = _stream_src_dir(sf_dir, "events", copies=2)
     return EV.stream_dedup_totals(spark, d)
 
 
@@ -1867,23 +1867,15 @@ def _staged_index(
     `ann_pq_prebuilt`, `ann_graph_prebuilt`) and the recall harness's
     prebuilt arms: build ONCE into a private temp dir, publish with an
     atomic rename (a concurrent race loser discards its build and
-    reads the winner's), key on abs path + size + mtime so a
+    reads the winner's), key on `tables.snapshot_key` of ``srcs`` so a
     regenerated fixture rebuilds instead of silently reusing a stale
     index. ``marker`` is the sub-dir whose _SUCCESS file proves a
     complete publish."""
-    import hashlib
     import os
     import shutil
     import tempfile
 
-    parts = []
-    for name in srcs:
-        src = os.path.join(sf_dir, name)
-        st = os.stat(src)
-        parts.append(
-            f"{os.path.abspath(src)}|{st.st_size}|{st.st_mtime_ns}"
-        )
-    fp = hashlib.md5("||".join(parts).encode()).hexdigest()[:16]
+    fp = tables.snapshot_key(sf_dir, srcs)
     path = os.path.join(_cache_root(), f"spark_graft_{kind}_{fp}")
     if not os.path.exists(os.path.join(path, marker, "_SUCCESS")):
         build_dir = tempfile.mkdtemp(
@@ -1932,40 +1924,29 @@ def _ann_models(emb: DataFrame, sf_dir: str):
     ONCE per corpus snapshot — the index-build/probe amortization the
     prebuilt lifecycles (`ann_ivf_prebuilt`/`ann_pq_prebuilt`) already
     model, applied to the measurement harness (r8 verdict: in-query
-    training was 27 s warm and grows with every arm). Same content
-    fingerprint key (abs path + size + mtime) and atomic publish
-    (os.replace) as the parquet staging dirs; JSON round-trips Python
-    doubles exactly (repr shortest-round-trip), and training is
-    deterministic, so cached and fresh runs are bit-identical — the
-    oracle twin retrains every time and still hash-matches."""
-    import hashlib
-    import json
-    import os
-    import tempfile
+    training was 27 s warm and grows with every arm). Staged by
+    `_staged_json`; JSON round-trips Python doubles exactly (repr
+    shortest-round-trip), and training is deterministic, so the oracle
+    twin retrains every time and still hash-matches."""
 
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(_cache_root(), f"spark_graft_annmodels_{fp}.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            d = json.load(f)
-        cents = [(int(c), [float(x) for x in v]) for c, v in d["cents"]]
-        return cents, d["books"], d["res_books"]
-    from .operators import clustering
+    def train():
+        from .operators import clustering
 
-    cents = clustering.train_centroids(emb, 16, 2)
-    books = similarity.pq_train_codebooks(emb, 4, 16, 1)
-    res_books = similarity.train_residual_codebooks(emb, cents, 4, 16, 1)
-    fd, tmp = tempfile.mkstemp(dir=_cache_root(), suffix=".json")
-    with os.fdopen(fd, "w") as f:
-        json.dump(
-            {"cents": cents, "books": books, "res_books": res_books}, f
-        )
-    os.replace(tmp, path)
-    return cents, books, res_books
+        cents = clustering.train_centroids(emb, 16, 2)
+        return {
+            "cents": cents,
+            "books": similarity.pq_train_codebooks(emb, 4, 16, 1),
+            "res_books": similarity.train_residual_codebooks(
+                emb, cents, 4, 16, 1
+            ),
+        }
+
+    d = _staged_json(
+        "annmodels", tables.snapshot_key(sf_dir, ("embeddings.parquet",)),
+        train,
+    )
+    cents = [(int(c), [float(x) for x in v]) for c, v in d["cents"]]
+    return cents, d["books"], d["res_books"]
 
 
 def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1978,19 +1959,15 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     each prebuilt lifecycle shares its telescoped twin's oracle — and
     the composed plan itself is memoized per (session, corpus
     snapshot) like a prepared statement."""
-    import os
-
     # prepared-plan memo: DataFrames are immutable lazy plans, so reuse
     # is semantics-free; what it saves is the ~15 s of driver-side
     # LITERAL-EXPRESSION construction (codebooks, centroids, LUT folds
     # across five probe arms) that would otherwise repeat on every
     # invocation. It lives in the SparkContext's session_cache, so a
     # new session never sees an old session's plan.
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
     plans = session_cache(spark)
     cache_key = (
-        "ann_recall",
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}",
+        "ann_recall", tables.snapshot_key(sf_dir, ("embeddings.parquet",))
     )
     cached = plans.get(cache_key)
     if cached is not None:
@@ -2615,19 +2592,14 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-merge-joins them with ZERO exchanges on either side
     (plan-pinned by tests/test_r8c_ops.py). The aggregation's decimal
     sum keeps the revenue bit-identical cross-engine."""
-    import hashlib
     import os
-    import tempfile
 
     from .sources import sinks
 
     orders = tables.load(spark, sf_dir, "orders")
     customer = tables.load(spark, sf_dir, "customer")
-    src = os.path.join(os.path.abspath(sf_dir), "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}|{os.getpid()}".encode()
-    ).hexdigest()[:12]
+    # per process: the bucket spec lives in this session's catalog
+    fp = tables.snapshot_key(sf_dir, ("orders.parquet",), os.getpid())
     base = os.path.join(_cache_root(), f"spark_graft_buckets_{fp}")
     to = sinks.write_bucketed(
         spark, orders, f"b_orders_{fp}", os.path.join(base, "orders"),
@@ -2728,28 +2700,24 @@ def did_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Columnar-format interop: the events table staged ONCE as ORC
-    (Spark's second first-class columnar format — content-fingerprint
-    + pid-keyed dir, the bucketed_join staging pattern) and read back
-    for a per-type rollup with decimal-exact sums and epoch-micros
-    timestamp bounds. The oracle aggregates the parquet original, so
-    a hash match proves the ORC round-trip preserved every value AND
-    timestamp semantics across formats — the interop guarantee a
-    multi-format lake job depends on."""
-    import hashlib
+    """Columnar-format interop: the events table staged ONCE per
+    corpus snapshot as ORC (Spark's second first-class columnar
+    format; `_staged_index`) and read back for a per-type rollup with
+    decimal-exact sums and epoch-micros timestamp bounds. The oracle
+    aggregates the parquet original, so a hash match proves the ORC
+    round-trip preserved every value AND timestamp semantics across
+    formats — the interop guarantee a multi-format lake job depends
+    on."""
     import os
-    import tempfile
 
-    ev = tables.load(spark, sf_dir, "events")
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}|{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(_cache_root(), f"spark_graft_orc_{fp}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev.write.mode("overwrite").orc(path)
-    back = spark.read.orc(path)
+    path = _staged_index(
+        sf_dir, "orc", "events",
+        lambda d: tables.load(spark, sf_dir, "events").write.orc(
+            os.path.join(d, "events")
+        ),
+        srcs=("events.parquet",),
+    )
+    back = spark.read.orc(os.path.join(path, "events"))
     return (
         back.groupBy("event_type")
         .agg(
@@ -3517,36 +3485,17 @@ def _kmeans_model(
     """Stage the trained k-means centroids ONCE per corpus snapshot —
     the `_ann_models` amortization applied to the clustering lane
     (r12 verdict item 4: `kmeans_purity` re-ran the full Lloyd walk
-    per eval). Same content fingerprint key (abs path + size + mtime,
-    plus the model hyper-params so k=8 and k=16 stage separately) and
-    atomic `os.replace` publish; JSON round-trips Python doubles
-    exactly and training is deterministic, so cached and fresh runs
-    are bit-identical — the oracle twin retrains every time and still
-    hash-matches."""
-    import hashlib
-    import json
-    import os
-    import tempfile
-
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}|k={k}|it={iterations}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(_cache_root(), f"spark_graft_kmeans_{fp}.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            return [
-                (int(c), [float(x) for x in v]) for c, v in json.load(f)
-            ]
+    per eval). Staged by `_staged_json`, keyed on the hyper-params
+    too, so k=8 and k=16 stage separately; training is deterministic,
+    so the oracle twin retrains every time and still hash-matches."""
     from .operators import clustering
 
-    cents = clustering.train_centroids(emb, k, iterations)
-    fd, tmp = tempfile.mkstemp(dir=_cache_root(), suffix=".json")
-    with os.fdopen(fd, "w") as f:
-        json.dump(cents, f)
-    os.replace(tmp, path)
-    return cents
+    cents = _staged_json(
+        "kmeans",
+        tables.snapshot_key(sf_dir, ("embeddings.parquet",), k, iterations),
+        lambda: clustering.train_centroids(emb, k, iterations),
+    )
+    return [(int(c), [float(x) for x in v]) for c, v in cents]
 
 
 def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3633,32 +3582,18 @@ def _unigram_model(
     docs: DataFrame, sf_dir: str, rounds: int = 2
 ) -> dict[str, int]:
     """Stage the trained unigram-LM vocab ONCE per corpus snapshot —
-    the `_kmeans_model` amortization for the tokenizer lane. Exact
-    integer counts JSON-round-trip losslessly; training is
-    deterministic, so cached and fresh runs are identical — the
-    oracle twin retrains every time and still hash-matches."""
-    import hashlib
-    import json
-    import os
-    import tempfile
-
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}|r={rounds}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(_cache_root(), f"spark_graft_unigram_{fp}.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            return {p: int(c) for p, c in json.load(f).items()}
+    the `_kmeans_model` amortization for the tokenizer lane, staged by
+    `_staged_json`. Exact integer counts JSON-round-trip losslessly;
+    training is deterministic, so the oracle twin retrains every time
+    and still hash-matches."""
     from .operators import unigram
 
-    vocab = unigram.train_unigram(docs, rounds=rounds)
-    fd, tmp = tempfile.mkstemp(dir=_cache_root(), suffix=".json")
-    with os.fdopen(fd, "w") as f:
-        json.dump(vocab, f)
-    os.replace(tmp, path)
-    return vocab
+    vocab = _staged_json(
+        "unigram",
+        tables.snapshot_key(sf_dir, ("documents.parquet",), rounds),
+        lambda: unigram.train_unigram(docs, rounds=rounds),
+    )
+    return {p: int(c) for p, c in vocab.items()}
 
 
 def unigram_lm_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,6 +7,7 @@ pushdown for free; check ``.explain`` shows ``PushedFilters`` /
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,6 +18,22 @@ TABLES = [
 ]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def snapshot_key(sf_dir: str, files: tuple[str, ...], *params) -> str:
+    """Content fingerprint of one corpus snapshot: abs path + size +
+    mtime_ns of each of ``files`` (names under ``sf_dir``), plus
+    ``params`` (model hyper-params, copy counts, ...). A regenerated
+    fixture gets a fresh key, so nothing keyed on it is silently
+    reused across snapshots. The one place that stats a source file
+    for a cache key; 16 hex digits."""
+    parts = []
+    for name in files:
+        src = os.path.join(os.path.abspath(sf_dir), name)
+        st = os.stat(src)
+        parts.append(f"{src}|{st.st_size}|{st.st_mtime_ns}")
+    parts.extend(map(str, params))
+    return hashlib.md5("||".join(parts).encode()).hexdigest()[:16]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import glob
 import os
+import re
 import tempfile
 
 import pytest
@@ -36,6 +37,8 @@ ROWS = [
 
 GOOD_FIELDS = 29
 ERROR_FIELDS = {"raw_data", "error_type", "error_message", "timestamp"}
+GOOD_STAMPS = ("_ingestion_timestamp", "_processing_timestamp", "processing_timestamp")
+ISO_SECONDS = re.compile(r"^\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d[+-]\d\d:\d\d$")
 
 
 def _read_jsonl(path: str) -> list[dict]:
@@ -88,6 +91,9 @@ def test_cli_json_sinks(spark):
     assert types == ["data_validation", "data_validation", "parsing_error", "parsing_error"]
     # raw line is preserved verbatim for replay
     assert any(r["raw_data"] == "bad;short;row" for r in bad)
+    # one timestamp format per run, on both sinks
+    stamps = [r["timestamp"] for r in bad] + [r[c] for r in good for c in GOOD_STAMPS]
+    assert all(ISO_SECONDS.match(t) for t in stamps), stamps
 
     # stats sink: per-error-type counts as parquet
     stats = {

@@ -221,18 +221,3 @@ def test_unigram_oracle_agrees_on_fixture():
     assert sorted(con.execute(oracle.UNIGRAM_TOKENIZE_Q).fetchall()) == [
         (1, 2, 2, 6, 3.0), (2, 3, 3, 7, 2.333333), (3, 1, 1, 2, 2.0),
     ]
-
-
-def test_unigram_model_staging_roundtrip(spark):
-    """The staged vocab round-trips exact integer counts and agrees
-    with a fresh train."""
-    from banking_data_etl_pipeline_spark import queries as Q
-    from banking_data_etl_pipeline_spark.operators import unigram as U
-
-    docs = tables.load(spark, SF_DIR, "documents")
-    a = Q._unigram_model(docs, SF_DIR)
-    b = Q._unigram_model(docs, SF_DIR)
-    assert a == b and a
-    fresh = U.train_unigram(docs, rounds=2)
-    assert fresh == a
-    assert all(isinstance(c, int) for c in a.values())

@@ -1,38 +1,13 @@
-"""The recall harness's amortization layers (r9): model-parameter
-JSON staging, prebuilt-index probes, and prepared-plan memoization.
-The oracle gate proves end-to-end values; these pin the cache
-CONTRACTS — bit-identical round-trips and semantics-free reuse."""
+"""The recall harness's prepared-plan memo (r9) and the per-query pin
+release. The model-JSON and index staging contracts are in
+test_staging.py."""
 
 from __future__ import annotations
 
 import pytest
 
-import glob
-import os
-
 from banking_data_etl_pipeline_spark import queries as Q
-from banking_data_etl_pipeline_spark.sources import tables
 from conftest import SF_DIR
-
-
-def test_ann_models_json_roundtrip_is_bit_identical(spark):
-    emb = tables.load(spark, SF_DIR, "embeddings")
-    # first call may train or hit an earlier stage; the second call is
-    # ALWAYS the JSON path — training determinism + repr round-trip
-    # means both must be exactly equal, float by float
-    a = Q._ann_models(emb, SF_DIR)
-    fp_files = glob.glob(
-        os.path.join(Q._cache_root(), "spark_graft_annmodels_*.json")
-    )
-    assert fp_files, "staging file missing after _ann_models"
-    b = Q._ann_models(emb, SF_DIR)
-    assert a == b
-    cents, books, res_books = b
-    assert len(cents) == 16 and all(len(v) == 64 for _c, v in cents)
-    assert len(books) == 4 and all(len(bk) == 16 for bk in books)
-    assert len(res_books) == 4
-    # the cached load returns proper python floats (not strings)
-    assert all(isinstance(x, float) for _c, v in cents for x in v[:2])
 
 
 @pytest.mark.slowtier
@@ -50,53 +25,6 @@ def test_ann_recall_plan_is_memoized_per_corpus(spark):
     spark.catalog.clearCache()
     rows2 = sorted(map(tuple, df1.collect()))
     assert rows1 == rows2 and len(rows1) == 5
-
-
-def test_kmeans_model_staging_roundtrip_and_fingerprint(spark):
-    """r12 verdict item 4: kmeans_purity reads staged centroids. The
-    JSON round-trip must be bit-identical to a fresh train, the
-    staging file must exist after the first call, and the fingerprint
-    must key on the hyper-params too (k=8 and k=4 stage separately)."""
-    import glob as g
-
-    emb = tables.load(spark, SF_DIR, "embeddings")
-    a = Q._kmeans_model(emb, SF_DIR, k=8)
-    files = g.glob(
-        os.path.join(Q._cache_root(), "spark_graft_kmeans_*.json")
-    )
-    assert files, "staging file missing after _kmeans_model"
-    b = Q._kmeans_model(emb, SF_DIR, k=8)
-    assert a == b
-    assert len(b) == 8 and all(len(v) == 64 for _c, v in b)
-    assert all(isinstance(x, float) for _c, v in b for x in v[:2])
-    # fresh train (bypassing the stage) must agree float-for-float
-    from banking_data_etl_pipeline_spark.operators import clustering
-
-    fresh = clustering.train_centroids(emb, 8, 3)
-    assert fresh == b
-    # different hyper-params -> different staging file, different model
-    c = Q._kmeans_model(emb, SF_DIR, k=4)
-    assert len(c) == 4
-    assert (
-        len(g.glob(os.path.join(Q._cache_root(), "spark_graft_kmeans_*.json")))
-        >= 2
-    )
-
-
-def test_cache_root_is_private_and_owned():
-    """r13 ADVICE (medium): staged models must never live at
-    predictable world-writable names. The cache root is per-uid,
-    mode 0700, and owned by us — and a loose umask gets tightened."""
-    import os
-    import stat
-
-    d = Q._cache_root()
-    st = os.stat(d)
-    assert st.st_uid == os.getuid()
-    assert not (st.st_mode & 0o077), oct(st.st_mode)
-    assert f"spark_graft_cache_{os.getuid()}" in d
-    # idempotent: a second call returns the same validated dir
-    assert Q._cache_root() == d
 
 
 def test_pinned_persists_release_at_next_query(spark):
