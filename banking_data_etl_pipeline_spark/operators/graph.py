@@ -34,29 +34,53 @@ def _trunc12(col: F.Column) -> F.Column:
     return F.floor(col * F.lit(1e12)).cast("double") / F.lit(1e12)
 
 
-def copurchase_edges(lineitem: DataFrame) -> DataFrame:
-    """Symmetric distinct edges between parts appearing in the same
-    order.
+def copurchase_edges(lineitem: DataFrame, min_weight: int = 1) -> DataFrame:
+    """Symmetric distinct (src, dst) edges between parts that appear
+    together in at least ``min_weight`` distinct orders — the one edge
+    definition of every co-purchase operator in this module
+    (``min_weight=1``: the raw co-purchase graph; ``min_weight=2``: the
+    repeated-co-purchase graph, where one-off basket coincidences are
+    noise edges). A row with a NULL ``l_orderkey`` belongs to no order
+    and forms no edge, as in the SQL twins' equi-join.
 
     Shape: ONE shuffle gathers each order's part set (``collect_set``
     also dedupes within the order, so no pre-``distinct`` pass), the
     per-order pairing is a map-side double ``explode`` (bounded
     fan-out: orders have ~7 lines, so the blowup is ≤ 7² per order — a
-    constant, not a skew risk), and one more shuffle dedupes the
-    src < dst half across orders before the map-only mirror union.
-    Two exchanges total, vs four for the equivalent self-join
-    formulation (distinct + re-shuffle of both join sides + pair
-    distinct) — the pairing itself never touches the network."""
-    sets = lineitem.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
+    constant, not a skew risk), and one more shuffle counts the
+    src < dst half across orders (map-side combined) before the weight
+    filter and the map-only mirror union. Two exchanges total, vs four
+    for the equivalent self-join formulation (distinct + re-shuffle of
+    both join sides + pair aggregation) — the pairing itself never
+    touches the network."""
+    sets = (
+        lineitem.filter(F.col("l_orderkey").isNotNull())
+        .groupBy("l_orderkey")
+        .agg(F.collect_set("l_partkey").alias("ps"))
     )
     half = (
         sets.select(F.explode("ps").alias("src"), "ps")
         .select("src", F.explode("ps").alias("dst"))
         .filter(F.col("src") < F.col("dst"))
-        .distinct()
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= min_weight)
+        .select("src", "dst")
     )
     return half.union(half.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
+def purchase_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """Distinct (c, p) customer→part purchase pairs of the bipartite
+    purchase graph: the inner join ``o_orderkey = l_orderkey`` (a NULL
+    key joins nothing), projected to (o_custkey, l_partkey) and
+    deduped — the one edge definition of ``build_hits_edges``,
+    ``hits``' callers and ``itemitem_cf``."""
+    return (
+        orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
+        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -129,6 +153,12 @@ def ranks_over_edges(
     # force-broadcasting it above the gate would hit the same driver/
     # broadcast limits the gate exists for
     n_nodes = deg.count()
+    if n_nodes == 0:
+        # an empty graph has an empty rank vector (and no 1/n_nodes)
+        empty = deg.select(F.col("src").alias("node"), F.lit(0.0).alias("r"))
+        edges.unpersist()
+        deg.unpersist()
+        return edges.sparkSession.createDataFrame([], empty.schema)
     bcast = n_nodes <= broadcast_nodes
     # broadcast fold keeps the (much larger) edge side shuffle-free on
     # the way into the cache; shuffle-join fallback above the gate
@@ -405,10 +435,7 @@ def kcore(
     from the long pendant tail before community detection or
     embedding training).
 
-    Edge build: the distinct (order, part) self-join is co-partitioned
-    on the order key with blast radius bounded by basket size (the
-    market_basket shape), and the HAVING prune keeps only repeated
-    pairs before the mirror union.
+    Edge build: ``copurchase_edges(lineitem, min_weight)``.
 
     Spark shape: each round is ONE degree aggregation over the
     surviving symmetric edge list plus two semi-join filters against
@@ -436,22 +463,7 @@ def kcore(
     passes without a fixed point — a partial peel is NOT a k-core,
     and silently returning one would corrupt every consumer (the
     connected-components convention)."""
-    po = lineitem.select("l_orderkey", "l_partkey").distinct()
-    half = (
-        po.alias("a")
-        .join(po.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= min_weight)
-        .select("src", "dst")
-    )
-    cur = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    cur = copurchase_edges(lineitem, min_weight).localCheckpoint()
     prev_alive = -1
     converged = False
     for i in range(max_rounds):
@@ -494,7 +506,7 @@ def build_hits_edges(
 ) -> None:
     """BUILD phase of the staged HITS lifecycle: materialize the
     distinct customer→part purchase edge list once per corpus snapshot
-    (r10 verdict: the orders⋈lineitem⋈distinct build re-ran on every
+    (r10 verdict: the ``purchase_edges`` build re-ran on every
     ``hits`` invocation and dominated its 9 s warm time).
 
     Layout (all under ``out_dir``):
@@ -514,16 +526,7 @@ def build_hits_edges(
     ``_SUCCESS`` marker proves a complete publish."""
     import os
 
-    edges = (
-        orders.join(
-            lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]
-        )
-        .select(
-            F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p")
-        )
-        .distinct()
-        .persist()
-    )
+    edges = purchase_edges(orders, lineitem).persist()
     n_c = edges.select("c").distinct().count()
     n_p = edges.select("p").distinct().count()
     edges.repartition(8, "c").sortWithinPartitions("c").write.mode(
@@ -542,13 +545,11 @@ def build_hits_edges(
 
 
 def hits(
-    orders: DataFrame | None = None,
-    lineitem: DataFrame | None = None,
+    edges: DataFrame,
     iters: int = 2,
     broadcast_nodes: int = 2_000_000,
     plan_hook=None,
     *,
-    edges: DataFrame | None = None,
     edges_by_p: DataFrame | None = None,
     n_c: int | None = None,
     n_p: int | None = None,
@@ -570,34 +571,23 @@ def hits(
     plan as an uncorrelated scalar subquery over the persisted
     previous half-step — no driver-side pull at all.
 
-    Scale shape: the edge list (distinct customer–part purchase
-    pairs) persists once and both half-step joins reuse it; score
-    vectors are node-count-sized, so the per-iteration join
-    BROADCASTS them under ``broadcast_nodes`` (iterations become
-    map-only over the cached edges + one groupBy) and falls back to a
-    co-partitioned shuffle join above it. Each half-step is
-    persisted, materialized, and its predecessor released — the
-    lineage-truncation discipline every driver-side loop here follows.
+    Scale shape: the edge list persists once and both half-step joins
+    reuse it; score vectors are node-count-sized, so the
+    per-iteration join BROADCASTS them under ``broadcast_nodes``
+    (iterations become map-only over the cached edges + one groupBy)
+    and falls back to a co-partitioned shuffle join above it. Each
+    half-step is persisted, materialized, and its predecessor
+    released — the lineage-truncation discipline every driver-side
+    loop here follows.
 
-    Prebuilt-lifecycle keywords: pass ``edges`` (the distinct (c, p)
-    frame, e.g. the staged ``edges_by_c`` parquet) to skip the
-    orders⋈lineitem build; ``edges_by_p`` optionally supplies the
-    p-oriented copy for the hub half-step (defaults to ``edges``);
-    ``n_c``/``n_p`` carry the staged node counts so no count jobs run.
+    ``edges`` is the distinct (c, p) frame: ``purchase_edges(orders,
+    lineitem)`` or its staged ``edges_by_c`` copy. ``edges_by_p``
+    optionally supplies the p-oriented copy for the hub half-step
+    (defaults to ``edges``); ``n_c``/``n_p`` carry the staged node
+    counts so no count jobs run.
 
     Returns (role, node, score): role 'authority' for parts, 'hub'
     for customers, scores from the final iteration."""
-    if edges is None:
-        edges = (
-            orders.join(
-                lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]
-            )
-            .select(
-                F.col("o_custkey").alias("c"),
-                F.col("l_partkey").alias("p"),
-            )
-            .distinct()
-        )
     edges = edges.persist()
     edges_p = edges if edges_by_p is None else edges_by_p.persist()
     if n_c is None:
@@ -609,71 +599,52 @@ def hits(
     # sizing from customers alone under-estimated when parts dominate
     bcast = max(n_c, n_p) <= broadcast_nodes
 
-    def _l2(df: DataFrame, col: str):
-        return F.sqrt(
-            df.agg(
-                F.sum(
-                    _trunc12(F.col(col) * F.col(col)).cast("decimal(32,12)")
-                )
+    def half_step(e: DataFrame, src: str, dst: str, scores: DataFrame,
+                  stage: str | None = None) -> DataFrame:
+        # the authority step sums hub scores c -> p, the hub step
+        # authority scores p -> c; the same plan with the keys swapped
+        s_in = F.broadcast(scores) if bcast else scores
+        raw = (
+            e.join(s_in, e[src] == s_in["node"])
+            .groupBy(dst)
+            .agg(
+                F.sum(F.col("score").cast("decimal(32,12)"))
+                .cast("double")
+                .alias("s")
+            )
+            .persist()
+        )
+        raw.count()
+        l2 = F.sqrt(
+            raw.agg(
+                F.sum(_trunc12(F.col("s") * F.col("s")).cast("decimal(32,12)"))
                 .cast("double")
                 .alias("_n2")
             ).scalar()
         )
+        out = raw.select(
+            F.col(dst).alias("node"), _trunc12(F.col("s") / l2).alias("score")
+        ).persist()
+        if stage is not None:
+            plan_hook(stage, out)
+        out.count()
+        raw.unpersist()
+        return out
 
     hubs = edges.select("c").distinct().select(
         F.col("c").alias("node"), F.lit(1.0).alias("score")
     ).persist()
     hubs.count()
     auths = None
-    prev_h, prev_a = None, None
     for it in range(iters):
-        h_in = F.broadcast(hubs) if bcast else hubs
-        a_raw = (
-            edges.join(h_in, edges["c"] == h_in["node"])
-            .groupBy("p")
-            .agg(
-                F.sum(F.col("score").cast("decimal(32,12)"))
-                .cast("double")
-                .alias("s")
-            )
-            .persist()
-        )
-        a_raw.count()
-        auths = a_raw.select(
-            F.col("p").alias("node"),
-            _trunc12(F.col("s") / _l2(a_raw, "s")).alias("score"),
-        ).persist()
-        if plan_hook is not None and it == 0:
-            plan_hook("iteration", auths)
-        auths.count()
-        a_raw.unpersist()
-        if prev_a is not None:
-            prev_a.unpersist()
-        prev_a = auths
-        a_in = F.broadcast(auths) if bcast else auths
-        h_raw = (
-            edges_p.join(a_in, edges_p["p"] == a_in["node"])
-            .groupBy("c")
-            .agg(
-                F.sum(F.col("score").cast("decimal(32,12)"))
-                .cast("double")
-                .alias("s")
-            )
-            .persist()
-        )
-        h_raw.count()
-        new_h = h_raw.select(
-            F.col("c").alias("node"),
-            _trunc12(F.col("s") / _l2(h_raw, "s")).alias("score"),
-        ).persist()
-        new_h.count()
-        h_raw.unpersist()
-        if prev_h is not None:
-            prev_h.unpersist()
-        if it == 0:
-            hubs.unpersist()  # the initial all-ones vector
-        prev_h = new_h
-        hubs = new_h
+        stage = "iteration" if plan_hook is not None and it == 0 else None
+        nxt = half_step(edges, "c", "p", hubs, stage)
+        if auths is not None:
+            auths.unpersist()
+        auths = nxt
+        nxt = half_step(edges_p, "p", "c", auths)
+        hubs.unpersist()
+        hubs = nxt
     edges.unpersist()
     if edges_p is not edges:
         edges_p.unpersist()
@@ -700,7 +671,8 @@ def itemitem_cf(
     incidence with the standard hot-user prune.
 
     Scale shape: candidate pairs come from a per-customer self-join of
-    the distinct (customer, part) incidence — the blow-up is Σ
+    the distinct (customer, part) incidence (``purchase_edges``, the
+    HITS edge list) — the blow-up is Σ
     basket², so customers with baskets over ``max_basket`` distinct
     parts are DROPPED FIRST (the Swing / item-CF power-user prune:
     a 10k-item basket contributes 1e8 pairs and ~zero signal; the cap
@@ -714,15 +686,8 @@ def itemitem_cf(
     expression (6 dp); ties order by (common desc, part_a, part_b).
 
     Returns (part_a, part_b, common, n_a, n_b, cosine)."""
-    inc = (
-        orders.join(
-            lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]
-        )
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_partkey").alias("part"),
-        )
-        .distinct()
+    inc = purchase_edges(orders, lineitem).select(
+        F.col("c").alias("cust"), F.col("p").alias("part")
     )
     kept = (
         inc.groupBy("cust")
@@ -792,8 +757,8 @@ def bfs_depths(
     plan_hook=None,
 ) -> DataFrame:
     """Single-source BFS shortest-path depths over the repeated-
-    co-purchase graph (the kcore edge build: part pairs sharing
-    ≥ ``min_weight`` distinct orders), seeded at the minimum part id —
+    co-purchase graph (``copurchase_edges(lineitem, min_weight)``),
+    seeded at the minimum part id —
     the level-synchronous frontier expansion every distributed graph
     engine uses for unweighted shortest paths (Pregel's hello-world),
     here as plain DataFrame ops.
@@ -811,26 +776,11 @@ def bfs_depths(
     Scale shape: visited grows to the reachable component, but every
     join is node-keyed (co-partitioned under AQE); the per-level
     frontier is broadcast when small. 100 TB of orders only densifies
-    the EDGE build (one groupBy + HAVING); the BFS itself is sized by
-    the part catalog, not the fact table.
+    the edge build; the BFS itself is sized by the part catalog, not
+    the fact table.
 
     Returns (part, depth), depth ∈ [0, max_depth], ordered by part."""
-    po = lineitem.select("l_orderkey", "l_partkey").distinct()
-    half = (
-        po.alias("a")
-        .join(po.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= min_weight)
-        .select("src", "dst")
-    )
-    edges = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    edges = copurchase_edges(lineitem, min_weight).persist()
     seed = edges.agg(F.min("src").alias("s")).collect()[0]["s"]
     spark = lineitem.sparkSession
     if seed is None:
@@ -896,29 +846,15 @@ def graph_diameter(
     scale). The one-number "how stretched is this catalog's
     co-purchase structure" readout next to assortativity.
 
-    Both sweeps reuse ONE persisted edge build and the shared
+    Both sweeps reuse ONE persisted edge build
+    (``copurchase_edges(lineitem, min_weight)``) and the shared
     ``_bfs_from`` frontier loop (broadcast-gated, per-level lineage
     truncation); driver traffic is two single-row pulls (seed and the
     argmax far node). ``max_depth`` bounds both sweeps; depths are
     exact BFS levels within the reachable, depth-bounded ball.
 
     Returns one row (seed, ecc_seed, far_node, diameter_lb)."""
-    po = lineitem.select("l_orderkey", "l_partkey").distinct()
-    half = (
-        po.alias("a")
-        .join(po.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= min_weight)
-        .select("src", "dst")
-    )
-    edges = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    edges = copurchase_edges(lineitem, min_weight).persist()
     spark = lineitem.sparkSession
     seed = edges.agg(F.min("src").alias("s")).collect()[0]["s"]
     if seed is None:
@@ -957,9 +893,8 @@ def label_prop(
     result deterministic at any scale — no tie-break randomness
     anywhere, min() over bigint labels only.
 
-    Scale shape: the edge build is the kcore/bfs repeated-co-purchase
-    construction (one groupBy + HAVING over the fact table — the
-    100 TB data touches exactly this pass); each round is ONE
+    Scale shape: the edge build is ``copurchase_edges(lineitem,
+    min_weight)`` (the one pass over the fact table); each round is ONE
     node-keyed equi-join (edges ⋈ labels, AQE co-partitioned), one
     min-groupBy, one left join — all keyed, no windows, no NLJs.
     Frames are eagerly ``localCheckpoint``ed per round (the kcore
@@ -968,22 +903,7 @@ def label_prop(
 
     Returns (part, community) for every node, community = the
     smallest node id the label wave has reached it from."""
-    po = lineitem.select("l_orderkey", "l_partkey").distinct()
-    half = (
-        po.alias("a")
-        .join(po.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= min_weight)
-        .select("src", "dst")
-    )
-    edges = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    edges = copurchase_edges(lineitem, min_weight).persist()
     labels = (
         edges.select(F.col("src").cast("bigint").alias("part"))
         .distinct()
@@ -1025,7 +945,8 @@ def assortativity(lineitem: DataFrame, min_weight: int = 2) -> DataFrame:
     2002): the Pearson correlation of (deg(src), deg(dst)) over the
     symmetric edge list — positive means hubs link to hubs (a core-
     periphery catalog), negative means hubs fan out to leaves; the
-    one-number structure summary next to kcore/triangle_count.
+    one-number structure summary next to kcore/triangle_count. Edges:
+    ``copurchase_edges(lineitem, min_weight)``.
 
     Exactness: the five sufficient statistics (M, Σx, Σxy, Σx², Σy²)
     are integer sums over edges (degrees are counts), aggregated in
@@ -1042,26 +963,11 @@ def assortativity(lineitem: DataFrame, min_weight: int = 2) -> DataFrame:
 
     Returns one row (m_edges, s_x, s_xy, assortativity) — the exact
     sums plus the 6-dp correlation."""
-    po = lineitem.select("l_orderkey", "l_partkey").distinct()
-    half = (
-        po.alias("a")
-        .join(po.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= min_weight)
-        .select("src", "dst")
-    )
     # persist: the edge list feeds the degree agg AND both lookup
     # joins, and deg itself is probed twice — without the caches the
     # dominant-cost edge build would run once per consumer (the
     # pagerank/kcore discipline; measured 22 -> ~8 distinct exchanges)
-    edges = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    edges = copurchase_edges(lineitem, min_weight).persist()
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
     ).persist()

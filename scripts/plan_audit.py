@@ -275,7 +275,11 @@ def main() -> None:
     graph.kcore(lineitem, plan_hook=hook_for("kcore"))
     spark.catalog.clearCache()
     orders = tables.load(spark, sf_dir, "orders")
-    graph.hits(orders, lineitem, iters=1, plan_hook=hook_for("hits"))
+    graph.hits(
+        edges=graph.purchase_edges(orders, lineitem),
+        iters=1,
+        plan_hook=hook_for("hits"),
+    )
     spark.catalog.clearCache()
     from banking_data_etl_pipeline_spark.operators import sampling, similarity
     sampling.kcenter_coreset(emb, k=2, plan_hook=hook_for("kcenter"))

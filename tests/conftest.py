@@ -5,6 +5,14 @@ import pytest
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def lineitem_of(spark, orders):
+    """A minimal (l_orderkey, l_partkey) frame from (orderkey, parts)
+    pairs — the graph tests' fixture; ``enumerate(baskets)`` numbers a
+    plain list of part baskets."""
+    rows = [(ok, pk) for ok, parts in orders for pk in parts]
+    return spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from banking_data_etl_pipeline_spark.session import get_spark

@@ -1,21 +1,20 @@
-"""PageRank power iteration on the co-purchase graph."""
+"""The graph operators (`operators/graph.py`): edge builders, PageRank,
+triangles, link prediction and the empty-graph and NULL-key edges."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from banking_data_etl_pipeline_spark.operators import graph
-
-
-def _lineitem(spark, orders):
-    # orders: list of (orderkey, [partkeys])
-    rows = [(ok, pk) for ok, pks in orders for pk in pks]
-    return spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+from banking_data_etl_pipeline_spark.sources import tables
+from conftest import SF_DIR, lineitem_of
 
 
 def test_copurchase_edges_symmetric_and_distinct(spark):
-    li = _lineitem(spark, [(1, [10, 20, 30]), (2, [10, 20])])  # dup pair 10-20
+    li = lineitem_of(spark, [(1, [10, 20, 30]), (2, [10, 20])])  # dup pair 10-20
     edges = {(r.src, r.dst) for r in graph.copurchase_edges(li).collect()}
     assert edges == {
         (10, 20), (20, 10), (10, 30), (30, 10), (20, 30), (30, 20),
@@ -24,7 +23,7 @@ def test_copurchase_edges_symmetric_and_distinct(spark):
 
 def test_pagerank_one_iteration_hand_checked(spark):
     # triangle A(1)-B(2)-C(3) plus pendant D(4) on A
-    li = _lineitem(spark, [(1, [1, 2, 3]), (2, [1, 4])])
+    li = lineitem_of(spark, [(1, [1, 2, 3]), (2, [1, 4])])
     r = {row.node: row.r for row in graph.pagerank(li, iters=1).collect()}
     # n=4, r0=0.25; deg: A=3, B=C=2, D=1
     assert r[1] == pytest.approx(0.15 / 4 + 0.85 * (0.125 + 0.125 + 0.25), abs=1e-9)
@@ -34,7 +33,7 @@ def test_pagerank_one_iteration_hand_checked(spark):
 
 
 def test_pagerank_mass_is_conserved(spark):
-    li = _lineitem(spark, [(1, [1, 2, 3]), (2, [1, 4]), (3, [2, 5]), (4, [5, 6])])
+    li = lineitem_of(spark, [(1, [1, 2, 3]), (2, [1, 4]), (3, [2, 5]), (4, [5, 6])])
     out = graph.pagerank(li, iters=3)
     total = out.agg(F.sum("r").alias("t")).collect()[0].t
     # symmetric graph, no dangling nodes: total rank stays ~1
@@ -45,7 +44,7 @@ def test_pagerank_mass_is_conserved(spark):
 def test_triangle_counts_hand_checked(spark):
     # K3 {1,2,3} plus K3 {2,3,4} sharing edge 2-3: each triangle gives
     # every member one count; 2 and 3 sit in both
-    li = _lineitem(spark, [(1, [1, 2, 3]), (2, [2, 3, 4])])
+    li = lineitem_of(spark, [(1, [1, 2, 3]), (2, [2, 3, 4])])
     out = {r.node: r.n_tri for r in graph.triangle_counts(li).collect()}
     assert out == {1: 1, 2: 2, 3: 2, 4: 1}
 
@@ -53,13 +52,13 @@ def test_triangle_counts_hand_checked(spark):
 def test_triangle_counts_no_triangles(spark):
     # a path 1-2-3-4 has no triangles: nodes with zero triangles are
     # simply absent from the per-node output
-    li = _lineitem(spark, [(1, [1, 2]), (2, [2, 3]), (3, [3, 4])])
+    li = lineitem_of(spark, [(1, [1, 2]), (2, [2, 3]), (3, [3, 4])])
     assert graph.triangle_counts(li).count() == 0
 
 
 def test_triangle_counts_k4_complete(spark):
     # K4: C(4,3)=4 triangles, every node in exactly 3 of them
-    li = _lineitem(spark, [(1, [1, 2, 3, 4])])
+    li = lineitem_of(spark, [(1, [1, 2, 3, 4])])
     out = {r.node: r.n_tri for r in graph.triangle_counts(li).collect()}
     assert out == {1: 3, 2: 3, 3: 3, 4: 3}
     # total count = 3 * number of triangles
@@ -69,7 +68,7 @@ def test_triangle_counts_k4_complete(spark):
 def test_triangle_counts_shuffle_fallback_matches_broadcast(spark):
     # forcing the non-broadcast paths (gates at 0) must not change
     # the result
-    li = _lineitem(spark, [(1, [1, 2, 3]), (2, [2, 3, 4]), (3, [1, 4, 5])])
+    li = lineitem_of(spark, [(1, [1, 2, 3]), (2, [2, 3, 4]), (3, [1, 4, 5])])
     bcast = {(r.node, r.n_tri) for r in graph.triangle_counts(li).collect()}
     shuf = {
         (r.node, r.n_tri)
@@ -96,3 +95,131 @@ def test_link_prediction_on_a_known_wedge(spark):
     # deg: 1->2, 2->2, 3->3, 4->1; common(1,4)=1 (via 3)
     r = out[(1, 4)]
     assert r.common == 1 and abs(r.jaccard - 1 / (2 + 1 - 1)) < 1e-9
+
+
+def test_null_order_keys_form_no_edges(spark):
+    # a NULL l_orderkey is no order: its rows pair with nothing, as in
+    # the SQL twins' equi-join (grouping them would make a clique)
+    li = lineitem_of(spark, [(None, [1, 2]), (7, [3, 4])])
+    edges = {(r.src, r.dst) for r in graph.copurchase_edges(li).collect()}
+    assert edges == {(3, 4), (4, 3)}
+    assert {r.node for r in graph.pagerank(li).collect()} == {3, 4}
+    # one edge closes no triangle: add a third part to each key group
+    li3 = lineitem_of(spark, [(None, [1, 2, 5]), (7, [3, 4, 6])])
+    assert {r.node for r in graph.triangle_counts(li3).collect()} == {3, 4, 6}
+
+
+_EMPTY_GRAPH_OPS = {
+    "pagerank": graph.pagerank,
+    "ppr": graph.ppr,
+    "triangle_counts": graph.triangle_counts,
+    "clustering_coeff": graph.clustering_coeff,
+    "link_prediction": graph.link_prediction,
+    "kcore": graph.kcore,
+    "bfs_depths": graph.bfs_depths,
+    "graph_diameter": graph.graph_diameter,
+    "label_prop": graph.label_prop,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_EMPTY_GRAPH_OPS) + ["assortativity"])
+def test_empty_graph_gives_empty_result(spark, op):
+    # zero rows in, zero rows out — never an ANSI divide-by-zero or a
+    # "no seed" error; assortativity keeps its one summary row
+    li = tables.load(spark, SF_DIR, "lineitem").limit(0)
+    if op == "assortativity":
+        assert graph.assortativity(li).collect()[0].m_edges == 0
+    else:
+        assert _EMPTY_GRAPH_OPS[op](li).count() == 0
+
+
+def test_copurchase_edges_min_weight_is_one_pass_pair_count(spark):
+    baskets = [[1, 2, 3], [1, 2], [2, 3, 4], [2, 3], [4, 5], [4, 5, 1]]
+    li = lineitem_of(spark, enumerate(baskets))
+    count = Counter(
+        (a, b) for bk in baskets for a in bk for b in bk if a < b
+    )
+    want = {(a, b) for (a, b), w in count.items() if w >= 2}
+    assert count[(1, 3)] == 1  # a pair of one order only: dropped
+    want |= {(b, a) for a, b in want}
+    edges = graph.copurchase_edges(li, min_weight=2)
+    assert {(r.src, r.dst) for r in edges.collect()} == want
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+
+
+def test_ppr_hand_computed_on_a_star(spark):
+    """Star hub 50 (the only seed) with leaves 1, 2: after 3
+    iterations r(50) = 0.15 + 0.85·(2·0.85·0.15/2) = 0.258375 and
+    each leaf r = 0.85·(0.8725/2) = 0.3708125 (trunc-12 exact at
+    these values)."""
+    li = lineitem_of(spark, enumerate([[50, 1], [50, 2]]))
+    got = {r["node"]: r["r"] for r in graph.ppr(li, seed_mod=50).collect()}
+    assert got[50] == pytest.approx(0.258375, abs=1e-9)
+    assert got[1] == pytest.approx(0.3708125, abs=1e-9)
+    assert got[2] == pytest.approx(0.3708125, abs=1e-9)
+
+
+def test_ppr_no_seed_raises(spark):
+    li = lineitem_of(spark, enumerate([[1, 2]]))
+    with pytest.raises(ValueError, match="no seed"):
+        graph.ppr(li, seed_mod=50)
+
+
+def test_ppr_mass_concentrates_near_seeds(spark):
+    """On the fixture graph the total PPR mass is ~1 (truncation only
+    loses ulps) and seeds hold more mass than the uniform share."""
+    li = tables.load(spark, SF_DIR, "lineitem")
+    rows = graph.ppr(li, iters=2).collect()
+    total = sum(r["r"] for r in rows)
+    assert total == pytest.approx(1.0, abs=0.01)
+    n = len(rows)
+    seed_mass = sum(r["r"] for r in rows if r["node"] % 50 == 0)
+    n_seeds = sum(1 for r in rows if r["node"] % 50 == 0)
+    assert seed_mass > n_seeds / n  # above the uniform share
+
+
+def test_clustering_coeff_triangle_is_one_path_is_zero(spark):
+    """K3 {1,2,3}: every node coeff 1; pendant path node 4 (edges
+    3-4 only) has degree 1 → dropped; adding 4-5 and 4-3 makes 4 a
+    degree-2 node with no closed triangle → coeff 0."""
+    li = lineitem_of(spark, enumerate([[1, 2, 3], [3, 4], [4, 5]]))
+    got = {r["node"]: r for r in graph.clustering_coeff(li).collect()}
+    assert got[1]["coeff"] == pytest.approx(1.0)
+    assert got[2]["coeff"] == pytest.approx(1.0)
+    assert got[1]["n_tri"] == 1 and got[1]["degree"] == 2
+    # node 3 has degree 3 (2 in the clique + node 4): 1 triangle of
+    # 3 possible neighbor pairs
+    assert got[3]["degree"] == 3
+    assert got[3]["coeff"] == pytest.approx(round(2 / 6, 6))
+    # node 4: neighbors {3, 5}, not adjacent -> 0
+    assert got[4]["n_tri"] == 0 and got[4]["coeff"] == 0.0
+    # degree-1 node 5 has no defined coefficient
+    assert 5 not in got
+
+
+def test_assortativity_star_is_minus_one(spark):
+    """A star (hub 1 to leaves 2,3,4, each pair co-purchased twice):
+    every edge joins degree 3 to degree 1 → r = −1 exactly."""
+    li = lineitem_of(
+        spark, enumerate([[1, 2]] * 2 + [[1, 3]] * 2 + [[1, 4]] * 2)
+    )
+    row = graph.assortativity(li).collect()[0]
+    assert row["m_edges"] == 6
+    assert row["s_x"] == 12 and row["s_xy"] == 18
+    assert row["assortativity"] == pytest.approx(-1.0)
+
+
+def test_assortativity_symmetric_sums_match(spark):
+    """On the symmetric edge list Σx = Σy by construction — the
+    operator emits s_x and computes s_y independently; equality on a
+    non-trivial graph guards the double degree-join wiring."""
+    li = lineitem_of(
+        spark,
+        enumerate([[1, 2]] * 2 + [[2, 3]] * 2 + [[3, 4]] * 2 + [[1, 3]] * 2),
+    )
+    row = graph.assortativity(li).collect()[0]
+    # hand check: edges {12,23,34,13} symmetric → deg 1:2 2:2 3:3 4:1,
+    # and Σ dx over directed edges = Σ_v deg(v)² = 4 + 4 + 9 + 1
+    assert row["m_edges"] == 8
+    assert row["s_x"] == 18

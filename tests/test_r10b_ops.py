@@ -79,7 +79,9 @@ def test_hits_hand_computed_first_iteration(spark):
     # edges c1->p1, c1->p2, c2->p1 ; h0 = 1
     # a1_raw: p1=2, p2=1, norm sqrt(5) -> a(p1)=2/sqrt5, a(p2)=1/sqrt5
     orders, lineitem = _hits_frames(spark, [(1, 11), (1, 12), (2, 11)])
-    rows = graph.hits(orders, lineitem, iters=1).collect()
+    rows = graph.hits(
+        edges=graph.purchase_edges(orders, lineitem), iters=1
+    ).collect()
     auth = {r.node: r.score for r in rows if r.role == "authority"}
     hub = {r.node: r.score for r in rows if r.role == "hub"}
     t12 = lambda x: math.floor(x * 1e12) / 1e12
@@ -93,14 +95,19 @@ def test_hits_hand_computed_first_iteration(spark):
 def test_hits_l2_normalized_and_partition_invariant(spark):
     pairs = [(c, 10 + (c * j) % 5) for c in range(1, 8) for j in range(1, 4)]
     orders, lineitem = _hits_frames(spark, pairs)
-    rows = graph.hits(orders, lineitem, iters=2).collect()
+    rows = graph.hits(
+        edges=graph.purchase_edges(orders, lineitem), iters=2
+    ).collect()
     for role in ("authority", "hub"):
         norm = math.sqrt(
             sum(r.score**2 for r in rows if r.role == role)
         )
         assert abs(norm - 1.0) < 1e-6
     rows2 = graph.hits(
-        orders.repartition(5), lineitem.repartition(3), iters=2
+        edges=graph.purchase_edges(
+            orders.repartition(5), lineitem.repartition(3)
+        ),
+        iters=2,
     ).collect()
     assert sorted(map(tuple, rows2)) == sorted(map(tuple, rows))
 

@@ -8,7 +8,7 @@ import pytest
 from banking_data_etl_pipeline_spark.operators import graph, profiling, timeseries
 from banking_data_etl_pipeline_spark.sources import tables
 
-from conftest import SF_DIR
+from conftest import SF_DIR, lineitem_of
 
 
 def _events(spark, rows):
@@ -99,21 +99,13 @@ def test_kendall_tau_discordant_series(spark):
     assert row["tau_b"] == pytest.approx(-1.0)
 
 
-def _lineitem(spark, orders):
-    """orders = list of part-id baskets → minimal lineitem frame."""
-    rows = [
-        (oid, p) for oid, basket in enumerate(orders) for p in basket
-    ]
-    return spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-
-
 def test_bfs_depths_on_a_known_chain(spark):
     """Parts 1-2, 2-3 each co-purchased twice form the chain 1-2-3;
     part 9 pairs with 1 only once (pruned by min_weight=2) → depths
     {1:0, 2:1, 3:2}, 9 unreachable and absent."""
-    li = _lineitem(
+    li = lineitem_of(
         spark,
-        [[1, 2], [1, 2], [2, 3], [2, 3], [1, 9]],
+        enumerate([[1, 2], [1, 2], [2, 3], [2, 3], [1, 9]]),
     )
     got = {r["part"]: r["depth"] for r in graph.bfs_depths(li).collect()}
     assert got == {1: 0, 2: 1, 3: 2}
@@ -121,9 +113,9 @@ def test_bfs_depths_on_a_known_chain(spark):
 
 def test_bfs_depths_respects_max_depth_cap(spark):
     """A 4-hop chain explored with max_depth=2 stops at depth 2."""
-    li = _lineitem(
+    li = lineitem_of(
         spark,
-        [[1, 2]] * 2 + [[2, 3]] * 2 + [[3, 4]] * 2 + [[4, 5]] * 2,
+        enumerate([[1, 2]] * 2 + [[2, 3]] * 2 + [[3, 4]] * 2 + [[4, 5]] * 2),
     )
     got = {
         r["part"]: r["depth"]
@@ -134,7 +126,7 @@ def test_bfs_depths_respects_max_depth_cap(spark):
 
 def test_bfs_depths_empty_graph(spark):
     """No repeated pair at min_weight=2 → empty result, no crash."""
-    li = _lineitem(spark, [[1, 2], [3, 4]])
+    li = lineitem_of(spark, enumerate([[1, 2], [3, 4]]))
     assert graph.bfs_depths(li).count() == 0
 
 

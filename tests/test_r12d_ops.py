@@ -1,5 +1,5 @@
 """Round-12 batch-2 operator tests: Dunning LLR collocations, Holt
-linear smoothing, degree assortativity, stratified treatment effect."""
+linear smoothing, stratified treatment effect."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import pytest
 from banking_data_etl_pipeline_spark.operators import (
     corpus,
     experiments,
-    graph,
     timeseries,
 )
 
@@ -70,35 +69,6 @@ def test_holt_linear_drops_single_day_types(spark):
     # two days: level = x2, trend = x2 - x1, nothing to fold
     assert out[0]["level"] == pytest.approx(1.0)
     assert out[0]["trend"] == pytest.approx(0.0)
-
-
-def _lineitem(spark, orders):
-    rows = [(oid, p) for oid, basket in enumerate(orders) for p in basket]
-    return spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-
-
-def test_assortativity_star_is_minus_one(spark):
-    """A star (hub 1 to leaves 2,3,4, each pair co-purchased twice):
-    every edge joins degree 3 to degree 1 → r = −1 exactly."""
-    li = _lineitem(spark, [[1, 2]] * 2 + [[1, 3]] * 2 + [[1, 4]] * 2)
-    row = graph.assortativity(li).collect()[0]
-    assert row["m_edges"] == 6
-    assert row["s_x"] == 12 and row["s_xy"] == 18
-    assert row["assortativity"] == pytest.approx(-1.0)
-
-
-def test_assortativity_symmetric_sums_match(spark):
-    """On the symmetric edge list Σx = Σy by construction — the
-    operator emits s_x and computes s_y independently; equality on a
-    non-trivial graph guards the double degree-join wiring."""
-    li = _lineitem(
-        spark, [[1, 2]] * 2 + [[2, 3]] * 2 + [[3, 4]] * 2 + [[1, 3]] * 2
-    )
-    row = graph.assortativity(li).collect()[0]
-    # hand check: edges {12,23,34,13} symmetric → deg 1:2 2:2 3:3 4:1,
-    # and Σ dx over directed edges = Σ_v deg(v)² = 4 + 4 + 9 + 1
-    assert row["m_edges"] == 8
-    assert row["s_x"] == 18
 
 
 def test_strat_ate_exact_rates(spark):

@@ -1,11 +1,11 @@
 """Round-12 batch-3 operator tests: language-ID confusion matrix,
-vocabulary coverage curve, local clustering coefficient."""
+vocabulary coverage curve."""
 
 from __future__ import annotations
 
 import pytest
 
-from banking_data_etl_pipeline_spark.operators import corpus, graph
+from banking_data_etl_pipeline_spark.operators import corpus
 from banking_data_etl_pipeline_spark.sources import tables
 
 from conftest import SF_DIR
@@ -66,27 +66,3 @@ def test_vocab_coverage_tie_break_is_total_order(spark):
     )
     rows = {r["k"]: r for r in corpus.vocab_coverage(docs, ks=(1,)).collect()}
     assert rows[1]["covered"] == 2
-
-
-def _lineitem(spark, orders):
-    rows = [(oid, p) for oid, basket in enumerate(orders) for p in basket]
-    return spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-
-
-def test_clustering_coeff_triangle_is_one_path_is_zero(spark):
-    """K3 {1,2,3}: every node coeff 1; pendant path node 4 (edges
-    3-4 only) has degree 1 → dropped; adding 4-5 and 4-3 makes 4 a
-    degree-2 node with no closed triangle → coeff 0."""
-    li = _lineitem(spark, [[1, 2, 3], [3, 4], [4, 5]])
-    got = {r["node"]: r for r in graph.clustering_coeff(li).collect()}
-    assert got[1]["coeff"] == pytest.approx(1.0)
-    assert got[2]["coeff"] == pytest.approx(1.0)
-    assert got[1]["n_tri"] == 1 and got[1]["degree"] == 2
-    # node 3 has degree 3 (2 in the clique + node 4): 1 triangle of
-    # 3 possible neighbor pairs
-    assert got[3]["degree"] == 3
-    assert got[3]["coeff"] == pytest.approx(round(2 / 6, 6))
-    # node 4: neighbors {3, 5}, not adjacent -> 0
-    assert got[4]["n_tri"] == 0 and got[4]["coeff"] == 0.0
-    # degree-1 node 5 has no defined coefficient
-    assert 5 not in got

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from banking_data_etl_pipeline_spark.operators import graph, profiling
+from conftest import lineitem_of
 
 
 # ------------------------------------------------------------- AUC
@@ -95,15 +96,10 @@ def test_calibration_perfectly_calibrated_score_has_zero_ece(spark):
 # ----------------------------------------------------------- k-core
 
 
-def _li(spark, orders):
-    rows = [(ok, pk) for ok, parts in orders for pk in parts]
-    return spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-
-
 def test_kcore_peels_pendant_keeps_triangle(spark):
     # triangle {1,2,3} with every pair in 2 orders; pendant 4 hangs off
     # node 1 (weight 2); pair (5,6) occurs once -> below min_weight
-    li = _li(
+    li = lineitem_of(
         spark,
         [(1, [1, 2, 3]), (2, [1, 2, 3]), (3, [1, 4]), (4, [1, 4]),
          (5, [5, 6])],
@@ -115,7 +111,7 @@ def test_kcore_peels_pendant_keeps_triangle(spark):
 def test_kcore_cascade_empties_a_path(spark):
     # path 1-2-3-4 (each edge in 2 orders): peeling ends cascades
     # inward over multiple rounds until nothing has degree >= 2
-    li = _li(
+    li = lineitem_of(
         spark,
         [(1, [1, 2]), (2, [1, 2]), (3, [2, 3]), (4, [2, 3]),
          (5, [3, 4]), (6, [3, 4])],
@@ -126,7 +122,7 @@ def test_kcore_cascade_empties_a_path(spark):
 def test_kcore_is_idempotent_fixpoint(spark):
     # running kcore on a frame whose graph IS already a k-core changes
     # nothing: the cycle 1-2-3-4-1 is exactly its own 2-core
-    li = _li(
+    li = lineitem_of(
         spark,
         [(1, [1, 2]), (2, [1, 2]), (3, [2, 3]), (4, [2, 3]),
          (5, [3, 4]), (6, [3, 4]), (7, [1, 4]), (8, [1, 4])],
