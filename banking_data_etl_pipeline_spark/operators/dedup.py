@@ -743,20 +743,12 @@ def semdedup(
     # assignment (the literal-centroid expression is the heavy map
     # work), and both pair-join sides all read the widened frame
     emb = fan_out(emb)
-    scorer = None
-    if train_iterations > 0:
-        from . import clustering
-
-        scorer = similarity._centroid_scorer(
-            emb,
-            n_cells,
-            vec_col,
-            id_col,
-            clustering.train_centroids(
-                emb, n_cells, train_iterations, vec_col, id_col,
-                sample_mod=train_sample_mod,
-            ),
+    scorer = similarity._centroid_scorer(
+        similarity._coarse_centroids(
+            emb, n_cells, train_iterations, vec_col, id_col,
+            sample_mod=train_sample_mod,
         )
+    )
     from ..session import pin_for_query
 
     # pin: the assigned corpus feeds BOTH pair-join sides and the final

@@ -100,23 +100,42 @@ def corpus_queries(emb: DataFrame, n: int = 5, id_col: str = "vec_id",
     )
 
 
-def _centroid_scorer(emb, n_centroids: int, vec_col: str, id_col: str,
-                     centroids=None):
+def _lowest_id_centroids(emb, n_centroids: int, vec_col: str, id_col: str):
+    """The untrained coarse quantizer: every corpus vector with an id
+    below ``n_centroids`` is its own centroid, as (cid, vector) pairs
+    in cid order."""
+    rows = emb.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
+    return [
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in sorted(rows.collect(), key=lambda r: r[0])
+    ]
+
+
+def _coarse_centroids(emb, n_centroids: int, train_iterations: int,
+                      vec_col: str, id_col: str, sample_mod: int = 1):
+    """The coarse quantizer an index is built on: ``train_iterations``
+    decimal-exact Lloyd updates (``clustering.train_centroids``, fit on
+    the 1-in-``sample_mod`` id-residue sample) or, at 0 iterations,
+    the lowest-id vectors. (cid, vector) pairs in cid order — model
+    parameters, kilobytes."""
+    if train_iterations > 0:
+        from . import clustering
+
+        return clustering.train_centroids(
+            emb, n_centroids, train_iterations, vec_col, id_col,
+            sample_mod=sample_mod,
+        )
+    return _lowest_id_centroids(emb, n_centroids, vec_col, id_col)
+
+
+def _centroid_scorer(cents):
     """Return a column-builder mapping a (vec, vnorm) pair to the
     per-centroid rounded-cosine score array — the shared primitive
-    behind IVF probing and cell assignment. ``centroids`` (a list of
-    (cid, vector) pairs, e.g. from ``clustering.train_centroids``)
-    overrides the default deterministic choice of the ``n_centroids``
-    lowest-id vectors; either way the centroid set is model parameters
-    (kilobytes) inlined as literals."""
+    behind IVF probing and cell assignment. ``cents`` is the (cid,
+    vector) list of the coarse quantizer (``_coarse_centroids``,
+    ``clustering.train_centroids`` or ``load_ivf_centroids``), inlined
+    as literals."""
     import math
-
-    cents = centroids or sorted(
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
 
     def _py_norm(vec) -> float:
         # same left-to-right accumulation as vectors.dot / the oracle's
@@ -176,7 +195,9 @@ def assign_cells(
     cell = argmax rounded cosine vs the literal centroid array (lowest
     cid on ties). No shuffle — the centroids ride inside the projection
     expression, so this scales as a pure scan at any corpus size."""
-    scores_for = scorer or _centroid_scorer(emb, n_centroids, vec_col, id_col)
+    scores_for = scorer or _centroid_scorer(
+        _lowest_id_centroids(emb, n_centroids, vec_col, id_col)
+    )
     return (
         emb.select(
             F.col(id_col).alias("vec_id"),
@@ -189,6 +210,51 @@ def assign_cells(
             "_nv",
             (-F.array_max(scores_for(F.col("v"), F.col("_nv")))["nc"]).alias("cell"),
         )
+    )
+
+
+def _probe_cells(queries: DataFrame, scorer, nprobe: int) -> DataFrame:
+    """The cell pick of every IVF-family probe: one (query_id, qvec,
+    _nq, cell) row per probed cell, the ``nprobe`` cells with the
+    highest rounded cosine to the query (``_nq`` = |qvec|). The
+    scorer's (s, -cid) structs sort descending, so an exact score tie
+    goes to the LOWEST cid — the tie rule of both engines."""
+    return (
+        queries.select(
+            "query_id", "qvec", vectors.norm(F.col("qvec")).alias("_nq")
+        )
+        .select(
+            "query_id",
+            "qvec",
+            "_nq",
+            F.explode(
+                F.slice(
+                    F.reverse(
+                        F.array_sort(scorer(F.col("qvec"), F.col("_nq")))
+                    ),
+                    1,
+                    nprobe,
+                )
+            ).alias("p"),
+        )
+        .select("query_id", "qvec", "_nq", (-F.col("p.nc")).alias("cell"))
+    )
+
+
+def _cells_of(frame: DataFrame) -> list[int]:
+    """The distinct ``cell`` values of ``frame``, sorted — at most
+    n_centroids values, model scale however many rows carry them. One
+    small job; the list becomes a literal partition filter (static
+    pruning) on a cell-partitioned layout."""
+    return sorted(r.cell for r in frame.select("cell").distinct().collect())
+
+
+def _residual(vec, cents):
+    """``vec - centroid[cell]`` in doubles: the residual that residual
+    IVFPQ trains its codebooks on and encodes, for corpus rows and
+    probed (query, cell) rows alike."""
+    return F.zip_with(
+        vec, _cent_map(cents)[F.col("cell")], lambda a, b: a.cast("double") - b
     )
 
 
@@ -211,11 +277,11 @@ def ivf_topk(
     pass — how ``ann_recall`` shares ONE trained coarse quantizer
     across its index arms instead of re-walking Lloyd per arm.
 
-    Centroids are k-means-trained (``clustering.train_centroids``,
-    ``train_iterations`` decimal-exact Lloyd updates from the lowest-id
-    init) so cells track the data distribution — the balance that
-    makes probing pay off; ``train_iterations=0`` falls back to the
-    raw lowest-id vectors. ``train_sample_mod > 1`` fits the
+    Centroids come from ``_coarse_centroids``: k-means-trained
+    (``train_iterations`` decimal-exact Lloyd updates from the
+    lowest-id init) so cells track the data distribution — the
+    balance that makes probing pay off; ``train_iterations=0`` falls
+    back to the raw lowest-id vectors. ``train_sample_mod > 1`` fits the
     quantizer on a deterministic 1-in-N id-residue sample — the
     production shape at corpus scale (the cell structure needs the
     distribution, not every row); the default trains on everything
@@ -234,33 +300,14 @@ def ivf_topk(
     the data — the classic IVF selectivity.
     """
     cents = centroids
-    if cents is None and train_iterations > 0:
-        from . import clustering
-
-        cents = clustering.train_centroids(
+    if cents is None:
+        cents = _coarse_centroids(
             emb, n_centroids, train_iterations, vec_col, id_col,
             sample_mod=train_sample_mod,
         )
-    scores_for = _centroid_scorer(emb, n_centroids, vec_col, id_col, cents)
+    scores_for = _centroid_scorer(cents)
     corpus = assign_cells(emb, n_centroids, vec_col, id_col, scorer=scores_for)
-    probes = (
-        queries.select(
-            "query_id", "qvec", vectors.norm(F.col("qvec")).alias("_nq")
-        )
-        .select(
-            "query_id",
-            "qvec",
-            "_nq",
-            F.explode(
-                F.slice(
-                    F.reverse(F.array_sort(scores_for(F.col("qvec"), F.col("_nq")))),
-                    1,
-                    nprobe,
-                )
-            ).alias("p"),
-        )
-        .select("query_id", "qvec", "_nq", (-F.col("p.nc")).alias("cell"))
-    )
+    probes = _probe_cells(queries, scores_for, nprobe)
     denom = F.col("_nv") * F.col("_nq")
     scored = (
         corpus.join(F.broadcast(probes), "cell")
@@ -345,17 +392,12 @@ def train_residual_codebooks(
     ``emb`` doubled driver-side analysis and cost ivf_pq_residual
     +56%% warm in the r9 battery."""
     if res_frame is None:
-        n_centroids = len(cents)
-        scorer = _centroid_scorer(emb, n_centroids, vec_col, id_col, cents)
-        corpus = assign_cells(emb, n_centroids, vec_col, id_col, scorer=scorer)
-        cmap = _cent_map(cents)
-        res_frame = corpus.withColumn(
-            "rvec",
-            F.zip_with(
-                F.col("v"), cmap[F.col("cell")],
-                lambda a, b: a.cast("double") - b,
-            ),
-        ).select("vec_id", F.col("rvec").alias("embedding"))
+        corpus = assign_cells(
+            emb, len(cents), vec_col, id_col, scorer=_centroid_scorer(cents)
+        )
+        res_frame = corpus.select(
+            "vec_id", _residual(F.col("v"), cents).alias("embedding")
+        )
     # persist the residual training frame: each subspace walk is
     # several jobs (validation, init, per-iteration update) and every
     # one would otherwise recompute the coarse-assignment argmax + the
@@ -581,28 +623,45 @@ def ivf_pq_topk(
     Deterministic end-to-end; the DuckDB twin replays the coarse walk,
     all ``m`` subspace walks, the ADC shortlist, and the exact re-rank.
     Returns (query_id, vec_id, cosine, rank)."""
-    from . import clustering
-
     if cents is None:
-        cents = clustering.train_centroids(
+        cents = _coarse_centroids(
             emb, n_centroids, train_iterations, vec_col, id_col
         )
-    scorer = _centroid_scorer(emb, n_centroids, vec_col, id_col, cents)
+    scorer = _centroid_scorer(cents)
     corpus = assign_cells(emb, n_centroids, vec_col, id_col, scorer=scorer)
+    corpus, encoded, books, sub = _pq_encoded_cells(
+        emb, corpus, cents, books, residual, m, codes, pq_train_iterations,
+        vec_col, id_col,
+    )
+    return _ivfpq_probe_tail(
+        encoded, corpus.select("vec_id", "v"), queries, scorer, cents,
+        books, m, sub, nprobe, rerank, k, residual,
+    )
+
+
+def _pq_encoded_cells(
+    emb: DataFrame,
+    corpus: DataFrame,
+    cents,
+    books,
+    residual: bool,
+    m: int,
+    codes: int,
+    train_iterations: int,
+    vec_col: str,
+    id_col: str,
+):
+    """The codes side of IVFPQ over an ``assign_cells`` corpus: with
+    ``residual`` the corpus gains ``rvec`` (``_residual``) and PQ
+    encodes it, else PQ encodes ``v``; ``books`` not given are trained
+    in that space — residual books on THIS corpus's coarse assignment,
+    so the scorer literal tree and argmax are built once per plan.
+    Returns (corpus, encoded (vec_id, cell, c0..), books, sub)."""
     if residual:
-        cmap = _cent_map(cents)
-        corpus = corpus.withColumn(
-            "rvec",
-            F.zip_with(
-                F.col("v"), cmap[F.col("cell")],
-                lambda a, b: a.cast("double") - b,
-            ),
-        )
+        corpus = corpus.withColumn("rvec", _residual(F.col("v"), cents))
         if books is None:
-            # reuse THIS plan's coarse assignment for training: the
-            # scorer literal tree and argmax are already in `corpus`
             books = train_residual_codebooks(
-                emb, cents, m, codes, pq_train_iterations, vec_col, id_col,
+                emb, cents, m, codes, train_iterations, vec_col, id_col,
                 res_frame=corpus.select(
                     "vec_id", F.col("rvec").alias("embedding")
                 ),
@@ -611,17 +670,14 @@ def ivf_pq_topk(
     else:
         if books is None:
             books = pq_train_codebooks(
-                emb, m, codes, pq_train_iterations, vec_col, id_col
+                emb, m, codes, train_iterations, vec_col, id_col
             )
         enc_src = F.col("v")
     sub = len(books[0][0])
     encoded = corpus.select(
         "vec_id", "cell", *_pq_enc_cols(books, enc_src, m, sub)
     )
-    return _ivfpq_probe_tail(
-        encoded, corpus.select("vec_id", "v"), queries, scorer, cents,
-        books, m, sub, nprobe, rerank, k, residual,
-    )
+    return corpus, encoded, books, sub
 
 
 def _ivfpq_probe_tail(
@@ -644,34 +700,9 @@ def _ivfpq_probe_tail(
     Shared verbatim between the telescoped ``ivf_pq_topk`` and the
     persisted-index ``probe_ivfpq_index`` so the split lifecycle
     cannot drift from the oracle-proven plan."""
-    probes = (
-        queries.select(
-            "query_id", "qvec", vectors.norm(F.col("qvec")).alias("_nq")
-        )
-        .select(
-            "query_id",
-            "qvec",
-            "_nq",
-            F.explode(
-                F.slice(
-                    F.reverse(
-                        F.array_sort(scorer(F.col("qvec"), F.col("_nq")))
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("p"),
-        )
-        .select("query_id", "qvec", "_nq", (-F.col("p.nc")).alias("cell"))
-    )
+    probes = _probe_cells(queries, scorer, nprobe)
     if residual:
-        probes = probes.withColumn(
-            "_qr",
-            F.zip_with(
-                F.col("qvec"), _cent_map(cents)[F.col("cell")],
-                lambda a, b: a.cast("double") - b,
-            ),
-        )
+        probes = probes.withColumn("_qr", _residual(F.col("qvec"), cents))
         lut_src = F.col("_qr")
     else:
         lut_src = F.col("qvec")
@@ -861,10 +892,8 @@ def ann_recall(
     recall_ivf, hit_pq, recall_pq, hit_ivfpq, recall_ivfpq,
     hit_ivfpq_res, recall_ivfpq_res, hit_sq, recall_sq, hit_graph,
     recall_graph), recalls 6-dp-rounded."""
-    from . import clustering
-
     if cents is None:
-        cents = clustering.train_centroids(emb, 16, 2, vec_col, id_col)
+        cents = _coarse_centroids(emb, 16, 2, vec_col, id_col)
     if books is None:
         books = pq_train_codebooks(emb, 4, 16, 1, vec_col, id_col)
     b = brute_force_topk(emb, queries, k, vec_col, id_col).select(
@@ -946,35 +975,33 @@ def build_ivf_index(
     and the cell-partitioned layout is what makes each probe read
     ~nprobe/n_centroids of the data (see ``probe_ivf_index``).
     """
-    cents = None
-    if train_iterations > 0:
-        from . import clustering
-
-        cents = clustering.train_centroids(
-            emb, n_centroids, train_iterations, vec_col, id_col,
-            sample_mod=train_sample_mod,
-        )
-    scorer = _centroid_scorer(emb, n_centroids, vec_col, id_col, cents)
-    assigned = assign_cells(emb, n_centroids, vec_col, id_col, scorer=scorer)
+    cents = _coarse_centroids(
+        emb, n_centroids, train_iterations, vec_col, id_col,
+        sample_mod=train_sample_mod,
+    )
+    assigned = assign_cells(
+        emb, n_centroids, vec_col, id_col, scorer=_centroid_scorer(cents)
+    )
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/cells"
     )
-    spark = emb.sparkSession
-    cent_rows = cents or sorted(
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
+    _write_centroids(emb.sparkSession, cents, path)
+
+
+def _write_centroids(spark, cents, path: str) -> None:
+    """Persist the coarse quantizer as ``<path>/centroids`` (cid int,
+    cvec array<double>), one file — the model every index of the IVF
+    family stores; ``load_ivf_centroids`` reads it back."""
     spark.createDataFrame(
-        [(int(c[0]), [float(x) for x in c[1]]) for c in cent_rows],
+        [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
         "cid int, cvec array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 def load_ivf_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
-    """The persisted coarse quantizer as driver-side model parameters
-    (kilobytes) — shared by the probe and the maintain phases."""
+    """The persisted coarse quantizer (``_write_centroids``) as
+    driver-side model parameters (kilobytes), in cid order — the one
+    reader of every IVF-family index's probe and maintain phases."""
     return [
         (int(r.cid), list(r.cvec))
         for r in sorted(
@@ -1009,32 +1036,27 @@ def add_to_ivf_index(
     rebuild (measure with the recall harness; rebuild when the drop
     exceeds the rebuild budget)."""
     cents = load_ivf_centroids(spark, path)
-    scorer = _centroid_scorer(None, len(cents), vec_col, id_col, cents)
     assigned = assign_cells(
-        new_vecs, len(cents), vec_col, id_col, scorer=scorer
+        new_vecs, len(cents), vec_col, id_col, scorer=_centroid_scorer(cents)
     )
     assigned.write.mode("append").partitionBy("cell").parquet(
         f"{path}/cells"
     )
 
 
-def ivf_cell_stats(spark, path: str, base_mod: int = 5) -> DataFrame:
+def ivf_cell_stats(spark, path: str) -> DataFrame:
     """Per-cell growth/skew report over a maintained IVF index: how
-    the appended batch (``vec_id % base_mod == 0`` under the
-    incremental-screen convention) distributed across the frozen
-    cells. A drifted ingest concentrates in few cells — the signal
-    that probe cost is skewing and a retrain is due. Map-side-combined
-    groupBy over |cells| keys; counts exact."""
+    the appended batch (the added rows of ``churn_masks``) distributed
+    across the frozen cells. A drifted ingest concentrates in few
+    cells — the signal that probe cost is skewing and a retrain is
+    due. Map-side-combined groupBy over |cells| keys; counts exact."""
     cells = spark.read.parquet(f"{path}/cells")
+    added, _deleted = churn_masks()
     return (
         cells.groupBy(F.col("cell").cast("int").alias("cell"))
         .agg(
-            F.sum(
-                (F.col("vec_id") % base_mod != 0).cast("bigint")
-            ).alias("n_base"),
-            F.sum(
-                (F.col("vec_id") % base_mod == 0).cast("bigint")
-            ).alias("n_added"),
+            F.sum((~added).cast("bigint")).alias("n_base"),
+            F.sum(added.cast("bigint")).alias("n_added"),
         )
         .select(
             "cell",
@@ -1058,52 +1080,22 @@ def probe_ivf_index(
     nprobe: int = 2,
 ) -> DataFrame:
     """PROBE phase: load the persisted index and answer top-k for a
-    query set WITHOUT touching the training path. The centroid file
-    collects to the driver (model parameters — the same inlining as
-    the build) to pick each query's ``nprobe`` cells, and the DISTINCT
-    probed-cell set — at most n_centroids values, model scale no
-    matter how many queries probe — is pushed as a LITERAL partition
-    filter on the cell-partitioned layout: the scan lists and reads
-    ONLY the probed cells' files at planning time (static partition
-    pruning — strictly stronger than relying on runtime DPP, whose
-    selectivity heuristic does not recognize a probe set derived by
-    projection). One tiny job computes the cell set (probes are small
-    by construction); the per-(query, cell) pairing still happens in
-    the broadcast join. Results are identical to ``ivf_topk`` with
-    the same parameters (the registered query shares its oracle).
-    Pruning is pinned by
-    ``test_ivf_probe_prunes_nonprobed_cell_files``."""
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r.cid,
-    )
-    cents = [(int(r.cid), list(r.cvec)) for r in cent_rows]
-    scorer = _centroid_scorer(None, len(cents), "embedding", "vec_id", cents)
-    probes = (
-        queries.select(
-            "query_id", "qvec", vectors.norm(F.col("qvec")).alias("_nq")
-        )
-        .select(
-            "query_id",
-            "qvec",
-            "_nq",
-            F.explode(
-                F.slice(
-                    F.reverse(
-                        F.array_sort(scorer(F.col("qvec"), F.col("_nq")))
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("p"),
-        )
-        .select("query_id", "qvec", "_nq", (-F.col("p.nc")).alias("cell"))
-    )
-    probed_cells = sorted(
-        r.cell for r in probes.select("cell").distinct().collect()
-    )
+    query set WITHOUT touching the training path. The stored
+    quantizer (``load_ivf_centroids``) picks each query's ``nprobe``
+    cells (``_probe_cells``), and the DISTINCT probed-cell set
+    (``_cells_of``) is pushed as a LITERAL partition filter on the
+    cell-partitioned layout: the scan lists and reads ONLY the probed
+    cells' files at planning time (static partition pruning —
+    strictly stronger than relying on runtime DPP, whose selectivity
+    heuristic does not recognize a probe set derived by projection).
+    The per-(query, cell) pairing still happens in the broadcast
+    join. Results are identical to ``ivf_topk`` with the same
+    parameters (the registered query shares its oracle). Pruning is
+    pinned by ``test_ivf_probe_prunes_nonprobed_cell_files``."""
+    scorer = _centroid_scorer(load_ivf_centroids(spark, path))
+    probes = _probe_cells(queries, scorer, nprobe)
     corpus = spark.read.parquet(f"{path}/cells").filter(
-        F.col("cell").isin(probed_cells)
+        F.col("cell").isin(_cells_of(probes))
     )
     # tombstone mask (deletion lifecycle): scanning the probed cells
     # minus the deleted ids IS the frozen-quantizer
@@ -1424,15 +1416,30 @@ def build_pq_index(
         *_pq_enc_cols(books, F.col(vec_col), m, sub),
     )
     encoded.write.mode("overwrite").parquet(f"{path}/codes")
-    spark = emb.sparkSession
-    rows = [
-        (j, cid, [float(x) for x in vec])
-        for j, book in enumerate(books)
-        for cid, vec in enumerate(book)
-    ]
+    _write_books(emb.sparkSession, books, path)
+
+
+def _write_books(spark, books, path: str) -> None:
+    """Persist PQ codebooks as ``<path>/books`` (j int, cid int, cvec
+    array<double>; cid = code index), one file; ``_load_books`` reads
+    them back."""
     spark.createDataFrame(
-        rows, "j int, cid int, cvec array<double>"
+        [
+            (j, cid, [float(x) for x in vec])
+            for j, book in enumerate(books)
+            for cid, vec in enumerate(book)
+        ],
+        "j int, cid int, cvec array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
+
+
+def _load_books(spark, path: str) -> list[list[list[float]]]:
+    """The persisted codebooks (``_write_books``) as per-subspace
+    lists, subspace ``j`` ascending and each book in code order."""
+    bmap: dict[int, dict[int, list[float]]] = {}
+    for r in spark.read.parquet(f"{path}/books").collect():
+        bmap.setdefault(int(r.j), {})[int(r.cid)] = list(r.cvec)
+    return [[bmap[j][c] for c in sorted(bmap[j])] for j in sorted(bmap)]
 
 
 def probe_pq_index(
@@ -1449,13 +1456,7 @@ def probe_pq_index(
     Identical arithmetic to ``pq_topk`` with injected ``books``, so
     the same oracle covers both ends of the lifecycle. Returns
     (query_id, vec_id, approx_dist, rank)."""
-    brows = spark.read.parquet(f"{path}/books").collect()
-    books: dict[int, dict[int, list[float]]] = {}
-    for r in brows:
-        books.setdefault(r.j, {})[r.cid] = list(r.cvec)
-    blist = [
-        [books[j][c] for c in sorted(books[j])] for j in sorted(books)
-    ]
+    blist = _load_books(spark, path)
     sub = len(blist[0][0])
     encoded = spark.read.parquet(f"{path}/codes")
     staged = queries.select(
@@ -1696,13 +1697,11 @@ def nsw_topk(
     persists the adjacency across hops within the one action.
 
     Returns (query_id, vec_id, cosine, rank), rank 1..k."""
-    from . import clustering
-
     if cents is None:
-        cents = clustering.train_centroids(
+        cents = _coarse_centroids(
             emb, n_centroids, train_iterations, vec_col, id_col
         )
-    scorer = _centroid_scorer(emb, n_centroids, vec_col, id_col, cents)
+    scorer = _centroid_scorer(cents)
     corpus = assign_cells(emb, n_centroids, vec_col, id_col, scorer=scorer)
     # ``adj``/``entries`` inject a PREBUILT graph (e.g. the staged
     # ``build_graph_index`` layout) so probing skips the build — the
@@ -1718,25 +1717,7 @@ def nsw_topk(
         adj = pin_for_query(graph_adjacency(corpus, r_neighbors))
     if entries is None:
         entries = graph_entries(corpus)
-    probes = (
-        queries.select(
-            "query_id", "qvec", vectors.norm(F.col("qvec")).alias("_nq")
-        )
-        .select(
-            "query_id",
-            "qvec",
-            F.explode(
-                F.slice(
-                    F.reverse(
-                        F.array_sort(scorer(F.col("qvec"), F.col("_nq")))
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("p"),
-        )
-        .select("query_id", "qvec", (-F.col("p.nc")).alias("cell"))
-    )
+    probes = _probe_cells(queries, scorer, nprobe)
     cand = (
         probes.join(entries, "cell")
         .select(
@@ -1819,14 +1800,13 @@ def build_graph_index(
     index instead of a full adjacency scan per hop. ``_sim`` (the
     rounded ranking key) is stored so ``add_to_graph_index`` can
     merge delta candidates against stored rows exactly."""
-    if cents is None and train_iterations > 0:
-        from . import clustering
-
-        cents = clustering.train_centroids(
+    if cents is None:
+        cents = _coarse_centroids(
             emb, n_centroids, train_iterations, vec_col, id_col
         )
-    scorer = _centroid_scorer(emb, n_centroids, vec_col, id_col, cents)
-    corpus = assign_cells(emb, n_centroids, vec_col, id_col, scorer=scorer)
+    corpus = assign_cells(
+        emb, n_centroids, vec_col, id_col, scorer=_centroid_scorer(cents)
+    )
     corpus.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/nodes"
     )
@@ -1852,17 +1832,7 @@ def build_graph_index(
     ea.crossJoin(F.broadcast(ebx)).filter(
         F.col("src") != F.col("dst")
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/entrygrid")
-    spark = emb.sparkSession
-    cent_rows = cents or sorted(
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
-    spark.createDataFrame(
-        [(int(c[0]), [float(x) for x in c[1]]) for c in cent_rows],
-        "cid int, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(emb.sparkSession, cents, path)
 
 
 def probe_graph_index(
@@ -1885,31 +1855,8 @@ def probe_graph_index(
     ``test_graph_probe_prunes_nonfrontier_buckets``. Results are
     identical to ``nsw_topk`` with the same parameters (the
     registered query shares its oracle)."""
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r.cid,
-    )
-    cents = [(int(r.cid), list(r.cvec)) for r in cent_rows]
-    scorer = _centroid_scorer(None, len(cents), "embedding", "vec_id", cents)
-    probes = (
-        queries.select(
-            "query_id", "qvec", vectors.norm(F.col("qvec")).alias("_nq")
-        )
-        .select(
-            "query_id",
-            "qvec",
-            F.explode(
-                F.slice(
-                    F.reverse(
-                        F.array_sort(scorer(F.col("qvec"), F.col("_nq")))
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("p"),
-        )
-        .select("query_id", "qvec", (-F.col("p.nc")).alias("cell"))
-    )
+    scorer = _centroid_scorer(load_ivf_centroids(spark, path))
+    probes = _probe_cells(queries, scorer, nprobe)
     entries = spark.read.parquet(f"{path}/entries")
     cand = (
         probes.join(entries, "cell")
@@ -2026,15 +1973,11 @@ def add_to_graph_index(
     is O(Σ cell_size × batch_in_cell) — the standard graph-ANN
     insertion bill, independent of total corpus size."""
     cents = load_ivf_centroids(spark, path)
-    scorer = _centroid_scorer(None, len(cents), vec_col, id_col, cents)
     new_nodes = assign_cells(
-        new_vecs, len(cents), vec_col, id_col, scorer=scorer
+        new_vecs, len(cents), vec_col, id_col, scorer=_centroid_scorer(cents)
     ).persist()
-    affected = sorted(
-        r.cell for r in new_nodes.select("cell").distinct().collect()
-    )
     old_nodes = spark.read.parquet(f"{path}/nodes").filter(
-        F.col("cell").isin(affected)
+        F.col("cell").isin(_cells_of(new_nodes))
     )
 
     def delta(stored, olds, news, r):
@@ -2252,25 +2195,21 @@ def graph_index_stats(
     spark,
     path: str,
     r_neighbors: int = 8,
-    base_mod: int = 5,
 ) -> DataFrame:
     """Growth/staleness readout of a maintained graph index, per
-    cell: node growth (n_base/n_added under the incremental-screen
-    convention) plus the append-only adjacency's live fraction —
+    cell: node growth (n_base/n_added under ``churn_masks``) plus the
+    append-only adjacency's live fraction —
     n_stored rows vs n_live (still in some src's effective top-R).
     ``stale_share`` rising is the compact trigger (rewrite adjacency
     through ``effective_graph_adjacency``), the graph twin of
     ``ivf_cell_stats``'s retrain trigger."""
     nodes = spark.read.parquet(f"{path}/nodes")
+    added, _deleted = churn_masks()
     node_agg = nodes.groupBy(
         F.col("cell").cast("int").alias("cell")
     ).agg(
-        F.sum((F.col("vec_id") % base_mod != 0).cast("bigint")).alias(
-            "n_base"
-        ),
-        F.sum((F.col("vec_id") % base_mod == 0).cast("bigint")).alias(
-            "n_added"
-        ),
+        F.sum((~added).cast("bigint")).alias("n_base"),
+        F.sum(added.cast("bigint")).alias("n_added"),
     )
     w = Window.partitionBy("src").orderBy(
         F.col("_sim").desc(), F.col("dst").asc()
@@ -2316,6 +2255,15 @@ def graph_index_stats(
         )
         .orderBy("cell")
     )
+
+
+def churn_masks():
+    """The churn convention of the maintained-index lifecycles and
+    their growth readouts, as (added, deleted) predicates: the batch
+    added after the build is ``vec_id % 5 == 0`` (the base corpus is
+    the rest) and the deleted set ``vec_id % 7 == 0`` — a different
+    residue, so deletes hit base and batch rows alike."""
+    return F.col("vec_id") % 5 == 0, F.col("vec_id") % 7 == 0
 
 
 def tombstone_index(
@@ -2419,69 +2367,41 @@ def build_ivfpq_index(
     dim×4-byte vectors. ``residual=True`` encodes ``v -
     centroid[cell]`` (Jégou et al. 2011 §III); the flag must match at
     probe time (the codes are meaningless in the other space), so it
-    is also persisted in ``<path>/meta``."""
-    if cents is None and train_iterations > 0:
-        from . import clustering
-
-        cents = clustering.train_centroids(
+    is also persisted in ``<path>/meta``; ``_load_ivfpq_model`` reads
+    the whole model back."""
+    if cents is None:
+        cents = _coarse_centroids(
             emb, n_centroids, train_iterations, vec_col, id_col
         )
-    scorer = _centroid_scorer(emb, n_centroids, vec_col, id_col, cents)
-    corpus = assign_cells(emb, n_centroids, vec_col, id_col, scorer=scorer)
-    if residual:
-        cmap = _cent_map(cents)
-        corpus = corpus.withColumn(
-            "rvec",
-            F.zip_with(
-                F.col("v"), cmap[F.col("cell")],
-                lambda a, b: a.cast("double") - b,
-            ),
-        )
-        if books is None:
-            # reuse THIS plan's coarse assignment for training (same
-            # sharing as ivf_pq_topk — one scorer tree per build)
-            books = train_residual_codebooks(
-                emb, cents, m, codes, pq_train_iterations, vec_col, id_col,
-                res_frame=corpus.select(
-                    "vec_id", F.col("rvec").alias("embedding")
-                ),
-            )
-        enc_src = F.col("rvec")
-    else:
-        if books is None:
-            books = pq_train_codebooks(
-                emb, m, codes, pq_train_iterations, vec_col, id_col
-            )
-        enc_src = F.col("v")
-    sub = len(books[0][0])
-    encoded = corpus.select(
-        "vec_id", "cell", *_pq_enc_cols(books, enc_src, m, sub)
+    corpus = assign_cells(
+        emb, n_centroids, vec_col, id_col, scorer=_centroid_scorer(cents)
+    )
+    _corpus, encoded, books, _sub = _pq_encoded_cells(
+        emb, corpus, cents, books, residual, m, codes, pq_train_iterations,
+        vec_col, id_col,
     )
     encoded.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/codes"
     )
     spark = emb.sparkSession
-    spark.createDataFrame(
-        [
-            (j, cid, [float(x) for x in vec])
-            for j, book in enumerate(books)
-            for cid, vec in enumerate(book)
-        ],
-        "j int, cid int, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
-    cent_rows = cents or sorted(
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
-    spark.createDataFrame(
-        [(int(c[0]), [float(x) for x in c[1]]) for c in cent_rows],
-        "cid int, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_books(spark, books, path)
+    _write_centroids(spark, cents, path)
     spark.createDataFrame(
         [(bool(residual), int(m))], "residual boolean, m int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+
+
+def _load_ivfpq_model(spark, path: str):
+    """The persisted IVFPQ model of ``build_ivfpq_index``: (cents,
+    books, residual, m) — centroids in cid order, books in (j, cid)
+    order, and the ``<path>/meta`` flags."""
+    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    return (
+        load_ivf_centroids(spark, path),
+        _load_books(spark, path),
+        bool(meta.residual),
+        int(meta.m),
+    )
 
 
 def add_to_ivfpq_index(
@@ -2501,27 +2421,13 @@ def add_to_ivfpq_index(
     union via partition listing. Staleness compounds here: frozen
     cells AND frozen codebooks both drift — monitor with
     ``ivf_cell_stats`` over the codes layout and the recall harness."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    residual, m = bool(meta.residual), int(meta.m)
-    cents = load_ivf_centroids(spark, path)
-    brows = spark.read.parquet(f"{path}/books").collect()
-    bmap: dict[int, dict[int, list[float]]] = {}
-    for r in brows:
-        bmap.setdefault(int(r.j), {})[int(r.cid)] = list(r.cvec)
-    books = [[bmap[j][c] for c in sorted(bmap[j])] for j in sorted(bmap)]
-    sub = len(books[0][0])
-    scorer = _centroid_scorer(None, len(cents), vec_col, id_col, cents)
-    corpus = assign_cells(new_vecs, len(cents), vec_col, id_col, scorer=scorer)
-    if residual:
-        cmap = _cent_map(cents)
-        enc_src = F.zip_with(
-            F.col("v"), cmap[F.col("cell")],
-            lambda a, b: a.cast("double") - b,
-        )
-    else:
-        enc_src = F.col("v")
+    cents, books, residual, m = _load_ivfpq_model(spark, path)
+    corpus = assign_cells(
+        new_vecs, len(cents), vec_col, id_col, scorer=_centroid_scorer(cents)
+    )
+    enc_src = _residual(F.col("v"), cents) if residual else F.col("v")
     corpus.select(
-        "vec_id", "cell", *_pq_enc_cols(books, enc_src, m, sub)
+        "vec_id", "cell", *_pq_enc_cols(books, enc_src, m, len(books[0][0]))
     ).write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
 
 
@@ -2534,54 +2440,21 @@ def probe_ivfpq_index(
     nprobe: int = 2,
     rerank: int = 30,
 ) -> DataFrame:
-    """PROBE phase of the IVF+PQ lifecycle: pull the model parameters
-    back (centroids, codebooks, the residual flag — kilobytes), pick
-    each query's ``nprobe`` cells, push the DISTINCT probed-cell set
-    as a literal partition filter on the cell-partitioned codes
-    (static pruning, the ``probe_ivf_index`` argument), and run the
+    """PROBE phase of the IVF+PQ lifecycle: read the model back
+    (``_load_ivfpq_model`` — kilobytes), pick each query's ``nprobe``
+    cells (``_probe_cells``), push the DISTINCT probed-cell set as a
+    literal partition filter on the cell-partitioned codes (static
+    pruning, the ``probe_ivf_index`` argument), and run the
     shared ADC + shortlist + exact-rerank tail. ``emb`` supplies raw
     vectors for the shortlist re-rank only (queries × rerank rows via
     a broadcast id join — the index itself never stores vectors).
     Results are identical to ``ivf_pq_topk`` with the same parameters
     (the registered query shares its oracle)."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    residual, m = bool(meta.residual), int(meta.m)
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r.cid,
-    )
-    cents = [(int(r.cid), list(r.cvec)) for r in cent_rows]
-    scorer = _centroid_scorer(None, len(cents), "embedding", "vec_id", cents)
-    brows = spark.read.parquet(f"{path}/books").collect()
-    bmap: dict[int, dict[int, list[float]]] = {}
-    for r in brows:
-        bmap.setdefault(int(r.j), {})[int(r.cid)] = list(r.cvec)
-    books = [[bmap[j][c] for c in sorted(bmap[j])] for j in sorted(bmap)]
+    cents, books, residual, m = _load_ivfpq_model(spark, path)
+    scorer = _centroid_scorer(cents)
     sub = len(books[0][0])
-    # bounded model-scale pull: at most n_centroids distinct cells,
-    # no matter how many queries probe
-    probed = (
-        queries.select(
-            "query_id", vectors.norm(F.col("qvec")).alias("_nq"), "qvec"
-        )
-        .select(
-            F.explode(
-                F.slice(
-                    F.reverse(
-                        F.array_sort(scorer(F.col("qvec"), F.col("_nq")))
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("p")
-        )
-        .select((-F.col("p.nc")).alias("cell"))
-        .distinct()
-        .collect()
-    )
-    cells = sorted(r.cell for r in probed)
     encoded = spark.read.parquet(f"{path}/codes").filter(
-        F.col("cell").isin(cells)
+        F.col("cell").isin(_cells_of(_probe_cells(queries, scorer, nprobe)))
     )
     # tombstone mask — same contract as probe_ivf_index: the masked
     # ADC scan equals rebuilding the codes without the deleted rows
@@ -2874,13 +2747,12 @@ def hnsw_topk(
     from ..session import pin_for_query
 
     if cents is None:
-        from . import clustering
-
-        cents = clustering.train_centroids(
+        cents = _coarse_centroids(
             emb, n_centroids, train_iterations, vec_col, id_col
         )
-    scorer = _centroid_scorer(emb, n_centroids, vec_col, id_col, cents)
-    corpus = assign_cells(emb, n_centroids, vec_col, id_col, scorer=scorer)
+    corpus = assign_cells(
+        emb, n_centroids, vec_col, id_col, scorer=_centroid_scorer(cents)
+    )
     if entries is None:
         entries = graph_entries(corpus)
     if adj1 is None:

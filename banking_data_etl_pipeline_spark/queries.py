@@ -1881,7 +1881,13 @@ def _staged_index(
         build_dir = tempfile.mkdtemp(
             prefix=f"spark_graft_{kind}_build_", dir=_cache_root()
         )
-        build(build_dir)
+        try:
+            build(build_dir)
+        except BaseException:
+            # a failed build leaves nothing behind: the next call
+            # rebuilds from scratch
+            shutil.rmtree(build_dir, ignore_errors=True)
+            raise
         try:
             os.rename(build_dir, path)
         except OSError:
@@ -2586,31 +2592,48 @@ def maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-free fact join via bucketed tables: orders and customer
-    are staged ONCE as 8-bucket hash-clustered parquet on the customer
-    key (content-fingerprinted per corpus snapshot, per-process dirs —
-    no cross-process write races), then the segment-revenue rollup
-    sort-merge-joins them with ZERO exchanges on either side
-    (plan-pinned by tests/test_r8c_ops.py). The aggregation's decimal
-    sum keeps the revenue bit-identical cross-engine."""
+    are staged ONCE per corpus snapshot as hash-clustered parquet
+    (`sinks.BUCKETS` buckets) on the customer key (`_staged_index`,
+    shared by every process), each session registers the published
+    files as bucketed tables (`sinks.register_bucketed`), then the
+    segment-revenue rollup sort-merge-joins them with ZERO exchanges
+    on either side (plan-pinned by tests/test_r8c_ops.py). The
+    aggregation's decimal sum keeps the revenue bit-identical
+    cross-engine."""
     import os
+    import zlib
 
     from .sources import sinks
 
-    orders = tables.load(spark, sf_dir, "orders")
-    customer = tables.load(spark, sf_dir, "customer")
-    # per process: the bucket spec lives in this session's catalog
-    fp = tables.snapshot_key(sf_dir, ("orders.parquet",), os.getpid())
-    base = os.path.join(_cache_root(), f"spark_graft_buckets_{fp}")
-    to = sinks.write_bucketed(
-        spark, orders, f"b_orders_{fp}", os.path.join(base, "orders"),
-        "o_custkey",
+    sides = (
+        ("orders", tables.load(spark, sf_dir, "orders"), "o_custkey"),
+        ("customer", tables.load(spark, sf_dir, "customer"), "c_custkey"),
     )
-    tc = sinks.write_bucketed(
-        spark, customer, f"b_customer_{fp}", os.path.join(base, "customer"),
-        "c_custkey",
+
+    def build(d: str) -> None:
+        # saveAsTable is Spark's one bucketed writer; its build-time
+        # table is external, so dropping it keeps the files
+        for sub, df, key in sides:
+            name = f"{os.path.basename(d)}_{sub}"
+            sinks.write_bucketed(spark, df, name, os.path.join(d, sub), key)
+            spark.sql(f"DROP TABLE {name}")
+
+    path = _staged_index(
+        sf_dir, "buckets", "customer", build,
+        srcs=("orders.parquet", "customer.parquet"),
     )
-    o = spark.table(to)
-    c = spark.table(tc)
+    # named after the published dir, so a session that meets a second
+    # cache root registers that copy instead of reusing the first
+    tag = f"{zlib.crc32(path.encode()):08x}"
+    o, c = (
+        spark.table(
+            sinks.register_bucketed(
+                spark, f"b_{sub}_{tag}", df.schema, os.path.join(path, sub),
+                key,
+            )
+        )
+        for sub, df, key in sides
+    )
     joined = o.join(
         c.hint("merge"), o["o_custkey"] == c["c_custkey"]
     )
@@ -3699,23 +3722,45 @@ def overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ round 14: new ops
 
 
-def _ivfinc_path(spark: SparkSession, sf_dir: str) -> str:
-    """The MAINTAINED IVF index staged once per corpus snapshot: build
-    on the existing corpus (vec_id % 5 != 0 — the incremental-screen
-    convention of minhash_incremental), then ADD the simulated new
-    batch (vec_id % 5 == 0) to the frozen centroids via
-    ``similarity.add_to_ivf_index`` — no retrain, O(batch) appends
-    into the cell-partitioned layout."""
+def _churned_index(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    marker: str,
+    build,
+    add,
+    tombstone: bool = False,
+    compact=None,
+) -> str:
+    """A maintained index staged once per corpus snapshot
+    (`_staged_index`): ``build(base, dir)`` on the base corpus of
+    ``similarity.churn_masks``, ``add(spark, dir, batch)`` of the added
+    batch with the quantizer frozen, then — when asked — tombstone the
+    deleted set and ``compact(spark, dir)``."""
     emb = tables.load(spark, sf_dir, "embeddings")
+    added, deleted = similarity.churn_masks()
 
-    def build(d: str) -> None:
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        similarity.build_ivf_index(base, d)
-        similarity.add_to_ivf_index(
-            spark, d, emb.filter(F.col("vec_id") % 5 == 0)
-        )
+    def recipe(d: str) -> None:
+        build(emb.filter(~added), d)
+        add(spark, d, emb.filter(added))
+        if tombstone:
+            similarity.tombstone_index(
+                spark, d, emb.filter(deleted).select("vec_id")
+            )
+        if compact is not None:
+            compact(spark, d)
 
-    return _staged_index(sf_dir, "ivfinc", "centroids", build)
+    return _staged_index(sf_dir, kind, marker, recipe)
+
+
+def _ivfinc_path(spark: SparkSession, sf_dir: str) -> str:
+    """The MAINTAINED IVF index: build on the base corpus, then ADD
+    the batch to the frozen centroids via ``similarity.add_to_ivf_index``
+    — no retrain, O(batch) appends into the cell-partitioned layout."""
+    return _churned_index(
+        spark, sf_dir, "ivfinc", "centroids",
+        similarity.build_ivf_index, similarity.add_to_ivf_index,
+    )
 
 
 def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3795,15 +3840,10 @@ def ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash match proves add-batch == frozen-model rebuild for the
     full ADC + rerank probe."""
     emb = tables.load(spark, sf_dir, "embeddings")
-
-    def build(d: str) -> None:
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        similarity.build_ivfpq_index(base, d)
-        similarity.add_to_ivfpq_index(
-            spark, d, emb.filter(F.col("vec_id") % 5 == 0)
-        )
-
-    path = _staged_index(sf_dir, "ivfpqinc", "meta", build)
+    path = _churned_index(
+        spark, sf_dir, "ivfpqinc", "meta",
+        similarity.build_ivfpq_index, similarity.add_to_ivfpq_index,
+    )
     q = similarity.corpus_queries(emb, n=5)
     return similarity.probe_ivfpq_index(spark, emb, path, q, k=10)
 
@@ -3833,21 +3873,14 @@ def media_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gidxinc_path(spark: SparkSession, sf_dir: str) -> str:
-    """The MAINTAINED graph index staged once per corpus snapshot:
-    build on the existing corpus (vec_id % 5 != 0), then INSERT the
-    simulated new batch (vec_id % 5 == 0) with the quantizer frozen
-    via ``similarity.add_to_graph_index`` — append-only deltas with
-    the enter-top-R screen, entries/entry-grid remerged."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-
-    def build(d: str) -> None:
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        similarity.build_graph_index(base, d)
-        similarity.add_to_graph_index(
-            spark, d, emb.filter(F.col("vec_id") % 5 == 0)
-        )
-
-    return _staged_index(sf_dir, "gidxinc", "centroids", build)
+    """The MAINTAINED graph index: build on the base corpus, then
+    INSERT the batch with the quantizer frozen via
+    ``similarity.add_to_graph_index`` — append-only deltas with the
+    enter-top-R screen, entries/entry-grid remerged."""
+    return _churned_index(
+        spark, sf_dir, "gidxinc", "centroids",
+        similarity.build_graph_index, similarity.add_to_graph_index,
+    )
 
 
 def ann_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3913,17 +3946,11 @@ def _gidxcmp_path(spark: SparkSession, sf_dir: str) -> str:
     recipe followed by ``compact_graph_index`` — every superseded
     delta row reclaimed, both layers rewritten to their effective
     top-R."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-
-    def build(d: str) -> None:
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        similarity.build_graph_index(base, d)
-        similarity.add_to_graph_index(
-            spark, d, emb.filter(F.col("vec_id") % 5 == 0)
-        )
-        similarity.compact_graph_index(spark, d)
-
-    return _staged_index(sf_dir, "gidxcmp", "centroids", build)
+    return _churned_index(
+        spark, sf_dir, "gidxcmp", "centroids",
+        similarity.build_graph_index, similarity.add_to_graph_index,
+        compact=similarity.compact_graph_index,
+    )
 
 
 def graph_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3943,60 +3970,33 @@ def ivf_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_delete_mask's rebuild-without-deleted oracle — while the
     plan no longer contains the mask anti-join at all."""
     emb = tables.load(spark, sf_dir, "embeddings")
-
-    def build(d: str) -> None:
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        similarity.build_ivf_index(base, d)
-        similarity.add_to_ivf_index(
-            spark, d, emb.filter(F.col("vec_id") % 5 == 0)
-        )
-        similarity.tombstone_index(
-            spark, d, emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
-        )
-        similarity.compact_ivf_index(spark, d)
-
-    path = _staged_index(sf_dir, "ivfcmp", "centroids", build)
+    path = _churned_index(
+        spark, sf_dir, "ivfcmp", "centroids",
+        similarity.build_ivf_index, similarity.add_to_ivf_index,
+        tombstone=True, compact=similarity.compact_ivf_index,
+    )
     q = similarity.corpus_queries(emb, n=5)
     return similarity.probe_ivf_index(spark, path, q, k=10)
 
 
 def _ivfdel_path(spark: SparkSession, sf_dir: str) -> str:
-    """The full-churn IVF index staged once per corpus snapshot:
-    build on the base split, append the batch with the quantizer
-    frozen, then TOMBSTONE the deletion set (vec_id % 7 == 0 — a
-    deliberately different residue than the %5 append screen, so
-    deletes hit base and batch rows alike)."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-
-    def build(d: str) -> None:
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        similarity.build_ivf_index(base, d)
-        similarity.add_to_ivf_index(
-            spark, d, emb.filter(F.col("vec_id") % 5 == 0)
-        )
-        similarity.tombstone_index(
-            spark, d, emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
-        )
-
-    return _staged_index(sf_dir, "ivfdel", "tombstones", build)
+    """The full-churn IVF index: build on the base corpus, append the
+    batch with the quantizer frozen, then TOMBSTONE the deleted set."""
+    return _churned_index(
+        spark, sf_dir, "ivfdel", "tombstones",
+        similarity.build_ivf_index, similarity.add_to_ivf_index,
+        tombstone=True,
+    )
 
 
 def _gidxdel_path(spark: SparkSession, sf_dir: str) -> str:
     """The full-churn GRAPH index: base build, frozen-quantizer
     insert, tombstones — the graph half of the churn pair."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-
-    def build(d: str) -> None:
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        similarity.build_graph_index(base, d)
-        similarity.add_to_graph_index(
-            spark, d, emb.filter(F.col("vec_id") % 5 == 0)
-        )
-        similarity.tombstone_index(
-            spark, d, emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
-        )
-
-    return _staged_index(sf_dir, "gidxdel", "tombstones", build)
+    return _churned_index(
+        spark, sf_dir, "gidxdel", "tombstones",
+        similarity.build_graph_index, similarity.add_to_graph_index,
+        tombstone=True,
+    )
 
 
 def ann_delete_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4034,7 +4034,8 @@ def ann_churn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstone semantic). Both arms replay exactly in the twin."""
     emb = tables.load(spark, sf_dir, "embeddings")
     q = similarity.corpus_queries(emb, n=5)
-    survivors = emb.filter(F.col("vec_id") % 7 != 0)
+    _added, deleted = similarity.churn_masks()
+    survivors = emb.filter(~deleted)
     truth = similarity.brute_force_topk(survivors, q, k=10).select(
         "query_id", "vec_id"
     )

@@ -14,6 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# bucket count of every table ``write_bucketed`` stages by default and
+# ``register_bucketed`` declares: the catalog spec must match the files
+BUCKETS = 8
+
 
 def zorder_key(a, b, bits: int = 16):
     """Morton (Z-order) interleave of two non-negative int columns,
@@ -201,7 +205,7 @@ def write_bucketed(
     table: str,
     path: str,
     bucket_col: str,
-    n_buckets: int = 8,
+    n_buckets: int = BUCKETS,
 ) -> str:
     """Write ``df`` as a BUCKETED parquet table (hash-clustered into
     ``n_buckets`` files per task-set on ``bucket_col``, sorted within
@@ -230,5 +234,30 @@ def write_bucketed(
         .sortBy(bucket_col)
         .mode("overwrite")
         .saveAsTable(table)
+    )
+    return table
+
+
+def register_bucketed(
+    spark: SparkSession,
+    table: str,
+    schema,
+    path: str,
+    bucket_col: str,
+) -> str:
+    """Register files that ``write_bucketed`` wrote with its default
+    ``BUCKETS`` — possibly under another table name, in another
+    session, at a directory they were renamed to since — as this
+    session's bucketed ``table``. The bucket spec lives in the catalog,
+    not the files, so every session declares it again to get the
+    exchange-free join; the table is EXTERNAL, so dropping it keeps the
+    files. A no-op when ``table`` exists."""
+    from ..functions.scoring import sql_name, sql_str
+
+    key = sql_name(bucket_col)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {table} ({schema.toDDL()}) USING parquet"
+        f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {BUCKETS} BUCKETS"
+        f" LOCATION {sql_str(path)}"
     )
     return table

@@ -184,8 +184,6 @@ def test_ivf_trained_centroids_fix_hot_cell_skew(spark):
 
     from pyspark.sql import functions as F
 
-    from banking_data_etl_pipeline_spark.operators import clustering
-
     dim = 8
     rows = []
     # ids 0..15: the would-be centroids, all bunched near e_0
@@ -202,13 +200,10 @@ def test_ivf_trained_centroids_fix_hot_cell_skew(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     def max_cell(train_iterations: int) -> int:
-        cents = (
-            clustering.train_centroids(emb, 16, train_iterations)
-            if train_iterations
-            else None
-        )
         scorer = similarity._centroid_scorer(
-            emb, 16, "embedding", "vec_id", cents
+            similarity._coarse_centroids(
+                emb, 16, train_iterations, "embedding", "vec_id"
+            )
         )
         cells = similarity.assign_cells(emb, 16, scorer=scorer)
         return max(

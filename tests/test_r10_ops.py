@@ -111,7 +111,7 @@ def test_residual_codebooks_injected_frame_matches_selfbuilt(spark):
 
     cents = clustering.train_centroids(emb, k=4, iterations=1)
     standalone = similarity.train_residual_codebooks(emb, cents, m=2, codes=4)
-    scorer = similarity._centroid_scorer(emb, 4, "embedding", "vec_id", cents)
+    scorer = similarity._centroid_scorer(cents)
     corpus = similarity.assign_cells(
         emb, 4, "embedding", "vec_id", scorer=scorer
     )

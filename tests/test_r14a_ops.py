@@ -37,7 +37,7 @@ def test_add_batch_equals_frozen_quantizer_rebuild(spark, tmp_path):
         for r in spark.read.parquet(f"{d}/cells").collect()
     }
     cents = S.load_ivf_centroids(spark, d)
-    scorer = S._centroid_scorer(None, len(cents), "embedding", "vec_id", cents)
+    scorer = S._centroid_scorer(cents)
     want = {
         (r.vec_id, int(r.cell))
         for r in S.assign_cells(emb, len(cents), scorer=scorer).collect()
@@ -54,7 +54,7 @@ def test_add_batch_is_map_only_over_the_batch(spark, tmp_path):
     d = str(tmp_path / "ivf")
     S.build_ivf_index(base, d)
     cents = S.load_ivf_centroids(spark, d)
-    scorer = S._centroid_scorer(None, len(cents), "embedding", "vec_id", cents)
+    scorer = S._centroid_scorer(cents)
     plan = (
         S.assign_cells(batch, len(cents), scorer=scorer)
         ._jdf.queryExecution()
@@ -187,7 +187,7 @@ def test_hnsw_returns_full_topk_and_navigates_cells(spark):
     assert gid in by_q
     # navigation: results span more than one quantizer cell
     cents = clustering.train_centroids(emb, 16, 2)
-    scorer = S._centroid_scorer(None, 16, "embedding", "vec_id", cents)
+    scorer = S._centroid_scorer(cents)
     cells = {
         r.vec_id: int(r.cell)
         for r in S.assign_cells(emb, 16, scorer=scorer).collect()
@@ -233,7 +233,7 @@ def test_ivfpq_add_batch_equals_frozen_rebuild(spark, tmp_path):
     for r in brows:
         bmap.setdefault(int(r.j), {})[int(r.cid)] = list(r.cvec)
     books = [[bmap[j][c] for c in sorted(bmap[j])] for j in sorted(bmap)]
-    scorer = S._centroid_scorer(None, len(cents), "embedding", "vec_id", cents)
+    scorer = S._centroid_scorer(cents)
     corpus = S.assign_cells(emb, len(cents), scorer=scorer)
     want = {
         (r.vec_id, int(r.cell), r.c0, r.c1, r.c2, r.c3)

@@ -86,9 +86,7 @@ def test_add_equals_frozen_rebuild_adjacency(spark, emb, maintained):
     adjacency of the maintained index == the adjacency a frozen-
     quantizer rebuild over the full corpus would produce."""
     cents = similarity.load_ivf_centroids(spark, maintained)
-    scorer = similarity._centroid_scorer(
-        None, len(cents), "embedding", "vec_id", cents
-    )
+    scorer = similarity._centroid_scorer(cents)
     corpus = similarity.assign_cells(emb, len(cents), scorer=scorer)
     rebuilt = similarity.graph_adjacency(corpus, 8).select(
         "src", "dst"
@@ -103,9 +101,7 @@ def test_add_equals_frozen_rebuild_adjacency(spark, emb, maintained):
 
 def test_add_updates_entries_to_full_corpus_min(spark, emb, maintained):
     cents = similarity.load_ivf_centroids(spark, maintained)
-    scorer = similarity._centroid_scorer(
-        None, len(cents), "embedding", "vec_id", cents
-    )
+    scorer = similarity._centroid_scorer(cents)
     corpus = similarity.assign_cells(emb, len(cents), scorer=scorer)
     want = {
         (int(r.cell), int(r.vec_id))
@@ -147,9 +143,7 @@ def test_second_batch_stays_rebuild_exact(spark, emb, tmp_path):
         spark, d, emb.filter(~F.col("vec_id").__mod__(5).isin(1, 2))
     )
     cents = similarity.load_ivf_centroids(spark, d)
-    scorer = similarity._centroid_scorer(
-        None, len(cents), "embedding", "vec_id", cents
-    )
+    scorer = similarity._centroid_scorer(cents)
     corpus = similarity.assign_cells(emb, len(cents), scorer=scorer)
     rebuilt = similarity.graph_adjacency(corpus, 8).select("src", "dst")
     effective = similarity.effective_graph_adjacency(spark, d, 8).select(

@@ -42,9 +42,7 @@ def test_masked_probe_equals_rebuild_without_deleted(
     # two indexes sharing ONE explicit quantizer: full corpus +
     # tombstones vs survivors-only rebuild
     d1 = str(tmp_path / "full")
-    scorer = similarity._centroid_scorer(
-        None, 16, "embedding", "vec_id", cents
-    )
+    scorer = similarity._centroid_scorer(cents)
     assigned = similarity.assign_cells(emb, 16, scorer=scorer)
     assigned.write.partitionBy("cell").parquet(f"{d1}/cells")
     spark.createDataFrame(

@@ -32,9 +32,7 @@ def maintained(spark, emb, tmp_path_factory):
 
 def test_maintained_layer1_equals_frozen_rebuild(spark, emb, maintained):
     cents = similarity.load_ivf_centroids(spark, maintained)
-    scorer = similarity._centroid_scorer(
-        None, len(cents), "embedding", "vec_id", cents
-    )
+    scorer = similarity._centroid_scorer(cents)
     corpus = similarity.assign_cells(emb, len(cents), scorer=scorer)
     l1 = corpus.filter(F.pmod(F.col("vec_id"), F.lit(8)) == 0)
     rebuilt = similarity.graph_adjacency(l1, 4).select("src", "dst")

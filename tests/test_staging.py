@@ -204,6 +204,23 @@ def test_staged_index_concurrent_publish_wins(sf_copy):
     assert not _leftovers()
 
 
+def test_staged_index_removes_a_failed_build(sf_copy):
+    fp = tables.snapshot_key(sf_copy, ("embeddings.parquet",))
+    final = os.path.join(Q._cache_root(), f"spark_graft_t_{fp}")
+
+    def build(d):
+        _publish(d, "half")
+        raise ValueError("train_centroids: empty input")
+
+    with pytest.raises(ValueError, match="empty input"):
+        Q._staged_index(sf_copy, "t", "meta", build)
+    assert not _leftovers()
+    assert not os.path.exists(final)
+    # nothing stale is left to trip over: the next call builds afresh
+    path = Q._staged_index(sf_copy, "t", "meta", lambda d: _publish(d, "ours"))
+    assert path == final and _payload(path) == "ours"
+
+
 def test_snapshot_key_follows_content_and_params(sf_copy):
     key = tables.snapshot_key(sf_copy, ("embeddings.parquet",))
     assert len(key) == 16
@@ -228,4 +245,25 @@ def test_orc_roundtrip_stages_one_copy_across_processes(
         rows.append(df.collect())
     assert rows[0] == rows[1] and rows[0]
     assert len(glob.glob(os.path.join(Q._cache_root(), "spark_graft_orc_*"))) == 1
+    assert not _leftovers()
+
+
+def test_bucketed_join_stages_one_copy_across_processes(
+    spark, tmp_path, monkeypatch
+):
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    rows = []
+    for pid in (11111, 22222):  # two processes, one corpus snapshot
+        with monkeypatch.context() as m:
+            m.setattr(os, "getpid", lambda pid=pid: pid)
+            df = Q.bucketed_join(spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # the registered copy still joins without exchanging either side
+        assert plan.count("Bucketed: true") == 2, plan
+        assert "hashpartitioning(o_custkey" not in plan, plan
+        assert "hashpartitioning(c_custkey" not in plan, plan
+        rows.append(df.collect())
+    assert rows[0] == rows[1] and rows[0]
+    root = Q._cache_root()
+    assert len(glob.glob(os.path.join(root, "spark_graft_buckets_*"))) == 1
     assert not _leftovers()
