@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing, texttools, vectors
-from ..session import conf_override, fan_out
+from ..session import conf_override, fan_out, iterate
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -314,13 +314,12 @@ def connected_components(
     near-cliques (diameter ~2) and converge in 2-3 rounds regardless,
     but the jump is what makes pathological chain components (a
     diameter-10^4 path needs 14 rounds, not 10^4) safe at the default
-    ``max_iter``. The loop stops early on a changed-label count of
-    zero (per-iteration count actions are the same bounded-iteration
-    pattern as ``clustering.kmeans``) and RAISES if ``max_iter``
-    passes without convergence — unconverged labels silently split
-    components, which a dedup pipeline must never do. Labels persist
-    per iteration and the previous generation is unpersisted once the
-    next is materialized.
+    ``max_iter``. The rounds are ``graph.min_label_step`` (with the
+    jump) through ``session.iterate``; each round's changed-label
+    count is observed on its own checkpoint, the loop stops at zero,
+    and it RAISES if ``max_iter`` passes without convergence —
+    unconverged labels silently split components, which a dedup
+    pipeline must never do.
 
     The loop's shuffle width is sized to the MEASURED edge count
     (``edges_per_partition`` edges per task, capped by the session
@@ -333,10 +332,12 @@ def connected_components(
     to pin it explicitly (e.g. for a known-huge pair set).
 
     ``plan_hook(stage, df)``, when given, receives the first round's
-    propagate+jump DataFrame before its eager localCheckpoint — the
-    representative per-iteration plan for ``scripts/plan_audit.py``
-    (this same loop serves ``dedup_resolve`` and ``fuzzy_resolve``).
+    propagate+jump DataFrame — the representative per-iteration plan
+    for ``scripts/plan_audit.py`` (this same loop serves
+    ``dedup_resolve`` and ``fuzzy_resolve``).
     """
+    from .graph import initial_labels, min_label_step
+
     spark = pairs.sparkSession
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).persist()
     # materializing the half-edges once gives the size for free and
@@ -356,92 +357,32 @@ def connected_components(
     )
     und.count()
     edges.unpersist()
-    labels = None
-    converged = False
     try:
         # scope the session's shuffle width to the loop (every label
-        # join, groupBy, and changed-count below inherits it); the
-        # per-iteration count() actions mean all loop work executes
-        # inside this scope
+        # join and groupBy below inherits it); each round's eager
+        # checkpoint means all loop work executes inside this scope
         with conf_override(spark, "spark.sql.shuffle.partitions", parallelism):
-            labels = (
-                und.select(F.col("src").alias("id"))
-                .distinct()
-                .select("id", F.col("id").alias("component"))
-                .persist()
+            labels, _, converged = iterate(
+                initial_labels(und),
+                lambda labels, i, seen: min_label_step(und, labels, jump=True),
+                max_iter,
+                observe=[F.count_if(F.col("label") != F.col("_was")).alias("n")],
+                until=lambda prev, seen: seen["n"] == 0,
+                plan_hook=plan_hook, stage="propagate+jump",
             )
-            for it in range(max_iter):
-                neigh = (
-                    und.join(labels, und["dst"] == labels["id"])
-                    .groupBy("src")
-                    .agg(F.min("component").alias("_m"))
-                )
-                stepped = labels.join(
-                    neigh, labels["id"] == neigh["src"], "left"
-                ).select(
-                    "id",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("_m"), F.col("component")),
-                    ).alias("component"),
-                )
-                # pointer jumping: a label is itself a member node's id, so
-                # chase it one hop through the same (id -> component) map.
-                # localCheckpoint (eager) — NOT persist — because the
-                # self-join references `stepped` twice, doubling the
-                # LOGICAL plan tree per round; persist truncates physical
-                # recompute but Catalyst still re-analyzes the whole
-                # doubled tree (measured: exponential analysis time, ~86 s
-                # by round 4 on a 40-node path). Checkpointing cuts the
-                # lineage itself. Local (executor-storage) checkpoints are
-                # right for bounded node-sized tables; a production run on
-                # preemptible executors would use a reliable checkpoint
-                # dir instead.
-                jumped = (
-                    stepped.alias("a")
-                    .join(
-                        stepped.alias("b"),
-                        F.col("a.component") == F.col("b.id"),
-                        "left",
-                    )
-                    .select(
-                        F.col("a.id").alias("id"),
-                        F.least(
-                            F.col("a.component"),
-                            F.coalesce(
-                                F.col("b.component"), F.col("a.component")
-                            ),
-                        ).alias("component"),
-                    )
-                )
-                if plan_hook is not None and it == 0:
-                    plan_hook("propagate+jump", jumped)
-                new_labels = jumped.localCheckpoint()
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "id")
-                    .filter(F.col("n.component") != F.col("o.component"))
-                    .count()
-                )
-                labels.unpersist()
-                labels = new_labels
-                if changed == 0:
-                    converged = True
-                    break
     finally:
-        # cleanup lives here so a mid-loop Spark failure can't leak the
-        # (edge-list-sized) und cache into the session; labels is only
-        # released on the non-return paths
+        # a mid-loop Spark failure must not leak the (edge-list-sized)
+        # und cache into the session
         und.unpersist()
-        if not converged and labels is not None:
-            labels.unpersist()
     if not converged:
         raise ValueError(
             f"connected_components did not converge in {max_iter} rounds; "
             "with pointer jumping this needs a component of diameter "
             f"> ~2^{max_iter} — raise max_iter if that is a real graph"
         )
-    return labels
+    return labels.select(
+        F.col("node").alias("id"), F.col("label").alias("component")
+    )
 
 
 def resolve_duplicates(
@@ -469,18 +410,6 @@ def resolve_duplicates(
     )
 
 
-def lsh_bits_for(n_rows: int, target_bucket: int = 256, lo: int = 4, hi: int = 24) -> int:
-    """Sign-bit count so the EXPECTED bucket size is ~target_bucket:
-    2^bits ≈ n/target. Bounded: too few bits -> quadratic buckets, too
-    many -> recall collapses (each extra bit halves the chance two
-    near-dups share a bucket)."""
-    import math
-
-    if n_rows <= target_bucket:
-        return lo
-    return max(lo, min(hi, math.ceil(math.log2(n_rows / target_bucket))))
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -496,8 +425,9 @@ def embedding_near_dup_pairs(
     empty; real embedding corpora should pass 0.9+.
 
     ``n_bits`` must GROW with the corpus or per-bucket pairing goes
-    quadratic: use ``lsh_bits_for(n)`` (buckets ≈ n/256) when the
-    corpus size is known; the fixed default matches the oracle twin."""
+    quadratic: about log2(n/256) bits keeps the expected bucket near
+    256 vectors when the corpus size is known; the fixed default
+    matches the oracle twin."""
     with_b = emb.select(
         F.col(id_col),
         F.col(vec_col).alias("v"),
@@ -696,8 +626,8 @@ def semdedup_cells_for(n_vecs: int, lo: int = 16, hi: int = 4096) -> int:
     √n SHAPE that stops the fixed-k quadratic blowup — at n=10⁶,
     fixed-16 is 62G pairs). Clamped: a floor of ``lo`` keeps toy
     corpora on the proven small-k path, a ceiling of ``hi`` bounds
-    the literal-centroid expression and the training cost. Mirrors
-    ``lsh_bits_for``; the DuckDB twin replays the identical
+    the literal-centroid expression and the training cost. The DuckDB
+    twin replays the identical
     floor(sqrt(n)·0.5 + 0.5) derivation in SQL."""
     import math
 

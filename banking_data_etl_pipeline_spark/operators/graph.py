@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import iterate
+
 DAMPING = 0.85
 
 
@@ -117,17 +119,11 @@ def ranks_over_edges(
     usually orders of magnitude below edge counts, so the broadcast
     path is the common case.
 
-    Each iteration's rank vector is persisted, materialized, and its
-    predecessor released — lineage truncation, the same discipline as
-    ``dedup.resolve_duplicates``. Without it the final action executes
-    a plan nested ``iters`` deep whose broadcast stages re-run every
-    earlier iteration (measured superlinear: the 3-deep chain cost
-    ~2x the sum of its per-iteration parts at sf0.1).
-
-    ``plan_hook(stage, df)``, when given, receives the first
-    iteration's rank-update DataFrame before it materializes — the
-    representative per-iteration plan for ``scripts/plan_audit.py``
-    (the loop is driver-side, invisible to the query-level audit).
+    The iterations run through ``session.iterate``, so the final
+    action reads a stored vector, not a plan nested ``iters`` deep
+    whose broadcast stages re-run every earlier iteration (measured
+    superlinear: the 3-deep chain cost ~2x the sum of its parts at
+    sf0.1).
 
     ``seed_mod`` switches to PERSONALIZED PageRank (Page et al. 1999
     §6; Haveliwala 2002): teleport mass goes only to the seed set
@@ -142,67 +138,57 @@ def ranks_over_edges(
     # dominant cost of the whole query).
     edges = edges.persist()
     # degrees are the ONLY edge-wide aggregation needed: their key set
-    # IS the node set (the graph is symmetric), so the node count — a
-    # scalar model parameter, the one driver-side pull — is deg.count()
-    # and the initial rank vector is a projection of deg. This saves
-    # two further full passes over the edge list (a distinct-count and
-    # an edge-wide distinct) that earlier versions ran.
+    # IS the node set (the graph is symmetric), so the node and seed
+    # counts — scalar model parameters, the one driver-side pull —
+    # aggregate deg, and the initial rank vector is a projection of
+    # deg. This saves two further full passes over the edge list (a
+    # distinct-count and an edge-wide distinct) that earlier versions
+    # ran.
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
     # materializes deg AND the edge cache beneath it; it also gates
     # BOTH broadcast decisions below — deg is node-count-sized too, so
     # force-broadcasting it above the gate would hit the same driver/
     # broadcast limits the gate exists for
-    n_nodes = deg.count()
-    if n_nodes == 0:
-        # an empty graph has an empty rank vector (and no 1/n_nodes)
-        empty = deg.select(F.col("src").alias("node"), F.lit(0.0).alias("r"))
+    def is_seed(node: F.Column) -> F.Column:
+        # plain PageRank teleports to every node
+        return F.lit(True) if seed_mod is None else node % seed_mod == 0
+
+    n_nodes, n_seeds = deg.agg(
+        F.count(F.lit(1)), F.count_if(is_seed(F.col("src")))
+    ).first()
+    if n_seeds == 0:
         edges.unpersist()
         deg.unpersist()
-        return edges.sparkSession.createDataFrame([], empty.schema)
-    bcast = n_nodes <= broadcast_nodes
-    # broadcast fold keeps the (much larger) edge side shuffle-free on
-    # the way into the cache; shuffle-join fallback above the gate
-    ed = edges.join(F.broadcast(deg) if bcast else deg, "src").persist()
-    ed.count()
-    edges.unpersist()
-    if seed_mod is None:
-
-        def base_of(node_col: F.Column) -> F.Column:
-            return F.lit(0.15) / F.lit(float(n_nodes))
-
-        def init_of(node_col: F.Column) -> F.Column:
-            return _trunc12(F.lit(1.0) / F.lit(float(n_nodes)))
-
-    else:
-        n_seeds = deg.filter(F.col("src") % seed_mod == 0).count()
-        if n_seeds == 0:
+        if n_nodes:
             raise ValueError(
                 f"ppr: no seed nodes (node % {seed_mod} == 0) in the graph"
             )
+        # an empty graph has an empty rank vector (and no 1/n_nodes)
+        empty = deg.select(F.col("src").alias("node"), F.lit(0.0).alias("r"))
+        return edges.sparkSession.createDataFrame([], empty.schema)
+    bcast = n_nodes <= broadcast_nodes
+    # broadcast fold keeps the (much larger) edge side shuffle-free on
+    # the way into the cache (filled by the first iteration);
+    # shuffle-join fallback above the gate
+    ed = edges.join(F.broadcast(deg) if bcast else deg, "src").persist()
 
-        def base_of(node_col: F.Column) -> F.Column:
-            return F.when(
-                node_col % seed_mod == 0, F.lit(0.15) / F.lit(float(n_seeds))
-            ).otherwise(F.lit(0.0))
+    def base_of(node_col: F.Column) -> F.Column:
+        return F.when(
+            is_seed(node_col), F.lit(0.15) / F.lit(float(n_seeds))
+        ).otherwise(F.lit(0.0))
 
-        def init_of(node_col: F.Column) -> F.Column:
-            return F.when(
-                node_col % seed_mod == 0,
-                _trunc12(F.lit(1.0) / F.lit(float(n_seeds))),
-            ).otherwise(F.lit(0.0))
+    def init_of(node_col: F.Column) -> F.Column:
+        return F.when(
+            is_seed(node_col), _trunc12(F.lit(1.0) / F.lit(float(n_seeds)))
+        ).otherwise(F.lit(0.0))
 
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        init_of(F.col("src")).alias("r"),
-    )
-    prev = None
-    for it in range(iters):
+    def step(ranks: DataFrame, it: int, seen) -> DataFrame:
         r_in = F.broadcast(ranks) if bcast else ranks
         contrib = ed.join(r_in, ed["src"] == r_in["node"]).select(
             F.col("dst"),
             _trunc12(F.col("r") / F.col("deg")).alias("c"),
         )
-        ranks = (
+        return (
             contrib.groupBy("dst")
             .agg(
                 F.sum(F.col("c").cast("decimal(32,12)")).cast("double").alias("s")
@@ -213,22 +199,18 @@ def ranks_over_edges(
                     base_of(F.col("dst")) + F.lit(DAMPING) * F.col("s")
                 ).alias("r"),
             )
-            .persist()
         )
-        if plan_hook is not None and it == 0:
-            plan_hook("iteration", ranks)
-        ranks.count()  # materialize now; truncates the lineage
-        if prev is not None:
-            prev.unpersist()
-        prev = ranks
+
+    init = deg.select(F.col("src").alias("node"), init_of(F.col("src")).alias("r"))
+    ranks, _, _ = iterate(
+        init, step, iters, plan_hook=plan_hook, stage="iteration"
+    )
     # Release the edge and degree caches before returning: a
     # long-lived session calling pagerank repeatedly must not
     # accumulate edge-list-sized storage blocks per call. The returned
-    # DataFrame stays persisted — caller-owned, one row per node
-    # (unpersist it or clearCache when done, as bench.py and the
-    # parity gate already do).
-    ed.unpersist()
-    deg.unpersist()
+    # rank vector is stored for the rest of the query scope.
+    for df in (ed, deg, edges):
+        df.unpersist()
     return ranks
 
 
@@ -440,20 +422,19 @@ def kcore(
     Spark shape: each round is ONE degree aggregation over the
     surviving symmetric edge list plus two semi-join filters against
     the ≥k node set — all equi-joins co-partitioned on node id, no
-    pairwise work. The round's edge frame is eagerly
-    ``localCheckpoint``ed and the previous round's cache released —
-    NOT persist: each round references ``cur`` three times (degree agg
-    + both endpoint filters), so an uncheckpointed chain triples the
+    pairwise work. The rounds run through ``session.iterate``: each
+    round references the edge frame three times (degree agg + both
+    endpoint filters), so an uncheckpointed chain would triple the
     LOGICAL tree per round and Catalyst analysis blows up
     exponentially (the CC-loop lesson, dedup.py; reproduced here as a
-    2 GB plan string). The driver sees only the alive-node COUNT per
-    round (one scalar), and equal counts across consecutive rounds
-    imply a fixed point (peeling only ever removes nodes, so
-    keep ⊆ alive; equal size ⇒ equal set ⇒ no edge changed). Peeling
-    converges in O(peel-depth) rounds — small on real graphs;
-    ``max_rounds`` is a backstop, and the converged state is
-    IDEMPOTENT, so the DuckDB twin's fixed unroll reproduces it
-    exactly (the kmeans/pagerank precedent).
+    2 GB plan string). The driver sees only the surviving edge COUNT
+    per round, observed on the round's own checkpoint, and an equal
+    count in two consecutive rounds is a fixed point (peeling only
+    ever removes edges; equal size ⇒ equal set). Peeling converges in
+    O(peel-depth) rounds — small on real graphs; ``max_rounds`` is a
+    backstop, and the converged state is IDEMPOTENT, so the DuckDB
+    twin's fixed unroll reproduces it exactly (the kmeans/pagerank
+    precedent).
 
     ``plan_hook(stage, df)`` receives round 1's pruned-edge frame —
     the representative per-iteration plan for scripts/plan_audit.py.
@@ -463,42 +444,36 @@ def kcore(
     passes without a fixed point — a partial peel is NOT a k-core,
     and silently returning one would corrupt every consumer (the
     connected-components convention)."""
-    cur = copurchase_edges(lineitem, min_weight).localCheckpoint()
-    prev_alive = -1
-    converged = False
-    for i in range(max_rounds):
+
+    def peel(cur: DataFrame, i: int, seen) -> DataFrame:
         keep = (
             cur.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
             .select("src")
         )
-        n_alive = keep.count()
-        if n_alive == prev_alive:
-            converged = True
-            break
-        prev_alive = n_alive
-        pruned = (
+        return (
             cur.join(keep, "src")
             .join(keep.select(F.col("src").alias("dst")), "dst")
             .select("src", "dst")
         )
-        if plan_hook and i == 0:
-            plan_hook("peel", pruned)
-        nxt = pruned.localCheckpoint()  # eager: cuts the tripled lineage
-        cur.unpersist()
-        cur = nxt
+
+    cur, _, converged = iterate(
+        copurchase_edges(lineitem, min_weight).localCheckpoint(), peel,
+        max_rounds, observe=[F.count(F.lit(1)).alias("n_edges")],
+        until=lambda prev, seen: prev == seen, plan_hook=plan_hook,
+        stage="peel",
+    )
     if not converged:
         raise RuntimeError(
             f"kcore: no fixed point after {max_rounds} rounds"
         )
-    out = (
+    return (
         cur.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
         .select(F.col("src").alias("part"), "degree")
         .orderBy("part")
     )
-    return out
 
 
 def build_hits_edges(
@@ -567,18 +542,18 @@ def hits(
     Cross-engine determinism: every score is truncated to 12 dp
     (tie-free floor — the ``pagerank`` rule), every edge-sum and
     norm's sum-of-squares accumulates in DECIMAL(32,12) (exact, so
-    accumulation order is irrelevant), and each L2 norm enters the
-    plan as an uncorrelated scalar subquery over the persisted
-    previous half-step — no driver-side pull at all.
+    accumulation order is irrelevant), and each L2 norm's sum of
+    squares is observed on the half-step's own checkpoint — one
+    scalar, no extra action.
 
     Scale shape: the edge list persists once and both half-step joins
     reuse it; score vectors are node-count-sized, so the
     per-iteration join BROADCASTS them under ``broadcast_nodes``
     (iterations become map-only over the cached edges + one groupBy)
-    and falls back to a co-partitioned shuffle join above it. Each
-    half-step is persisted, materialized, and its predecessor
-    released — the lineage-truncation discipline every driver-side
-    loop here follows.
+    and falls back to a co-partitioned shuffle join above it. The
+    half-steps run through ``session.iterate`` on ONE state frame
+    (role, node, s, score): the role the last half-step computed
+    holds raw sums ``s``, the other role its normalized ``score``.
 
     ``edges`` is the distinct (c, p) frame: ``purchase_edges(orders,
     lineitem)`` or its staged ``edges_by_c`` copy. ``edges_by_p``
@@ -599,10 +574,24 @@ def hits(
     # sizing from customers alone under-estimated when parts dominate
     bcast = max(n_c, n_p) <= broadcast_nodes
 
-    def half_step(e: DataFrame, src: str, dst: str, scores: DataFrame,
-                  stage: str | None = None) -> DataFrame:
-        # the authority step sums hub scores c -> p, the hub step
-        # authority scores p -> c; the same plan with the keys swapped
+    def normalized(state: DataFrame, role: str, seen) -> DataFrame:
+        # the raw sums of ``role`` over their observed L2 norm (the
+        # initial hub scores of 1.0 as they are)
+        s = F.col("s")
+        if seen is not None:
+            s = _trunc12(s / F.sqrt(F.lit(seen["n2"])))
+        rows = state.filter(F.col("role") == role)
+        return rows.select("role", "node", s.alias("score"))
+
+    def half_step(state: DataFrame, i: int, seen) -> DataFrame:
+        # even rounds sum hub scores c -> p into authorities, odd rounds
+        # authority scores p -> c into hubs: one plan, keys swapped
+        src, dst, e, was, now = (
+            ("c", "p", edges, "hub", "authority")
+            if i % 2 == 0
+            else ("p", "c", edges_p, "authority", "hub")
+        )
+        scores = normalized(state, was, seen)
         s_in = F.broadcast(scores) if bcast else scores
         raw = (
             e.join(s_in, e[src] == s_in["node"])
@@ -612,47 +601,27 @@ def hits(
                 .cast("double")
                 .alias("s")
             )
-            .persist()
         )
-        raw.count()
-        l2 = F.sqrt(
-            raw.agg(
-                F.sum(_trunc12(F.col("s") * F.col("s")).cast("decimal(32,12)"))
-                .cast("double")
-                .alias("_n2")
-            ).scalar()
+        return scores.unionByName(
+            raw.select(F.lit(now).alias("role"), F.col(dst).alias("node"), "s"),
+            allowMissingColumns=True,
         )
-        out = raw.select(
-            F.col(dst).alias("node"), _trunc12(F.col("s") / l2).alias("score")
-        ).persist()
-        if stage is not None:
-            plan_hook(stage, out)
-        out.count()
-        raw.unpersist()
-        return out
 
-    hubs = edges.select("c").distinct().select(
-        F.col("c").alias("node"), F.lit(1.0).alias("score")
-    ).persist()
-    hubs.count()
-    auths = None
-    for it in range(iters):
-        stage = "iteration" if plan_hook is not None and it == 0 else None
-        nxt = half_step(edges, "c", "p", hubs, stage)
-        if auths is not None:
-            auths.unpersist()
-        auths = nxt
-        nxt = half_step(edges_p, "p", "c", auths)
-        hubs.unpersist()
-        hubs = nxt
+    hubs = edges.select(
+        F.lit("hub").alias("role"), F.col("c").alias("node"), F.lit(1.0).alias("s")
+    ).distinct()
+    n2 = F.sum(_trunc12(F.col("s") * F.col("s")).cast("decimal(32,12)"))
+    state, seen, _ = iterate(
+        hubs, half_step, 2 * iters, observe=[n2.cast("double").alias("n2")],
+        plan_hook=plan_hook, stage="iteration",
+    )
     edges.unpersist()
     if edges_p is not edges:
         edges_p.unpersist()
-    # final frames stay persisted — caller-owned, node-count-sized
-    return auths.select(
-        F.lit("authority").alias("role"), "node", "score"
-    ).unionByName(
-        hubs.select(F.lit("hub").alias("role"), "node", "score")
+    return (
+        state.filter(F.col("role") == "authority")
+        .select("role", "node", "score")
+        .unionByName(normalized(state, "hub", seen))
     )
 
 
@@ -768,10 +737,10 @@ def bfs_depths(
     against the visited set — no pairwise work, no path enumeration
     (walk-counting explodes combinatorially on dense graphs; the
     visited anti-join is what keeps each node expanded exactly once).
-    The frontier/visited frames are eagerly ``localCheckpoint``ed per
-    level (the kcore lineage lesson) and the loop early-exits on an
-    empty frontier — ``max_depth`` bounds the diameter explored, so
-    the DuckDB twin's fixed unroll reproduces the result exactly.
+    The levels run through ``session.iterate`` (the kcore lineage
+    lesson) and the loop early-exits on an empty level —
+    ``max_depth`` bounds the diameter explored, so the DuckDB twin's
+    fixed unroll reproduces the result exactly.
 
     Scale shape: visited grows to the reachable component, but every
     join is node-keyed (co-partitioned under AQE); the per-level
@@ -786,7 +755,7 @@ def bfs_depths(
     if seed is None:
         edges.unpersist()
         return spark.createDataFrame([], "part bigint, depth int")
-    visited = _bfs_from(spark, edges, int(seed), max_depth, plan_hook)
+    visited, _ = _bfs_from(spark, edges, int(seed), max_depth, plan_hook)
     edges.unpersist()
     return visited.orderBy("part")
 
@@ -794,43 +763,45 @@ def bfs_depths(
 def _bfs_from(spark, edges, seed: int, max_depth: int, plan_hook=None):
     """The level-synchronous frontier loop from one seed over a
     persisted symmetric edge list — shared by ``bfs_depths`` and
-    ``graph_diameter``'s double sweep. Returns the visited frame
-    (part, depth)."""
-    visited = spark.createDataFrame(
-        [(int(seed), 0)], "part bigint, depth int"
-    ).localCheckpoint()
-    frontier = visited.select("part")
-    frontier_n = 1
+    ``graph_diameter``'s double sweep. The state is ONE visited frame
+    (part, depth); level d's frontier is its ``depth == d-1`` rows,
+    and a level that adds no node stops the loop. Returns the visited
+    frame and its observed ``n`` (size), ``ecc`` (deepest depth) and
+    ``far`` (lowest part at that depth)."""
     # same gate as ranks_over_edges' broadcast_nodes: on a dense
     # connected graph the level-1/2 frontier approaches the whole node
-    # set — broadcast only while it is provably small, else let the
-    # node-keyed shuffle join (AQE co-partitioned) carry the level
+    # set — broadcast it only while the visited set (its upper bound)
+    # is provably small, else let the node-keyed shuffle join (AQE
+    # co-partitioned) carry the level
     broadcast_frontier = 2_000_000
-    for d in range(1, max_depth + 1):
-        f_in = (
-            F.broadcast(frontier)
-            if frontier_n <= broadcast_frontier
-            else frontier
-        )
+
+    def level(visited: DataFrame, i: int, seen) -> DataFrame:
+        frontier = visited.filter(F.col("depth") == i).select("part")
+        if seen is None or seen["n"] <= broadcast_frontier:
+            frontier = F.broadcast(frontier)
         expand = (
-            f_in
+            frontier
             .join(edges, frontier["part"] == edges["src"])
             .select(F.col("dst").cast("bigint").alias("part"))
             .distinct()
             .join(visited.select("part"), "part", "left_anti")
-            .select("part", F.lit(d).cast("int").alias("depth"))
+            .select("part", F.lit(i + 1).cast("int").alias("depth"))
         )
-        if plan_hook is not None and d == 1:
-            plan_hook("frontier", expand)
-        nxt = expand.localCheckpoint()
-        frontier_n = nxt.count()
-        if frontier_n == 0:
-            break
-        prev = visited
-        visited = visited.union(nxt).localCheckpoint()
-        prev.unpersist()
-        frontier = nxt.select("part")
-    return visited
+        return visited.unionByName(expand)
+
+    d = F.col("depth")
+    visited, seen, _ = iterate(
+        spark.createDataFrame([(int(seed), 0)], "part bigint, depth int"),
+        level, max_depth,
+        observe=[
+            F.count(F.lit(1)).alias("n"),
+            F.max(d).alias("ecc"),
+            F.min_by("part", F.struct(-d, F.col("part"))).alias("far"),
+        ],
+        until=lambda prev, seen: seen["n"] == (prev["n"] if prev else 1),
+        plan_hook=plan_hook, stage="frontier",
+    )
+    return visited, seen or {"n": 1, "ecc": 0, "far": seed}
 
 
 def graph_diameter(
@@ -849,9 +820,11 @@ def graph_diameter(
     Both sweeps reuse ONE persisted edge build
     (``copurchase_edges(lineitem, min_weight)``) and the shared
     ``_bfs_from`` frontier loop (broadcast-gated, per-level lineage
-    truncation); driver traffic is two single-row pulls (seed and the
-    argmax far node). ``max_depth`` bounds both sweeps; depths are
-    exact BFS levels within the reachable, depth-bounded ball.
+    truncation); driver traffic is one single-row pull (the seed),
+    and each sweep's eccentricity and far node ride its last level's
+    checkpoint as observed values. ``max_depth`` bounds both sweeps;
+    depths are exact BFS levels within the reachable, depth-bounded
+    ball.
 
     Returns one row (seed, ecc_seed, far_node, diameter_lb)."""
     edges = copurchase_edges(lineitem, min_weight).persist()
@@ -863,15 +836,11 @@ def graph_diameter(
             [], "seed bigint, ecc_seed int, far_node bigint,"
             " diameter_lb int"
         )
-    d1 = _bfs_from(spark, edges, int(seed), max_depth)
-    far = (
-        d1.orderBy(F.desc("depth"), F.asc("part")).limit(1).collect()[0]
-    )
-    d2 = _bfs_from(spark, edges, int(far["part"]), max_depth)
-    ecc2 = d2.agg(F.max("depth").alias("m")).collect()[0]["m"]
+    _, s1 = _bfs_from(spark, edges, int(seed), max_depth)
+    _, s2 = _bfs_from(spark, edges, int(s1["far"]), max_depth)
     edges.unpersist()
     return spark.createDataFrame(
-        [(int(seed), int(far["depth"]), int(far["part"]), int(ecc2))],
+        [(int(seed), int(s1["ecc"]), int(s1["far"]), int(s2["ecc"]))],
         "seed bigint, ecc_seed int, far_node bigint, diameter_lb int",
     )
 
@@ -896,48 +865,74 @@ def label_prop(
     Scale shape: the edge build is ``copurchase_edges(lineitem,
     min_weight)`` (the one pass over the fact table); each round is ONE
     node-keyed equi-join (edges ⋈ labels, AQE co-partitioned), one
-    min-groupBy, one left join — all keyed, no windows, no NLJs.
-    Frames are eagerly ``localCheckpoint``ed per round (the kcore
-    lineage lesson) so round k reads a materialized frame, not a
+    min-groupBy, one left join — all keyed, no windows, no NLJs. The
+    rounds are ``min_label_step`` through ``session.iterate`` (the
+    kcore lineage lesson), so round k reads a stored frame, not a
     k-deep plan.
 
     Returns (part, community) for every node, community = the
     smallest node id the label wave has reached it from."""
     edges = copurchase_edges(lineitem, min_weight).persist()
-    labels = (
-        edges.select(F.col("src").cast("bigint").alias("part"))
-        .distinct()
-        .select("part", F.col("part").alias("community"))
-        .localCheckpoint()
+    labels, _, _ = iterate(
+        initial_labels(edges).localCheckpoint(),
+        lambda labels, i, seen: min_label_step(edges, labels), iters,
+        plan_hook=plan_hook, stage="round",
     )
-    for i in range(1, iters + 1):
-        nbr = (
-            edges.join(
-                labels.select(
-                    F.col("part").alias("src"),
-                    F.col("community").alias("nc"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").cast("bigint").alias("part"))
-            .agg(F.min("nc").alias("nbr"))
-        )
-        nxt = labels.join(nbr, "part", "left").select(
-            "part",
-            F.least(
-                F.col("community"),
-                F.coalesce(F.col("nbr"), F.col("community")),
-            )
-            .cast("bigint")
-            .alias("community"),
-        )
-        if plan_hook is not None and i == 1:
-            plan_hook("round", nxt)
-        prev = labels
-        labels = nxt.localCheckpoint()
-        prev.unpersist()
     edges.unpersist()
-    return labels.orderBy("part")
+    return labels.select(
+        F.col("node").cast("bigint").alias("part"),
+        F.col("label").cast("bigint").alias("community"),
+    ).orderBy("part")
+
+
+def initial_labels(edges: DataFrame) -> DataFrame:
+    """Each node of (src, dst) labelled with its own id: (node, label)."""
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    return nodes.select("node", F.col("node").alias("label"))
+
+
+def min_label_step(
+    edges: DataFrame, labels: DataFrame, jump: bool = False
+) -> DataFrame:
+    """One synchronous min-label round over a symmetric (src, dst)
+    edge list: every node of ``labels`` (node, label) takes the least
+    label in its closed neighborhood. With ``jump`` each label is then
+    chased one hop through the same map (pointer jumping: a label is a
+    member node's id), doubling the propagation distance per round;
+    the self-join doubles the plan per round unless each round is
+    checkpointed (``session.iterate``). Returns (node, label, _was),
+    ``_was`` the label before the round."""
+    nbr = (
+        edges.join(
+            labels.select(
+                F.col("node").alias("dst"), F.col("label").alias("_nl")
+            ),
+            "dst",
+        )
+        .groupBy("src")
+        .agg(F.min("_nl").alias("_m"))
+    )
+    out = labels.join(nbr, labels["node"] == nbr["src"], "left").select(
+        "node",
+        F.least(
+            F.col("label"), F.coalesce(F.col("_m"), F.col("label"))
+        ).alias("label"),
+        F.col("label").alias("_was"),
+    )
+    if not jump:
+        return out
+    return (
+        out.alias("a")
+        .join(out.alias("b"), F.col("a.label") == F.col("b.node"), "left")
+        .select(
+            F.col("a.node").alias("node"),
+            F.least(
+                F.col("a.label"),
+                F.coalesce(F.col("b.label"), F.col("a.label")),
+            ).alias("label"),
+            F.col("a._was").alias("_was"),
+        )
+    )
 
 
 def assortativity(lineitem: DataFrame, min_weight: int = 2) -> DataFrame:

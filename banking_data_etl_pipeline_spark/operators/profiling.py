@@ -544,15 +544,17 @@ def bt_strengths(
     pairing (top-quality cut — the candidate-set discipline of every
     pairwise family here), so the pair grid, judge panel, and MM loop
     are all model-parameter scale (top_n² rows); the corpus is
-    touched once for the quality scores. Each MM step localCheckpoints
-    (the scalar-subquery-norm plan-text lesson). Division terms and
-    normalization walk the trunc-12dp/DECIMAL ladder.
+    touched once for the quality scores. The MM steps run through
+    ``session.iterate``; each step's normalizing sum is observed on
+    its own checkpoint. Division terms and normalization walk the
+    trunc-12dp/DECIMAL ladder.
 
     Returns top_n rows (doc_id, wins, games, strength, rank):
     strength mean-1-normalized at 6dp, rank by strength desc."""
     from pyspark.sql import Window
 
     from ..functions import texttools
+    from ..session import iterate, pin_for_query
 
     def _t12(col):
         return F.floor(col * F.lit(1e12)).cast("double") / F.lit(1e12)
@@ -611,9 +613,18 @@ def bt_strengths(
         F.sum("w").cast("bigint").alias("wins"),
         F.sum("g").cast("bigint").alias("games"),
     ).localCheckpoint()
-    s = totals.select("doc", F.lit(1.0).alias("s")).localCheckpoint()
+    for df in (cont, wins, ed, totals):
+        pin_for_query(df)  # freed when the query scope closes
     n_lit = F.lit(float(top_n))
-    for it in range(iters):
+
+    def strengths(raw: DataFrame, seen) -> DataFrame:
+        # mean-1 renormalized by the observed sum (the initial 1.0s as is)
+        r = F.col("r")
+        s = r if seen is None else _t12(r * n_lit / seen["t"])
+        return raw.select("doc", s.alias("s"))
+
+    def mm_update(raw: DataFrame, it: int, seen) -> DataFrame:
+        s = strengths(raw, seen)
         si = s.select(F.col("doc"), F.col("s").alias("_si"))
         sj = s.select(F.col("doc").alias("opp"), F.col("s").alias("_sj"))
         denom = (
@@ -626,20 +637,19 @@ def bt_strengths(
                 ).alias("den")
             )
         )
-        raw = totals.join(denom, "doc").select(
+        return totals.join(denom, "doc").select(
             "doc",
             _t12(F.col("wins").cast("double") / F.col("den")).alias("r"),
         )
-        if plan_hook is not None and it == 0:
-            plan_hook("mm-update", raw)
-        raw = raw.localCheckpoint()
-        tot = raw.agg(_dsum(F.col("r")).alias("t")).scalar()
-        s = raw.select(
-            "doc", _t12(F.col("r") * n_lit / tot).alias("s")
-        ).localCheckpoint()
+
+    raw, seen, _ = iterate(
+        totals.select("doc", F.lit(1.0).alias("r")), mm_update, iters,
+        observe=[_dsum(F.col("r")).alias("t")], plan_hook=plan_hook,
+        stage="mm-update",
+    )
     wr = Window.orderBy(F.col("s").desc(), F.col("doc").asc())
     return (
-        totals.join(s, "doc")
+        totals.join(strengths(raw, seen), "doc")
         .select(
             F.col("doc").alias(id_col),
             "wins",

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import texttools, vectors
+from ..session import iterate
 
 # shared verbatim with oracle.BM25_TOPK_Q — evaluated over double
 # columns (tf, df, dl, n_docs, avgdl) in both engines, so the doubles
@@ -534,15 +535,15 @@ def mmr_rerank(
     rows/query) to the picked set (≤ n_select rows/query), takes a
     per-candidate max-sim groupBy and one window argmax — queries ×
     pool × n_select work total, independent of corpus size (the
-    corpus was already reduced by BM25's two-phase top-k). Each
-    round's frames are eagerly ``localCheckpoint``ed, NOT persisted:
-    a round references the previous round's frames ~4 times, so an
-    un-truncated chain re-ANALYZES the whole BM25 subtree 4^rounds
-    times (the CC-loop lesson; measured 300 s of pure Catalyst
-    analysis at sf0.001 with lazy persists, ~8 s checkpointed). The
-    loop is therefore eager/iterative, like kcore. All ranking ties
-    break (objective desc, doc_id asc), so picks are deterministic
-    and the DuckDB twin replays the greedy walk as unrolled CTEs.
+    corpus was already reduced by BM25's two-phase top-k). The pool
+    is ONE state frame whose nullable ``pick`` marks the picked rows,
+    checkpointed per round through ``session.iterate``: a round
+    references the state ~3 times, so an un-truncated chain
+    re-ANALYZES the whole BM25 subtree 3^rounds times (the CC-loop
+    lesson; measured 300 s of pure Catalyst analysis at sf0.001 with
+    lazy persists, ~8 s checkpointed). All ranking ties break
+    (objective desc, doc_id asc), so picks are deterministic and the
+    DuckDB twin replays the greedy walk as unrolled CTEs.
 
     Returns (query_id, doc_id, rel, pick), pick 1..n_select in
     selection order, rel 6-dp-rounded."""
@@ -554,19 +555,20 @@ def mmr_rerank(
     cand = (
         hits.join(ev, "doc_id")
         .withColumn("rel", F.col("score") / F.max("score").over(wq))
-        .select("query_id", "doc_id", "rel", "v", "rank")
-    )
-    cand = cand.localCheckpoint()
-    sel = cand.filter(F.col("rank") == 1).select(
-        "query_id", "doc_id", "rel", "v", F.lit(1).alias("pick")
-    )
-    rem = cand.filter(F.col("rank") > 1).select(
-        "query_id", "doc_id", "rel", "v"
+        .select(
+            "query_id", "doc_id", "rel", "v",
+            F.when(F.col("rank") == 1, F.lit(1)).alias("pick"),
+        )
     )
     wpick = Window.partitionBy("query_id").orderBy(
         F.expr(MMR_EXPR).desc(), F.col("doc_id").asc()
     )
-    for t in range(2, n_select + 1):
+
+    def pick_next(pool: DataFrame, i: int, seen) -> DataFrame:
+        sel = pool.filter(F.col("pick").isNotNull())
+        rem = pool.filter(F.col("pick").isNull()).drop("pick")
+        # _n: how many picked rows a candidate was compared with; none
+        # when its query's rank-1 hit has no embedding (no pick ever)
         msim = (
             rem.alias("c")
             .join(sel.alias("s"), "query_id")
@@ -578,27 +580,26 @@ def mmr_rerank(
                 ).alias("sim"),
             )
             .groupBy("query_id", "doc_id")
-            .agg(F.max("sim").alias("msim"))
+            .agg(F.max("sim").alias("msim"), F.count(F.lit(1)).alias("_n"))
         )
-        pick = (
-            rem.join(msim, ["query_id", "doc_id"])
-            .withColumn("_r", F.row_number().over(wpick))
-            .filter(F.col("_r") == 1)
-            .select("query_id", "doc_id", "rel", "v", F.lit(t).alias("pick"))
-            .localCheckpoint()
+        first = (F.row_number().over(wpick) == 1) & F.col("_n").isNotNull()
+        return sel.unionByName(
+            rem.join(msim, ["query_id", "doc_id"], "left").select(
+                *rem.columns, F.when(first, F.lit(i + 2)).alias("pick")
+            )
         )
-        sel = sel.unionByName(pick).localCheckpoint()
-        rem = rem.join(
-            pick.select("query_id", "doc_id"),
-            ["query_id", "doc_id"],
-            "left_anti",
-        ).localCheckpoint()
-    return sel.select(
-        "query_id",
-        "doc_id",
-        F.round(F.col("rel"), 6).alias("rel"),
-        F.col("pick").cast("int").alias("pick"),
-    ).orderBy("query_id", "pick")
+
+    pool, _, _ = iterate(cand.localCheckpoint(), pick_next, n_select - 1)
+    return (
+        pool.filter(F.col("pick").isNotNull())
+        .select(
+            "query_id",
+            "doc_id",
+            F.round(F.col("rel"), 6).alias("rel"),
+            F.col("pick").cast("int").alias("pick"),
+        )
+        .orderBy("query_id", "pick")
+    )
 
 
 # nDCG gain/discount text shared with oracle.ndcg_sql — exact powers

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import iterate, release
+
 
 def hash_prefix(key: Column) -> Column:
     """First two hex chars of md5(key-as-string): 256 equiprobable,
@@ -391,15 +393,16 @@ def kcenter_coreset(
     Scale shape: the running min-distance frame is corpus-sized and
     DISTRIBUTED end-to-end; each of the k rounds is one map-only
     ``least(d, dist-to-new-center)`` update against a literal centroid
-    (model-parameter scale) plus one global top-1 — the only driver
-    pulls are k single rows (the selected centers, i.e. the model
-    itself). Frames persist per round with eager materialize +
-    predecessor release (the lineage-truncation discipline), so the
-    k-th round reads a cached frame, not a k-deep plan.
+    (model-parameter scale) whose global top-1 — the next center — is
+    observed on the round's own checkpoint (``session.iterate``); the
+    only driver pulls are k single rows (the selected centers, i.e.
+    the model itself), and the k-th round reads a stored frame, not a
+    k-deep plan.
 
     Returns k rows (sel_rank, vec_id, dist): dist is the point's
     distance to the previously-selected set at selection time (the
-    coverage radius sequence, 6dp; 0.0 for the seed)."""
+    coverage radius sequence, 6dp; 0.0 for the seed); no rows on an
+    empty input."""
 
     def _sq(vec):
         lit = F.lit([float(x) for x in vec])
@@ -415,29 +418,32 @@ def kcenter_coreset(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
     )
     seed = base.orderBy(F.col("vec_id").asc()).first()
-    selected = [(1, seed[0], 0.0)]
-    mind = base.select("vec_id", "v", _sq(seed[1]).alias("d")).persist()
-    mind.count()
-    for r in range(2, k + 1):
-        far = (
-            mind.orderBy(F.col("d").desc(), F.col("vec_id").asc())
-            .limit(1)
-            .collect()[0]
+    centers = [] if seed is None else [(seed[0], seed[1], 0.0)]
+
+    def update(mind: DataFrame, i: int, seen) -> DataFrame:
+        if seen is not None:
+            centers.append(seen["far"])
+        return mind.select(
+            "vec_id", "v", F.least(F.col("d"), _sq(centers[-1][1])).alias("d")
         )
-        selected.append((r, far[0], float(far[2])))
-        nxt = mind.select(
-            "vec_id", "v", F.least(F.col("d"), _sq(far[1])).alias("d")
-        ).persist()
-        if plan_hook is not None and r == 2:
-            plan_hook("update", nxt)
-        nxt.count()
-        mind.unpersist()
-        mind = nxt
-    mind.unpersist()
+
+    if seed is not None:
+        # farthest point, ties to the lowest id
+        far = F.min_by(
+            F.struct("vec_id", "v", "d"), F.struct(-F.col("d"), F.col("vec_id"))
+        )
+        mind, seen, _ = iterate(
+            base.withColumn("d", F.lit(float("inf"))), update, k - 1,
+            observe=[far.alias("far")], plan_hook=plan_hook, stage="update",
+        )
+        if seen is not None:
+            centers.append(seen["far"])
+        release(mind)
     # 6dp via F.round (HALF_UP), not Python round (half-even), so the
     # rounding rule matches every other cross-engine surface
     return emb.sparkSession.createDataFrame(
-        selected, "sel_rank int, vec_id bigint, dist double"
+        [(r, c[0], float(c[2])) for r, c in enumerate(centers, 1)],
+        "sel_rank int, vec_id bigint, dist double",
     ).select("sel_rank", "vec_id", F.round("dist", 6).alias("dist"))
 
 

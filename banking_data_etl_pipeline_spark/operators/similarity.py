@@ -2495,13 +2495,9 @@ def top_principal_component(
     d×d second-moment matrix (means and the row count ride the same
     pass as k=-1 / j=-1 rows). Everything after is MODEL-PARAMETER
     scale: the covariance frame is d² rows, each power step a d²⋈d
-    join + groupBy + an uncorrelated-scalar L2 normalize. Every step
-    LOCALCHECKPOINTS (not persist): each iteration embeds the
-    previous vector's plan twice (matvec + norm subquery), so plan
-    TEXT doubles per step and Catalyst's per-job tree rendering went
-    super-linear — the kcore/mmr lineage lesson; checkpointing
-    truncates the logical plan itself. No driver-side math: the
-    matrix never leaves the cluster.
+    join + groupBy whose L2 norm is observed on the step's own
+    checkpoint (``session.iterate``) and divides the next step's
+    input. No driver-side math: the matrix never leaves the cluster.
 
     Determinism: every product is truncated to 12 dp BEFORE any sum
     (numpy's floor((x_j·x_k)·1e12) is bit-identical to the JVM/DuckDB
@@ -2516,7 +2512,11 @@ def top_principal_component(
 
     Returns d rows (pos, loading, eigenvalue, explained_frac):
     loading = unit top eigenvector, eigenvalue = Rayleigh quotient,
-    explained_frac = eigenvalue / trace(C), 6dp on the scalars."""
+    explained_frac = eigenvalue / trace(C), 6dp on the scalars. No
+    rows when there is no direction to find: an empty input, or a
+    power step that reaches the zero vector (one row, identical rows,
+    or a covariance that annihilates the start vector)."""
+    from ..session import iterate, pin_for_query
 
     def _t12(col):
         return F.floor(col * F.lit(1e12)).cast("double") / F.lit(1e12)
@@ -2524,7 +2524,11 @@ def top_principal_component(
     def _dsum(col):
         return F.sum(_t12(col).cast("decimal(32,12)")).cast("double")
 
-    d = len(emb.select(vec_col).first()[0])
+    out_schema = "pos int, loading double, eigenvalue double, explained_frac double"
+    first = emb.select(vec_col).first()
+    if first is None:
+        return emb.sparkSession.createDataFrame([], out_schema)
+    d = len(first[0])
 
     def _moments(batches):
         import numpy as np
@@ -2579,7 +2583,7 @@ def top_principal_component(
                 ignore_index=True,
             )
 
-    tot = (
+    tot = pin_for_query(
         emb.select(F.col(vec_col).alias("v"))
         .mapInPandas(_moments, "j int, k int, psum long")
         .groupBy("j", "k")
@@ -2595,7 +2599,7 @@ def top_principal_component(
     mu = tot.filter((F.col("j") >= 0) & (F.col("k") == -1)).select(
         "j", cell.alias("mu")
     )
-    cov = (
+    cov = pin_for_query(
         tot.filter(F.col("k") >= 0)
         .select("j", "k", cell.alias("_sxx"))
         .join(mu.select(F.col("j"), F.col("mu").alias("_mj")), "j")
@@ -2605,29 +2609,36 @@ def top_principal_component(
         )
         .localCheckpoint()
     )
-    v = cov.select("j").distinct().select(
-        F.col("j").alias("k"),
-        F.lit(1.0).cast("double") / F.sqrt(F.lit(float(d))).alias("_"),
-    ).toDF("k", "v").localCheckpoint()
-    for it in range(iters):
-        w = (
+
+    def matvec(v: DataFrame) -> DataFrame:
+        return (
             cov.join(v, "k")
             .groupBy("j")
             .agg(_dsum(F.col("c") * F.col("v")).alias("w"))
         )
-        if plan_hook is not None and it == 0:
-            plan_hook("matvec", w)
-        w = w.localCheckpoint()
-        nv = F.sqrt(w.agg(_dsum(F.col("w") * F.col("w")).alias("n2")).scalar())
-        v = w.select(
-            F.col("j").alias("k"), _t12(F.col("w") / nv).alias("v")
-        ).localCheckpoint()
-    # Rayleigh quotient lambda = v'Cv and trace(C), both in-plan scalars
-    wfin = (
-        cov.join(v, "k")
-        .groupBy("j")
-        .agg(_dsum(F.col("c") * F.col("v")).alias("w"))
+
+    def unit(w: DataFrame, seen) -> DataFrame:
+        # the last matvec over its observed L2 norm (v0 as it is)
+        if seen is None:
+            return w
+        n = F.sqrt(F.lit(seen["n2"]))
+        return w.select(F.col("j").alias("k"), _t12(F.col("w") / n).alias("v"))
+
+    v0 = cov.select("j").distinct().select(
+        F.col("j").alias("k"),
+        (F.lit(1.0).cast("double") / F.sqrt(F.lit(float(d)))).alias("v"),
     )
+    w, seen, _ = iterate(
+        v0, lambda w, it, seen: matvec(unit(w, seen)), iters,
+        observe=[_dsum(F.col("w") * F.col("w")).alias("n2")],
+        until=lambda prev, seen: not seen["n2"], plan_hook=plan_hook,
+        stage="matvec",
+    )
+    if seen and not seen["n2"]:
+        return emb.sparkSession.createDataFrame([], out_schema)
+    v = unit(w, seen)
+    # Rayleigh quotient lambda = v'Cv and trace(C), both in-plan scalars
+    wfin = matvec(v)
     lam = (
         wfin.join(v.select(F.col("k").alias("j"), "v"), "j")
         .agg(_dsum(F.col("w") * F.col("v")).alias("l"))
@@ -2638,8 +2649,6 @@ def top_principal_component(
         .agg(_dsum(F.col("c")).alias("t"))
         .scalar()
     )
-    # cov and v are localCheckpointed (freed with the session / GC);
-    # the returned frame reads the checkpointed blocks
     return v.select(
         F.col("k").alias("pos"),
         F.round(F.col("v"), 6).alias("loading"),

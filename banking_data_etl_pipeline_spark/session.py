@@ -8,9 +8,9 @@ semantics match the DuckDB oracle, and Arrow for any Pandas-UDF path.
 
 It also owns every piece of state that crosses queries: the query
 scope of the calling thread (``tune_for_oracle`` opens it,
-``pin_for_query`` adds to it, ``release_pinned`` closes it), the cache
-owned by the SparkContext (``session_cache``), and scoped conf changes
-(``conf_override``).
+``pin_for_query`` and ``iterate`` add to it, ``release_pinned`` closes
+it), the cache owned by the SparkContext (``session_cache``), and
+scoped conf changes (``conf_override``).
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ import os
 from collections.abc import Iterator
 
 from pyspark import SparkContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -105,31 +105,79 @@ _QUERY_PINS: contextvars.ContextVar[tuple[DataFrame, ...]] = (
 
 
 def pin_for_query(df: DataFrame) -> DataFrame:
-    """Persist ``df`` for the rest of the current query scope.
-
-    The returned plan depends on these frames, so the operator cannot
-    unpersist them before it returns. They stay cached until this
-    thread opens its next scope (``tune_for_oracle``) or calls
-    :func:`release_pinned`; queries built concurrently in other threads
-    keep theirs. Release is correctness-safe: the partitionings are
-    deterministic recomputes, and consumers read derived values (ranks,
-    knots, maxima), never raw partition ids across jobs, so the worst
-    case after release is one recompute if the old plan runs again."""
-    if not df.is_cached:  # idempotent: _beam_step frames arrive cached
-        df.persist()
+    """Keep ``df`` stored (persist a plan; a local checkpoint keeps its
+    blocks) until this thread opens its next query scope
+    (``tune_for_oracle``) or calls :func:`release_pinned`: the
+    returned plan depends on these frames, so the operator cannot
+    release them before it returns. Other threads keep their pins. A
+    released persist costs one recompute if its plan runs again (the
+    partitionings are deterministic, and consumers read derived
+    values, never raw partition ids across jobs); a released local
+    checkpoint cannot be recomputed, so a frame that reads one works
+    only inside the query that built it."""
+    if not df.is_cached and _checkpoint_rdd(df) is None:
+        df.persist()  # idempotent: _beam_step frames arrive cached
     _QUERY_PINS.set(_QUERY_PINS.get() + (df,))
     return df
 
 
+def _checkpoint_rdd(df: DataFrame):
+    """The RDD holding a local checkpoint's blocks, else None."""
+    node = df._jdf.queryExecution().logical()
+    return node.rdd() if node.getClass().getSimpleName() == "LogicalRDD" else None
+
+
+def release(df: DataFrame) -> None:
+    """Free ``df``'s blocks: uncache a persisted plan or drop a local
+    checkpoint's RDD (which ``DataFrame.unpersist`` and
+    ``catalog.clearCache`` leave in place)."""
+    rdd = _checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
+    if df.is_cached:
+        df.unpersist()
+
+
 def release_pinned() -> None:
-    """Close the current thread's query scope: unpersist its pins."""
+    """Close the current thread's query scope: release its pins."""
     pins = _QUERY_PINS.get()
     _QUERY_PINS.set(())
     for df in pins:
         try:
-            df.unpersist()
+            release(df)
         except Exception:
             pass  # session already stopped — nothing to release
+
+
+def iterate(
+    state: DataFrame, step, rounds: int, *, observe=(), until=None,
+    plan_hook=None, stage: str = "round",
+) -> tuple[DataFrame, dict | None, bool]:
+    """The driver-side loop of every iterative operator. Round ``i``
+    builds ``step(state, i, seen)`` (``seen``: the previous round's
+    observed values, None in round 0), hands round 0's frame to
+    ``plan_hook(stage, df)``, runs one eager ``localCheckpoint`` (round
+    k reads a stored frame, not a k-deep plan) and releases the frame
+    it replaced. The named ``observe`` aggregates ride that
+    checkpoint's job as an ``Observation``: a convergence scalar costs
+    no extra action. Stops after ``rounds`` or once ``until(prev_seen,
+    seen)`` holds. Returns the last frame, pinned for the query scope,
+    its observed values and whether ``until`` stopped the loop."""
+    seen, converged = None, False
+    for i in range(rounds):
+        nxt, obs = step(state, i, seen), Observation()
+        if observe:
+            nxt = nxt.observe(obs, *observe)
+        if plan_hook is not None and i == 0:
+            plan_hook(stage, nxt)
+        nxt = nxt.localCheckpoint()
+        prev, seen = seen, obs.get if observe else None
+        release(state)
+        state = nxt
+        if until is not None and until(prev, seen):
+            converged = True
+            break
+    return pin_for_query(state), seen, converged
 
 
 def session_cache(spark: SparkSession | SparkContext) -> dict:

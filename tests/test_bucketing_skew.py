@@ -3,8 +3,6 @@ salted two-phase aggregation (identical to the plain aggregate)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from banking_data_etl_pipeline_spark.operators import skew
 from banking_data_etl_pipeline_spark.sources import sinks, tables
 from pyspark.sql import functions as F
@@ -16,8 +14,8 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_bucketed_join_is_shuffle_free(spark):
-    d = tempfile.mkdtemp(prefix="bucketed_")
+def test_bucketed_join_is_shuffle_free(spark, tmp_path):
+    d = str(tmp_path)
     orders = tables.load(spark, SF_DIR, "orders")
     lineitem = tables.load(spark, SF_DIR, "lineitem")
     sinks.write_bucketed(
@@ -101,12 +99,12 @@ def test_salted_join_spreads_key_and_matches_plain_join(spark):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
-def test_snapshot_diff_on_bucketed_snapshots_is_shuffle_free(spark):
+def test_snapshot_diff_on_bucketed_snapshots_is_shuffle_free(spark, tmp_path):
     """cdc.snapshot_diff's docstring claims the full-outer exchange
     disappears on bucketed snapshots — pin it."""
     from banking_data_etl_pipeline_spark.operators import cdc
 
-    d = tempfile.mkdtemp(prefix="cdc_bucketed_")
+    d = str(tmp_path)
     cust = tables.load(spark, SF_DIR, "customer").select("c_custkey", "c_acctbal")
     nxt = cust.withColumn(
         "c_acctbal",

@@ -1,8 +1,10 @@
 """The graph operators (`operators/graph.py`): edge builders, PageRank,
-triangles, link prediction and the empty-graph and NULL-key edges."""
+triangles, link prediction, the empty-graph and NULL-key edges, and
+the loops k-core, HITS, BFS, diameter and label propagation."""
 
 from __future__ import annotations
 
+import math
 from collections import Counter
 
 import pytest
@@ -223,3 +225,194 @@ def test_assortativity_symmetric_sums_match(spark):
     # and Σ dx over directed edges = Σ_v deg(v)² = 4 + 4 + 9 + 1
     assert row["m_edges"] == 8
     assert row["s_x"] == 18
+
+
+# ----------------------------------------------------------- k-core
+
+
+def test_kcore_peels_pendant_keeps_triangle(spark):
+    # triangle {1,2,3} with every pair in 2 orders; pendant 4 hangs off
+    # node 1 (weight 2); pair (5,6) occurs once -> below min_weight
+    li = lineitem_of(
+        spark,
+        [(1, [1, 2, 3]), (2, [1, 2, 3]), (3, [1, 4]), (4, [1, 4]),
+         (5, [5, 6])],
+    )
+    out = graph.kcore(li, k=2, min_weight=2).collect()
+    assert [(r.part, r.degree) for r in out] == [(1, 2), (2, 2), (3, 2)]
+
+
+def test_kcore_cascade_empties_a_path(spark):
+    # path 1-2-3-4 (each edge in 2 orders): peeling ends cascades
+    # inward over multiple rounds until nothing has degree >= 2
+    li = lineitem_of(
+        spark,
+        [(1, [1, 2]), (2, [1, 2]), (3, [2, 3]), (4, [2, 3]),
+         (5, [3, 4]), (6, [3, 4])],
+    )
+    assert graph.kcore(li, k=2, min_weight=2).count() == 0
+
+
+def test_kcore_is_idempotent_fixpoint(spark):
+    # running kcore on a frame whose graph IS already a k-core changes
+    # nothing: the cycle 1-2-3-4-1 is exactly its own 2-core
+    li = lineitem_of(
+        spark,
+        [(1, [1, 2]), (2, [1, 2]), (3, [2, 3]), (4, [2, 3]),
+         (5, [3, 4]), (6, [3, 4]), (7, [1, 4]), (8, [1, 4])],
+    )
+    out = graph.kcore(li, k=2, min_weight=2).collect()
+    assert [(r.part, r.degree) for r in out] == [
+        (1, 2), (2, 2), (3, 2), (4, 2)
+    ]
+
+
+# ------------------------------------------------------------ HITS
+
+
+def _hits_frames(spark, pairs):
+    orders = spark.createDataFrame(
+        [(i, c) for i, (c, _p) in enumerate(pairs)],
+        "o_orderkey bigint, o_custkey bigint",
+    )
+    lineitem = spark.createDataFrame(
+        [(i, p) for i, (_c, p) in enumerate(pairs)],
+        "l_orderkey bigint, l_partkey bigint",
+    )
+    return orders, lineitem
+
+
+def test_hits_hand_computed_first_iteration(spark):
+    # edges c1->p1, c1->p2, c2->p1 ; h0 = 1
+    # a1_raw: p1=2, p2=1, norm sqrt(5) -> a(p1)=2/sqrt5, a(p2)=1/sqrt5
+    orders, lineitem = _hits_frames(spark, [(1, 11), (1, 12), (2, 11)])
+    rows = graph.hits(
+        edges=graph.purchase_edges(orders, lineitem), iters=1
+    ).collect()
+    auth = {r.node: r.score for r in rows if r.role == "authority"}
+    hub = {r.node: r.score for r in rows if r.role == "hub"}
+    t12 = lambda x: math.floor(x * 1e12) / 1e12
+    assert auth[11] == t12(2.0 / math.sqrt(5.0))
+    assert auth[12] == t12(1.0 / math.sqrt(5.0))
+    # h1_raw: c1 = a(p1)+a(p2), c2 = a(p1); c1 hub > c2 hub
+    assert hub[1] > hub[2] > 0.0
+
+
+@pytest.mark.slowtier
+def test_hits_l2_normalized_and_partition_invariant(spark):
+    pairs = [(c, 10 + (c * j) % 5) for c in range(1, 8) for j in range(1, 4)]
+    orders, lineitem = _hits_frames(spark, pairs)
+    rows = graph.hits(
+        edges=graph.purchase_edges(orders, lineitem), iters=2
+    ).collect()
+    for role in ("authority", "hub"):
+        norm = math.sqrt(
+            sum(r.score**2 for r in rows if r.role == role)
+        )
+        assert abs(norm - 1.0) < 1e-6
+    rows2 = graph.hits(
+        edges=graph.purchase_edges(
+            orders.repartition(5), lineitem.repartition(3)
+        ),
+        iters=2,
+    ).collect()
+    assert sorted(map(tuple, rows2)) == sorted(map(tuple, rows))
+
+
+# ----------------------------------------------- BFS and diameter
+
+
+def test_bfs_depths_on_a_known_chain(spark):
+    """Parts 1-2, 2-3 each co-purchased twice form the chain 1-2-3;
+    part 9 pairs with 1 only once (pruned by min_weight=2) → depths
+    {1:0, 2:1, 3:2}, 9 unreachable and absent."""
+    li = lineitem_of(
+        spark,
+        enumerate([[1, 2], [1, 2], [2, 3], [2, 3], [1, 9]]),
+    )
+    got = {r["part"]: r["depth"] for r in graph.bfs_depths(li).collect()}
+    assert got == {1: 0, 2: 1, 3: 2}
+
+
+def test_bfs_depths_respects_max_depth_cap(spark):
+    """A 4-hop chain explored with max_depth=2 stops at depth 2."""
+    li = lineitem_of(
+        spark,
+        enumerate([[1, 2]] * 2 + [[2, 3]] * 2 + [[3, 4]] * 2 + [[4, 5]] * 2),
+    )
+    got = {
+        r["part"]: r["depth"]
+        for r in graph.bfs_depths(li, max_depth=2).collect()
+    }
+    assert got == {1: 0, 2: 1, 3: 2}
+
+
+def test_bfs_depths_empty_graph(spark):
+    """No repeated pair at min_weight=2 → empty result, no crash."""
+    li = lineitem_of(spark, enumerate([[1, 2], [3, 4]]))
+    assert graph.bfs_depths(li).count() == 0
+
+
+def test_graph_diameter_hand_graph(spark):
+    """A path 1-2-3-4 (each edge doubled for min_weight): sweep 1
+    from node 1 reaches 4 at depth 3; sweep 2 from 4 also spans 3 —
+    the lower bound equals the true diameter on a tree."""
+    rows = []
+    oid = 0
+    for a, b in [(1, 2), (2, 3), (3, 4)]:
+        for _ in range(2):
+            oid += 1
+            rows += [(oid, a), (oid, b)]
+    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    out = graph.graph_diameter(li).collect()[0]
+    assert (out.seed, out.ecc_seed, out.far_node, out.diameter_lb) == (
+        1, 3, 4, 3,
+    )
+
+
+@pytest.mark.slowtier
+def test_graph_diameter_bounds_bfs(spark):
+    li = tables.load(spark, SF_DIR, "lineitem")
+    out = graph.graph_diameter(li).collect()[0]
+    ecc1 = (
+        graph.bfs_depths(li).agg(F.max("depth").alias("m")).collect()[0].m
+    )
+    # the second sweep's eccentricity is >= the first's
+    assert out.ecc_seed == ecc1
+    assert out.diameter_lb >= out.ecc_seed
+
+
+# ------------------------------------------------ label propagation
+
+
+def test_label_prop_hand_graph(spark):
+    """Two components: {1,2,3} a path, {10,11} an edge — with 4 rounds
+    every node adopts its component's min id. Edge weights >= 2 are
+    required, so each pair co-occurs in two orders."""
+    rows = []
+    oid = 0
+    for a, b in [(1, 2), (2, 3), (10, 11)]:
+        for _ in range(2):  # repeated co-purchase (min_weight=2)
+            oid += 1
+            rows += [(oid, a), (oid, b)]
+    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    got = {
+        r.part: r.community for r in graph.label_prop(li, iters=4).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_label_prop_monotone_and_partition(spark):
+    li = tables.load(spark, SF_DIR, "lineitem")
+    rows = graph.label_prop(li, iters=4).collect()
+    parts = {r.part for r in rows}
+    for r in rows:
+        # min-label can only shrink below the own id
+        assert r.community <= r.part
+        # every community label is itself a node
+        assert r.community in parts
+    # label of the community representative is itself (a min-label
+    # fixpoint property that holds at every round count)
+    comm = {r.part: r.community for r in rows}
+    for c in set(comm.values()):
+        assert comm[c] == c

@@ -285,7 +285,7 @@ def test_no_query_plans_cartesian_or_nested_loop(spark):
         "stream_static_join",
         "stream_srm",
         "kmeans",
-        "dedup_resolve",  # iterative label propagation (runs jobs eagerly)
+        "dedup_resolve",  # iterative label propagation (session.iterate)
         "fuzzy_resolve",  # same resolver over fuzzy pairs
         "bpe_merges",  # driver-side merge loop (one argmax pull per step)
         "bpe_merges_batched",  # driver-side pass loop (one window pull/pass)
@@ -297,11 +297,11 @@ def test_no_query_plans_cartesian_or_nested_loop(spark):
         "stream_attribution",  # same
         "stream_ewma",  # same
         "ann_ivf_prebuilt",  # builds/reads the persisted index eagerly
-        "kcore",  # iterative peel loop (localCheckpoint per round)
+        "kcore",  # iterative peel loop (session.iterate)
         "stream_topk_users",  # runs its stream eagerly at build
-        "mmr_rerank",  # greedy selection loop (localCheckpoint per round)
+        "mmr_rerank",  # greedy selection loop (session.iterate)
         "stream_msprt",  # runs its stream eagerly at build
-        "hits",  # iterative half-steps (persist+materialize per round)
+        "hits",  # iterative half-steps (session.iterate)
         "hits_prebuilt",  # same loop over the staged edge copies
         "stream_recovery",  # runs two checkpointed streams eagerly
         "stream_recovery_msprt",  # same, over the built-in agg state
@@ -309,9 +309,9 @@ def test_no_query_plans_cartesian_or_nested_loop(spark):
         "stream_p95",  # runs its stream eagerly at build
         "stream_hll",  # runs its stream eagerly at build
         "stream_moments",  # runs its stream eagerly at build
-        "kcenter_coreset",  # greedy driver loop (one top-1 pull/round)
-        "emb_top_pc",  # power-iteration loop (localCheckpoint per step)
-        "bt_strengths",  # MM iteration loop (localCheckpoint per step)
+        "kcenter_coreset",  # greedy loop (observed top-1 per round)
+        "emb_top_pc",  # power-iteration loop (session.iterate)
+        "bt_strengths",  # MM iteration loop (session.iterate)
     }
     # intentional broadcast cross joins: ann_brute scores the tiny
     # query set against the corpus; source_divergence expands the

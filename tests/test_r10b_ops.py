@@ -1,9 +1,9 @@
-"""Round-10 second batch: t-closeness (ordered EMD), HITS
-hubs/authorities, duplication profile, k-center coreset, mSPRT
-sequential monitor. Value parity is the oracle gate's job; these pin
-hand-computed fixtures and the structural invariants a hash match
-can't express (EMD closed form, L2 normalization, greedy selection
-order, always-valid-p monotonicity)."""
+"""Round-10 second batch: t-closeness (ordered EMD), duplication
+profile, k-center coreset, mSPRT sequential monitor (the HITS tests
+live in test_graph.py). Value parity is the oracle gate's job; these
+pin hand-computed fixtures and the structural invariants a hash match
+can't express (EMD closed form, greedy selection order,
+always-valid-p monotonicity)."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from banking_data_etl_pipeline_spark.operators import (
     dedup,
     expectations,
     experiments,
-    graph,
     sampling,
 )
 
@@ -58,58 +57,6 @@ def test_t_closeness_missing_values_zero_filled(spark):
     got = {r.grp: r for r in expectations.t_closeness(df, ["grp"], "age").collect()}
     # p = (1/4, 3/4); class B q = (1, 0): cum |1-0.25| = 0.75
     assert got["B"].emd == 0.75 and got["A"].emd == 0.25
-
-
-# ------------------------------------------------------------ HITS
-
-
-def _hits_frames(spark, pairs):
-    orders = spark.createDataFrame(
-        [(i, c) for i, (c, _p) in enumerate(pairs)],
-        "o_orderkey bigint, o_custkey bigint",
-    )
-    lineitem = spark.createDataFrame(
-        [(i, p) for i, (_c, p) in enumerate(pairs)],
-        "l_orderkey bigint, l_partkey bigint",
-    )
-    return orders, lineitem
-
-
-def test_hits_hand_computed_first_iteration(spark):
-    # edges c1->p1, c1->p2, c2->p1 ; h0 = 1
-    # a1_raw: p1=2, p2=1, norm sqrt(5) -> a(p1)=2/sqrt5, a(p2)=1/sqrt5
-    orders, lineitem = _hits_frames(spark, [(1, 11), (1, 12), (2, 11)])
-    rows = graph.hits(
-        edges=graph.purchase_edges(orders, lineitem), iters=1
-    ).collect()
-    auth = {r.node: r.score for r in rows if r.role == "authority"}
-    hub = {r.node: r.score for r in rows if r.role == "hub"}
-    t12 = lambda x: math.floor(x * 1e12) / 1e12
-    assert auth[11] == t12(2.0 / math.sqrt(5.0))
-    assert auth[12] == t12(1.0 / math.sqrt(5.0))
-    # h1_raw: c1 = a(p1)+a(p2), c2 = a(p1); c1 hub > c2 hub
-    assert hub[1] > hub[2] > 0.0
-
-
-@pytest.mark.slowtier
-def test_hits_l2_normalized_and_partition_invariant(spark):
-    pairs = [(c, 10 + (c * j) % 5) for c in range(1, 8) for j in range(1, 4)]
-    orders, lineitem = _hits_frames(spark, pairs)
-    rows = graph.hits(
-        edges=graph.purchase_edges(orders, lineitem), iters=2
-    ).collect()
-    for role in ("authority", "hub"):
-        norm = math.sqrt(
-            sum(r.score**2 for r in rows if r.role == role)
-        )
-        assert abs(norm - 1.0) < 1e-6
-    rows2 = graph.hits(
-        edges=graph.purchase_edges(
-            orders.repartition(5), lineitem.repartition(3)
-        ),
-        iters=2,
-    ).collect()
-    assert sorted(map(tuple, rows2)) == sorted(map(tuple, rows))
 
 
 # ----------------------------------------------------- dup profile

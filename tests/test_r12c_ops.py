@@ -1,14 +1,15 @@
-"""Round-12 statistics/graph tests: exact-integer two-sample tests
-(KS, Mann-Whitney), Kendall tau-b, and single-source BFS depths."""
+"""Round-12 statistics tests: exact-integer two-sample tests (KS,
+Mann-Whitney) and Kendall tau-b (the BFS depth tests live in
+test_graph.py)."""
 
 from __future__ import annotations
 
 import pytest
 
-from banking_data_etl_pipeline_spark.operators import graph, profiling, timeseries
+from banking_data_etl_pipeline_spark.operators import profiling, timeseries
 from banking_data_etl_pipeline_spark.sources import tables
 
-from conftest import SF_DIR, lineitem_of
+from conftest import SF_DIR
 
 
 def _events(spark, rows):
@@ -97,37 +98,6 @@ def test_kendall_tau_discordant_series(spark):
     row = timeseries.kendall_tau(_ts_events(spark, rows)).collect()[0]
     assert row["discordant"] == 3 and row["concordant"] == 0
     assert row["tau_b"] == pytest.approx(-1.0)
-
-
-def test_bfs_depths_on_a_known_chain(spark):
-    """Parts 1-2, 2-3 each co-purchased twice form the chain 1-2-3;
-    part 9 pairs with 1 only once (pruned by min_weight=2) → depths
-    {1:0, 2:1, 3:2}, 9 unreachable and absent."""
-    li = lineitem_of(
-        spark,
-        enumerate([[1, 2], [1, 2], [2, 3], [2, 3], [1, 9]]),
-    )
-    got = {r["part"]: r["depth"] for r in graph.bfs_depths(li).collect()}
-    assert got == {1: 0, 2: 1, 3: 2}
-
-
-def test_bfs_depths_respects_max_depth_cap(spark):
-    """A 4-hop chain explored with max_depth=2 stops at depth 2."""
-    li = lineitem_of(
-        spark,
-        enumerate([[1, 2]] * 2 + [[2, 3]] * 2 + [[3, 4]] * 2 + [[4, 5]] * 2),
-    )
-    got = {
-        r["part"]: r["depth"]
-        for r in graph.bfs_depths(li, max_depth=2).collect()
-    }
-    assert got == {1: 0, 2: 1, 3: 2}
-
-
-def test_bfs_depths_empty_graph(spark):
-    """No repeated pair at min_weight=2 → empty result, no crash."""
-    li = lineitem_of(spark, enumerate([[1, 2], [3, 4]]))
-    assert graph.bfs_depths(li).count() == 0
 
 
 def test_cvm_two_sample_hand_computed(spark):

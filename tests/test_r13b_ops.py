@@ -1,8 +1,9 @@
-"""Round-13 operators, batch B: label propagation communities, the
-md5-relabeling randomization test, per-dimension embedding PSI.
+"""Round-13 operators, batch B: the md5-relabeling randomization
+test and per-dimension embedding PSI (the label propagation tests
+live in test_graph.py).
 
-All extension-brief coverage (graph / experiments / vector-drift
-families); the reference pipeline has no counterpart surface.
+All extension-brief coverage (experiments / vector-drift families);
+the reference pipeline has no counterpart surface.
 """
 
 from __future__ import annotations
@@ -14,43 +15,9 @@ from pyspark.sql import functions as F
 from banking_data_etl_pipeline_spark.operators import (
     expectations,
     experiments,
-    graph,
 )
 from banking_data_etl_pipeline_spark.sources import tables
 from conftest import SF_DIR
-
-
-def test_label_prop_hand_graph(spark):
-    """Two components: {1,2,3} a path, {10,11} an edge — with 4 rounds
-    every node adopts its component's min id. Edge weights >= 2 are
-    required, so each pair co-occurs in two orders."""
-    rows = []
-    oid = 0
-    for a, b in [(1, 2), (2, 3), (10, 11)]:
-        for _ in range(2):  # repeated co-purchase (min_weight=2)
-            oid += 1
-            rows += [(oid, a), (oid, b)]
-    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    got = {
-        r.part: r.community for r in graph.label_prop(li, iters=4).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_label_prop_monotone_and_partition(spark):
-    li = tables.load(spark, SF_DIR, "lineitem")
-    rows = graph.label_prop(li, iters=4).collect()
-    parts = {r.part for r in rows}
-    for r in rows:
-        # min-label can only shrink below the own id
-        assert r.community <= r.part
-        # every community label is itself a node
-        assert r.community in parts
-    # label of the community representative is itself (a min-label
-    # fixpoint property that holds at every round count)
-    comm = {r.part: r.community for r in rows}
-    for c in set(comm.values()):
-        assert comm[c] == c
 
 
 def _py_relabel(r: int, event_id: int, n_a: int, n: int) -> bool:

@@ -1,14 +1,11 @@
-"""Round-13 operators, batch C: the ATE/ATT/ATC summary, the native
-PNG tEXt chunk walk, the double-sweep graph diameter."""
+"""Round-13 operators, batch C: the ATE/ATT/ATC summary and the
+native PNG tEXt chunk walk (the graph diameter tests live in
+test_graph.py)."""
 
 from __future__ import annotations
 
-import pytest
-
-from pyspark.sql import functions as F
-
 from banking_data_etl_pipeline_spark.multimodal import binaryops
-from banking_data_etl_pipeline_spark.operators import experiments, graph
+from banking_data_etl_pipeline_spark.operators import experiments
 from banking_data_etl_pipeline_spark.sources import tables
 from conftest import SF_DIR
 
@@ -65,32 +62,3 @@ def test_png_text_chunks_walks_real_boundaries(spark):
     # synthesize_png itself is Arrow (zlib) — but the extractor adds
     # no second Python stage
     assert plan.count("MapInPandas") == 1, plan
-
-
-def test_graph_diameter_hand_graph(spark):
-    """A path 1-2-3-4 (each edge doubled for min_weight): sweep 1
-    from node 1 reaches 4 at depth 3; sweep 2 from 4 also spans 3 —
-    the lower bound equals the true diameter on a tree."""
-    rows = []
-    oid = 0
-    for a, b in [(1, 2), (2, 3), (3, 4)]:
-        for _ in range(2):
-            oid += 1
-            rows += [(oid, a), (oid, b)]
-    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    out = graph.graph_diameter(li).collect()[0]
-    assert (out.seed, out.ecc_seed, out.far_node, out.diameter_lb) == (
-        1, 3, 4, 3,
-    )
-
-
-@pytest.mark.slowtier
-def test_graph_diameter_bounds_bfs(spark):
-    li = tables.load(spark, SF_DIR, "lineitem")
-    out = graph.graph_diameter(li).collect()[0]
-    ecc1 = (
-        graph.bfs_depths(li).agg(F.max("depth").alias("m")).collect()[0].m
-    )
-    # the second sweep's eccentricity is >= the first's
-    assert out.ecc_seed == ecc1
-    assert out.diameter_lb >= out.ecc_seed

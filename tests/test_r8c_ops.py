@@ -203,22 +203,20 @@ def test_dp_counts_conserves_true_totals_and_clamps(spark):
         assert r.abs_err == round(abs(r.released_n - r.true_n), 6)
 
 
-def test_bucketed_join_plans_zero_exchanges_before_the_join(spark):
+def test_bucketed_join_plans_zero_exchanges_before_the_join(spark, tmp_path):
     import hashlib
     import os
-    import tempfile
 
     from banking_data_etl_pipeline_spark.sources import sinks
 
     orders = tables.load(spark, SF_DIR, "orders")
     customer = tables.load(spark, SF_DIR, "customer")
     fp = hashlib.md5(f"planpin|{os.getpid()}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"bjtest_{fp}")
     to = sinks.write_bucketed(
-        spark, orders, f"bj_o_{fp}", os.path.join(base, "o"), "o_custkey"
+        spark, orders, f"bj_o_{fp}", str(tmp_path / "o"), "o_custkey"
     )
     tc = sinks.write_bucketed(
-        spark, customer, f"bj_c_{fp}", os.path.join(base, "c"), "c_custkey"
+        spark, customer, f"bj_c_{fp}", str(tmp_path / "c"), "c_custkey"
     )
     o, c = spark.table(to), spark.table(tc)
     joined = o.join(c.hint("merge"), o["o_custkey"] == c["c_custkey"])

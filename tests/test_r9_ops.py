@@ -1,15 +1,14 @@
 """Round-9 operators: exact ROC AUC (Mann–Whitney with average-rank
-ties), calibration/reliability bins with ECE terms, k-core peeling.
-Value parity is the oracle gate's job; these pin hand-computed
-formulas on tiny frames and the structural invariants a hash match
-can't express (tie handling, bin clamping, peel cascades)."""
+ties), calibration/reliability bins with ECE terms (the k-core tests
+live in test_graph.py). Value parity is the oracle gate's job; these
+pin hand-computed formulas on tiny frames and the structural
+invariants a hash match can't express (tie handling, bin clamping)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from banking_data_etl_pipeline_spark.operators import graph, profiling
-from conftest import lineitem_of
+from banking_data_etl_pipeline_spark.operators import profiling
 
 
 # ------------------------------------------------------------- AUC
@@ -91,46 +90,6 @@ def test_calibration_perfectly_calibrated_score_has_zero_ece(spark):
     assert len(out) == 10
     assert all(r.gap == 0.0 and r.ece_term == 0.0 for r in out)
     assert sum(r.n for r in out) == 200
-
-
-# ----------------------------------------------------------- k-core
-
-
-def test_kcore_peels_pendant_keeps_triangle(spark):
-    # triangle {1,2,3} with every pair in 2 orders; pendant 4 hangs off
-    # node 1 (weight 2); pair (5,6) occurs once -> below min_weight
-    li = lineitem_of(
-        spark,
-        [(1, [1, 2, 3]), (2, [1, 2, 3]), (3, [1, 4]), (4, [1, 4]),
-         (5, [5, 6])],
-    )
-    out = graph.kcore(li, k=2, min_weight=2).collect()
-    assert [(r.part, r.degree) for r in out] == [(1, 2), (2, 2), (3, 2)]
-
-
-def test_kcore_cascade_empties_a_path(spark):
-    # path 1-2-3-4 (each edge in 2 orders): peeling ends cascades
-    # inward over multiple rounds until nothing has degree >= 2
-    li = lineitem_of(
-        spark,
-        [(1, [1, 2]), (2, [1, 2]), (3, [2, 3]), (4, [2, 3]),
-         (5, [3, 4]), (6, [3, 4])],
-    )
-    assert graph.kcore(li, k=2, min_weight=2).count() == 0
-
-
-def test_kcore_is_idempotent_fixpoint(spark):
-    # running kcore on a frame whose graph IS already a k-core changes
-    # nothing: the cycle 1-2-3-4-1 is exactly its own 2-core
-    li = lineitem_of(
-        spark,
-        [(1, [1, 2]), (2, [1, 2]), (3, [2, 3]), (4, [2, 3]),
-         (5, [3, 4]), (6, [3, 4]), (7, [1, 4]), (8, [1, 4])],
-    )
-    out = graph.kcore(li, k=2, min_weight=2).collect()
-    assert [(r.part, r.degree) for r in out] == [
-        (1, 2), (2, 2), (3, 2), (4, 2)
-    ]
 
 
 # --------------------------------------------------- hard negatives
