@@ -17,11 +17,11 @@ tables, entropy decode, IDCT). ``DecodeNotAvailable`` now guards only
 the generic any-format feature/resize stubs, which would require
 external codec libraries this container does not ship.
 
-Scale shape: payloads are large, so operators here are
-``mapInPandas`` (Arrow-batched, streaming per-partition iterator —
-never materializes a whole partition), and metadata-only analyses
-project the payload column away so the parquet scan can skip it
-entirely (column pruning — verified in tests via ReadSchema).
+Scale shape: payloads are large, so every Python-side lane runs
+through ``map_payloads`` (one per-payload function over Arrow batches,
+never a whole partition), and metadata-only analyses project the
+payload column away so the parquet scan can skip it entirely (column
+pruning — verified in tests via ReadSchema).
 """
 
 from __future__ import annotations
@@ -60,6 +60,33 @@ class DecodeNotAvailable(NotImplementedError):
     """Raised by full-decode paths: image/audio codecs are not
     installed in this environment. Container/header parsing does not
     need them and is real."""
+
+
+_NULLABLE_INT = {T.LongType: "Int64", T.IntegerType: "Int32"}
+
+
+def map_payloads(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """The batch loop of every payload lane: ``fn(*row)`` gets one row's
+    values in ``df``'s column order and returns an output tuple in
+    ``schema``'s field order, or None to drop the row. Arrow-batched
+    ``mapInPandas``, a streaming per-partition iterator: memory is
+    bounded by the batch, never the partition. Long and int fields
+    become the nullable pandas dtypes, so a NULL stays NULL and a
+    value over 2**53 stays exact (a float64 column would lose both).
+    ``fn`` must not raise on malformed bytes or a NULL payload: one
+    bad blob would fail the whole stage."""
+    names = schema.fieldNames()
+    dtypes = [_NULLABLE_INT.get(type(f.dataType), object) for f in schema.fields]
+
+    def lane(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [r for r in map(fn, *(pdf[c] for c in pdf.columns)) if r is not None]
+            cols = list(zip(*rows)) or [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=t) for n, c, t in zip(names, cols, dtypes)}
+            )
+
+    return df.mapInPandas(lane, schema)
 
 
 PNG_SIG = bytes.fromhex("89504e470d0a1a0a")
@@ -177,20 +204,33 @@ def media_metadata(media: DataFrame) -> DataFrame:
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-def parse_media_header(payload: bytes) -> dict:
+def _riff_chunks(payload: bytes | None) -> Iterator[tuple[bytes, int, int]]:
+    """(type, declared size, data offset) of each chunk of a RIFF/WAVE
+    payload, in order: the generic chunk walk (chunks pad to even), not
+    a fixed-44-byte assumption. Nothing for any other payload."""
+    if not payload or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        return
+    pos, n = 12, len(payload)
+    while pos + 8 <= n:
+        (csize,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
+        yield payload[pos : pos + 4], csize, pos + 8
+        pos += 8 + csize + (csize % 2)
+
+
+def parse_media_header(payload: bytes | None) -> dict:
     """Real container-header parse by byte offsets (no codec library):
 
     - PNG: signature check, IHDR width/height (big-endian u32 at
       offsets 16/20), channels from the color-type byte;
-    - RIFF/WAVE: generic chunk walk (not a fixed-44-byte assumption)
-      collecting the fmt fields and the data chunk size; duration from
-      data_size / block_align / sample_rate.
+    - RIFF/WAVE: the ``_riff_chunks`` walk collecting the fmt fields
+      and the data chunk size; duration from data_size / block_align /
+      sample_rate.
 
     Returns a dict with None for fields the kind doesn't have, or all
-    None when the payload matches neither container. A parser running
-    inside a Spark task must NEVER raise on malformed bytes (one bad
-    blob would fail the whole stage): truncated or corrupt payloads
-    degrade to Nones, never exceptions."""
+    None when the payload (or a NULL) matches neither container. A
+    parser running inside a Spark task must NEVER raise on malformed
+    bytes (one bad blob would fail the whole stage): truncated or
+    corrupt payloads degrade to Nones, never exceptions."""
     out = {
         "height": None,
         "width": None,
@@ -200,7 +240,8 @@ def parse_media_header(payload: bytes) -> dict:
         "duration_ms": None,
     }
     if (
-        len(payload) >= 26
+        payload
+        and len(payload) >= 26
         and payload[:8] == PNG_SIG
         and payload[12:16] == b"IHDR"
     ):
@@ -211,25 +252,20 @@ def parse_media_header(payload: bytes) -> dict:
         out["width"] = w
         out["channels"] = _PNG_CHANNELS.get(color_type)
         return out
-    if len(payload) >= 12 and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        pos, n = 12, len(payload)
-        fmt = None
-        data_size = None
-        while pos + 8 <= n:
-            ctype = payload[pos : pos + 4]
-            (csize,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            if ctype == b"fmt " and pos + 24 <= n:
-                fmt = struct.unpack("<HHIIHH", payload[pos + 8 : pos + 24])
-            elif ctype == b"data":
-                data_size = csize
-            pos += 8 + csize + (csize % 2)  # RIFF chunks pad to even
-        if fmt is not None:
-            _afmt, channels, rate, _brate, block_align, bits = fmt
-            out["channels"] = channels
-            out["sample_rate"] = rate
-            out["bits_per_sample"] = bits
-            if data_size is not None and block_align and rate:
-                out["duration_ms"] = data_size // block_align * 1000 // rate
+    fmt = None
+    data_size = None
+    for ctype, csize, at in _riff_chunks(payload):
+        if ctype == b"fmt " and at + 16 <= len(payload):
+            fmt = struct.unpack("<HHIIHH", payload[at : at + 16])
+        elif ctype == b"data":
+            data_size = csize
+    if fmt is not None:
+        _afmt, channels, rate, _brate, block_align, bits = fmt
+        out["channels"] = channels
+        out["sample_rate"] = rate
+        out["bits_per_sample"] = bits
+        if data_size is not None and block_align and rate:
+            out["duration_ms"] = data_size // block_align * 1000 // rate
     return out
 
 
@@ -249,48 +285,26 @@ EXTRACT_SCHEMA = T.StructType(
 
 
 def extract_features(media: DataFrame, decode_samples: bool = False) -> DataFrame:
-    """Arrow-batched feature extraction over payload bytes: a REAL
-    header parse per payload (``parse_media_header``) inside
-    ``mapInPandas`` — per-partition iterator of pandas batches, the
-    shape a full decoder needs (batch in, batch out, bounded memory).
+    """Feature extraction over payload bytes: a REAL header parse per
+    payload (``parse_media_header``) through ``map_payloads`` — batch
+    in, batch out, bounded memory, the shape a full decoder needs. A
+    NULL payload keeps its id and kind with NULL features.
     ``decode_samples=True`` would decode pixel/PCM data and raises
-    ``DecodeNotAvailable`` (no codecs in this environment)."""
+    ``DecodeNotAvailable`` at the call (no codecs in this
+    environment)."""
+    if decode_samples:
+        raise DecodeNotAvailable(
+            "image/audio codecs are not installed in this environment"
+        )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decode_samples:
-                raise DecodeNotAvailable(
-                    "image/audio codecs are not installed in this environment"
-                )
-            parsed = [parse_media_header(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "height": pd.array(
-                        [p["height"] for p in parsed], dtype="Int32"
-                    ),
-                    "width": pd.array(
-                        [p["width"] for p in parsed], dtype="Int32"
-                    ),
-                    "channels": pd.array(
-                        [p["channels"] for p in parsed], dtype="Int32"
-                    ),
-                    "sample_rate": pd.array(
-                        [p["sample_rate"] for p in parsed], dtype="Int32"
-                    ),
-                    "bits_per_sample": pd.array(
-                        [p["bits_per_sample"] for p in parsed], dtype="Int32"
-                    ),
-                    "duration_ms": pd.array(
-                        [p["duration_ms"] for p in parsed], dtype="Int64"
-                    ),
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                }
-            )
+    def features(mid, kind, payload):
+        if payload is None:
+            return (mid, kind) + (None,) * 7
+        return (mid, kind, *parse_media_header(payload).values(), len(payload))
 
-    cols = media.select("media_id", "kind", "payload")
-    return cols.mapInPandas(op, EXTRACT_SCHEMA)
+    return map_payloads(
+        media.select("media_id", "kind", "payload"), features, EXTRACT_SCHEMA
+    )
 
 
 def frame_sample(media: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
@@ -327,58 +341,46 @@ def resize_media(
     target_w: int = 64,
     decode_samples: bool = False,
 ) -> DataFrame:
-    """Arrow-batched image 'resize': parse the REAL PNG header for the
-    source dimensions, then shrink the encoded body to the byte budget
-    implied by the target/source area ratio and re-containerize (a
-    real deployment decodes, resamples and re-encodes inside the same
-    batch iterator; the Spark-side contract is identical: binary in,
-    binary-derived columns out, bounded memory per batch). Image rows
-    only — resizing has no meaning for audio.
+    """Image 'resize' through ``map_payloads``: parse the REAL PNG
+    header for the source dimensions, then shrink the encoded body to
+    the byte budget implied by the target/source area ratio and
+    re-containerize (a real deployment decodes, resamples and
+    re-encodes inside the same batch function; the Spark-side contract
+    is identical: binary in, binary-derived columns out, bounded memory
+    per batch). Image rows only — resizing has no meaning for audio.
 
     The fake keeps ``body_len * min(target_area / source_area, 1)``
     leading body bytes (int-truncated, >= 1) and reports the target
     dims, the new container size (body + PNG overhead) and the
     resized body's content hash, so downstream dedup/integrity checks
-    exercise real plumbing."""
+    exercise real plumbing. A NULL payload, one that is not a PNG
+    container or one with a zero dimension keeps its id and kind with
+    NULL derived columns. ``decode_samples=True`` raises
+    ``DecodeNotAvailable`` at the call."""
     import hashlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decode_samples:
-                raise DecodeNotAvailable(
-                    "image/audio codecs are not installed in this environment"
-                )
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                hdr = parse_media_header(payload)
-                h, w = hdr["height"], hdr["width"]
-                (body_len,) = struct.unpack(">I", payload[33:37])
-                body = payload[41 : 41 + body_len]
-                ratio = min((target_h * target_w) / (h * w), 1.0)
-                n_keep = max(1, int(len(body) * ratio))
-                rows.append(
-                    (
-                        mid, kind, target_h, target_w,
-                        n_keep + PNG_OVERHEAD,
-                        hashlib.sha256(body[:n_keep]).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "height", "width",
-                    "resized_bytes", "resized_sha",
-                ],
-            ).astype(
-                {"height": "int32", "width": "int32", "resized_bytes": "int64"}
-            )
+    if decode_samples:
+        raise DecodeNotAvailable(
+            "image/audio codecs are not installed in this environment"
+        )
 
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "kind", "payload")
-        .mapInPandas(op, RESIZE_SCHEMA)
+    def resize(mid, kind, payload):
+        hdr = parse_media_header(payload)
+        h, w = hdr["height"], hdr["width"]
+        if not h or not w or len(payload) < 37:
+            return (mid, kind) + (None,) * 4
+        (body_len,) = struct.unpack(">I", payload[33:37])
+        body = payload[41 : 41 + body_len]
+        ratio = min((target_h * target_w) / (h * w), 1.0)
+        n_keep = max(1, int(len(body) * ratio))
+        return (
+            mid, kind, target_h, target_w, n_keep + PNG_OVERHEAD,
+            hashlib.sha256(body[:n_keep]).hexdigest(),
+        )
+
+    images = media.filter(F.col("kind") == "image")
+    return map_payloads(
+        images.select("media_id", "kind", "payload"), resize, RESIZE_SCHEMA
     )
 
 
@@ -427,9 +429,9 @@ def parse_ppm(payload: bytes) -> tuple | None:
     separated by whitespace, ``#`` comments running to end-of-line,
     exactly one whitespace byte after maxval), then the raw RGB
     raster. Returns (width, height, maxval, raster) or None on any
-    malformation — a parser inside a Spark task never raises on bad
-    bytes (one corrupt blob must not fail the stage)."""
-    if len(payload) < 2 or payload[:2] != b"P6":
+    malformation or a NULL — a parser inside a Spark task never raises
+    on bad bytes (one corrupt blob must not fail the stage)."""
+    if not payload or payload[:2] != b"P6":
         return None
     pos, n = 2, len(payload)
     fields = []
@@ -479,45 +481,24 @@ def decode_ppm(media: DataFrame) -> DataFrame:
     raster as a (n_px, 3) uint8 array, and reduce to exact per-channel
     pixel sums (bit-identical on any engine — no float means).
 
-    Arrow-batched ``mapInPandas``: numpy ``frombuffer`` is zero-copy
-    over the Arrow buffer, the per-batch reduce keeps memory bounded
-    at batch size regardless of raster size. Malformed payloads
-    degrade to a row of null stats, never an exception.
+    Runs through ``map_payloads``: numpy ``frombuffer`` is zero-copy
+    over the payload bytes. Malformed or NULL payloads degrade to a row
+    of null stats, never an exception.
 
     Returns (media_id, width, height, maxval, n_px, sum_r, sum_g,
     sum_b)."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                parsed = parse_ppm(bytes(payload))
-                if parsed is None:
-                    rows.append((mid,) + (None,) * 7)
-                    continue
-                w, h, maxval, raster = parsed
-                px = np.frombuffer(raster, np.uint8).reshape(-1, 3)
-                s = px.sum(axis=0, dtype=np.int64)
-                rows.append(
-                    (mid, w, h, maxval, w * h, int(s[0]), int(s[1]), int(s[2]))
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "maxval",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-            for c, t in (("width", "Int32"), ("height", "Int32"),
-                         ("maxval", "Int32"), ("n_px", "Int64"),
-                         ("sum_r", "Int64"), ("sum_g", "Int64"),
-                         ("sum_b", "Int64")):
-                out[c] = pd.array(out[c], dtype=t)
-            yield out
+    def stats(mid, payload):
+        parsed = parse_ppm(payload)
+        if parsed is None:
+            return (mid,) + (None,) * 7
+        w, h, maxval, raster = parsed
+        s = np.frombuffer(raster, np.uint8).reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        return mid, w, h, maxval, w * h, int(s[0]), int(s[1]), int(s[2])
 
-    return media.select("media_id", "payload").mapInPandas(
-        op, DECODE_PPM_SCHEMA
+    return map_payloads(
+        media.select("media_id", "payload"), stats, DECODE_PPM_SCHEMA
     )
 
 
@@ -534,69 +515,44 @@ DECODE_PCM_SCHEMA = T.StructType(
 
 def decode_pcm(media: DataFrame) -> DataFrame:
     """REAL audio decode for the WAV lane: PCM needs no codec — the
-    data chunk IS the samples. Walk the RIFF chunks (the same generic
-    walk as ``parse_media_header``, not a fixed-offset assumption) to
-    the ``data`` chunk, reinterpret it as little-endian int16 mono
-    samples, and reduce to exact integer signal statistics: sample
-    count, amplitude sum, peak |amplitude|, and zero crossings
-    (adjacent pairs whose signs differ, negatives vs non-negatives).
+    data chunk IS the samples. Walk the RIFF chunks (``_riff_chunks``,
+    the walk ``parse_media_header`` uses) to the first ``data`` chunk,
+    reinterpret it as little-endian int16 mono samples, and reduce to
+    exact integer signal statistics: sample count, amplitude sum, peak
+    |amplitude|, and zero crossings (adjacent pairs whose signs differ,
+    negatives vs non-negatives).
 
     A trailing odd byte (the synthesized body is text-derived, so odd
     lengths happen) is not a sample and is dropped — ``n // 2``
     samples, exactly what the DuckDB twin computes. Rows whose data
     chunk yields zero samples are skipped (no signal to describe);
-    non-WAV or malformed payloads are skipped too, never raised on.
+    non-WAV, malformed or NULL payloads are skipped too, never raised
+    on.
 
-    Arrow-batched ``mapInPandas``; numpy ``frombuffer`` is zero-copy.
+    Runs through ``map_payloads``; numpy ``frombuffer`` is zero-copy.
     Returns (media_id, n_samples, sum_amp, peak_abs, zero_cross)."""
     import numpy as np
 
-    def data_chunk(payload: bytes) -> bytes | None:
-        if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+    def stats(mid, payload):
+        data = next(
+            (payload[at : at + csize]
+             for ctype, csize, at in _riff_chunks(payload) if ctype == b"data"),
+            b"",
+        )
+        if len(data) < 2:
             return None
-        pos, n = 12, len(payload)
-        while pos + 8 <= n:
-            ctype = payload[pos : pos + 4]
-            (csize,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            if ctype == b"data":
-                return payload[pos + 8 : pos + 8 + min(csize, n - pos - 8)]
-            pos += 8 + csize + (csize % 2)
-        return None
+        s = np.frombuffer(data[: len(data) // 2 * 2], "<i2")
+        s64 = s.astype(np.int64)
+        return (
+            mid,
+            len(s),
+            int(s64.sum()),
+            int(np.abs(s64).max()),
+            int(np.count_nonzero((s[1:] < 0) != (s[:-1] < 0))),
+        )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = data_chunk(bytes(payload))
-                if data is None or len(data) < 2:
-                    continue
-                s = np.frombuffer(data[: len(data) // 2 * 2], "<i2")
-                s64 = s.astype(np.int64)
-                rows.append(
-                    (
-                        mid,
-                        len(s),
-                        int(s64.sum()),
-                        int(np.abs(s64).max()),
-                        int(np.count_nonzero((s[1:] < 0) != (s[:-1] < 0))),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "sum_amp", "peak_abs",
-                    "zero_cross",
-                ],
-            ).astype(
-                {
-                    "media_id": "int64", "n_samples": "int64",
-                    "sum_amp": "int64", "peak_abs": "int32",
-                    "zero_cross": "int64",
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        op, DECODE_PCM_SCHEMA
+    return map_payloads(
+        media.select("media_id", "payload"), stats, DECODE_PCM_SCHEMA
     )
 
 
@@ -706,8 +662,8 @@ def synthesize_png(docs: DataFrame) -> DataFrame:
     The IDAT stream is split into ≤64-byte chunks (multi-IDAT is
     legal PNG and a decoder must concatenate before inflating — the
     spec shape a single-chunk shortcut would miss). zlib forces this
-    lane off the pure-Column path: Arrow-batched ``mapInPandas``,
-    compression per payload, memory bounded at batch size.
+    lane off the pure-Column path: ``map_payloads``, compression per
+    payload, memory bounded at batch size.
 
     A ``tEXt`` ancillary chunk (key "Source", value = the document's
     source string) sits between IHDR and the IDAT run — real PNG
@@ -719,68 +675,23 @@ def synthesize_png(docs: DataFrame) -> DataFrame:
     identical to what ``synthesize_ppm`` hashes for the same doc)."""
     import hashlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, src in zip(pdf["doc_id"], pdf["source"]):
-                d = int(d)
-                w, h = 8 + d % 13, 8 + d % 11
-                n = w * h * 3
-                raw = bytes((d * 131 + i * 17) % 256 for i in range(n))
-                z = zlib.compress(
-                    _png_filter_lines(raw, w, h, d), 6
-                )
-                ihdr = (
-                    struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-                )
-                payload = (
-                    PNG_SIG
-                    + _png_chunk_bytes(b"IHDR", ihdr)
-                    + _png_chunk_bytes(
-                        b"tEXt", b"Source\x00" + str(src).encode()
-                    )
-                )
-                for off in range(0, len(z), 64):
-                    payload += _png_chunk_bytes(
-                        b"IDAT", z[off : off + 64]
-                    )
-                payload += _png_chunk_bytes(b"IEND", b"")
-                rows.append(
-                    (
-                        d,
-                        "image",
-                        payload,
-                        (
-                            "image/png",
-                            len(payload),
-                            hashlib.sha256(raw).hexdigest(),
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "meta"]
-            )
+    def synth(d, src):
+        w, h = 8 + d % 13, 8 + d % 11
+        raw = bytes((d * 131 + i * 17) % 256 for i in range(w * h * 3))
+        z = zlib.compress(_png_filter_lines(raw, w, h, d), 6)
+        ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
+        payload = (
+            PNG_SIG
+            + _png_chunk_bytes(b"IHDR", ihdr)
+            + _png_chunk_bytes(b"tEXt", b"Source\x00" + str(src).encode())
+        )
+        for off in range(0, len(z), 64):
+            payload += _png_chunk_bytes(b"IDAT", z[off : off + 64])
+        payload += _png_chunk_bytes(b"IEND", b"")
+        meta = ("image/png", len(payload), hashlib.sha256(raw).hexdigest())
+        return d, "image", payload, meta
 
-    return fan_out(docs.select("doc_id", "source")).mapInPandas(op, SYNTH_PNG_SCHEMA)
-
-
-SYNTH_PNG_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                    T.StructField("sha256", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
+    return map_payloads(fan_out(docs.select("doc_id", "source")), synth, MEDIA_SCHEMA)
 
 
 def parse_png(payload: bytes) -> tuple | None:
@@ -788,8 +699,8 @@ def parse_png(payload: bytes) -> tuple | None:
     verification on every chunk, IHDR shape checks (8-bit truecolor,
     deflate, filter method 0, no interlace), multi-IDAT concatenation
     up to IEND. Returns (width, height, zdata) or None on any
-    malformation."""
-    if len(payload) < 8 or payload[:8] != PNG_SIG:
+    malformation or a NULL."""
+    if not payload or payload[:8] != PNG_SIG:
         return None
     pos, n = 8, len(payload)
     width = height = None
@@ -844,56 +755,40 @@ def decode_png(media: DataFrame) -> DataFrame:
     types (``_png_unfilter``), then the same exact per-channel pixel
     sums as ``decode_ppm`` (integer reduce — no float means).
 
-    Arrow-batched ``mapInPandas``; per-batch work bounded by batch
-    size. Malformed payloads (bad CRC, truncated stream, wrong
+    Runs through ``map_payloads``; per-batch work bounded by batch
+    size. Malformed or NULL payloads (bad CRC, truncated stream, wrong
     inflated length, unknown filter type, zlib errors) degrade to a
     row of null stats, never an exception.
 
     Returns (media_id, width, height, n_px, sum_r, sum_g, sum_b)."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                parsed = parse_png(bytes(payload))
-                raw = None
-                if parsed is not None:
-                    w, h, zdata = parsed
-                    try:
-                        filtered = zlib.decompress(zdata)
-                    except zlib.error:
-                        filtered = None
-                    if filtered is not None:
-                        raw = _png_unfilter(filtered, w, h)
-                if raw is None:
-                    rows.append((mid,) + (None,) * 6)
-                    continue
-                px = np.frombuffer(raw, np.uint8).reshape(-1, 3)
-                s = px.sum(axis=0, dtype=np.int64)
-                rows.append(
-                    (mid, w, h, w * h, int(s[0]), int(s[1]), int(s[2]))
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-            for c, t in (("width", "Int32"), ("height", "Int32"),
-                         ("n_px", "Int64"), ("sum_r", "Int64"),
-                         ("sum_g", "Int64"), ("sum_b", "Int64")):
-                out[c] = pd.array(out[c], dtype=t)
-            yield out
+    def stats(mid, payload):
+        parsed = parse_png(payload)
+        raw = None
+        if parsed is not None:
+            w, h, zdata = parsed
+            try:
+                raw = _png_unfilter(zlib.decompress(zdata), w, h)
+            except zlib.error:
+                pass
+        if raw is None:
+            return (mid,) + (None,) * 6
+        s = np.frombuffer(raw, np.uint8).reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        return mid, w, h, w * h, int(s[0]), int(s[1]), int(s[2])
 
-    return media.select("media_id", "payload").mapInPandas(
-        op, DECODE_PNG_SCHEMA
+    return map_payloads(
+        media.select("media_id", "payload"), stats, DECODE_PNG_SCHEMA
     )
 
 
-PHASH_SCHEMA = (
-    "media_id long, kind string, n_body bigint, phash string"
+PHASH_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("kind", T.StringType()),
+        T.StructField("n_body", T.LongType()),
+        T.StructField("phash", T.StringType()),
+    ]
 )
 
 
@@ -912,8 +807,9 @@ def block_mean_hash(media: DataFrame, n_blocks: int = 16) -> DataFrame:
     in here once real codecs exist (``DecodeNotAvailable``); the
     byte-level hash is the honest codec-free variant, not a fake.
 
-    Arrow-batched ``mapInPandas`` (numpy bincount per payload) — one
-    map-only pass, no shuffle; the hash is ``n_blocks`` chars.
+    Runs through ``map_payloads`` (numpy bincount per payload) — one
+    map-only pass, no shuffle; the hash is ``n_blocks`` chars. A NULL
+    payload keeps its id and kind with a NULL size and hash.
 
     Returns (media_id, kind, n_body, phash)."""
     import numpy as np
@@ -923,35 +819,23 @@ def block_mean_hash(media: DataFrame, n_blocks: int = 16) -> DataFrame:
             return payload[41 : len(payload) - 16]  # strip crc + IEND
         return payload[44:]  # canonical WAV header
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes, sizes = [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                body = np.frombuffer(body_of(bytes(payload), kind), np.uint8)
-                n = len(body)
-                sizes.append(n)
-                if n == 0:
-                    hashes.append("0" * n_blocks)
-                    continue
-                blocks = (np.arange(n, dtype=np.int64) * n_blocks) // n
-                sums = np.bincount(
-                    blocks, weights=body.astype(np.int64), minlength=n_blocks
-                ).astype(np.int64)
-                cnts = np.bincount(blocks, minlength=n_blocks).astype(np.int64)
-                total = int(body.sum())
-                bits = (sums * n) > (total * cnts)
-                hashes.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_body": pd.array(sizes, dtype="int64"),
-                    "phash": hashes,
-                }
-            )
+    def phash(mid, kind, payload):
+        if payload is None:
+            return mid, kind, None, None
+        body = np.frombuffer(body_of(payload, kind), np.uint8)
+        n = len(body)
+        if n == 0:
+            return mid, kind, 0, "0" * n_blocks
+        blocks = (np.arange(n, dtype=np.int64) * n_blocks) // n
+        sums = np.bincount(
+            blocks, weights=body.astype(np.int64), minlength=n_blocks
+        ).astype(np.int64)
+        cnts = np.bincount(blocks, minlength=n_blocks).astype(np.int64)
+        bits = (sums * n) > (int(body.sum()) * cnts)
+        return mid, kind, n, "".join("1" if b else "0" for b in bits)
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        op, PHASH_SCHEMA
+    return map_payloads(
+        media.select("media_id", "kind", "payload"), phash, PHASH_SCHEMA
     )
 
 

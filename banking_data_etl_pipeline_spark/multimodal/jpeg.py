@@ -34,22 +34,21 @@ exercised by tests instead (bitstream fidelity: decoded coefficient
 blocks equal the encoder's quantized blocks exactly on arbitrary
 rasters, where reconstruction is lossy by design).
 
-Scale shape: Arrow-batched ``mapInPandas`` like every payload lane —
-per-batch memory bounded, streaming iterator, metadata never requires
-a decode. Malformed payloads degrade to null rows, never exceptions.
+Scale shape: each lane is one per-payload function run by
+``binaryops.map_payloads``, and metadata never requires a decode.
+Malformed or NULL payloads degrade to null rows, never exceptions.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..session import fan_out
+from .binaryops import MEDIA_SCHEMA, map_payloads
 
 # ---------------------------------------------------------------- tables
 
@@ -396,7 +395,7 @@ def decode_gray_jpeg(payload: bytes):
 
 
 def _decode_inner(payload: bytes):
-    if len(payload) < 4 or payload[:2] != b"\xff\xd8":
+    if payload is None or len(payload) < 4 or payload[:2] != b"\xff\xd8":
         return None
     pos = 2
     quant: dict[int, list[int]] = {}
@@ -487,24 +486,6 @@ def _decode_scan(payload, pos, w, h, dc_lut, ac_lut, qt):
 # --------------------------------------------------------------- spark
 
 
-SYNTH_JPEG_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                    T.StructField("sha256", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 DECODE_JPEG_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -536,81 +517,37 @@ def synthesize_jpeg(docs: DataFrame) -> DataFrame:
     entropy coding); the content is what makes the check exact."""
     import hashlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw_, bh_ = _blocks_of(d)
-                px = np.zeros((bh_ * 8, bw_ * 8), dtype=np.uint8)
-                for by in range(bh_):
-                    for bx in range(bw_):
-                        px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            _block_val(d, bx, by)
-                        )
-                payload = encode_gray_jpeg(px)
-                rows.append(
-                    (
-                        d,
-                        "image",
-                        payload,
-                        (
-                            "image/jpeg",
-                            len(payload),
-                            hashlib.sha256(px.tobytes()).hexdigest(),
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "meta"]
-            )
+    def synth(d):
+        bw_, bh_ = _blocks_of(d)
+        px = np.zeros((bh_ * 8, bw_ * 8), dtype=np.uint8)
+        for by in range(bh_):
+            for bx in range(bw_):
+                px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = _block_val(d, bx, by)
+        payload = encode_gray_jpeg(px)
+        meta = ("image/jpeg", len(payload), hashlib.sha256(px.tobytes()).hexdigest())
+        return d, "image", payload, meta
 
-    return fan_out(docs.select("doc_id")).mapInPandas(op, SYNTH_JPEG_SCHEMA)
+    return map_payloads(fan_out(docs.select("doc_id")), synth, MEDIA_SCHEMA)
 
 
 def decode_jpeg(media: DataFrame) -> DataFrame:
     """REAL JPEG decode: marker walk, in-stream table construction,
     Huffman entropy decode with DC prediction + EXTEND, dequantize,
     zigzag re-order, float IDCT, level shift — per-image exact luma
-    stats. Malformed payloads degrade to null rows."""
+    stats. Malformed or NULL payloads degrade to null rows."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_gray_jpeg(bytes(payload))
-                if px is None:
-                    rows.append((mid,) + (None,) * 6)
-                    continue
-                h, w = px.shape
-                rows.append(
-                    (
-                        mid,
-                        w,
-                        h,
-                        w * h,
-                        int(px.sum(dtype=np.int64)),
-                        int(px.min()),
-                        int(px.max()),
-                    )
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_px",
-                    "sum_luma", "min_luma", "max_luma",
-                ],
-            )
-            for c, t in (
-                ("width", "Int32"), ("height", "Int32"), ("n_px", "Int64"),
-                ("sum_luma", "Int64"), ("min_luma", "Int32"),
-                ("max_luma", "Int32"),
-            ):
-                out[c] = pd.array(out[c], dtype=t)
-            yield out
+    def stats(mid, payload):
+        px = decode_gray_jpeg(payload)
+        if px is None:
+            return (mid,) + (None,) * 6
+        h, w = px.shape
+        return (
+            mid, w, h, w * h, int(px.sum(dtype=np.int64)),
+            int(px.min()), int(px.max()),
+        )
 
-    return media.select("media_id", "payload").mapInPandas(
-        op, DECODE_JPEG_SCHEMA
+    return map_payloads(
+        media.select("media_id", "payload"), stats, DECODE_JPEG_SCHEMA
     )
 
 
@@ -699,7 +636,7 @@ def decode_color_jpeg(payload: bytes):
 
 
 def _decode_color_inner(payload: bytes):
-    if len(payload) < 4 or payload[:2] != b"\xff\xd8":
+    if payload is None or len(payload) < 4 or payload[:2] != b"\xff\xd8":
         return None
     pos = 2
     quant: dict[int, list[int]] = {}
@@ -851,94 +788,46 @@ def synthesize_color_jpeg(docs: DataFrame) -> DataFrame:
     decode statistics from this arithmetic with no byte access."""
     import hashlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw_, bh_ = _mcus_of(d)
-                yp = np.zeros((bh_ * 16, bw_ * 16), dtype=np.uint8)
-                for by in range(bh_ * 2):
-                    for bx in range(bw_ * 2):
-                        yp[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            _block_val(d, bx, by)
-                        )
-                cbp = np.zeros((bh_ * 8, bw_ * 8), dtype=np.uint8)
-                crp = np.zeros((bh_ * 8, bw_ * 8), dtype=np.uint8)
-                for my in range(bh_):
-                    for mx in range(bw_):
-                        cbp[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-                            _chroma_val(d, mx, my, 0)
-                        )
-                        crp[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-                            _chroma_val(d, mx, my, 1)
-                        )
-                payload = encode_color_jpeg(yp, cbp, crp)
-                rows.append(
-                    (
-                        d,
-                        "image",
-                        payload,
-                        (
-                            "image/jpeg",
-                            len(payload),
-                            hashlib.sha256(
-                                yp.tobytes() + cbp.tobytes() + crp.tobytes()
-                            ).hexdigest(),
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "meta"]
-            )
+    def synth(d):
+        bw_, bh_ = _mcus_of(d)
+        yp = np.zeros((bh_ * 16, bw_ * 16), dtype=np.uint8)
+        for by in range(bh_ * 2):
+            for bx in range(bw_ * 2):
+                yp[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = _block_val(d, bx, by)
+        cbp = np.zeros((bh_ * 8, bw_ * 8), dtype=np.uint8)
+        crp = np.zeros((bh_ * 8, bw_ * 8), dtype=np.uint8)
+        for my in range(bh_):
+            for mx in range(bw_):
+                mcu = (slice(my * 8, my * 8 + 8), slice(mx * 8, mx * 8 + 8))
+                cbp[mcu] = _chroma_val(d, mx, my, 0)
+                crp[mcu] = _chroma_val(d, mx, my, 1)
+        payload = encode_color_jpeg(yp, cbp, crp)
+        sha = hashlib.sha256(yp.tobytes() + cbp.tobytes() + crp.tobytes())
+        return d, "image", payload, ("image/jpeg", len(payload), sha.hexdigest())
 
-    return fan_out(docs.select("doc_id")).mapInPandas(op, SYNTH_JPEG_SCHEMA)
+    return map_payloads(fan_out(docs.select("doc_id")), synth, MEDIA_SCHEMA)
 
 
 def decode_color_jpeg_stats(media: DataFrame) -> DataFrame:
     """REAL 4:2:0 decode over the payload column: interleaved-MCU
     entropy decode with three DC predictors, per-component dequant +
-    IDCT — per-image exact plane statistics. Malformed payloads
+    IDCT — per-image exact plane statistics. Malformed or NULL payloads
     degrade to null rows."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decode_color_jpeg(bytes(payload))
-                if dec is None:
-                    rows.append((mid,) + (None,) * 8)
-                    continue
-                yp, cbp, crp = dec
-                h, w = yp.shape
-                rows.append(
-                    (
-                        mid,
-                        w,
-                        h,
-                        w * h,
-                        int(yp.sum(dtype=np.int64)),
-                        int(cbp.sum(dtype=np.int64)),
-                        int(crp.sum(dtype=np.int64)),
-                        int(yp.min()),
-                        int(yp.max()),
-                    )
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_px",
-                    "sum_y", "sum_cb", "sum_cr", "min_y", "max_y",
-                ],
-            )
-            for c, t in (
-                ("width", "Int32"), ("height", "Int32"), ("n_px", "Int64"),
-                ("sum_y", "Int64"), ("sum_cb", "Int64"),
-                ("sum_cr", "Int64"), ("min_y", "Int32"), ("max_y", "Int32"),
-            ):
-                out[c] = pd.array(out[c], dtype=t)
-            yield out
+    def stats(mid, payload):
+        dec = decode_color_jpeg(payload)
+        if dec is None:
+            return (mid,) + (None,) * 8
+        yp, cbp, crp = dec
+        h, w = yp.shape
+        return (
+            mid, w, h, w * h,
+            int(yp.sum(dtype=np.int64)),
+            int(cbp.sum(dtype=np.int64)),
+            int(crp.sum(dtype=np.int64)),
+            int(yp.min()), int(yp.max()),
+        )
 
-    return media.select("media_id", "payload").mapInPandas(
-        op, DECODE_COLOR_SCHEMA
+    return map_payloads(
+        media.select("media_id", "payload"), stats, DECODE_COLOR_SCHEMA
     )

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing, texttools, vectors
-from ..session import conf_override, fan_out, iterate
+from ..session import conf_override, fan_out, iterate, pin_for_query
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -81,14 +81,14 @@ def _minhash_banded(
     sig = hashing.minhash_components(
         [F.col(f"_md{p}") for p in range(n_passes)], num_hashes
     )
-    # persist: the bucket join would otherwise run the whole signature
-    # computation once per side (signatures are ~100 B/doc — persisting
-    # them is the standard move at any scale). persist=False for
-    # STREAMING callers — the computation is pure map-only expressions,
-    # so it is stream-legal, but caching is not.
+    # persist for the query scope: the bucket join would otherwise run
+    # the whole signature computation once per side (signatures are
+    # ~100 B/doc — persisting them is the standard move at any scale).
+    # persist=False for STREAMING callers — the computation is pure
+    # map-only expressions, so it is stream-legal, but caching is not.
     sigd = md_stage.select(F.col(id_col), F.array(*sig).alias("sig"))
     if persist:
-        sigd = sigd.persist()
+        sigd = pin_for_query(sigd)
     band_keys = hashing.band_keys(
         [F.col("sig")[i] for i in range(num_hashes)], bands, rows
     )
@@ -166,10 +166,10 @@ def minhash_lsh_incremental(
     them to review.
 
     Cache note: like ``minhash_lsh_pairs``, the signature tables stay
-    session-cached for the returned (lazy) result to consume — the
-    bench/parity harnesses clearCache between queries, and the
-    production deployment replaces the corpus-side cache with the
-    persisted parquet signatures described above."""
+    persisted for the returned (lazy) result to consume until the
+    query scope closes (``session.pin_for_query``); the production
+    deployment replaces the corpus-side cache with the persisted
+    parquet signatures described above."""
     kb = _minhash_banded(batch, text_col, id_col, num_hashes, bands).alias("a")
     kc = _minhash_banded(corpus, text_col, id_col, num_hashes, bands).alias("b")
     pairs = (
@@ -973,8 +973,8 @@ def winnow_pairs(
     )
     # persist the selected fingerprints: three consumers (hot-key
     # screen, per-doc counts, the pair self-join) would each re-run
-    # the double window pass otherwise. Caller-owned, like bm25's
-    # postings (retrieval.py) — unpersist or clearCache when done
+    # the double window pass otherwise. Caller-owned, like
+    # ``graph.triangle_counts`` — unpersist or clearCache when done
     # (bench.py and the parity gate already do).
     fps = (
         marked.filter("sel").select("doc", "h").distinct().persist()
@@ -1255,10 +1255,10 @@ def tfidf_allpairs(
     on a capped audit slice) as the exact arm.
 
     The result (``top`` rows) is localCheckpoint-MATERIALIZED before
-    returning and the intermediate weighted-postings cache is
-    released — callers get a bounded frame and no dangling persisted
-    blocks (r11 advice: the caller-owned persist silently accumulated
-    across the bench battery).
+    returning, pinned to the query scope (``session.pin_for_query``),
+    and the intermediate weighted-postings cache is released —
+    callers get a bounded frame and no stored blocks that outlive the
+    query.
 
     Float parity: w = tf · ln(N/df) is one shared double expression;
     per-term products w_a·w_b and squares ride DECIMAL(28,12) so the
@@ -1394,8 +1394,9 @@ def tfidf_allpairs(
         )
         .limit(top)
     )
-    # materialize the <= top rows, then release the postings cache
-    out = out.localCheckpoint()
+    # materialize the <= top rows for the query scope, then release
+    # the postings cache
+    out = pin_for_query(out.localCheckpoint())
     weighted.unpersist()
     return out
 

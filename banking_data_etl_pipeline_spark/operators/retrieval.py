@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import texttools, vectors
-from ..session import iterate
+from ..session import iterate, pin_for_query
 
 # shared verbatim with oracle.BM25_TOPK_Q — evaluated over double
 # columns (tf, df, dl, n_docs, avgdl) in both engines, so the doubles
@@ -108,13 +108,11 @@ def bm25_topk(
 
     Returns (query_id, doc_id, score, rank), rank 1..k per query by
     (score desc, doc_id asc)."""
-    # persist the postings: four consumers (tf, dl, df, vocab ranking)
-    # would each re-run tokenize+explode otherwise. Caller-owned, like
-    # triangle_counts — unpersist or clearCache when done (bench.py
-    # and the parity gate already do).
-    tk = docs.select(
-        F.col(id_col), F.explode(texttools.tokens(F.col(text_col))).alias("token")
-    ).persist()
+    # persist the postings for the query scope: four consumers (tf,
+    # dl, df, vocab ranking) would each re-run tokenize+explode
+    # otherwise.
+    token = F.explode(texttools.tokens(F.col(text_col))).alias("token")
+    tk = pin_for_query(docs.select(F.col(id_col), token))
     tf = tk.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
     dl = tk.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     dfreq = (
@@ -890,8 +888,9 @@ def rm3_topk(
     allterms = qterms.select(
         "query_id", "token", F.lit(1.0).alias("w")
     ).unionByName(exp_terms)
-    # Caller-owned postings cache (tk), like bm25_topk — unpersist or
-    # clearCache when done (bench.py and the parity gate already do).
+    # Caller-owned postings cache (tk), like hybrid_rank_fusion's —
+    # unpersist or clearCache when done (bench.py and the parity gate
+    # already do).
     return _topk(_score(allterms, weighted=True), k)
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import conf_override
+from ..session import conf_override, pin_for_query
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -289,7 +289,8 @@ def stateful_totals_recovery(
 
     Run artifacts (source dir, checkpoint, sink) live in a private
     temp dir deleted before returning; the terminal frame is
-    localCheckpoint-materialized first (user-count-sized)."""
+    localCheckpoint-materialized first (user-count-sized) and pinned
+    to the query scope (``session.pin_for_query``)."""
     import os
     import shutil
     import tempfile
@@ -318,9 +319,9 @@ def stateful_totals_recovery(
                 .option("path", sink)
                 .option("checkpointLocation", ckpt),
             )
-        return _terminal_user_totals(
-            spark.read.parquet(sink)
-        ).localCheckpoint()
+        return pin_for_query(
+            _terminal_user_totals(spark.read.parquet(sink)).localCheckpoint()
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -378,12 +379,11 @@ def _drain_interval_join(
     over the landed files. The aggregated result (keyed per event —
     orders of magnitude smaller than the join output) is
     localCheckpoint-materialized so the scratch dir can be deleted
-    before returning; its blocks live in executor storage, freed by
-    the ContextCleaner once the frame is dropped (bench.py's per-query
-    GC nudge covers the battery). The landed files are read with the
-    join's declared schema: a feed with no input runs no micro-batch
-    and lands no data file, and schema inference over an empty sink
-    would fail."""
+    before returning; its blocks live in executor storage until the
+    query scope closes (``session.pin_for_query``). The landed files
+    are read with the join's declared schema: a feed with no input
+    runs no micro-batch and lands no data file, and schema inference
+    over an empty sink would fail."""
     import os
     import shutil
     import tempfile
@@ -400,9 +400,9 @@ def _drain_interval_join(
             .option("checkpointLocation", ckpt),
             16,
         )
-        return finalize(
-            spark.read.schema(joined.schema).parquet(sink)
-        ).localCheckpoint()
+        return pin_for_query(
+            finalize(spark.read.schema(joined.schema).parquet(sink)).localCheckpoint()
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1279,7 +1279,7 @@ def msprt_recovery(
 
     Returns the msprt_stream row shape; the result is
     localCheckpoint-materialized (day-count-sized) before the temp
-    workspace is deleted."""
+    workspace is deleted, and pinned to the query scope."""
     import os
     import shutil
     import tempfile
@@ -1311,9 +1311,9 @@ def msprt_recovery(
                 .option("checkpointLocation", ckpt),
                 16,
             )
-        return _msprt_readout(
-            spark.read.parquet(sink), alpha
-        ).localCheckpoint()
+        return pin_for_query(
+            _msprt_readout(spark.read.parquet(sink), alpha).localCheckpoint()
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -1,13 +1,15 @@
 """The loop driver (`session.iterate`) and the operators built on it:
-an observed convergence scalar costs no job, a returned loop frees
-every checkpoint it made once its query scope closes, and the loops
-give an empty result on degenerate inputs."""
+an observed convergence scalar costs no job, a returned loop (or any
+query's pinned checkpoint or cache) frees every RDD it stored once its
+query scope closes, and the loops give an empty result on degenerate
+inputs."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from banking_data_etl_pipeline_spark import queries as Q
 from banking_data_etl_pipeline_spark import session as S
 from banking_data_etl_pipeline_spark.operators import (
     dedup,
@@ -127,20 +129,47 @@ _LOOPS = {
 }
 
 
-@pytest.mark.parametrize("op", sorted(_LOOPS))
-def test_closed_scope_frees_every_loop_checkpoint(spark, op):
-    """``DataFrame.unpersist`` does not free a local checkpoint, so the
-    loops used to leave one checkpoint RDD per round in storage."""
+def _leaves_no_storage(spark, build) -> bool:
+    """Whether a closed query scope frees every RDD ``build`` stored.
+    Earlier tests' cached plans are cleared first: a persist of a plan
+    that is already cached stores nothing new, which would hide it."""
     sc = spark.sparkContext
 
     def stored():
         return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
 
     S.release_pinned()
+    spark.catalog.clearCache()
     before = stored()
-    _LOOPS[op](spark).collect()
+    build(spark).collect()
     S.release_pinned()
-    assert stored() <= before
+    return stored() <= before
+
+
+@pytest.mark.parametrize("op", sorted(_LOOPS))
+def test_closed_scope_frees_every_loop_checkpoint(spark, op):
+    """``DataFrame.unpersist`` does not free a local checkpoint, so the
+    loops used to leave one checkpoint RDD per round in storage."""
+    assert _leaves_no_storage(spark, _LOOPS[op])
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "tfidf_allpairs",  # its returned local checkpoint
+        "stream_recovery",
+        "stream_recovery_msprt",
+        "stream_interval_join",
+        "bm25_topk",  # its token postings
+        "mmr_rerank",
+        "dedup_resolve",  # minhash_lsh_pairs' signatures
+    ],
+)
+def test_closed_scope_frees_every_query_cache(spark, name):
+    """A result materialized by a local checkpoint, or read from a
+    persisted intermediate, is pinned to the query scope: nothing the
+    query stored outlives it."""
+    assert _leaves_no_storage(spark, lambda s: getattr(Q, name)(s, SF_DIR))
 
 
 _EMB = "vec_id bigint, embedding array<double>"

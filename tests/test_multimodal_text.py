@@ -248,18 +248,15 @@ def test_resize_media_shrinks_and_hashes(spark):
 
 
 def test_sample_decode_raises_through_spark(spark):
-    """The pixel/PCM decode escape hatch must fail LOUDLY through a
-    mapInPandas task — a clean DecodeNotAvailable surfaced in the
-    driver-side error, not a silent fall-through to the header-only
-    path (which would report no samples as if decoded)."""
-    import pytest
-    from pyspark.errors import PythonException
-
+    """The pixel/PCM decode escape hatch must fail LOUDLY — a typed
+    DecodeNotAvailable at the call, before any job runs, not a silent
+    fall-through to the header-only path (which would report no
+    samples as if decoded)."""
     media = _media(spark).limit(4)
-    with pytest.raises(PythonException) as ei:
-        binaryops.extract_features(media, decode_samples=True).collect()
-    assert "DecodeNotAvailable" in str(ei.value)
-    assert "codecs are not installed" in str(ei.value)
+    for lane in (binaryops.extract_features, binaryops.resize_media):
+        with pytest.raises(binaryops.DecodeNotAvailable) as ei:
+            lane(media, decode_samples=True)
+        assert "codecs are not installed" in str(ei.value)
 
 
 def test_repetition_signals(spark):
