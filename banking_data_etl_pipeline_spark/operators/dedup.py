@@ -756,15 +756,12 @@ def shared_span_removal(
 
     The token and positional-shingle intermediates stay persisted in
     the returned plan (both the doc-frequency branch and the join-back
-    consume them) — caller-owned, like ``graph.triangle_counts``:
-    unpersist or ``spark.catalog.clearCache()`` when done, as bench.py,
-    the parity gate, and ``corpus.pretrain_export``'s callers already
-    do; a long-lived session invoking this repeatedly without that
-    accumulates shingle-table-sized storage blocks per call.
+    consume them), pinned to the query scope
+    (``session.pin_for_query``), which frees them when it closes.
     """
     docs = fan_out(docs)
     toks = texttools.tokens(F.col(text_col))
-    base = docs.select(F.col(id_col), toks.alias("_toks")).persist()
+    base = pin_for_query(docs.select(F.col(id_col), toks.alias("_toks")))
     # positional shingles: pos i covers tokens i .. i+n-1 (0-based)
     pos_sh = base.select(
         id_col,
@@ -772,7 +769,7 @@ def shared_span_removal(
             "pos", "sh"
         ),
     ).select(id_col, "pos", F.substring(F.md5("sh"), 1, 16).alias("hh"))
-    pos_sh = pos_sh.persist()
+    pos_sh = pin_for_query(pos_sh)
     shared = (
         pos_sh.select(id_col, "hh")
         .distinct()
@@ -971,14 +968,10 @@ def winnow_pairs(
     marked = sh.withColumn("m", F.min("h").over(fwd)).withColumn(
         "sel", F.max("m").over(bwd) == F.col("h")
     )
-    # persist the selected fingerprints: three consumers (hot-key
-    # screen, per-doc counts, the pair self-join) would each re-run
-    # the double window pass otherwise. Caller-owned, like
-    # ``graph.triangle_counts`` — unpersist or clearCache when done
-    # (bench.py and the parity gate already do).
-    fps = (
-        marked.filter("sel").select("doc", "h").distinct().persist()
-    )
+    # persist the selected fingerprints for the query scope: three
+    # consumers (hot-key screen, per-doc counts, the pair self-join)
+    # would each re-run the double window pass otherwise
+    fps = pin_for_query(marked.filter("sel").select("doc", "h").distinct())
     hot = (
         fps.groupBy("h")
         .agg(F.count(F.lit(1)).alias("df"))

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import iterate
+from ..session import iterate, pin_for_query
 
 DAMPING = 0.85
 
@@ -245,14 +245,17 @@ def triangle_counts(
     the degree agg and the orientation, and the oriented list feeds
     both the adjacency build and the probe side, so each is
     materialized once and released as soon as its consumers are done.
+    The degree table and the per-node counts are pinned to the query
+    scope (``session.pin_for_query``), which frees them when it
+    closes.
     ``deg`` is node-count-sized; below ``broadcast_nodes`` it
     broadcasts into the orientation join (map-only), above it the join
     falls back to a shuffle."""
-    edges = copurchase_edges(lineitem).persist()
+    edges = pin_for_query(copurchase_edges(lineitem))
     # degrees' key set IS the node set (symmetric graph) — same trick
     # as pagerank: one pass over the cached edges covers the node
     # count AND the degree table, no separate distinct-count pass
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+    deg = pin_for_query(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     n_nodes = deg.count()  # also warms the edge cache
     d_in = F.broadcast(deg) if n_nodes <= broadcast_nodes else deg
     half = edges.filter(F.col("src") < F.col("dst"))
@@ -300,11 +303,10 @@ def triangle_counts(
             F.explode(F.array_intersect("nx", "ny")).alias("z"),
         )
     )
-    out = (
+    out = pin_for_query(
         tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_tri"))
-        .persist()
     )
     if plan_hook is not None:
         # the enumeration plan (orientation + adjacency intersect +
@@ -332,10 +334,7 @@ def triangle_counts(
                 "degree",
             )
         )
-        deg.unpersist()
         return res
-    # caller-owned, one row per node (unpersist or clearCache when done
-    # — bench.py and the parity gate already do)
     return out
 
 

@@ -231,13 +231,10 @@ def hybrid_rank_fusion(
     """
     from . import similarity
 
-    # postings persist: four consumers (tf, dl, df, query-reduction)
-    # would each re-run tokenize+explode otherwise. Caller-owned, like
-    # ``graph.triangle_counts`` — unpersist or clearCache when done
-    # (bench.py and the parity gate already do).
-    tk = docs.select(
-        F.col(id_col), F.explode(texttools.tokens(F.col(text_col))).alias("token")
-    ).persist()
+    # postings persist for the query scope: four consumers (tf, dl,
+    # df, query-reduction) would each re-run tokenize+explode otherwise
+    token = F.explode(texttools.tokens(F.col(text_col))).alias("token")
+    tk = pin_for_query(docs.select(F.col(id_col), token))
     tf = tk.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
     dl = tk.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     dfreq = (
@@ -395,14 +392,12 @@ def phrase_search(
     occurrence POSITIONS (overlaps included), one row per matching
     document per phrase."""
     toks = texttools.tokens(F.col(text_col))
-    # tokenized-corpus persist: the bigram query derivation AND both
-    # phrase-word probes read it, so tokenization runs once, not three
-    # times (r12: this was the r10->r11 phrase_search drift — the
-    # positional persist alone still re-tokenized for the bigram
-    # pass). Caller-owned, like ``graph.triangle_counts`` — unpersist
-    # or clearCache when done (bench.py and the parity gate already
-    # do).
-    base = docs.select(F.col(id_col), toks.alias("toks")).persist()
+    # tokenized-corpus persist for the query scope: the bigram query
+    # derivation AND both phrase-word probes read it, so tokenization
+    # runs once, not three times (r12: this was the r10->r11
+    # phrase_search drift — the positional persist alone still
+    # re-tokenized for the bigram pass)
+    base = pin_for_query(docs.select(F.col(id_col), toks.alias("toks")))
     pos = base.select(
         id_col, F.posexplode("toks").alias("pos", "token")
     )
@@ -785,9 +780,8 @@ def rm3_topk(
     12-dp round — the DuckDB twin replays every stage.
 
     Returns (query_id, doc_id, score, rank), rank 1..k per query."""
-    tk = docs.select(
-        F.col(id_col), F.explode(texttools.tokens(F.col(text_col))).alias("token")
-    ).persist()
+    token = F.explode(texttools.tokens(F.col(text_col))).alias("token")
+    tk = pin_for_query(docs.select(F.col(id_col), token))
     tf = tk.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
     dl = tk.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     dfreq = (
@@ -888,9 +882,6 @@ def rm3_topk(
     allterms = qterms.select(
         "query_id", "token", F.lit(1.0).alias("w")
     ).unionByName(exp_terms)
-    # Caller-owned postings cache (tk), like hybrid_rank_fusion's —
-    # unpersist or clearCache when done (bench.py and the parity gate
-    # already do).
     return _topk(_score(allterms, weighted=True), k)
 
 

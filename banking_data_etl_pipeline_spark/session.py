@@ -23,7 +23,7 @@ from collections.abc import Iterator
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation, SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def _default_driver_memory() -> str:

@@ -39,6 +39,7 @@ GOOD_FIELDS = 29
 ERROR_FIELDS = {"raw_data", "error_type", "error_message", "timestamp"}
 GOOD_STAMPS = ("_ingestion_timestamp", "_processing_timestamp", "processing_timestamp")
 ISO_SECONDS = re.compile(r"^\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d[+-]\d\d:\d\d$")
+UUID4 = re.compile(r"^[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$")
 
 
 def _read_jsonl(path: str) -> list[dict]:
@@ -112,6 +113,38 @@ def test_cli_json_sinks(spark):
     assert all(t >= 0 for t in manifest["sink_s"].values())
     assert manifest["pipeline_version"] == P.PIPELINE_VERSION
     assert len(manifest["batch_id"]) == 36
+
+
+def test_cli_batch_ids_are_uuid4_shaped_and_unique_per_row_and_run(spark, tmp_path):
+    """Each good row's ``_batch_id`` is a lowercase uuid4 string made of
+    the run's manifest ``batch_id`` (its first 17 characters and its
+    variant) and the row's id: distinct within a run, disjoint between
+    runs."""
+    csv = os.path.join(tmp_path, "bank.csv")
+    with open(csv, "w") as f:
+        f.write(HEADER + "\n" + "\n".join(ROWS + ROWS[:1] * 200) + "\n")
+    runs = []
+    for run in ("a", "b"):
+        out = os.path.join(tmp_path, run)
+        manifest_path = os.path.join(out, "manifest.json")
+        P.main(
+            [
+                "--input_path", csv,
+                "--output_table", os.path.join(out, "good"),
+                "--error_table", os.path.join(out, "bad"),
+                "--metrics_path", manifest_path,
+            ]
+        )
+        with open(manifest_path) as f:
+            run_id = json.load(f)["batch_id"]
+        ids = [r["_batch_id"] for r in _read_jsonl(os.path.join(out, "good"))]
+        assert len(ids) == 202
+        assert UUID4.match(run_id), run_id
+        assert all(UUID4.match(i) for i in ids), ids
+        assert len(set(ids)) == len(ids)
+        assert all(i[:17] == run_id[:17] and i[19] == run_id[19] for i in ids), (run_id, ids)
+        runs.append(set(ids))
+    assert not runs[0] & runs[1]
 
 
 def test_cli_age_range_override_shifts_validation_and_stats(spark):

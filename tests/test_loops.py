@@ -163,6 +163,12 @@ def test_closed_scope_frees_every_loop_checkpoint(spark, op):
         "bm25_topk",  # its token postings
         "mmr_rerank",
         "dedup_resolve",  # minhash_lsh_pairs' signatures
+        "triangle_count",  # its edge, degree and per-node count caches
+        "span_removal",  # its token and positional-shingle caches
+        "winnow_dedup",  # its selected fingerprints
+        "rank_fusion",  # hybrid_rank_fusion's postings
+        "phrase_search",  # its tokenized corpus
+        "rm3_expansion",  # rm3_topk's postings
     ],
 )
 def test_closed_scope_frees_every_query_cache(spark, name):

@@ -1,13 +1,16 @@
 """The ETL plan (``plans/pipeline.py``): its stages are Spark SQL text,
 so building it costs few py4j round trips, and the text carries only
 constants, config and names, so no field value or config string can
-change what the text means."""
+change what the text means. Its generated code is the same in every
+run, and each fused method is small enough for HotSpot to compile."""
 
 from __future__ import annotations
 
+import gc
 import os
 
 import py4j.clientserver
+import pytest
 
 from banking_data_etl_pipeline_spark.plans import pipeline as P
 from banking_data_etl_pipeline_spark.session import conf_override, fan_out
@@ -71,3 +74,88 @@ def test_data_and_config_values_stay_verbatim(spark):
         ("parsing_error", f"ParseError: invalid value for 'age': {ODD_AGE}"),
     ]
     assert {r.timestamp for r in bad} == {stamp}
+
+
+def _csv(tmp_path) -> str:
+    csv = os.path.join(tmp_path, "bank.csv")
+    with open(csv, "w") as f:
+        f.write("\n".join([HEADER, CLEAN, _line("abc"), _line("17"), "bad;short;row"]) + "\n")
+    return csv
+
+
+# HotSpot compiles no method whose bytecode is longer than this
+# (-XX:HugeMethodLimit); a longer one runs in the interpreter
+JIT_LIMIT = 8000
+CONFIGS = {
+    "cli": P.PipelineConfig,
+    "deterministic": lambda: P.PipelineConfig(fixed_timestamp="2026-01-01T00:00:00Z", id_col="_raw"),
+}
+
+
+def _sinks(spark, csv, cfg):
+    """The CLI's good and error sink frames."""
+    good, bad, _good_obs, _bad_obs = P.cli_sinks(fan_out(P.read_bank_lines(spark, csv)), cfg)
+    return good, bad
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _codegen(df) -> list[tuple[str, int]]:
+    """(generated source, largest method's bytecode size) per
+    whole-stage-codegen subtree; call it with AQE off, or the plan is
+    not final."""
+    stages = _seq(df._jdf.queryExecution().debug().codegenToSeq())
+    return [(t._2(), t._3().maxMethodCodeSize()) for t in stages]
+
+
+def _error_chains(df, stage: str) -> int:
+    """How often ``stage``'s error chain (the CASE whose first branch
+    builds a ``stage`` error) occurs in the optimized plan, counted over
+    the expression trees: the plan's string truncates the wide
+    ``named_struct``s, so a count over it reads 0."""
+    n, nodes, mark = 0, [df._jdf.queryExecution().optimizedPlan()], f"'stage', '{stage}'"
+    while nodes:
+        node = nodes.pop()
+        nodes += _seq(node.children())
+        exprs = _seq(node.expressions())
+        while exprs:
+            e = exprs.pop()
+            if e.getClass().getSimpleName() == "CaseWhen":
+                n += mark in e.branches().apply(0)._2().sql()
+            exprs += _seq(e.children())
+    # free the walk's JVM proxies now: py4j deletes each one with a
+    # command of its own, which a later round-trip count would see
+    gc.collect()
+    return n
+
+
+def test_cli_plan_generates_the_same_code_in_every_run(spark, tmp_path):
+    """Two runs of the CLI generate byte-identical code for both sinks,
+    so a session compiles and JIT-compiles it once (a ``uuid()`` batch
+    id compiled each run's random seed into the source)."""
+    csv = _csv(tmp_path)
+    with conf_override(spark, "spark.sql.adaptive.enabled", "false"):
+        runs = [_sinks(spark, csv, P.PipelineConfig()) for _ in range(2)]
+        for first, second in zip(*runs):
+            assert [src for src, _ in _codegen(first)] == [src for src, _ in _codegen(second)]
+
+
+@pytest.mark.parametrize("config", sorted(CONFIGS))
+def test_fused_methods_fit_the_jit_limit(spark, tmp_path, config):
+    """Every generated method of both sinks fits HotSpot's compile
+    limit, so no ETL row runs in the bytecode interpreter."""
+    with conf_override(spark, "spark.sql.adaptive.enabled", "false"):
+        for df in _sinks(spark, _csv(tmp_path), CONFIGS[config]()):
+            sizes = [size for _, size in _codegen(df)]
+            assert max(sizes) <= JIT_LIMIT, sizes
+
+
+@pytest.mark.parametrize("config", sorted(CONFIGS))
+def test_each_error_chain_is_evaluated_once_per_sink(spark, tmp_path, config):
+    """The terminal filters stop at ``validate_stage``'s generator
+    barrier, so neither sink inlines a stage's error chain twice."""
+    for df in _sinks(spark, _csv(tmp_path), CONFIGS[config]()):
+        assert [_error_chains(df, s) for s in ("ParseError", "ValidationError")] == [1, 1]
+
