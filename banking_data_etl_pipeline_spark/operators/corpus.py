@@ -995,28 +995,24 @@ def dataset_card(
         F.md5(text).alias("_h"),
     ).persist()
     n = F.count(F.lit(1))
+
+    def rate(x):
+        # NULL at zero docs, as the DuckDB twin's x / 0.0 gives (a
+        # plain divide raises DIVIDE_BY_ZERO under ANSI)
+        return F.round(F.try_divide(x, n.cast("double")), 6)
+
     return scored.agg(
         n.cast("bigint").alias("n_docs"),
         F.sum("_nt").cast("bigint").alias("n_tokens"),
         F.sum("_nc").cast("bigint").alias("n_chars"),
         F.count_distinct("source").cast("bigint").alias("n_sources"),
         F.count_distinct("_lang").cast("bigint").alias("n_langs"),
-        F.round(
-            F.sum(F.when(F.col("_lang") == "en", 1).otherwise(0))
-            / n.cast("double"),
-            6,
-        ).alias("pct_english"),
-        F.round(
-            (n - F.count_distinct("_h")) / n.cast("double"), 6
-        ).alias("exact_dup_rate"),
+        rate(F.sum(F.when(F.col("_lang") == "en", 1).otherwise(0))).alias("pct_english"),
+        rate(n - F.count_distinct("_h")).alias("exact_dup_rate"),
         # _q is 6-dp-rounded, hence exact in DECIMAL(18,6): the sum is
         # order-independent and the mean engine-portable (a raw double
         # avg would be partition-order-dependent at the last ulp)
-        F.round(
-            F.sum(F.col("_q").cast("decimal(18,6)")).cast("double")
-            / n.cast("double"),
-            6,
-        ).alias("mean_quality"),
+        rate(F.sum(F.col("_q").cast("decimal(18,6)")).cast("double")).alias("mean_quality"),
         F.percentile(F.col("_nt"), F.lit(0.5)).alias("p50_tokens"),
     )
 

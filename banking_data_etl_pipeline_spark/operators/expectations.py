@@ -440,17 +440,20 @@ def benford_first_digit(df: DataFrame, col: str) -> DataFrame:
     tot = F.sum("n").over(Window.partitionBy())
     exp_p = F.element_at(parr, F.col("digit"))
     expected_n = tot.cast("double") * exp_p
+    # try_divide: NULL fractions and chi2 terms when no value has a
+    # digit, as the DuckDB twin's x / 0.0 gives (a plain divide raises
+    # DIVIDE_BY_ZERO under ANSI)
     return base.select(
         "digit",
         "n",
-        F.round(F.col("n").cast("double") / tot.cast("double"), 6).alias(
-            "frac"
-        ),
+        F.round(F.try_divide(F.col("n").cast("double"), tot.cast("double")), 6).alias("frac"),
         F.round(exp_p, 6).alias("expected_p"),
         F.round(
-            (F.col("n").cast("double") - expected_n)
-            * (F.col("n").cast("double") - expected_n)
-            / expected_n,
+            F.try_divide(
+                (F.col("n").cast("double") - expected_n)
+                * (F.col("n").cast("double") - expected_n),
+                expected_n,
+            ),
             6,
         ).alias("chi2_term"),
     )

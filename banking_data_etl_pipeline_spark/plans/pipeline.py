@@ -34,11 +34,12 @@ text are load-bearing:
   chains into every projection, and each generated method stays under
   HotSpot's 8,000-byte JIT limit (see there).
 
-The CLI (``main``) adds two things around the stages and keeps them
-shuffle-free: its input scan fans out small inputs (``session.fan_out``,
-a round-robin exchange only below the split-size gate, so a small CSV
-is parsed on every core), and the error statistics ride the error
-write as an ``Observation`` instead of a third scan and a ``groupBy``.
+The CLI (``main``) adds two things around the stages and keeps each
+sink one narrow stage with no exchange: its text scan cuts even a
+small CSV into one split per core (``cli_lines`` sizes Spark's file
+splits for the two writes), so the parse runs on every core without a
+shuffle, and the error statistics ride the error write as an
+``Observation`` instead of a third scan and a ``groupBy``.
 
 Determinism: the reference stamps wall-clock timestamps and a uuid4
 *per record* (:278-282 — yes, per record, despite the `_batch_id`
@@ -54,9 +55,11 @@ a fixed timestamp and derive batch ids as md5(row-key) instead.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import time
 import uuid
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -73,6 +76,7 @@ from ..schema import (
     NUM_CSV_COLUMNS,
     PIPELINE_VERSION,
 )
+from ..session import conf_override, get_spark
 
 DEFAULT_MIN_AGE = 18  # reference batch_pipeline1.py:20
 DEFAULT_MAX_AGE = 100  # reference batch_pipeline1.py:21
@@ -299,14 +303,36 @@ def run_on_lines(lines: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, Data
     return E.split_errors(df, _ts(cfg))
 
 
-def read_bank_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Read a bank CSV as raw lines, dropping the header (reference
-    ``ReadFromText(skip_header_lines=1)`` :345 — identified by its
-    leading 'age;'/'"age"' field rather than by position, which is
-    equivalent for this dataset and split-parallel at scale)."""
+@contextlib.contextmanager
+def cli_lines(spark: SparkSession, path: str) -> Iterator[DataFrame]:
+    """A bank CSV as raw lines without its header, scanned by every
+    action in the ``with`` block in at most ``defaultParallelism``
+    splits. The header is the line whose leading field is 'age;' or
+    '"age";' (reference ``ReadFromText(skip_header_lines=1)`` :345 drops
+    it by position): equivalent for this dataset, and any split can
+    drop it.
+
+    Spark splits text files at ``min(maxPartitionBytes,
+    max(openCostInBytes, bytes / cores))``, so under the default 4 MB
+    open cost a small CSV is one split, parsed on one core. In the
+    block both settings are ``ceil(bytes / defaultParallelism)``: no
+    few-byte remainder split, and each split a task of its own. Spark
+    reads them when an action plans the scan, so the writes run in the
+    block; the old settings return at its end. An input that fills
+    ``defaultParallelism`` splits of ``maxPartitionBytes`` is left to
+    Spark. Either way the scan splits the input and no exchange is
+    added."""
     header = sql_str(r'^"?age"?;')
     lines = spark.read.text(path).withColumnRenamed("value", "line")
-    return lines.filter(f"NOT (line RLIKE {header})")
+    lines = lines.filter(f"NOT (line RLIKE {header})")
+    # the file index's exact byte count; no job
+    size = int(lines._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    split = max(1, -(-size // spark.sparkContext.defaultParallelism))
+    with contextlib.ExitStack() as scope:
+        if split < spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes():
+            for key in ("maxPartitionBytes", "openCostInBytes"):
+                scope.enter_context(conf_override(spark, f"spark.sql.files.{key}", split))
+        yield lines
 
 
 def error_counts(metrics: dict) -> dict[str, int]:
@@ -360,10 +386,9 @@ def main(argv: list[str] | None = None) -> None:
     stats output, and ``--metrics_path`` a JSON run manifest.
 
     Two actions, one per sink, like the reference's one Beam pass with
-    counted side outputs: the stages stay shuffle-free, but the input
-    lines go through ``session.fan_out`` first, so a CSV too small for
-    Spark to split is parsed on every core (an input above the gate
-    gets no exchange). The counts ride the writes as ``Observation``s:
+    counted side outputs. Each is one narrow stage with no exchange:
+    the writes run inside ``cli_lines``, whose scan splits even a small
+    CSV once per core. The counts ride the writes as ``Observation``s:
     rows on the good write, rows and rows per error type on the error
     write. ``--stats_table`` is written from those counts, so there is
     no third scan and no shuffle for the stats. Persisting the tagged
@@ -384,17 +409,16 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--output_format", choices=["json", "parquet"], default="json")
     args = ap.parse_args(argv)
 
-    from ..session import fan_out, get_spark
-
     spark = get_spark("bank-etl")
     cfg = PipelineConfig(min_age=args.min_age, max_age=args.max_age)
-    good, bad, good_obs, bad_obs = cli_sinks(fan_out(read_bank_lines(spark, args.input_path)), cfg)
     sink_s = {}
-    for name, df, path in (("good", good, args.output_table), ("bad", bad, args.error_table)):
-        t0 = time.perf_counter()
-        w = df.write.mode("overwrite")
-        w.json(path) if args.output_format == "json" else w.parquet(path)
-        sink_s[name] = time.perf_counter() - t0
+    with cli_lines(spark, args.input_path) as lines:
+        good, bad, good_obs, bad_obs = cli_sinks(lines, cfg)
+        for name, df, path in (("good", good, args.output_table), ("bad", bad, args.error_table)):
+            t0 = time.perf_counter()
+            w = df.write.mode("overwrite")
+            w.json(path) if args.output_format == "json" else w.parquet(path)
+            sink_s[name] = time.perf_counter() - t0
     counts = error_counts(bad_obs.get)
     if args.stats_table:
         t0 = time.perf_counter()

@@ -16,6 +16,7 @@ import pytest
 
 from banking_data_etl_pipeline_spark.operators import errors as E
 from banking_data_etl_pipeline_spark.plans import pipeline as P
+from banking_data_etl_pipeline_spark.session import conf_override
 
 HEADER = (
     "age;job;marital;education;default;balance;housing;loan;contact;day;"
@@ -210,16 +211,20 @@ def test_cli_parquet_output_format(spark):
     ]
 
 
-@pytest.mark.parametrize("rows", [[], ROWS[:2]], ids=["header_only", "all_clean"])
+@pytest.mark.parametrize(
+    "rows", [None, [], ROWS[:2]], ids=["zero_byte", "header_only", "all_clean"]
+)
 def test_cli_degenerate_inputs_give_empty_error_sinks(spark, rows):
-    """A header-only CSV and an all-clean CSV: the error sink is empty and
-    the stats table has zero rows (not rows with count 0) but keeps its
-    two columns, as ``groupBy("error_type").count()`` gave; the manifest
-    counts no errors."""
+    """A zero-byte file, a header-only CSV and an all-clean CSV: the
+    error sink is empty and the stats table has zero rows (not rows
+    with count 0) but keeps its two columns, as
+    ``groupBy("error_type").count()`` gave; the manifest counts no
+    errors."""
     d = tempfile.mkdtemp(prefix="cli_e2e_degenerate_")
     csv = os.path.join(d, "bank.csv")
     with open(csv, "w") as f:
-        f.write(HEADER + "\n" + "".join(r + "\n" for r in rows))
+        f.write("" if rows is None else HEADER + "\n" + "".join(r + "\n" for r in rows))
+    rows = rows or []
 
     good_dir, bad_dir, stats_dir = (
         os.path.join(d, n) for n in ("good", "bad", "stats")
@@ -243,6 +248,31 @@ def test_cli_degenerate_inputs_give_empty_error_sinks(spark, rows):
         manifest = json.load(f)
     assert manifest["rows_read"] == manifest["rows_good"] == len(rows)
     assert manifest["rows_by_error_type"] == {t: 0 for t in E.ERROR_TYPES}
+
+
+def test_cli_restores_the_file_split_settings(spark, tmp_path):
+    """``main`` sizes the scan's splits for its own writes only: after it
+    returns, every ``spark.sql.files.*`` setting of the session is as
+    it was, a set one keeps its value and an unset one stays unset."""
+    csv = os.path.join(tmp_path, "bank.csv")
+    with open(csv, "w") as f:
+        f.write(HEADER + "\n" + "\n".join(ROWS) + "\n")
+
+    def files_conf() -> dict:
+        return {k: v for k, v in spark.conf.getAll.items() if k.startswith("spark.sql.files.")}
+
+    with conf_override(spark, "spark.sql.files.maxPartitionBytes", "64m"):
+        before = files_conf()
+        P.main(
+            [
+                "--input_path", csv,
+                "--output_table", os.path.join(tmp_path, "good"),
+                "--error_table", os.path.join(tmp_path, "bad"),
+            ]
+        )
+        assert files_conf() == before
+    assert before["spark.sql.files.maxPartitionBytes"] == "64m"
+    assert "spark.sql.files.openCostInBytes" not in before
 
 
 def test_stage_error_types_are_the_listed_enum(spark):

@@ -666,6 +666,24 @@ def test_dataset_card_single_row_consistency(spark):
     assert r.p50_tokens > 0
 
 
+def test_dataset_card_of_no_docs_is_neutral(spark):
+    """Zero docs give one row of zero counts and NULL rates, as the
+    DuckDB twin does, not an ANSI DIVIDE_BY_ZERO."""
+    import duckdb
+
+    from banking_data_etl_pipeline_spark import oracle
+
+    docs = tables.load(spark, SF_DIR, "documents").limit(0)
+    [r] = corpus.dataset_card(docs).collect()
+    assert (r.n_docs, r.n_sources, r.n_langs) == (0, 0, 0)
+    rates = (r.pct_english, r.exact_dup_rate, r.mean_quality, r.p50_tokens)
+    assert rates == (None, None, None, None)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, source VARCHAR, text VARCHAR)")
+    twin = con.execute(oracle.DATASET_CARD_Q).fetchone()
+    assert twin[5:] == rates
+
+
 def test_bigram_xent_penalizes_shuffled_word_order(spark):
     """The property that makes a bigram LM worth running over the
     unigram one: a doc and its token-shuffled twin have IDENTICAL

@@ -13,7 +13,7 @@ import py4j.clientserver
 import pytest
 
 from banking_data_etl_pipeline_spark.plans import pipeline as P
-from banking_data_etl_pipeline_spark.session import conf_override, fan_out
+from banking_data_etl_pipeline_spark.session import conf_override
 
 HEADER = (
     "age;job;marital;education;default;balance;housing;loan;contact;day;"
@@ -42,11 +42,15 @@ def test_etl_plan_build_round_trip_budget(spark, tmp_path, monkeypatch):
         sent.append(1)
         return send(self, command, *args, **kwargs)
 
+    # collect the proxies earlier tests left in reference cycles now:
+    # py4j deletes each one with a command the count would see
+    gc.collect()
     monkeypatch.setattr(conn, "send_command", counting)
-    good, bad = P.run_on_lines(fan_out(P.read_bank_lines(spark, csv)), P.PipelineConfig())
-    monkeypatch.setattr(conn, "send_command", send)
-    assert len(sent) < 1000, len(sent)
-    assert good.count() == 1 and bad.count() == 1
+    with P.cli_lines(spark, csv) as lines:
+        good, bad = P.run_on_lines(lines, P.PipelineConfig())
+        monkeypatch.setattr(conn, "send_command", send)
+        assert len(sent) < 1000, len(sent)
+        assert good.count() == 1 and bad.count() == 1
 
 
 def test_data_and_config_values_stay_verbatim(spark):
@@ -94,7 +98,8 @@ CONFIGS = {
 
 def _sinks(spark, csv, cfg):
     """The CLI's good and error sink frames."""
-    good, bad, _good_obs, _bad_obs = P.cli_sinks(fan_out(P.read_bank_lines(spark, csv)), cfg)
+    with P.cli_lines(spark, csv) as lines:
+        good, bad, _good_obs, _bad_obs = P.cli_sinks(lines, cfg)
     return good, bad
 
 
@@ -159,3 +164,18 @@ def test_each_error_chain_is_evaluated_once_per_sink(spark, tmp_path, config):
     for df in _sinks(spark, _csv(tmp_path), CONFIGS[config]()):
         assert [_error_chains(df, s) for s in ("ParseError", "ValidationError")] == [1, 1]
 
+
+def test_cli_sinks_are_one_narrow_stage_over_a_split_scan(spark, tmp_path):
+    """Inside ``cli_lines`` a small CSV scans in more than one and at
+    most ``defaultParallelism`` splits, and neither sink's executed
+    plan holds an exchange or an adaptive plan: each write is one
+    narrow stage."""
+    csv = os.path.join(tmp_path, "bank.csv")
+    with open(csv, "w") as f:
+        f.write("\n".join([HEADER, *[CLEAN] * 200, _line("abc"), _line("17")]) + "\n")
+    cores = spark.sparkContext.defaultParallelism
+    with P.cli_lines(spark, csv) as lines:
+        for df in P.cli_sinks(lines, P.PipelineConfig())[:2]:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan and "AdaptiveSparkPlan" not in plan, plan
+            assert 1 < df.rdd.getNumPartitions() <= cores

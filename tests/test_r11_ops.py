@@ -266,6 +266,26 @@ def test_benford_audit_shape_and_localization(spark):
     assert chi_bad > chi_good * 5
 
 
+def test_benford_audit_of_no_values_is_neutral(spark):
+    """A column with no values keeps the nine digit rows, with n 0 and
+    NULL fraction and chi2 term, as the DuckDB twin does, not an ANSI
+    DIVIDE_BY_ZERO."""
+    import duckdb
+
+    from banking_data_etl_pipeline_spark import oracle
+    from banking_data_etl_pipeline_spark.operators import expectations
+
+    out = expectations.benford_first_digit(
+        spark.createDataFrame([], "o_totalprice double"), "o_totalprice"
+    ).collect()
+    got = sorted((r.digit, r.n, r.frac, r.chi2_term) for r in out)
+    assert got == [(d, 0, None, None) for d in range(1, 10)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE orders (o_totalprice DOUBLE)")
+    twin = con.execute(oracle.benford_sql()).fetchall()
+    assert sorted((r[0], r[1], r[2], r[4]) for r in twin) == got
+
+
 # ------------------------------------------------ quantile normalize
 
 
