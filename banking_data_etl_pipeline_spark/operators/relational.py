@@ -27,6 +27,25 @@ def _dec_sum(col, alias: str, scale: int = 4):
     ).alias(alias)
 
 
+def top_k(df: DataFrame, by, order, k: int, rank: str = "rank") -> DataFrame:
+    """The first ``k`` rows of each ``by`` group in ``order``, numbered
+    1..k in the int column ``rank`` (``row_number``: end ``order`` on a
+    unique key, or ties take an arbitrary rank).
+
+    One window, pruned by Spark itself: for a rank-like window with a
+    filter on its rank, the optimizer (``InferWindowGroupLimit``) plans
+    a ``WindowGroupLimit … Partial`` that keeps at most ``k`` rows per
+    group in each partition BEFORE the window's one exchange, and a
+    ``Final`` one after it, so only pruned survivors are shuffled and
+    no reducer sorts a whole group. That rests on two conditions: the
+    filter sits directly on the rank (filter the result further only
+    after this call), and ``k`` <= ``spark.sql.optimizer.
+    windowGroupLimitThreshold`` (default 1000). Past the threshold the
+    answer is the same, but every row crosses the exchange."""
+    w = Window.partitionBy(by).orderBy(order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
 def revenue_by_nation(
     lineitem: DataFrame, orders: DataFrame, customer: DataFrame, nation: DataFrame
 ) -> DataFrame:

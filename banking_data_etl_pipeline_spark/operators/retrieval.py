@@ -9,9 +9,9 @@ combine); document frequencies aggregate the DISTINCT postings; corpus
 scalars (N, avgdl) ride as scalar subqueries — never a driver pull.
 Scoring joins the (small) query-term table to the postings on the term
 — an inverted-index equi-join, so only documents containing a query
-term are ever scored; the corpus is never scanned per query. Top-k
-uses the same two-phase rank as ``similarity._ranked`` (per-partition
-prune to k, then the tiny global rank), so no single reducer sorts a
+term are ever scored; the corpus is never scanned per query. Top-k is
+``relational.top_k``: Spark's WindowGroupLimit prunes each partition to
+k rows per query before the one exchange, so no single reducer sorts a
 hot term's whole posting list.
 
 Cross-engine float parity: per-term BM25 contributions are computed by
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import texttools, vectors
 from ..session import iterate, pin_for_query
+from .relational import top_k
 
 # shared verbatim with oracle.BM25_TOPK_Q — evaluated over double
 # columns (tf, df, dl, n_docs, avgdl) in both engines, so the doubles
@@ -164,20 +165,19 @@ def bm25_topk(
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("ts").cast("double"), 6).alias("score"))
     )
-    # two-phase top-k (the similarity._ranked shape): prune to k per
-    # (query, input-partition), then the tiny global rank
-    order = [F.col("score").desc(), F.col("doc_id").asc()]
-    local = Window.partitionBy("query_id", "_part").orderBy(*order)
-    pruned = (
-        scored.withColumn("_part", F.spark_partition_id())
-        .withColumn("_lrank", F.row_number().over(local))
-        .filter(F.col("_lrank") <= k)
-    )
-    wq = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
+    return _doc_topk(scored, k)
+
+
+def _by_score():
+    """Best first, the lower doc_id on a tie."""
+    return [F.col("score").desc(), F.col("doc_id").asc()]
+
+
+def _doc_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, doc_id, score, rank): the top ``k`` documents per
+    query, pruned per partition before the exchange (``top_k``)."""
+    return top_k(scored, "query_id", _by_score(), k).select(
+        "query_id", "doc_id", "score", "rank"
     )
 
 
@@ -270,13 +270,9 @@ def hybrid_rank_fusion(
             ).alias("w"),
         )
     )
-    wsel = Window.partitionBy("query_id").orderBy(
-        F.col("w").desc(), F.col("token").asc()
-    )
-    qterms = (
-        qterm_pool.withColumn("_r", F.row_number().over(wsel))
-        .filter(F.col("_r") <= m_terms)
-        .select("query_id", "token")
+    by_weight = [F.col("w").desc(), F.col("token").asc()]
+    qterms = top_k(qterm_pool, "query_id", by_weight, m_terms, "_r").select(
+        "query_id", "token"
     )
     # same pruning for the scoring join: bounded by n_queries*m_terms
     dfreq_q = dfreq.join(
@@ -308,17 +304,9 @@ def hybrid_rank_fusion(
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("ts").cast("double"), 6).alias("score"))
     )
-    order = [F.col("score").desc(), F.col("doc_id").asc()]
-    local = Window.partitionBy("query_id", "_part").orderBy(*order)
-    wq = Window.partitionBy("query_id").orderBy(*order)
-    lex = (
-        lex_scored.withColumn("_part", F.spark_partition_id())
-        .withColumn("_lrank", F.row_number().over(local))
-        .filter(F.col("_lrank") <= k_arm)
-        .withColumn("lex_rank", F.row_number().over(wq))
-        .filter(F.col("lex_rank") <= k_arm)
-        .select("query_id", "doc_id", "lex_rank")
-    )
+    lex = top_k(
+        lex_scored, "query_id", _by_score(), k_arm, "lex_rank"
+    ).select("query_id", "doc_id", "lex_rank")
 
     # ---- semantic arm: cosine top-k over the shared id space
     if sem_arm == "ivf":
@@ -353,12 +341,9 @@ def hybrid_rank_fusion(
         "lex_rank",
         "sem_rank",
     )
-    worder = [F.col("rrf").desc(), F.col("doc_id").asc()]
-    wf = Window.partitionBy("query_id").orderBy(*worder)
-    return (
-        fused.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "rrf", "lex_rank", "sem_rank", "rank")
+    by_rrf = [F.col("rrf").desc(), F.col("doc_id").asc()]
+    return top_k(fused, "query_id", by_rrf, k).select(
+        "query_id", "doc_id", "rrf", "lex_rank", "sem_rank", "rank"
     )
 
 
@@ -465,7 +450,7 @@ def hard_negatives(
     that random negatives can't.
 
     Scale shape: rides ``bm25_topk``'s pooled candidates (top
-    ``pool + 1`` per query — already two-phase partial top-k), one
+    ``pool + 1`` per query — already pruned per partition), one
     broadcastable join to the per-doc group column, and a window over
     queries × pool rows. No new corpus-sized work beyond the BM25
     pass itself.
@@ -492,13 +477,8 @@ def hard_negatives(
         .filter(F.col("_grp") != F.col("_pos_grp"))
         .select("query_id", "pos_doc_id", "doc_id", "score")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        cand.withColumn("neg_rank", F.row_number().over(wq))
-        .filter(F.col("neg_rank") <= k_neg)
-        .select("query_id", "pos_doc_id", "doc_id", "score", "neg_rank")
+    return top_k(cand, "query_id", _by_score(), k_neg, "neg_rank").select(
+        "query_id", "pos_doc_id", "doc_id", "score", "neg_rank"
     )
 
 
@@ -528,7 +508,7 @@ def mmr_rerank(
     rows/query) to the picked set (≤ n_select rows/query), takes a
     per-candidate max-sim groupBy and one window argmax — queries ×
     pool × n_select work total, independent of corpus size (the
-    corpus was already reduced by BM25's two-phase top-k). The pool
+    corpus was already reduced by BM25's top-k). The pool
     is ONE state frame whose nullable ``pick`` marks the picked rows,
     checkpointed per round through ``session.iterate``: a round
     references the state ~3 times, so an un-truncated chain
@@ -620,7 +600,7 @@ def ndcg_at_k(
     this completes the model-evaluation readouts: this one scores
     RANKINGS.
 
-    Scale shape: rides bm25_topk (two-phase top-k); grades are one
+    Scale shape: rides bm25_topk (partition-pruned top-k); grades are one
     distinct-postings join against the broadcast query terms; DCG and
     ideal-DCG are windows over queries × k rows with the per-position
     terms 12-dp rounded and summed through DECIMAL(26,12)
@@ -691,7 +671,7 @@ def mrr_at_k(
     this covers both evaluation regimes production search teams
     report.
 
-    Scale shape: identical to ``ndcg_at_k`` — rides the two-phase
+    Scale shape: identical to ``ndcg_at_k`` — rides
     ``bm25_topk``, one distinct-postings join against the broadcast
     query terms, then a per-query min over queries × k rows.
 
@@ -768,8 +748,8 @@ def rm3_topk(
     and feeds BOTH passes; each pass is the ``bm25_topk`` shape — the
     per-term table broadcasts (query-terms-sized, model parameters),
     document-frequency rows are semi-join-pruned to the query terms
-    BEFORE broadcasting, and both top-k rankings are two-phase
-    (per-partition heaps, then the tiny global rank). Expansion
+    BEFORE broadcasting, and both top-k rankings keep k rows per
+    query in each partition before their one exchange. Expansion
     mining touches only feedback-doc postings (queries × fb_docs docs)
     and ranks a per-query candidate set bounded by those docs' vocab.
 
@@ -831,22 +811,7 @@ def rm3_topk(
             .agg(F.round(F.sum("ts").cast("double"), 6).alias("score"))
         )
 
-    def _topk(scored, n):
-        order = [F.col("score").desc(), F.col("doc_id").asc()]
-        local = Window.partitionBy("query_id", "_part").orderBy(*order)
-        pruned = (
-            scored.withColumn("_part", F.spark_partition_id())
-            .withColumn("_lrank", F.row_number().over(local))
-            .filter(F.col("_lrank") <= n)
-        )
-        wq = Window.partitionBy("query_id").orderBy(*order)
-        return (
-            pruned.withColumn("rank", F.row_number().over(wq))
-            .filter(F.col("rank") <= n)
-            .select("query_id", "doc_id", "score", "rank")
-        )
-
-    fb = _topk(_score(qterms, weighted=False), fb_docs)
+    fb = _doc_topk(_score(qterms, weighted=False), fb_docs)
     expc = (
         tf.join(
             fb.select("query_id", F.col("doc_id").alias(id_col), "score"),
@@ -869,20 +834,14 @@ def rm3_topk(
         .agg(F.round(F.sum("t").cast("double"), 6).alias("rm_w"))
         .join(qterms, ["query_id", "token"], "left_anti")
     )
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("rm_w").desc(), F.col("token").asc()
-    )
-    exp_terms = (
-        expc.withColumn("_r", F.row_number().over(we))
-        .filter(F.col("_r") <= fb_terms)
-        .select(
-            "query_id", "token", F.expr(f"CAST({alpha} AS DOUBLE)").alias("w")
-        )
+    by_rm_w = [F.col("rm_w").desc(), F.col("token").asc()]
+    exp_terms = top_k(expc, "query_id", by_rm_w, fb_terms, "_r").select(
+        "query_id", "token", F.expr(f"CAST({alpha} AS DOUBLE)").alias("w")
     )
     allterms = qterms.select(
         "query_id", "token", F.lit(1.0).alias("w")
     ).unionByName(exp_terms)
-    return _topk(_score(allterms, weighted=True), k)
+    return _doc_topk(_score(allterms, weighted=True), k)
 
 
 def rbo_overlap(
@@ -993,7 +952,7 @@ def map_at_k(
     grade >= ``rel_grade``, the same deterministic qrels as
     ndcg/mrr — a labeled table swaps in downstream-unchanged).
 
-    Scale shape: identical to ``mrr_at_k`` — rides the two-phase
+    Scale shape: identical to ``mrr_at_k`` — rides
     ``bm25_topk``, one distinct-postings join against the broadcast
     query terms; P@i = (relevant-so-far)/i comes from one window over
     queries × k rows, each term 12-dp rounded and summed through

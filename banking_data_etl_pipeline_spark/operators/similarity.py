@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors
 from ..session import session_cache
+from .relational import top_k
 
 
 # Model-parameter literal columns (centroid/codebook arrays) are
@@ -38,30 +39,25 @@ def _memo_lit(kind: str, content, builder):
     return col
 
 
-def _ranked(scored: DataFrame, k: int) -> DataFrame:
-    """Two-phase top-k per query.
+def _by_cosine():
+    """Nearest first, the lower id on a tie: the ranking of every
+    cosine result."""
+    return [F.col("cosine").desc(), F.col("vec_id").asc()]
 
-    A single ``Window.partitionBy(query_id)`` would shuffle EVERY
-    scored row into #queries partitions — with a handful of queries
-    that is a handful of reducers sorting the whole corpus. Phase 1
-    ranks within (query_id, input-partition) — the exchange spreads
-    over num_shuffle_partitions and each group keeps only k rows — so
-    phase 2's global rank touches at most k × n_input_partitions rows
-    per query. Results identical: phase 1 only discards rows that can
-    never reach the global top k.
-    """
-    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
-    local = Window.partitionBy("query_id", "_part").orderBy(*order)
-    pruned = (
-        scored.withColumn("_part", F.spark_partition_id())
-        .withColumn("_lrank", F.row_number().over(local))
-        .filter(F.col("_lrank") <= k)
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+
+def _by_sim():
+    """A graph index's neighbor order per ``src``: ``_sim`` desc, then
+    ``dst`` asc."""
+    return [F.col("_sim").desc(), F.col("dst").asc()]
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k per query by cosine. A ``Window.partitionBy(query_id)`` on
+    its own would send every scored row to #queries reducers; through
+    ``relational.top_k`` Spark's WindowGroupLimit keeps only k rows per
+    query in each partition before the one exchange."""
+    return top_k(scored, "query_id", _by_cosine(), k).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
 
 
@@ -76,8 +72,8 @@ def brute_force_topk(
 
     ``queries``: (query_id, qvec). Broadcast nested-loop join keeps the
     corpus un-shuffled; the only shuffle is the final per-query top-k,
-    which Spark runs as partial top-k per partition first (WindowExec
-    with row_number + filter benefits from AQE-coalesced tiny exchange).
+    and Spark's WindowGroupLimit keeps k rows per query in each
+    partition before it (``relational.top_k``).
     """
     scored = emb.crossJoin(F.broadcast(queries)).select(
         F.col("query_id"),
@@ -525,7 +521,7 @@ def pq_topk(
     ``m`` array lookups summed — never a full-dimension dot product.
     At 100 TB this is why PQ wins: the scan reads m-byte codes instead
     of dim×4-byte vectors (16× less IO at dim=64/m=4) and scores with
-    m adds per row. Top-k uses the two-phase rank; ties break
+    m adds per row. Top-k is ``relational.top_k``; ties break
     (approx_dist asc, vec_id asc); self-matches are excluded.
 
     Deterministic end-to-end (trained codebooks, fixed fold order,
@@ -557,17 +553,8 @@ def pq_topk(
         .filter(F.col("vec_id") != F.col("query_id"))
     )
     order = [F.col("approx_dist").asc(), F.col("vec_id").asc()]
-    local = Window.partitionBy("query_id", "_part").orderBy(*order)
-    pruned = (
-        scored.withColumn("_part", F.spark_partition_id())
-        .withColumn("_lrank", F.row_number().over(local))
-        .filter(F.col("_lrank") <= k)
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "approx_dist", "rank")
+    return top_k(scored, "query_id", order, k).select(
+        "query_id", "vec_id", "approx_dist", "rank"
     )
 
 
@@ -695,8 +682,8 @@ def _ivfpq_probe_tail(
     residual: bool,
 ) -> DataFrame:
     """The IVFPQ PROBE: per-query nprobe cell selection, (residual)
-    LUT staging, ADC scoring of the encoded cells, two-phase partial
-    shortlist, exact re-rank of the shortlist against ``raw_vecs``.
+    LUT staging, ADC scoring of the encoded cells, a shortlist pruned
+    per partition (``top_k``), exact re-rank of it against ``raw_vecs``.
     Shared verbatim between the telescoped ``ivf_pq_topk`` and the
     persisted-index ``probe_ivfpq_index`` so the split lifecycle
     cannot drift from the oracle-proven plan."""
@@ -717,17 +704,8 @@ def _ivfpq_probe_tail(
         .filter(F.col("vec_id") != F.col("query_id"))
     )
     order = [F.col("approx_dist").asc(), F.col("vec_id").asc()]
-    local = Window.partitionBy("query_id", "_part").orderBy(*order)
-    short = (
-        scored.withColumn("_part", F.spark_partition_id())
-        .withColumn("_lrank", F.row_number().over(local))
-        .filter(F.col("_lrank") <= rerank)
-    )
-    wq = Window.partitionBy("query_id").orderBy(*order)
-    short = (
-        short.withColumn("_srank", F.row_number().over(wq))
-        .filter(F.col("_srank") <= rerank)
-        .select("query_id", "vec_id")
+    short = top_k(scored, "query_id", order, rerank).select(
+        "query_id", "vec_id"
     )
     # exact re-rank: only the shortlist touches raw vectors
     rer = (
@@ -743,14 +721,7 @@ def _ivfpq_probe_tail(
             ),
         )
     )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _ranked(rer, k)
 
 
 def knn_label_vote(
@@ -788,12 +759,8 @@ def knn_label_vote(
         .groupBy("query_id", "_l")
         .agg(F.count(F.lit(1)).alias("n_votes"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_votes"), F.asc("_l")
-    )
     return (
-        voted.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
+        top_k(voted, "query_id", [F.desc("n_votes"), F.asc("_l")], 1)
         .select(
             "query_id",
             F.col("_l").alias("pred_label"),
@@ -1231,7 +1198,7 @@ def sq_topk(
 
     Scale shape: the corpus stays un-shuffled (broadcast query set,
     the ann_brute pattern); quantize + approx-score run in one codegen
-    stage; the two-phase partial top-k keeps the shortlist exchange at
+    stage; WindowGroupLimit (``top_k``) keeps the shortlist exchange at
     shortlist × n_partitions rows; exact re-rank touches only
     |queries| × shortlist rows. All driver traffic is the 2×dim stats
     pull.
@@ -1273,29 +1240,15 @@ def sq_topk(
         )
     )
     order = [F.col("approx_cosine").desc(), F.col("vec_id").asc()]
-    local = Window.partitionBy("query_id", "_part").orderBy(*order)
-    pruned = (
-        scored.withColumn("_part", F.spark_partition_id())
-        .withColumn("_lrank", F.row_number().over(local))
-        .filter(F.col("_lrank") <= shortlist)
-    )
-    ws = Window.partitionBy("query_id").orderBy(*order)
-    short = pruned.withColumn("_srank", F.row_number().over(ws)).filter(
-        F.col("_srank") <= shortlist
-    )
+    short = top_k(scored, "query_id", order, shortlist, "_srank")
     exact = short.select(
         "query_id",
         "vec_id",
         "approx_cosine",
         F.round(vectors.cosine(F.col("_v"), F.col("qvec")), 6).alias("cosine"),
     )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "approx_cosine", "cosine", "rank")
+    return top_k(exact, "query_id", _by_cosine(), k).select(
+        "query_id", "vec_id", "approx_cosine", "cosine", "rank"
     )
 
 
@@ -1379,13 +1332,9 @@ def maxsim_topk(
         "vec_id",
         F.expr(f"round({score}, 6)").alias("maxsim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("maxsim"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "maxsim", "rank")
+    order = [F.desc("maxsim"), F.asc("vec_id")]
+    return top_k(scored, "query_id", order, k).select(
+        "query_id", "vec_id", "maxsim", "rank"
     )
 
 
@@ -1473,17 +1422,8 @@ def probe_pq_index(
         .filter(F.col("vec_id") != F.col("query_id"))
     )
     order = [F.col("approx_dist").asc(), F.col("vec_id").asc()]
-    local = Window.partitionBy("query_id", "_part").orderBy(*order)
-    pruned = (
-        scored.withColumn("_part", F.spark_partition_id())
-        .withColumn("_lrank", F.row_number().over(local))
-        .filter(F.col("_lrank") <= k)
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "approx_dist", "rank")
+    return top_k(scored, "query_id", order, k).select(
+        "query_id", "vec_id", "approx_dist", "rank"
     )
 
 
@@ -1549,13 +1489,8 @@ def graph_adjacency(
             ).alias("_sim"),
         )
     )
-    w = Window.partitionBy("src").orderBy(
-        F.col("_sim").desc(), F.col("dst").asc()
-    )
-    kept = (
-        pairs.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= r_neighbors)
-        .select("src", "dst", "_sim")
+    kept = top_k(pairs, "src", _by_sim(), r_neighbors, "_r").select(
+        "src", "dst", "_sim"
     )
     return kept.join(
         corpus.select(F.col("vec_id").alias("dst"), F.col("v").alias("dvec")),
@@ -1613,7 +1548,22 @@ def graph_entries(corpus: DataFrame) -> DataFrame:
     )
 
 
-def _beam_step(cand, adj, wq, beam: int, ef: int):
+def _frontier(cand, beam: int):
+    """The top-``beam`` candidates per query, as (query_id, qvec, _f)."""
+    return top_k(cand, "query_id", _by_cosine(), beam, "_r").select(
+        "query_id", "qvec", F.col("vec_id").alias("_f")
+    )
+
+
+def _next_hop(cand, nbrs, ef: int):
+    """The best ``ef`` distinct candidates per query of ``cand`` and a
+    hop's neighbors, persisted."""
+    merged = cand.unionByName(nbrs).dropDuplicates(["query_id", "vec_id"])
+    kept = top_k(merged, "query_id", _by_cosine(), ef, "_r")
+    return kept.drop("_r").persist()
+
+
+def _beam_step(cand, adj, beam: int, ef: int):
     """One beam-search hop: expand the top-``beam`` candidates through
     the adjacency lists, score the neighbors against the riding qvec,
     and keep the best ``ef`` distinct candidates per query.
@@ -1625,11 +1575,7 @@ def _beam_step(cand, adj, wq, beam: int, ef: int):
     measured 17 s warm probe at sf0.1 from tiny-stage scheduling alone
     (vs ~4 s persisted). Caller-owned, like the adjacency cache —
     unpersist or clearCache when done."""
-    frontier = (
-        cand.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= beam)
-        .select("query_id", "qvec", F.col("vec_id").alias("_f"))
-    )
+    frontier = _frontier(cand, beam)
     nbrs = (
         adj.join(F.broadcast(frontier), F.col("_f") == F.col("src"))
         .select(
@@ -1642,14 +1588,7 @@ def _beam_step(cand, adj, wq, beam: int, ef: int):
         )
         .filter(F.col("vec_id") != F.col("query_id"))
     )
-    return (
-        cand.unionByName(nbrs)
-        .dropDuplicates(["query_id", "vec_id"])
-        .withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= ef)
-        .drop("_r")
-        .persist()
-    )
+    return _next_hop(cand, nbrs, ef)
 
 
 def nsw_topk(
@@ -1730,11 +1669,8 @@ def nsw_topk(
         )
         .filter(F.col("vec_id") != F.col("query_id"))
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
     for _ in range(hops):
-        nxt = _beam_step(cand, adj, wq, beam, ef)
+        nxt = _beam_step(cand, adj, beam, ef)
         # materialize the new hop (queries × ef rows — one tiny job)
         # BEFORE releasing its parent: unpersisting an unmaterialized
         # parent would re-expose the 2^hops chain. Only the final
@@ -1752,11 +1688,7 @@ def nsw_topk(
     # one extra filter before the final window.
     if mask is not None:
         cand = cand.join(mask, "vec_id", "left_anti")
-    return (
-        cand.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _ranked(cand, k)
 
 
 def build_graph_index(
@@ -1870,15 +1802,8 @@ def probe_graph_index(
         )
         .filter(F.col("vec_id") != F.col("query_id"))
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
     for _ in range(hops):
-        frontier_rows = (
-            cand.withColumn("_r", F.row_number().over(wq))
-            .filter(F.col("_r") <= beam)
-            .select("query_id", "qvec", F.col("vec_id").alias("_f"))
-        )
+        frontier_rows = _frontier(cand, beam)
         # bounded driver pull: beam × queries ids decide which bucket
         # directories this hop may read at all (the static-pruning
         # probed-cells pattern)
@@ -1905,14 +1830,7 @@ def probe_graph_index(
         # _beam_step; materialized eagerly so the previous hop's cache
         # can be released now — only the final frame stays cached,
         # pinned below for end-of-query release
-        nxt = (
-            cand.unionByName(nbrs)
-            .dropDuplicates(["query_id", "vec_id"])
-            .withColumn("_r", F.row_number().over(wq))
-            .filter(F.col("_r") <= ef)
-            .drop("_r")
-            .persist()
-        )
+        nxt = _next_hop(cand, nbrs, ef)
         nxt.count()
         if cand.is_cached:
             cand.unpersist()
@@ -1920,11 +1838,7 @@ def probe_graph_index(
     from ..session import pin_for_query
 
     pin_for_query(cand)
-    return (
-        cand.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _ranked(cand, k)
 
 
 def add_to_graph_index(
@@ -1982,15 +1896,9 @@ def add_to_graph_index(
 
     def delta(stored, olds, news, r):
         members = olds.unionByName(news)
-        w_new = Window.partitionBy("src").orderBy(
-            F.col("_sim").desc(), F.col("dst").asc()
-        )
-        newsrc = (
-            _cell_pairs(news, members)
-            .withColumn("_r", F.row_number().over(w_new))
-            .filter(F.col("_r") <= r)
-            .select("src", "dst", "dvec", "_sim")
-        )
+        newsrc = top_k(
+            _cell_pairs(news, members), "src", _by_sim(), r, "_r"
+        ).select("src", "dst", "dvec", "_sim")
         cand = _cell_pairs(olds, news).withColumn("_new", F.lit(1))
         stored_aff = (
             stored.join(
@@ -2000,9 +1908,8 @@ def add_to_graph_index(
             .withColumn("_new", F.lit(0))
         )
         entrants = (
-            stored_aff.unionByName(cand)
-            .withColumn("_r", F.row_number().over(w_new))
-            .filter((F.col("_r") <= r) & (F.col("_new") == 1))
+            top_k(stored_aff.unionByName(cand), "src", _by_sim(), r, "_r")
+            .filter(F.col("_new") == 1)
             .select("src", "dst", "dvec", "_sim")
         )
         return newsrc.unionByName(entrants)
@@ -2069,6 +1976,15 @@ def add_to_graph_index(
     ).parquet(f"{path}/entrygrid")
 
 
+def _live_lists(spark, path: str, sub: str, r: int) -> DataFrame:
+    """The top-``r`` stored rows per src of the index's ``sub``
+    adjacency (base + delta rows), as (src, dst, dvec, _sim)."""
+    stored = spark.read.parquet(f"{path}/{sub}")
+    return top_k(stored, "src", _by_sim(), r, "_r").select(
+        "src", "dst", "dvec", "_sim"
+    )
+
+
 def effective_graph_adjacency(
     spark, path: str, r_neighbors: int = 8
 ) -> DataFrame:
@@ -2081,15 +1997,7 @@ def effective_graph_adjacency(
     n × ~R rows; at 100 TB this same expression IS the compaction
     job — overwrite ``adjacency`` with its result to reclaim the
     superseded rows when ``graph_index_stats`` flags staleness."""
-    w = Window.partitionBy("src").orderBy(
-        F.col("_sim").desc(), F.col("dst").asc()
-    )
-    return (
-        spark.read.parquet(f"{path}/adjacency")
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= r_neighbors)
-        .select("src", "dst", "dvec")
-    )
+    return _live_lists(spark, path, "adjacency", r_neighbors).drop("_sim")
 
 
 def effective_layer1_adjacency(
@@ -2100,14 +2008,8 @@ def effective_layer1_adjacency(
     entry grid — exactly the ``adj1`` frame ``hnsw_topk`` expects.
     The grid needs no merge: it is model-parameter state rewritten
     wholesale whenever entries change."""
-    w = Window.partitionBy("src").orderBy(
-        F.col("_sim").desc(), F.col("dst").asc()
-    )
-    cell_rows = (
-        spark.read.parquet(f"{path}/adjacency1")
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= r1_neighbors)
-        .select("src", "dst", "dvec")
+    cell_rows = _live_lists(spark, path, "adjacency1", r1_neighbors).drop(
+        "_sim"
     )
     return cell_rows.unionByName(
         spark.read.parquet(f"{path}/entrygrid")
@@ -2147,24 +2049,11 @@ def compact_graph_index(
         shutil.rmtree(old)
         os.rename(os.path.join(path, f"{sub}_compact"), old)
 
-    w0 = Window.partitionBy("src").orderBy(
-        F.col("_sim").desc(), F.col("dst").asc()
-    )
-    adj = (
-        spark.read.parquet(f"{path}/adjacency")
-        .withColumn("_r", F.row_number().over(w0))
-        .filter(F.col("_r") <= r_neighbors)
-        .select("src", "dst", "dvec", "_sim")
-        .withColumn("bucket", F.pmod(F.col("src"), F.lit(n_buckets)))
+    adj = _live_lists(spark, path, "adjacency", r_neighbors).withColumn(
+        "bucket", F.pmod(F.col("src"), F.lit(n_buckets))
     )
     swap("adjacency", adj, "bucket")
-    adj1 = (
-        spark.read.parquet(f"{path}/adjacency1")
-        .withColumn("_r", F.row_number().over(w0))
-        .filter(F.col("_r") <= r1_neighbors)
-        .select("src", "dst", "dvec", "_sim")
-    )
-    swap("adjacency1", adj1)
+    swap("adjacency1", _live_lists(spark, path, "adjacency1", r1_neighbors))
 
 
 def compact_ivf_index(spark, path: str) -> None:
@@ -2211,9 +2100,7 @@ def graph_index_stats(
         F.sum((~added).cast("bigint")).alias("n_base"),
         F.sum(added.cast("bigint")).alias("n_added"),
     )
-    w = Window.partitionBy("src").orderBy(
-        F.col("_sim").desc(), F.col("dst").asc()
-    )
+    w = Window.partitionBy("src").orderBy(_by_sim())
     adj_agg = (
         spark.read.parquet(f"{path}/adjacency")
         .withColumn("_r", F.row_number().over(w))
@@ -2792,9 +2679,6 @@ def hnsw_topk(
         .join(entries, F.col("gid") == entries["vec_id"])
         .select(F.col("gid").alias("vec_id"), "evec")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
     # the seed keeps a query==entry self-candidate (a query CAN be the
     # global entry — excluding it here starves that query's whole
     # descent); traversal through the query node is legal HNSW, and
@@ -2808,7 +2692,7 @@ def hnsw_topk(
         ),
     )
     for _ in range(hops1):
-        nxt = _beam_step(cand, adj1, wq, beam1, ef1)
+        nxt = _beam_step(cand, adj1, beam1, ef1)
         nxt.count()
         if cand.is_cached:
             cand.unpersist()
@@ -2817,15 +2701,10 @@ def hnsw_topk(
     if adj0 is None:
         adj0 = pin_for_query(graph_adjacency(corpus, r_neighbors))
     for _ in range(hops):
-        nxt = _beam_step(cand, adj0, wq, beam, ef)
+        nxt = _beam_step(cand, adj0, beam, ef)
         nxt.count()
         if cand.is_cached:
             cand.unpersist()
         cand = nxt
     pin_for_query(cand)
-    return (
-        cand.filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _ranked(cand.filter(F.col("vec_id") != F.col("query_id")), k)

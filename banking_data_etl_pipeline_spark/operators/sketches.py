@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import texttools
+from .relational import top_k
 
 
 def heavy_hitters(
@@ -597,18 +598,11 @@ def source_bottomk_jaccard(
         .distinct()
     )
     hashed = st.select("source", F.md5("token").alias("h"))
-    # two-phase per-source bottom-k: per-(source, input-partition)
-    # heaps first, so no reducer sorts a whole source's vocabulary
-    order = [F.col("h").asc()]
-    local = Window.partitionBy("source", "_part").orderBy(*order)
-    wg = Window.partitionBy("source").orderBy(*order)
-    sketch = (
-        hashed.withColumn("_part", F.spark_partition_id())
-        .withColumn("_lr", F.row_number().over(local))
-        .filter(F.col("_lr") <= k)
-        .withColumn("_r", F.row_number().over(wg))
-        .filter(F.col("_r") <= k)
-        .select("source", "h")
+    # per-source bottom-k: WindowGroupLimit keeps k hashes per source
+    # in each partition before the exchange, so no reducer sorts a
+    # whole source's vocabulary
+    sketch = top_k(hashed, "source", F.col("h").asc(), k, "_r").select(
+        "source", "h"
     )
     sizes = st.groupBy("source").agg(F.count(F.lit(1)).alias("n_tok"))
     # unordered source pairs: |sources| is catalog-sized, the cross
@@ -651,10 +645,8 @@ def source_bottomk_jaccard(
         .groupBy("source_a", "source_b", "h")
         .agg(F.count(F.lit(1)).alias("_n_sides"))
     )
-    wu = Window.partitionBy("source_a", "source_b").orderBy(F.col("h").asc())
     est = (
-        merged.withColumn("_r", F.row_number().over(wu))
-        .filter(F.col("_r") <= k)
+        top_k(merged, ["source_a", "source_b"], F.col("h").asc(), k, "_r")
         .groupBy("source_a", "source_b")
         .agg(
             F.count(F.lit(1)).alias("n_union_k"),
@@ -907,10 +899,7 @@ def theta_intersections(
         )
         .distinct()
     )
-    w = Window.partitionBy("grp").orderBy("h32")
-    sk = h.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
-    )
+    sk = top_k(h, "grp", "h32", k, "rn")
     gs = sk.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_kept"),
         F.max("h32").alias("kth"),

@@ -1,9 +1,9 @@
 """Layout-managed sinks: the write-side half of the 100 TB posture.
 
 A table that will be read selectively should be WRITTEN for those
-reads: ``write_zordered`` clusters rows on the Z-curve of two columns,
-so each file covers a bounded rectangle and parquet min/max row-group
-statistics skip files on a predicate over EITHER column;
+reads: ``zorder_layout_stats`` reports how tightly the Z-curve of two
+columns bounds each file's rectangle, and so how many files parquet
+min/max statistics skip on a predicate over EITHER column;
 ``write_bucketed`` bakes a join's hash clustering into the files, so a
 join on the bucket key needs no exchange; ``compact`` rewrites a
 small-file directory into bounded-size files.
@@ -37,65 +37,6 @@ def zorder_key(a, b, bits: int = 16):
             + F.shiftleft(F.shiftright(bv, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         )
     return key
-
-
-def write_zordered(
-    df: DataFrame, path: str, col_a: str, col_b: str,
-    files: int = 8, bits: int = 16,
-) -> None:
-    """Write parquet clustered on the Z-curve of two columns: range-
-    partition on the interleaved key, sort within partitions. Each
-    output file then covers a bounded RECTANGLE in (a, b) space — so
-    parquet min/max row-group stats prune scans filtered on EITHER
-    column, which a single-column sort only gives you for its leading
-    column. This is the data-skipping layout for the two-predicate
-    scan pattern (e.g. time × tenant).
-
-    Inputs are QUANTIZED here before interleaving (fixed-width bucket
-    to ``bits`` bits from each column's observed min/max — an identity
-    mapping when the column already fits): ``zorder_key`` silently
-    drops bits above ``bits``, which would collapse distant values
-    onto one Morton key and void the bounded-rectangle property. The
-    min/max pull is two scalars per column — model-parameter scale,
-    same budget class as PageRank's node count."""
-    # persist: the min/max scalar pull and the write are two actions
-    # over the same (possibly expensive) input plan
-    df = df.persist()
-    mm = df.agg(
-        F.min(col_a).alias("a_mn"), F.max(col_a).alias("a_mx"),
-        F.min(col_b).alias("b_mn"), F.max(col_b).alias("b_mx"),
-    ).collect()[0]
-    if None in (mm.a_mn, mm.a_mx, mm.b_mn, mm.b_mx):
-        # empty input or an all-NULL cluster column: no quantization
-        # domain exists — write the plain layout rather than crash (a
-        # scheduled job's no-data day must still produce its output)
-        df.write.mode("overwrite").parquet(path)
-        df.unpersist()
-        return
-
-    def quantized(c: str, mn, mx) -> F.Column:
-        # power-of-two bucket width -> the quantization is an exact
-        # integer shiftright (double division would round above 2^53);
-        # shift 0 (identity) when the span already fits in ``bits``
-        span = int(mx) - int(mn) + 1
-        shift = max(0, (span - 1).bit_length() - bits)
-        base = F.coalesce(F.col(c), F.lit(int(mn))).cast("long") - F.lit(int(mn))
-        return F.shiftright(base, shift)
-
-    z = zorder_key(
-        quantized(col_a, mm.a_mn, mm.a_mx),
-        quantized(col_b, mm.b_mn, mm.b_mx),
-        bits,
-    )
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    df.unpersist()
 
 
 def compact(
@@ -153,8 +94,8 @@ def zorder_layout_stats(
     bits: int = 8,
     buckets_log2: int = 4,
 ) -> DataFrame:
-    """The data-skipping proof behind ``write_zordered``, as a query:
-    quantize both cluster columns exactly as the writer does, interleave
+    """The data-skipping proof of a Z-order layout, as a query:
+    quantize both cluster columns to ``bits`` bits, interleave
     into the Morton key, split the curve into ``2**buckets_log2``
     FIXED-WIDTH key ranges (deterministic — unlike
     ``repartitionByRange``'s sampled boundaries, so the result is

@@ -71,32 +71,29 @@ BANK_EXPRS: list[tuple[str, str]] = [
 # NB: `default` is a keyword in both engines — quote it where selected.
 
 
-def bank_projection_sql(dialect: str = "duckdb") -> str:
-    """The shared SELECT list. The expressions are identical in both
+def bank_select_items(dialect: str = "duckdb") -> list[str]:
+    """The shared SELECT items. The expressions are identical in both
     engines; only identifier quoting differs (`default` is a keyword):
     DuckDB takes ANSI double quotes, Spark takes backticks."""
     assert dialect in ("duckdb", "spark")
     q = '"' if dialect == "duckdb" else "`"
-    parts = []
-    for name, expr in BANK_EXPRS:
-        quoted = f"{q}{name}{q}" if name == "default" else name
-        parts.append(f"{expr} AS {quoted}")
-    return ",\n    ".join(parts)
+    return [
+        f"{expr} AS {q}{name}{q}" if name == "default" else f"{expr} AS {name}"
+        for name, expr in BANK_EXPRS
+    ]
 
 
 def bank_cte() -> str:
     """DuckDB/ANSI CTE body producing the synthetic bank table from the
     pre-registered ``orders`` view."""
-    return f"SELECT\n    {bank_projection_sql('duckdb')}\nFROM orders"
+    items = ",\n    ".join(bank_select_items("duckdb"))
+    return f"SELECT\n    {items}\nFROM orders"
 
 
 def bank_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same table via Spark, from the orders parquet."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    orders.createOrReplaceTempView("__bank_orders_src")
-    return spark.sql(
-        f"SELECT\n    {bank_projection_sql('spark')}\nFROM __bank_orders_src"
-    )
+    return orders.selectExpr(*bank_select_items("spark"))
 
 
 # --- Raw CSV line synthesis (for the parse/error-channel operators) ---
@@ -124,13 +121,13 @@ RAW_LINE_SQL = (
 )
 
 
+RAW_LINE_ITEMS = ("o_orderkey AS line_id", f"{RAW_LINE_SQL} AS line")
+
+
 def raw_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    orders.createOrReplaceTempView("__bank_orders_src")
-    return spark.sql(
-        f"SELECT o_orderkey AS line_id, {RAW_LINE_SQL} AS line FROM __bank_orders_src"
-    )
+    return orders.selectExpr(*RAW_LINE_ITEMS)
 
 
 def raw_lines_cte() -> str:
-    return f"SELECT o_orderkey AS line_id, {RAW_LINE_SQL} AS line FROM orders"
+    return f"SELECT {', '.join(RAW_LINE_ITEMS)} FROM orders"

@@ -275,6 +275,34 @@ def test_cli_restores_the_file_split_settings(spark, tmp_path):
     assert "spark.sql.files.openCostInBytes" not in before
 
 
+def test_cli_leaves_the_session_settings_alone(spark, tmp_path):
+    """``main`` runs in the caller's session without rewriting it: its
+    shuffle partitions, time zone and app name read the same after the
+    run, and the sinks' timestamps are still UTC under a session zone
+    that is not."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.session.timeZone", "spark.app.name")
+    with conf_override(spark, "spark.sql.session.timeZone", "America/New_York"):
+        before = {k: spark.conf.get(k) for k in keys}
+        for name, rows in (("header_only", []), ("clean", ROWS[:1])):
+            csv = os.path.join(tmp_path, f"{name}.csv")
+            with open(csv, "w") as f:
+                f.write(HEADER + "\n" + "".join(r + "\n" for r in rows))
+            good_dir = os.path.join(tmp_path, name, "good")
+            P.main(
+                [
+                    "--input_path", csv,
+                    "--output_table", good_dir,
+                    "--error_table", os.path.join(tmp_path, name, "bad"),
+                    "--stats_table", os.path.join(tmp_path, name, "stats"),
+                ]
+            )
+            assert {k: spark.conf.get(k) for k in keys} == before, name
+        good = _read_jsonl(good_dir)
+    assert before["spark.sql.session.timeZone"] == "America/New_York"
+    assert len(good) == 1
+    assert all(good[0][c].endswith("+00:00") for c in GOOD_STAMPS), good[0]
+
+
 def test_stage_error_types_are_the_listed_enum(spark):
     """Every ``error_type`` the stages emit is in ``ERROR_TYPES`` (the
     fixture hits each one), so the CLI's per-type counts cover them all."""

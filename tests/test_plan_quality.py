@@ -73,14 +73,43 @@ def test_revenue_by_nation_broadcasts_dimension(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_topk_exchanges_are_two_phase(spark):
+def _ranking_exchanges(plan: str) -> list[tuple[str, str]]:
+    """(exchange line, the line of its child) for every hash exchange
+    on query_id alone or with a salt column: the ranking step's."""
+    import re
+
+    lines = plan.splitlines()
+    out = []
+    for i, ln in enumerate(lines):
+        m = re.search(r"Exchange hashpartitioning\((.*), \d+\)", ln)
+        keys = [re.sub(r"#\d+L?$", "", c) for c in m.group(1).split(", ")] if m else []
+        if "query_id" in keys and set(keys) <= {"query_id", "_part"}:
+            out.append((ln, lines[i + 1]))
+    return out
+
+
+def test_topk_prunes_before_its_one_exchange(spark):
+    """Per-query top-k is one window: Spark's WindowGroupLimit keeps k
+    rows per query in each partition directly beneath the ranking's
+    only hash exchange, so only pruned survivors reach it (with AQE
+    off, so the plan shown is the plan run)."""
+    from banking_data_etl_pipeline_spark.operators import retrieval
+    from banking_data_etl_pipeline_spark.session import conf_override
+
     emb = tables.load(spark, SF_DIR, "embeddings")
-    q = similarity.corpus_queries(emb, n=5)
-    plan = _plan(similarity.brute_force_topk(emb, q, k=10))
-    ex = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
-    # the full-corpus exchange must be salted (query_id + partition id);
-    # only the pruned survivors may hit a query_id-only exchange
-    assert any("_part" in ln for ln in ex), ex
+    docs = tables.load(spark, SF_DIR, "documents")
+    with conf_override(spark, "spark.sql.adaptive.enabled", "false"):
+        plans = {
+            "brute_force_topk": _plan(similarity.brute_force_topk(
+                emb, similarity.corpus_queries(emb, n=5), k=10)),
+            "bm25_topk": _plan(retrieval.bm25_topk(docs, k=10)),
+        }
+    for name, plan in plans.items():
+        ex = _ranking_exchanges(plan)
+        assert len(ex) == 1, (name, ex)
+        exchange, child = ex[0]
+        assert "_part" not in exchange, (name, exchange)
+        assert "WindowGroupLimit" in child and child.endswith("Partial"), (name, child)
 
 
 def test_core_pipeline_is_shuffle_free(spark):
@@ -444,44 +473,6 @@ def test_zorder_key_interleaves_bits(spark):
     assert df.collect()[0].z == 27
 
 
-@pytest.mark.slowtier
-def test_zorder_layout_bounds_both_dimensions_per_file(spark):
-    import glob
-    import tempfile
-
-    from banking_data_etl_pipeline_spark.sources import sinks
-
-    # a 256x256 grid of points
-    grid = spark.range(256 * 256).select(
-        (F.col("id") % 256).alias("x"), (F.col("id") / 256).cast("long").alias("y")
-    )
-    d = tempfile.mkdtemp(prefix="test_zorder_")
-    sinks.write_zordered(grid, d + "/z", "x", "y", files=16, bits=8)
-
-    def extents(path):
-        out = []
-        for f in glob.glob(path + "/part-*.parquet"):
-            p = spark.read.parquet(f).agg(
-                (F.max("x") - F.min("x")).alias("dx"),
-                (F.max("y") - F.min("y")).alias("dy"),
-            ).collect()[0]
-            out.append((p.dx, p.dy))
-        return out
-
-    zext = extents(d + "/z")
-    # one-dimensional layout for contrast: y extent per file is the
-    # full range, so y predicates never skip a file
-    grid.repartitionByRange(16, F.col("x")).write.mode("overwrite").parquet(d + "/s")
-    sext = extents(d + "/s")
-    assert all(dy == 255 for _dx, dy in sext), sext
-    # z-order: most files cover a bounded rectangle in BOTH dims (a
-    # range-boundary file crossing a high-order Morton bit may span one
-    # dim — that's inherent to the curve), so min/max stats prune scans
-    # filtered on either column for the bulk of the data
-    bounded = [e for e in zext if e[0] <= 128 and e[1] <= 128]
-    assert len(bounded) >= len(zext) * 0.6, zext
-
-
 def test_compaction_preserves_data_and_bounds_files(spark):
     import glob
     import tempfile
@@ -523,56 +514,6 @@ def test_compact_recovers_from_crash_window(spark):
     assert {r.id for r in spark.read.parquet(p).collect()} == before
     assert not os.path.exists(p + ".old")
     assert not os.path.exists(p + ".compact_tmp")
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_zorder_quantizes_out_of_range_inputs(spark):
-    """Columns wider than 2^bits must be bucketed, not bit-truncated:
-    with raw truncation rows 0 and 2^bits collide on one Morton key
-    and the per-file rectangles blow up. Quantized, a coarse grid of
-    huge values still yields bounded rectangles per file."""
-    import glob
-    import shutil
-    import tempfile
-
-    from banking_data_etl_pipeline_spark.sources import sinks
-
-    # 64x64 grid scaled far beyond 2^8: values in [0, 63*2**40]
-    grid = spark.range(64 * 64).select(
-        ((F.col("id") % 64) * (1 << 40)).alias("x"),
-        ((F.col("id") / 64).cast("long") * (1 << 40)).alias("y"),
-    )
-    d = tempfile.mkdtemp(prefix="test_zorder_q_")
-    sinks.write_zordered(grid, d + "/z", "x", "y", files=16, bits=8)
-    exts = []
-    for f in glob.glob(d + "/z/part-*.parquet"):
-        r = spark.read.parquet(f).agg(
-            (F.max("x") - F.min("x")).alias("dx"),
-            (F.max("y") - F.min("y")).alias("dy"),
-        ).collect()[0]
-        exts.append((r.dx >> 40, r.dy >> 40))
-    full = 63
-    bounded = [e for e in exts if e[0] <= full // 2 and e[1] <= full // 2]
-    assert len(bounded) >= len(exts) * 0.6, exts
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_zorder_empty_and_allnull_inputs(spark):
-    """A no-data day (or an all-NULL cluster column) must still write a
-    readable layout instead of crashing on int(None) during
-    quantization."""
-    import shutil
-    import tempfile
-
-    from banking_data_etl_pipeline_spark.sources import sinks
-
-    d = tempfile.mkdtemp(prefix="test_zorder_empty_")
-    empty = spark.createDataFrame([], "x long, y long")
-    sinks.write_zordered(empty, d + "/e", "x", "y", files=4, bits=8)
-    assert spark.read.parquet(d + "/e").count() == 0
-    allnull = spark.createDataFrame([(None, None)] * 3, "x long, y long")
-    sinks.write_zordered(allnull, d + "/n", "x", "y", files=4, bits=8)
-    assert spark.read.parquet(d + "/n").count() == 3
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -785,3 +726,18 @@ def test_zorder_stats_rectangles_bounded(spark):
         assert 0 <= r.bucket < 16
         assert r.a_max - r.a_min < 2 ** 6, r
         assert r.b_max - r.b_min < 2 ** 6, r
+
+
+@pytest.mark.parametrize(
+    "rows", [[], [(None, None)] * 3, [(1, None), (2, None)]],
+    ids=["zero_rows", "all_null", "one_all_null_column"],
+)
+def test_zorder_stats_refuse_an_input_without_a_domain(spark, rows):
+    """No rows, or a cluster column that is all NULL, leaves nothing to
+    quantize: the stats raise their typed ValueError, not an
+    ``int(None)`` TypeError."""
+    from banking_data_etl_pipeline_spark.sources import sinks
+
+    df = spark.createDataFrame(rows, "x long, y long")
+    with pytest.raises(ValueError, match="no quantization domain"):
+        sinks.zorder_layout_stats(df, "x", "y")

@@ -172,3 +172,15 @@ def test_stopped_session_cache_is_gone():
     assert proc.returncode == 0 and "STOPPED_SESSION_OK" in proc.stdout, (
         proc.stdout[-2000:] + proc.stderr[-4000:]
     )
+
+
+def test_synthetic_bank_source_registers_no_view(spark):
+    """The synthetic bank frames are projections of ``orders``: building
+    and running them leaves the session's catalog as it was."""
+    from banking_data_etl_pipeline_spark.sources import synthetic
+
+    views = {t.name for t in spark.catalog.listTables()}
+    bank = synthetic.bank_table(spark, SF_DIR)
+    lines = synthetic.raw_lines(spark, SF_DIR)
+    assert bank.count() == lines.count() > 0
+    assert {t.name for t in spark.catalog.listTables()} == views
